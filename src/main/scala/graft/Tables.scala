@@ -18,7 +18,7 @@ object Tables {
     * the schema from file footers on EVERY call; Verify loads each
     * table a few hundred times across its 178 entries and Bench's
     * passes re-load per pass. Metadata-only (the same class as
-    * Catalog.rawRead's merged-schema cache): every row still computes
+    * Catalog.schemaOf's merged-schema cache): every row still computes
     * from the parquet inputs on every action. */
   private val schemaCache = scala.collection.concurrent.TrieMap
     .empty[(String, String), org.apache.spark.sql.types.StructType]

@@ -41,7 +41,7 @@ final class Catalog(spark: SparkSession) {
     * delta was appended since, only keys the delta touches pay the
     * merge window — cost ∝ delta, not corpus. */
   def read(name: String): DataFrame =
-    Catalog.compactionAwareRead(spark, raw(name), spec(name))
+    Catalog.compactionAwareRead(spark, spec(name))
 
   /** Register the read view as a temp view so spark.sql can use it. */
   def createView(name: String): Unit = read(name).createOrReplaceTempView(name)
@@ -59,68 +59,134 @@ final class Catalog(spark: SparkSession) {
 object Catalog {
   private val SeqCol = "__graft_seq"
 
-  /** Merged-schema cache for [[rawRead]]: (path, file-listing
-    * signature) → merged schema. Bounded: cleared wholesale past 4096
-    * entries (schemas are tiny; the bound only guards very long golden
-    * runs that rewrite tables thousands of times). */
+  /** One non-recursive listing of a table dir: the data files Spark's
+    * scan reads (underscore/dot names excluded, name-sorted) and whether
+    * the compaction manifest sits beside them. Every read view is built
+    * from one listing — the schema-cache key, the single-split decision
+    * and the manifest check all come from it. */
+  final case class Listing(files: Seq[org.apache.hadoop.fs.FileStatus],
+      hasManifest: Boolean) {
+    def names: Set[String] = files.map(_.getPath.getName).toSet
+    private def entries = files.map(f =>
+      s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+    /** Every data file's (name, length, mtime): any append, rewrite or
+      * compaction changes it. */
+    def sig: String = entries.mkString("|")
+    /** This listing is `before` plus newly added files: nothing of
+      * `before` was removed or rewritten. */
+    def grewFrom(before: Listing): Boolean = before.entries.toSet.subsetOf(entries.toSet)
+  }
+
+  // Listing assumptions: graft tables are FLAT directories (the
+  // non-recursive listing would miss partitioned layouts) and every
+  // writer emits fresh part-file names (an in-place same-name/same-length
+  // rewrite inside mtime granularity would serve a stale schema — no
+  // graft writer does that).
+  private def listDir(spark: SparkSession, path: String): Listing = {
+    val all = fsOf(spark, path).listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
+    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
+    Listing(all.filterNot(s => hidden(s.getPath.getName)).sortBy(_.getPath.getName),
+      all.exists(_.getPath.getName == ManifestFile))
+  }
+
+  /** [[listDir]], or None when the listing fails for any non-fatal
+    * reason: callers then fall back to the plain mergeSchema read, with
+    * no schema cache, no single-split plan and no clean-path check. */
+  def listing(spark: SparkSession, path: String): Option[Listing] =
+    try Some(listDir(spark, path))
+    catch { case scala.util.control.NonFatal(e) =>
+      Console.err.println(
+        s"[catalog] listing failed for $path, falling back to mergeSchema: ${e.getMessage}")
+      None
+    }
+
+  /** Merged-schema cache: (path, listing signature) → merged schema.
+    * Bounded: cleared wholesale past 4096 entries (schemas are tiny; the
+    * bound only guards very long golden runs that rewrite tables
+    * thousands of times). */
   private val mergedSchemaCache = new java.util.concurrent.ConcurrentHashMap[
     (String, String), org.apache.spark.sql.types.StructType]()
 
-  /** mergeSchema-equivalent parquet read with the merged schema CACHED
-    * per (path, exact file listing) — optimization round 10. Spark's
-    * `mergeSchema=true` runs a footer-union JOB on every read, and the
-    * SQL frontend reads a table several times per statement (target
-    * schema, read view refresh, flow sources): merge_compacted_read
-    * profiled 6+ such jobs per run. The cache key carries every data
-    * file's (name, length, mtime), so any append/rewrite/compaction
-    * invalidates it; reading with the cached merged schema is
-    * semantically identical to mergeSchema (per-file projection with
-    * null fill), minus the per-read footer job. */
-  // Cache assumptions (documented per r10 advice): graft tables are
-  // FLAT directories (the non-recursive listing below would miss
-  // partitioned layouts) and every writer emits fresh part-file names
-  // (an in-place same-name/same-length rewrite inside mtime granularity
-  // would serve a stale schema — no graft writer does that).
-  private def listingSig(spark: SparkSession, path: String): String =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).iterator
-        .filterNot(s => s.getPath.getName.startsWith("_") ||
-          s.getPath.getName.startsWith("."))
-        .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-        .toSeq.sorted.mkString("|")
-    } catch { case e: java.io.IOException =>
-      Console.err.println(
-        s"[catalog] schema-cache listing failed for $path, falling back to mergeSchema: ${e.getMessage}")
-      ""
+  /** The table's merged schema, CACHED per (path, exact file listing) —
+    * optimization round 10. Spark's `mergeSchema=true` runs a
+    * footer-union JOB on every read, and the SQL frontend reads a table
+    * several times per statement (target schema, read view refresh,
+    * flow sources): merge_compacted_read profiled 6+ such jobs per run.
+    * Reading with the cached merged schema is semantically identical to
+    * mergeSchema (per-file projection with null fill), minus the
+    * per-read footer job. */
+  def schemaOf(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType =
+    schemaOf(spark, path, listing(spark, path))
+
+  def schemaOf(spark: SparkSession, path: String,
+      l: Option[Listing]): org.apache.spark.sql.types.StructType =
+    l.filter(_.files.nonEmpty) match {
+      case None => mergeSchemaRead(spark, path).schema
+      case Some(l) =>
+        if (mergedSchemaCache.size > 4096) mergedSchemaCache.clear()
+        mergedSchemaCache.computeIfAbsent((path, l.sig), _ =>
+          mergeSchemaRead(spark, path).schema)
     }
+
+  private def mergeSchemaRead(spark: SparkSession, path: String): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(path)
 
   /** Pre-seed the schema cache after an append that PROVABLY kept the
     * schema (INSERT writes columns aligned to the full target schema,
-    * so the merged schema of the new listing equals the merged schema
-    * read before the write) — optimization round 11. Without this,
-    * every INSERT invalidates the cache by design and the next
-    * statement pays a fresh footer-union job; at 100 TB that job scans
-    * every file footer in the table to rediscover a schema the writer
-    * already knew. */
+    * so the merged schema of the new listing equals `schema`, the merged
+    * schema of `before`) — optimization round 11. Without this, every
+    * INSERT invalidates the cache by design and the next statement pays
+    * a fresh footer-union job; at 100 TB that job scans every file
+    * footer in the table to rediscover a schema the writer already
+    * knew. Self-checking: primes only when the new listing is exactly
+    * `before` plus newly added files; after any other change (a file
+    * removed or rewritten, a failed listing) the cache stays cold. */
   def primeSchemaCacheAfterAppend(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val sig = listingSig(spark, path)
-    if (sig.nonEmpty) mergedSchemaCache.put((path, sig), schema): Unit
+      before: Option[Listing], schema: org.apache.spark.sql.types.StructType): Unit =
+    for (b <- before if b.files.nonEmpty; after <- listing(spark, path)
+         if after.grewFrom(b))
+      mergedSchemaCache.put((path, after.sig), schema): Unit
+
+  /** Whether Spark's file scan packs data files of these byte lengths
+    * into ONE split, by Spark's own rule and settings: the split size of
+    * `FilePartition.maxSplitBytes` (spark.sql.files.maxPartitionBytes,
+    * spark.sql.files.openCostInBytes, the leaf default parallelism),
+    * then the scan's largest-first packing, which starts a new split
+    * when the next file would overflow it (each packed file also costs
+    * openCostInBytes). Files are cut at the split size first, so one
+    * file above it is several splits. Empty files count toward the
+    * split size but yield no split. */
+  private[graft] def singleSplit(spark: SparkSession, lens: Seq[Long]): Boolean = {
+    val conf = spark.sessionState.conf
+    val open = conf.filesOpenCostInBytes
+    val maxSplit = org.apache.spark.sql.execution.datasources.FilePartition
+      .maxSplitBytes(spark, lens.map(_ + open).sum)
+    val sizes = lens.filter(_ > 0)
+    // packing never overflows iff all but the first file's bytes plus
+    // their open costs still fit the split; spark.sql.files.maxPartitionNum
+    // = 1 re-packs any split count into one
+    sizes.isEmpty || sizes.sum + (sizes.size - 1) * open <= maxSplit ||
+      conf.filesMaxPartitionNum.contains(1)
   }
 
-  def rawRead(spark: SparkSession, path: String): DataFrame = {
-    val sig = listingSig(spark, path)
-    if (sig.isEmpty)
-      spark.read.option("mergeSchema", "true").parquet(path)
-    else {
-      if (mergedSchemaCache.size > 4096) mergedSchemaCache.clear()
-      val schema = mergedSchemaCache.computeIfAbsent((path, sig), _ =>
-        spark.read.option("mergeSchema", "true").parquet(path).schema)
-      spark.read.schema(schema).parquet(path)
+  /** Raw append-stream read (no merge semantics) of the table at `path`. */
+  def rawRead(spark: SparkSession, path: String): DataFrame =
+    scan(spark, path, listing(spark, path))
+
+  /** The table scan for one listing. When Spark would read the whole
+    * listing as one split, the scan is `coalesce(1)`: its CoalesceExec
+    * reports SinglePartition, which satisfies every clustered and
+    * ordered distribution, so the plan above it needs no exchange — no
+    * shuffle stage for a GROUP BY or merge window, no range-sampling job
+    * for a global ORDER BY, no AQE stage to re-plan. The scan already
+    * ran as one task; only the exchanges go. */
+  private def scan(spark: SparkSession, path: String, l: Option[Listing]): DataFrame =
+    l.filter(_.files.nonEmpty) match {
+      case None => mergeSchemaRead(spark, path)
+      case Some(l) =>
+        val df = spark.read.schema(schemaOf(spark, path, Some(l))).parquet(path)
+        if (singleSplit(spark, l.files.map(_.getLen))) df.coalesce(1) else df
     }
-  }
 
   /** PartSortExec equivalent (reference query/src/part_sort.rs): sort
     * inside existing partitions without a global shuffle-sort. With
@@ -177,25 +243,13 @@ object Catalog {
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Data-file names under a table dir (underscore/dot files excluded —
-    * the same set Spark's scan sees). Driver-side metadata listing, one
-    * FS call — the same cost class as a lakehouse snapshot check. */
-  private def dataFiles(spark: SparkSession, path: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, path)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
-  }
-
   /** Record a just-finished compaction: seq bound + file listing. */
   def writeCompactionManifest(spark: SparkSession, path: String,
       seq: Long): Unit = {
-    val fs = fsOf(spark, path)
-    val out = fs.create(
+    val files = listDir(spark, path).names.toSeq.sorted
+    val out = fsOf(spark, path).create(
       new org.apache.hadoop.fs.Path(path, ManifestFile), true)
-    try out.write((seq.toString +: dataFiles(spark, path).toSeq.sorted)
-      .mkString("\n").getBytes("UTF-8"))
+    try out.write((seq.toString +: files).mkString("\n").getBytes("UTF-8"))
     finally out.close()
   }
 
@@ -204,34 +258,44 @@ object Catalog {
   def readCompactionManifest(spark: SparkSession,
       path: String): Option[(Long, Set[String])] = {
     val p = new org.apache.hadoop.fs.Path(path, ManifestFile)
-    val fs = fsOf(spark, path)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val lines = text.split("\n").toSeq
-      lines.headOption.flatMap(h => scala.util.Try(h.trim.toLong).toOption)
-        .map(seq => (seq, lines.drop(1).map(_.trim).filter(_.nonEmpty).toSet))
-    }
+    if (!fsOf(spark, path).exists(p)) None else parseManifest(spark, p)
   }
 
-  /** Merge view that consults the compaction manifest (see the plan
-    * table above). Falls through to [[readView]] untouched for append
-    * tables and never-compacted dirs. */
-  def compactionAwareRead(spark: SparkSession, df: DataFrame,
-      spec: TableSpec): DataFrame =
+  private def parseManifest(spark: SparkSession,
+      p: org.apache.hadoop.fs.Path): Option[(Long, Set[String])] = {
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    val lines = text.split("\n").toSeq
+    lines.headOption.flatMap(h => scala.util.Try(h.trim.toLong).toOption)
+      .map(seq => (seq, lines.drop(1).map(_.trim).filter(_.nonEmpty).toSet))
+  }
+
+  /** Merge view of the table `spec` names that consults the compaction
+    * manifest (see the plan table above), all from ONE listing of the
+    * dir: the scan, the manifest's presence and the clean check. Falls
+    * through to [[readView]] untouched for append tables and
+    * never-compacted dirs. A failed listing takes the full merge window,
+    * which is correct whatever the dir holds. */
+  def compactionAwareRead(spark: SparkSession, spec: TableSpec): DataFrame = {
+    val l = listing(spark, spec.path)
+    val df = scan(spark, spec.path, l)
     if (spec.mergeMode == MergeMode.Append) readView(df, spec)
-    else readCompactionManifest(spark, spec.path) match {
-      case Some((seq, files)) if dataFiles(spark, spec.path) == files =>
-        // fully compacted, nothing arrived since: the files ARE the
-        // merged view — scan-only read, column set identical to the
-        // windowed view's (engine seq column hidden)
-        readView(df, spec.copy(mergeMode = MergeMode.Append)).drop(SeqCol)
-      case Some((seq, _)) =>
-        readView(df, spec.copy(compactedSeq = Some(seq)))
-      case None => readView(df, spec)
+    else {
+      val manifest = l.filter(_.hasManifest).flatMap(_ =>
+        parseManifest(spark, new org.apache.hadoop.fs.Path(spec.path, ManifestFile)))
+      manifest match {
+        case Some((_, files)) if l.exists(_.names == files) =>
+          // fully compacted, nothing arrived since: the files ARE the
+          // merged view — scan-only read, column set identical to the
+          // windowed view's (engine seq column hidden)
+          readView(df, spec.copy(mergeMode = MergeMode.Append)).drop(SeqCol)
+        case Some((seq, _)) =>
+          readView(df, spec.copy(compactedSeq = Some(seq)))
+        case None => readView(df, spec)
+      }
     }
+  }
 
   /** Physical snapshot a compaction writes: the merge view's rows WITH
     * the seq column kept (stamped with the winning row's seq), so rows

@@ -1272,34 +1272,26 @@ object Dedup {
       .repartition(col("__t")) // hook joins reuse this partitioning
       .persist()
     try {
-    // Round structure (r10 optimization — the label table is small, so
-    // each MATERIALIZATION costs a whole Spark job; the round fusions
-    // below halve the job count of the realistic diameter-1..3 graphs
-    // with verdicts unchanged, CcSpec/probes pinned):
-    //  - init+hook fused: identity labels make the first hook's
-    //    neighbor labels just the neighbor IDS, so round 1 is one
-    //    aggregation over the edge list — no separate identity-label
-    //    materialization, no join;
-    //  - hook+jump fused: each round materializes hook + ONE
-    //    pointer-doubling jump in a single job (two observe() metrics
-    //    on one plan; the label-sized hook subtree evaluates twice
-    //    inside the job — cheaper than a second job). Deeper forests
-    //    keep jumping in plain follow-up passes, so the O(log d)
-    //    convergence bound is unchanged.
-    // Changed-counts ride the SAME job via observe() — a separate
-    // count() per pass doubled the job count at the 10M-edge probe.
+    // Round structure: materialize-then-jump. Each round checkpoints the
+    // hook (min label over the closed neighborhood), then runs
+    // pointer-doubling jumps, each its own checkpoint, until a jump
+    // changes nothing, so convergence stays O(log d) rounds. Round 1
+    // hooks on identity labels: one aggregation over the edge list, no
+    // label join. The hook is deliberately NOT fused into the first
+    // jump: that shape evaluates the hook subtree on both branches of
+    // the jump's self-join, and the multimodal_neardup_pipeline 2x
+    // regression bisected to it (3.38 s fused vs 1.64 s with this shape,
+    // VERDICT r11). Changed-counts ride each pass's own job via
+    // observe() — a separate count() per pass doubled the job count at
+    // the 10M-edge probe.
     def jumpOf(hooked: DataFrame, obs: org.apache.spark.sql.Observation)
         : DataFrame =
       // compress: pointer-double — every comp value is itself a
       // labeled id (labels start as ids and evolve by min over label
       // values), so the self-join is total; a depth-1 forest converges
-      // with one no-change jump.
-      // NOTE on metrics across the duplicated subtree: `hooked` carries
-      // its caller's CollectMetrics node, and the self-join below makes
-      // that subtree appear on BOTH join branches. The metric is safe
-      // ONLY because it is consumed as a zero/non-zero convergence
-      // signal — each CollectMetricsExec instance still sees the full
-      // row stream — never as a magnitude.
+      // with one no-change jump. `hooked` is always a materialized
+      // label table, so the self-join's two branches read the same
+      // checkpoint and the observed count is taken once, after the join.
       hooked.as("l")
         .join(hooked.select(col("id").as("__jid"), col("comp").as("__jc")),
           col("comp") === col("__jid"))
@@ -1336,30 +1328,12 @@ object Dedup {
             .select(col("id"), col("comp").as("__old"),
               least(col("comp"), coalesce(col("__nc"), col("comp"))).as("comp"))
         }
-      // observe on ONE branch only — the same CollectMetrics node on
-      // both sides of the self-join would be a duplicate-metric error
       val hooked = hooked0.observe(hookObs,
         coalesce(sum(when(col("comp") < col("__old"), 1L).otherwise(0L)),
           lit(0L)).as("changed"))
         .select(col("id"), col("comp"))
-      // BISECT TOGGLE: materialize-then-jump (r9 shape)
       labels = Lineage.truncate(hooked)
-      val jumped = jumpOf(labels, jumpObs)
-      labels = Lineage.truncate(jumped)
-      // evidence hook (set session conf graft.cc.plandump to a file
-      // path): the fused hook+jump round's EXECUTED plan — this is how
-      // the exchange-reuse claim below is demonstrated (the subtree is
-      // otherwise invisible behind the eager checkpoint). Scale safety
-      // of the fusion rests on the hook aggregation's exchange being
-      // consumed as a ReusedExchange/stage-cache hit on the second join
-      // branch, so the edge-sized part of the hook runs once per round.
-      if (it == 0)
-        pairs.sparkSession.conf.getOption("graft.cc.plandump").foreach { f =>
-          val w = new java.io.PrintWriter(f)
-          try w.write(jumped.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-          finally w.close()
-        }
+      labels = Lineage.truncate(jumpOf(labels, jumpObs))
       hookChanged = changedMetric(hookObs)
       var jumping = changedMetric(jumpObs) > 0
       while (jumping) {

@@ -1382,7 +1382,7 @@ private[sql] trait GraftDdl { self: GraftSession =>
       refreshView(name)
       return
     }
-    val existing = graft.model.Catalog.rawRead(spark, spec.path).schema
+    val existing = graft.model.Catalog.schemaOf(spark, spec.path)
     if (!existing.fieldNames.contains(cd.name)) {
       val widened = StructType(existing :+ StructField(cd.name, t, cd.nullable))
       spark.createDataFrame(

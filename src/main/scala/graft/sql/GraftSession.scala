@@ -848,8 +848,7 @@ final class GraftSession(spark0: SparkSession,
         val target: StructType = {
           val declared = colMeta.getOrElse(meta.sinkTable, Vector.empty)
           if (sinkFs.exists(sinkP) && sinkFs.listStatus(sinkP).nonEmpty) {
-            val phys =
-              graft.model.Catalog.rawRead(spark, spec.path).schema
+            val phys = graft.model.Catalog.schemaOf(spark, spec.path)
             // ALTER ADD COLUMN on the sink may exist only as declared
             // metadata (an empty-table ALTER writes no part file) — the
             // flow must still produce it (flow_aft_alter's sample_cnt)
@@ -1467,7 +1466,7 @@ final class GraftSession(spark0: SparkSession,
         val spec = catalog.spec(name)
         val dropped = droppedCols.getOrElse(name, Set.empty)
         val metas = colMeta.getOrElse(name,
-          graft.model.Catalog.rawRead(spark, spec.path).schema
+          graft.model.Catalog.schemaOf(spark, spec.path)
             .filterNot(f => f.name == SeqCol)
             .map(f => ColMeta(f.name, greptimeNameOf(f.dataType), f.nullable, None, None))
             .toVector)
@@ -1519,7 +1518,7 @@ final class GraftSession(spark0: SparkSession,
           .map(m => (m.name, m.gtype,
             m.nullable && m.name != spec.timeIndex))
       case None =>
-        graft.model.Catalog.rawRead(spark, spec.path).schema
+        graft.model.Catalog.schemaOf(spark, spec.path)
           .filterNot(f => dropped.contains(f.name) || f.name == SeqCol)
           .map(f => (f.name, greptimeNameOf(f.dataType),
             f.nullable && f.name != spec.timeIndex))
@@ -1621,7 +1620,8 @@ final class GraftSession(spark0: SparkSession,
       // (Catalog.readView filters them) but STILL persist so attached
       // flows can process them (flow/flow_advance_ttl streaming mode)
       val instant = spec.ttlMillis.contains(0L)
-      val target = graft.model.Catalog.rawRead(spark, spec.path).schema
+      val before = graft.model.Catalog.listing(spark, spec.path)
+      val target = graft.model.Catalog.schemaOf(spark, spec.path, before)
       val cols = Option(colsOpt)
         .map(_.stripPrefix("(").stripSuffix(")").split(",").map(c => unquote(c)).toSeq)
         .getOrElse {
@@ -1908,7 +1908,7 @@ final class GraftSession(spark0: SparkSession,
       // the append wrote columns aligned to `target`, so the merged
       // schema of the grown listing is unchanged — skip the next
       // statement's footer-union job
-      graft.model.Catalog.primeSchemaCacheAfterAppend(spark, spec.path, target)
+      graft.model.Catalog.primeSchemaCacheAfterAppend(spark, spec.path, before, target)
       refreshPath(spec.path)
       refreshView(name)
       logicalParent.get(name).foreach(refreshMetricPhyView)
@@ -2079,7 +2079,7 @@ final class GraftSession(spark0: SparkSession,
     val files = graft.sources.Copy.listSourceFiles(spark, path, opts.get("pattern"))
     val src0 = graft.sources.Copy.importFiles(spark, files, copyWriteOpts(opts))
     val srcCols = src0.schema.fields.map(f => f.name.toLowerCase(Locale.ROOT) -> f.name).toMap
-    val target = graft.model.Catalog.rawRead(spark, spec.path).schema
+    val target = graft.model.Catalog.schemaOf(spark, spec.path)
     val metas = colMeta.getOrElse(name, Vector.empty)
     val seq = seqCounter.incrementAndGet()
     val aligned = target.map { f =>

@@ -25,12 +25,6 @@ object CcScaleProbe {
       spark.conf.set("graft.checkpoint.dir", d)
       println(s"[cc-scale] reliable checkpoints -> $d")
     }
-    // CC_PLANDUMP=<file>: write the first fused hook+jump round's
-    // EXECUTED plan (ReusedExchange evidence for the r10 fusion)
-    sys.env.get("CC_PLANDUMP").foreach { f =>
-      spark.conf.set("graft.cc.plandump", f)
-      println(s"[cc-scale] plan dump -> $f")
-    }
     val shuffle = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
