@@ -59,13 +59,17 @@ final class Catalog(spark: SparkSession) {
 object Catalog {
   private val SeqCol = "__graft_seq"
 
+  /** A compaction manifest: the seq bound the compaction merged up to
+    * and the data files it wrote (the compacted snapshot). */
+  final case class Manifest(seq: Long, files: Set[String])
+
   /** One non-recursive listing of a table dir: the data files Spark's
-    * scan reads (underscore/dot names excluded, name-sorted) and whether
-    * the compaction manifest sits beside them. Every read view is built
-    * from one listing — the schema-cache key, the single-split decision
-    * and the manifest check all come from it. */
+    * scan reads (underscore/dot names excluded, name-sorted) and the
+    * compaction manifest beside them, if one is there and whole. Every
+    * read view is built from one listing — the schema-cache key, the
+    * one-partition decision and the clean/DELTA choice all come from it. */
   final case class Listing(files: Seq[org.apache.hadoop.fs.FileStatus],
-      hasManifest: Boolean) {
+      manifest: Option[Manifest]) {
     def names: Set[String] = files.map(_.getPath.getName).toSet
     private def entries = files.map(f =>
       s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
@@ -86,7 +90,7 @@ object Catalog {
     val all = fsOf(spark, path).listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
     def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
     Listing(all.filterNot(s => hidden(s.getPath.getName)).sortBy(_.getPath.getName),
-      all.exists(_.getPath.getName == ManifestFile))
+      all.find(_.getPath.getName == ManifestFile).flatMap(m => parseManifest(spark, m.getPath)))
   }
 
   /** [[listDir]], or None when the listing fails for any non-fatal
@@ -147,6 +151,20 @@ object Catalog {
          if after.grewFrom(b))
       mergedSchemaCache.put((path, after.sig), schema): Unit
 
+  /** Pre-seed the schema cache after a rewrite that replaced every data
+    * file of the dir with the output of one write (compaction, a TTL or
+    * truncate rewrite), when that write KEPT the schema: `written`, the
+    * written frame's schema, equals `before`, the merged schema the
+    * rewrite read. Every new file then carries `before`, so the next read
+    * skips the footer-union job. A rewrite that changed a column (a type
+    * migration, a dropped column) leaves the cache cold. */
+  def primeSchemaCacheAfterRewrite(spark: SparkSession, path: String,
+      before: org.apache.spark.sql.types.StructType,
+      written: org.apache.spark.sql.types.StructType): Unit =
+    if (written == before)
+      for (after <- listing(spark, path) if after.files.nonEmpty)
+        mergedSchemaCache.put((path, after.sig), before): Unit
+
   /** Whether Spark's file scan packs data files of these byte lengths
     * into ONE split, by Spark's own rule and settings: the split size of
     * `FilePartition.maxSplitBytes` (spark.sql.files.maxPartitionBytes,
@@ -169,23 +187,39 @@ object Catalog {
       conf.filesMaxPartitionNum.contains(1)
   }
 
+  /** Whether the scan of this listing can run as ONE partition, by
+    * rules Spark already has. Either every data file fits one split
+    * ([[singleSplit]]), or the listing is a compacted snapshot plus a
+    * delta where the snapshot files (listing ∩ manifest) fit one split
+    * and the delta files (listing − manifest) total at most
+    * spark.sql.autoBroadcastJoinThreshold bytes: a delta Spark would
+    * broadcast to the snapshot's task anyway. A never-compacted table
+    * takes the first rule only. */
+  private[graft] def onePartition(spark: SparkSession, l: Listing): Boolean =
+    singleSplit(spark, l.files.map(_.getLen)) || l.manifest.exists { m =>
+      val (snapshot, delta) = l.files.partition(f => m.files(f.getPath.getName))
+      singleSplit(spark, snapshot.map(_.getLen)) &&
+        delta.map(_.getLen).sum <= spark.sessionState.conf.autoBroadcastJoinThreshold
+    }
+
   /** Raw append-stream read (no merge semantics) of the table at `path`. */
   def rawRead(spark: SparkSession, path: String): DataFrame =
-    scan(spark, path, listing(spark, path))
+    scan(spark, path, listing(spark, path))._1
 
-  /** The table scan for one listing. When Spark would read the whole
-    * listing as one split, the scan is `coalesce(1)`: its CoalesceExec
-    * reports SinglePartition, which satisfies every clustered and
-    * ordered distribution, so the plan above it needs no exchange — no
-    * shuffle stage for a GROUP BY or merge window, no range-sampling job
-    * for a global ORDER BY, no AQE stage to re-plan. The scan already
-    * ran as one task; only the exchanges go. */
-  private def scan(spark: SparkSession, path: String, l: Option[Listing]): DataFrame =
+  /** The table scan for one listing, and whether it is one partition.
+    * When [[onePartition]] holds, the scan is `coalesce(1)`: its
+    * CoalesceExec reports SinglePartition, which satisfies every
+    * clustered and ordered distribution, so the plan above it needs no
+    * exchange — no shuffle stage for a GROUP BY or merge window, no
+    * range-sampling job for a global ORDER BY, no AQE stage to re-plan.
+    * The files are read in one task instead of one per split. */
+  private def scan(spark: SparkSession, path: String,
+      l: Option[Listing]): (DataFrame, Boolean) =
     l.filter(_.files.nonEmpty) match {
-      case None => mergeSchemaRead(spark, path)
+      case None => (mergeSchemaRead(spark, path), false)
       case Some(l) =>
         val df = spark.read.schema(schemaOf(spark, path, Some(l))).parquet(path)
-        if (singleSplit(spark, l.files.map(_.getLen))) df.coalesce(1) else df
+        if (onePartition(spark, l)) (df.coalesce(1), true) else (df, false)
     }
 
   /** PartSortExec equivalent (reference query/src/part_sort.rs): sort
@@ -198,7 +232,11 @@ object Catalog {
     partitioned.sortWithinPartitions((keys :+ orderBy).map(k => col(s"`$k`")): _*)
   }
 
-  def readView(df: DataFrame, spec: TableSpec): DataFrame = {
+  /** The merge view over `df`, a scan of the table `spec` names.
+    * `onePartition`: `df` is a one-partition scan ([[onePartition]]), so
+    * a DELTA merge keeps its key joins inside that one task. */
+  def readView(df: DataFrame, spec: TableSpec,
+      onePartition: Boolean = false): DataFrame = {
     // ttl='instant' drops rows at write (scans never see them); a
     // duration ttl expires rows only when flush/compaction materializes
     // it (ttl/ttl_instant.result vs flow/flow_advance_ttl.result: rows
@@ -213,7 +251,7 @@ object Catalog {
           // the delta split orders against REAL persisted seqs; without
           // a physical seq column fall back to the full merge window
           .filter(_ => spec.seqColumn.exists(df.columns.contains)) match {
-        case Some(s) => mergeDelta(ttlFiltered, spec, s)
+        case Some(s) => mergeDelta(ttlFiltered, spec, s, onePartition)
         case None if spec.mergeMode == MergeMode.LastRow =>
           dedupLastRow(ttlFiltered, spec)
         case None => dedupLastNonNull(ttlFiltered, spec)
@@ -228,10 +266,21 @@ object Catalog {
   // the same dedup semantics the read path applies,
   // mito2/src/read/dedup.rs:301-425) and records a manifest beside the
   // data: the compacted seq bound + the exact file listing it produced.
-  // The read path then picks one of three plans:
-  //   listing == manifest  → CLEAN: scan only, NO window (steady state)
-  //   listing ⊃ manifest   → DELTA: window only keys the delta touches
-  //   no manifest          → full merge window (today's behavior)
+  // The read path then picks its merge view, and the scan under it its
+  // partitioning, from the same listing:
+  //   listing == manifest → CLEAN: scan only, NO window (steady state);
+  //                         one partition when the files fit one split
+  //   listing ⊃ manifest  → DELTA: window only keys the delta touches;
+  //                         one partition when the snapshot files fit
+  //                         one split and the delta files total at most
+  //                         autoBroadcastJoinThreshold bytes, so the key
+  //                         joins and the window run in one task with no
+  //                         exchange (compaction's rewrite, which reads
+  //                         through rawRead, takes the same scan)
+  //   no manifest         → full merge window (a torn or old-format
+  //                         manifest counts as none); one partition when
+  //                         the files fit one split
+  // Any other listing keeps Spark's split-per-task plan with exchanges.
   // The manifest is on-disk state — it survives restarts, exactly like
   // the minhash/digest dedup indexes.
 
@@ -239,61 +288,92 @@ object Catalog {
     * reader from treating it as data. */
   private val ManifestFile = "_graft_compaction"
 
+  /** Last manifest line: the number of file entries above it. */
+  private val ManifestTrailer = "_entries"
+
   private def fsOf(spark: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Record a just-finished compaction: seq bound + file listing. */
+  /** Record a just-finished compaction: the seq bound, one line per data
+    * file, then an entry-count trailer, every line newline-terminated.
+    * The text goes to a hidden temp file that is renamed into place, so
+    * a reader sees the whole manifest or none; a manifest cut short
+    * anyway fails the trailer check and reads as none. */
   def writeCompactionManifest(spark: SparkSession, path: String,
       seq: Long): Unit = {
+    import org.apache.hadoop.fs.Path
     val files = listDir(spark, path).names.toSeq.sorted
-    val out = fsOf(spark, path).create(
-      new org.apache.hadoop.fs.Path(path, ManifestFile), true)
-    try out.write((seq.toString +: files).mkString("\n").getBytes("UTF-8"))
+    val fs = fsOf(spark, path)
+    val target = new Path(path, ManifestFile)
+    val tmp = new Path(path, ManifestFile + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write((seq.toString +: files :+ s"$ManifestTrailer ${files.size}")
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
+    // a local rename replaces an old manifest in one step; where the
+    // file system refuses to, the old one goes first, and a reader in
+    // between sees none (the full merge window, still correct)
+    if (!fs.rename(tmp, target)) {
+      fs.delete(target, false)
+      if (!fs.rename(tmp, target))
+        throw new java.io.IOException(s"cannot rename $tmp to $target")
+    }
   }
 
   /** (compacted seq bound, file listing at compaction time), if a
-    * compaction ever ran on this dir. */
+    * compaction ever ran on this dir and its manifest is whole. */
   def readCompactionManifest(spark: SparkSession,
       path: String): Option[(Long, Set[String])] = {
     val p = new org.apache.hadoop.fs.Path(path, ManifestFile)
-    if (!fsOf(spark, path).exists(p)) None else parseManifest(spark, p)
+    if (!fsOf(spark, path).exists(p)) None
+    else parseManifest(spark, p).map(m => (m.seq, m.files))
   }
 
+  /** The manifest at `p`, or None when it is torn or of an older,
+    * trailer-less format: the table then reads with the full merge
+    * window, which is correct whatever the dir holds. */
   private def parseManifest(spark: SparkSession,
-      p: org.apache.hadoop.fs.Path): Option[(Long, Set[String])] = {
-    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split("\n").toSeq
-    lines.headOption.flatMap(h => scala.util.Try(h.trim.toLong).toOption)
-      .map(seq => (seq, lines.drop(1).map(_.trim).filter(_.nonEmpty).toSet))
+      p: org.apache.hadoop.fs.Path): Option[Manifest] = {
+    def read = {
+      val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    }
+    val whole = for {
+      // a failed read (a checksum mismatch, say) is a torn manifest too
+      text <- scala.util.Try(read).toOption
+      lines = text.split("\n", -1).toSeq
+      body <- Some(lines.init).filter(_ => lines.last.isEmpty) // newline-terminated
+      seq <- body.headOption.flatMap(_.toLongOption)
+      n <- body.lastOption.filter(_.startsWith(ManifestTrailer + " "))
+        .flatMap(_.stripPrefix(ManifestTrailer + " ").toIntOption)
+      files = body.slice(1, body.size - 1)
+      if body.size >= 2 && files.size == n
+    } yield Manifest(seq, files.toSet)
+    if (whole.isEmpty) Console.err.println(
+      s"[catalog] compaction manifest $p is torn or has no entry-count trailer; " +
+        "reading with the full merge window")
+    whole
   }
 
   /** Merge view of the table `spec` names that consults the compaction
     * manifest (see the plan table above), all from ONE listing of the
-    * dir: the scan, the manifest's presence and the clean check. Falls
-    * through to [[readView]] untouched for append tables and
-    * never-compacted dirs. A failed listing takes the full merge window,
-    * which is correct whatever the dir holds. */
+    * dir: the scan and its partitioning, the manifest and the clean
+    * check. Falls through to [[readView]] untouched for append tables
+    * and never-compacted dirs. A failed listing takes the full merge
+    * window, which is correct whatever the dir holds. */
   def compactionAwareRead(spark: SparkSession, spec: TableSpec): DataFrame = {
     val l = listing(spark, spec.path)
-    val df = scan(spark, spec.path, l)
+    val (df, one) = scan(spark, spec.path, l)
     if (spec.mergeMode == MergeMode.Append) readView(df, spec)
-    else {
-      val manifest = l.filter(_.hasManifest).flatMap(_ =>
-        parseManifest(spark, new org.apache.hadoop.fs.Path(spec.path, ManifestFile)))
-      manifest match {
-        case Some((_, files)) if l.exists(_.names == files) =>
-          // fully compacted, nothing arrived since: the files ARE the
-          // merged view — scan-only read, column set identical to the
-          // windowed view's (engine seq column hidden)
-          readView(df, spec.copy(mergeMode = MergeMode.Append)).drop(SeqCol)
-        case Some((seq, _)) =>
-          readView(df, spec.copy(compactedSeq = Some(seq)))
-        case None => readView(df, spec)
-      }
+    else l.flatMap(_.manifest) match {
+      case Some(m) if l.exists(_.names == m.files) =>
+        // fully compacted, nothing arrived since: the files ARE the
+        // merged view — scan-only read, column set identical to the
+        // windowed view's (engine seq column hidden)
+        readView(df, spec.copy(mergeMode = MergeMode.Append)).drop(SeqCol)
+      case Some(m) => readView(df, spec.copy(compactedSeq = Some(m.seq)), one)
+      case None => readView(df, spec)
     }
   }
 
@@ -315,28 +395,42 @@ object Catalog {
   /** Delta+snapshot merge read for a compacted table that has seen
     * later appends: rows with seq <= `bound` are already merged (one
     * row per key); only keys the delta touches re-enter the merge
-    * window. Un-hinted joins on the delta key set — AQE converts them
-    * to broadcast when the delta is small (the steady-state case). All
-    * key joins are null-safe (null tags are valid key values). */
+    * window. One left outer join on the delta key set marks them: a
+    * marked row is touched, an unmarked one is snapshot and passes
+    * through (every delta row's key is in the set).
+    *
+    * On a one-partition scan (`onePartition`) the join is a shuffled
+    * hash join built on the delta keys inside that one task, and the
+    * union of the two branches is coalesced back to one partition: no
+    * exchange, and the read is one job. (The optimizer would push a
+    * semi or anti join below the scan's coalesce, so those plan
+    * exchanges.) On a wider scan the join is un-hinted, and AQE
+    * broadcasts the delta keys when they are small. All key joins are
+    * null-safe (null tags are valid key values). */
   private def mergeDelta(df: DataFrame, spec: TableSpec,
-      bound: Long): DataFrame = {
+      bound: Long, onePartition: Boolean): DataFrame = {
     val seqd = withSeq(df, spec)
     val keys = mergeKey(seqd, spec)
     // a null/unknown seq can't prove membership in the compacted
     // snapshot — treat it as delta, never silently drop the row
     val isDelta = col(SeqCol).isNull || col(SeqCol) > bound
     val dk = seqd.filter(isDelta)
-      .select(keys.map(c => col(s"`$c`").as(s"__dk_$c")): _*).distinct()
+      .select(keys.map(c => col(s"`$c`").as(s"__dk_$c")) :+ lit(true).as("__dk"): _*)
+      .distinct()
     val cond = keys.map(c => col(s"`$c`") <=> col(s"`__dk_$c`"))
       .reduce(_ && _)
-    val touched = seqd.join(dk, cond, "leftsemi")
-    val untouched = seqd.filter(!isDelta).join(dk, cond, "left_anti")
+    val marked = seqd.join(if (onePartition) dk.hint("shuffle_hash") else dk, cond, "left_outer")
+    def rows(touched: Boolean) =
+      marked.filter(if (touched) col("__dk").isNotNull else col("__dk").isNull)
+        .select(seqd.columns.map(c => col(s"`$c`")): _*)
     val merged = spec.mergeMode match {
-      case MergeMode.Append      => touched
-      case MergeMode.LastRow     => keepNewest(touched, spec)
-      case MergeMode.LastNonNull => mergeNonNullSeqd(touched, spec)
+      case MergeMode.Append      => rows(touched = true)
+      case MergeMode.LastRow     => keepNewest(rows(touched = true), spec)
+      case MergeMode.LastNonNull => mergeNonNullSeqd(rows(touched = true), spec)
     }
-    dropSeq(merged.unionByName(untouched))
+    // a union of two one-partition branches has two partitions
+    val all = dropSeq(merged.unionByName(rows(touched = false)))
+    if (onePartition) all.coalesce(1) else all
   }
 
   /** Materialize the write-order column ONCE so every window in the

@@ -1319,7 +1319,8 @@ private[sql] trait GraftDdl { self: GraftSession =>
     * reference migrates lazily per-file, which Parquet mergeSchema
     * cannot express for type changes. */
   private[sql] def migrateParquet(spec: TableSpec)(f: DataFrame => DataFrame): Unit = {
-    val out = f(graft.model.Catalog.rawRead(spark, spec.path))
+    val in = graft.model.Catalog.rawRead(spark, spec.path)
+    val out = f(in)
     val tmp = spec.path + "__mig_tmp"
     out.write.mode("overwrite").parquet(tmp)
     val fs = new org.apache.hadoop.fs.Path(spec.path)
@@ -1328,6 +1329,9 @@ private[sql] trait GraftDdl { self: GraftSession =>
     fs.rename(new org.apache.hadoop.fs.Path(tmp),
       new org.apache.hadoop.fs.Path(spec.path))
     refreshPath(spec.path)
+    // a rewrite that kept the schema (compaction, TTL, truncate) spares
+    // the next read its footer-union job
+    graft.model.Catalog.primeSchemaCacheAfterRewrite(spark, spec.path, in.schema, out.schema)
   }
 
   private[sql] def alterAddColumn(name: String, body0: String): Unit = {

@@ -3,6 +3,7 @@ package graft.sql
 import java.util.Locale
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.{Catalog, MergeMode, SemanticType, TableSpec}
@@ -1727,12 +1728,18 @@ final class GraftSession(spark0: SparkSession,
       // the shuffle; semantics are identical because the order id is
       // unique (no ties) and max_by keeps exactly the newest row's
       // full column struct per key.
+      // A VALUES body is an inline table (LocalRelation) whose rows the
+      // statement text already holds, so it dedups in ONE partition: the
+      // aggregate plans no exchange, and the statement is one write job
+      // of one file.
       var dedupApplied = false
       if (spec.mergeMode == MergeMode.LastRow) {
         val pkCols = spec.primaryKey.filter(cols.contains)
         if (pkCols.nonEmpty) {
           val origCols = df.columns.toSeq
           val rest = origCols.filterNot(pkCols.contains)
+          if (df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
+            df = df.coalesce(1)
           df =
             if (rest.isEmpty) df.dropDuplicates(pkCols) // keys only: rows identical per key
             else df.withColumn("__ord", monotonically_increasing_id())

@@ -6,15 +6,18 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeLike}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Catalog
 import graft.sql.GraftSession
 
-/** Single-split table reads: when Spark would read a table's files as
-  * one split, the read views plan as one partition — no shuffle, no
-  * range-sampling job for a global ORDER BY — and a table that splits
-  * keeps its exchanges. Rows are identical either way. */
+/** One-partition plans: when Spark would read a table's files as one
+  * split, or a compacted snapshot as one split plus a delta small
+  * enough to broadcast, the read views plan as one partition — no
+  * shuffle, no range-sampling job for a global ORDER BY — and a table
+  * that splits keeps its exchanges. Rows are identical either way. An
+  * INSERT VALUES dedups its rows in one partition too, and a torn
+  * compaction manifest reads as none. */
 class SingleSplitSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -128,31 +131,131 @@ class SingleSplitSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     agrees(bigFile, expected = false)
   }
 
+  /** A table `t` with a snapshot holding a null-tag key, compacted when
+    * `compact`, then a delta that rewrites snapshot keys (the null tag
+    * among them) and adds new ones. */
+  private def deltaTable(g: GraftSession, t: String, mode: String, compact: Boolean): Unit = {
+    g.sql(s"""CREATE TABLE $t (ts TIMESTAMP(3) TIME INDEX, host STRING,
+        a DOUBLE, b STRING, PRIMARY KEY (host)) WITH ('merge_mode'='$mode')""")
+    g.sql(s"INSERT INTO $t VALUES (0, 'h0', 1.0, 'x'), (0, 'h1', 2.0, 'y'), " +
+      "(1000, 'h0', 3.0, 'z'), (0, NULL, 7.0, 'n'), (1000, NULL, 8.0, NULL)")
+    if (compact) g.sql(s"ADMIN compact_table('$t')").collect()
+    g.sql(s"INSERT INTO $t (ts, host, a) VALUES (0, 'h1', NULL), (1000, 'h0', 5.0), " +
+      "(0, 'h2', 6.0), (0, NULL, NULL)")
+    g.sql(s"INSERT INTO $t (ts, host, b) VALUES (0, 'h0', 'w'), (1000, NULL, 'm'), (2000, NULL, 'k')")
+  }
+
+  private def isDelta(g: GraftSession, t: String): Boolean = {
+    val path = g.catalog.spec(t).path
+    Catalog.readCompactionManifest(g.spark, path)
+      .exists(_._2 != Catalog.listing(g.spark, path).get.names)
+  }
+
   test("a DELTA read after compaction returns the never-compacted merge view's rows") {
-    // minPartitionNum = 1 packs the snapshot and its appends into one
-    // split, so the merge runs on the single-partition scan; by default
-    // each small file is its own split
-    for (mode <- Seq("last_row", "last_non_null"); minParts <- Seq(None, Some("1"))) {
+    // a snapshot that fits one split plus a delta within
+    // autoBroadcastJoinThreshold reads as one partition, so the merge
+    // plans no exchange; a threshold of -1 keeps the exchange plan
+    for (mode <- Seq("last_row", "last_non_null"); threshold <- Seq(None, Some("-1"))) {
+      val what = s"$mode, autoBroadcastJoinThreshold $threshold"
       val g = new GraftSession(spark, tmp(s"delta_$mode"))
-      minParts.foreach(g.spark.conf.set("spark.sql.files.minPartitionNum", _))
-      for (t <- Seq("compacted", "plain")) {
-        g.sql(s"""CREATE TABLE $t (ts TIMESTAMP(3) TIME INDEX, host STRING,
-            a DOUBLE, b STRING, PRIMARY KEY (host)) WITH ('merge_mode'='$mode')""")
-        g.sql(s"INSERT INTO $t VALUES (0, 'h0', 1.0, 'x'), (0, 'h1', 2.0, 'y'), " +
-          "(1000, 'h0', 3.0, 'z'), (0, 'h0', 4.0, NULL)")
-        if (t == "compacted") g.sql(s"ADMIN compact_table('$t')").collect()
-        g.sql(s"INSERT INTO $t (ts, host, a) VALUES (0, 'h1', NULL), (1000, 'h0', 5.0), (0, 'h2', 6.0)")
-        g.sql(s"INSERT INTO $t (ts, host, b) VALUES (0, 'h0', 'w')")
-      }
-      val what = s"$mode, minPartitionNum $minParts"
-      val path = g.catalog.spec("compacted").path
-      val l = Catalog.listing(g.spark, path).get
-      assert(Catalog.readCompactionManifest(g.spark, path).exists(_._2 != l.names),
-        s"$what: not on the DELTA path")
-      assert(Catalog.singleSplit(g.spark, l.files.map(_.getLen)) == minParts.isDefined, what)
+      threshold.foreach(g.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+      deltaTable(g, "compacted", mode, compact = true)
+      deltaTable(g, "plain", mode, compact = false)
       def rows(t: String) = sorted(g.sql(s"SELECT ts, host, a, b FROM $t").collect())
+      val l = Catalog.listing(g.spark, g.catalog.spec("compacted").path).get
+      assert(isDelta(g, "compacted"), s"$what: not on the DELTA path")
+      assert(!Catalog.singleSplit(g.spark, l.files.map(_.getLen)), what)
+      assert(Catalog.onePartition(g.spark, l) == threshold.isEmpty, what)
+      val merge = g.sql("SELECT ts, host, a, b FROM compacted")
+      merge.collect()
+      val exchanges = collect(merge.queryExecution.executedPlan) { case e: Exchange => e }
+      assert(exchanges.isEmpty == threshold.isEmpty, s"$what: ${merge.queryExecution.executedPlan}")
       assert(rows("compacted") == rows("plain"), what)
-      assert(rows("plain").size == 4, what)
+      assert(rows("plain").size == 7, what)
+      assert(g.sql("SELECT ts FROM plain WHERE host IS NULL").collect().length == 3, what)
+      // a second compaction merges snapshot and delta again
+      g.sql("ADMIN compact_table('compacted')").collect()
+      assert(!isDelta(g, "compacted"), what)
+      assert(rows("compacted") == rows("plain"), s"$what, second compaction")
+      g.sql("INSERT INTO compacted (ts, host, a) VALUES (0, 'h0', 9.0), (0, NULL, 9.5)")
+      g.sql("INSERT INTO plain (ts, host, a) VALUES (0, 'h0', 9.0), (0, NULL, 9.5)")
+      assert(isDelta(g, "compacted"), what)
+      assert(rows("compacted") == rows("plain"), s"$what, delta after the second compaction")
     }
+  }
+
+  test("a torn or old-format compaction manifest reads as never compacted") {
+    val g = new GraftSession(spark, tmp("manifest"))
+    deltaTable(g, "compacted", "last_non_null", compact = true)
+    deltaTable(g, "plain", "last_non_null", compact = false)
+    val path = g.catalog.spec("compacted").path
+    val file = new java.io.File(path, "_graft_compaction")
+    val whole = new String(java.nio.file.Files.readAllBytes(file.toPath), "UTF-8")
+    val (seq, files) = Catalog.readCompactionManifest(g.spark, path).get
+    def rows(t: String) =
+      sorted(g.catalog.read(t).select("ts", "host", "a", "b").collect())
+    val plain = rows("plain")
+    assert(rows("compacted") == plain)
+    val oldFormat = (seq.toString +: files.toSeq.sorted).mkString("\n")
+    for ((what, text) <- Seq("truncated" -> whole.dropRight(4), "old format" -> oldFormat,
+        "empty" -> "")) {
+      java.nio.file.Files.write(file.toPath, text.getBytes("UTF-8"))
+      new java.io.File(path, "._graft_compaction.crc").delete()
+      assert(Catalog.readCompactionManifest(g.spark, path).isEmpty, what)
+      assert(Catalog.listing(g.spark, path).get.manifest.isEmpty, what)
+      assert(rows("compacted") == plain, what)
+    }
+    // a rewrite replaces the manifest whole
+    val names = Catalog.listing(g.spark, path).get.names
+    Catalog.writeCompactionManifest(g.spark, path, seq)
+    assert(Catalog.readCompactionManifest(g.spark, path).contains((seq, names)))
+    Catalog.writeCompactionManifest(g.spark, path, seq + 1)
+    assert(Catalog.readCompactionManifest(g.spark, path).contains((seq + 1, names)))
+  }
+
+  test("job counts: INSERT VALUES, a DELTA point read, compaction and a clean read run one job each") {
+    val g = new GraftSession(spark, tmp("job_counts"))
+    compactedCpu(g)
+    def insert(k: Int) = g.sql("INSERT INTO cpu VALUES " + (0 until 40).map(i =>
+      s"(${1000L * (20 + 4 * k + i / 10)}, 'h${i % 10}', ${i * 0.5})").mkString(", ")).collect()
+    val (_, insertJobs) = withJobCount(insert(0))
+    assert(insertJobs == 1, s"INSERT jobs=$insertJobs")
+    insert(1)
+    val point = "SELECT ts, v FROM cpu WHERE host = 'h1' AND ts IN " +
+      "(TIMESTAMP '1970-01-01 00:00:24', TIMESTAMP '1970-01-01 00:00:01') ORDER BY ts"
+    val read = g.sql(point)
+    val (rows, readJobs) = withJobCount(read.collect())
+    assert(readJobs == 1, s"DELTA read jobs=$readJobs: ${read.queryExecution.executedPlan}")
+    assert(rows.map(_.getDouble(1)).toSeq == Seq(-1.0, 0.5))
+    val (_, compactJobs) = withJobCount(g.sql("ADMIN compact_table('cpu')").collect())
+    assert(compactJobs == 1, s"compaction jobs=$compactJobs")
+    val (clean, cleanJobs) = withJobCount(g.sql(Query).collect())
+    assert(cleanJobs == 1, s"clean read jobs=$cleanJobs")
+    assert(clean.map(_.getLong(2)).sum == 60 + 80)
+  }
+
+  test("INSERT VALUES: the later duplicate wins, the status counts distinct keys, one file per statement") {
+    val g = new GraftSession(spark, tmp("insert_dups"))
+    g.sql("CREATE TABLE t (ts TIMESTAMP(3) TIME INDEX, host STRING, v DOUBLE, PRIMARY KEY (host))")
+    val path = g.catalog.spec("t").path
+    def files = Catalog.listing(g.spark, path).get.files.size
+    def rows = sorted(g.sql("SELECT unix_millis(ts), host, v FROM t").collect())
+    val created = files // CREATE TABLE writes the schema as an empty file
+    val status = g.sql("INSERT INTO t VALUES (0, 'h0', 1.0), (0, 'h1', 2.0), " +
+      "(0, 'h0', 3.0), (1000, 'h0', 4.0), (0, 'h1', NULL), (0, NULL, 5.0), (0, NULL, 6.0)")
+      .collect().head.getString(0)
+    assert(status == "inserted 4 rows into t")
+    assert(files == created + 1)
+    assert(rows == Seq("[0,h0,3.0]", "[0,h1,null]", "[0,null,6.0]", "[1000,h0,4.0]"))
+    g.sql("INSERT INTO t VALUES " + (0 until 40).map(i => s"(${1000L * i}, 'h${i % 3}', $i.5)")
+      .mkString(", "))
+    assert(files == created + 2, "one INSERT adds one data file")
+    // a bad-cast cell rejects the whole statement, its good rows too
+    val before = rows
+    val err = intercept[Exception](
+      g.sql("INSERT INTO t VALUES (5000, 'h9', '1.5'), (6000, 'h9', 'abc'), (7000, 'h8', '2')"))
+    assert(err.getMessage.contains("Unable to convert"), err.getMessage)
+    assert(rows == before)
+    assert(files == created + 2)
   }
 }
