@@ -67,9 +67,12 @@ object Catalog {
     * scan reads (underscore/dot names excluded, name-sorted) and the
     * compaction manifest beside them, if one is there and whole. Every
     * read view is built from one listing — the schema-cache key, the
-    * one-partition decision and the clean/DELTA choice all come from it. */
-  final case class Listing(files: Seq[org.apache.hadoop.fs.FileStatus],
-      manifest: Option[Manifest]) {
+    * one-partition decision and the clean/DELTA choice all come from it.
+    * The manifest is read on first use, so a schema-only listing opens
+    * no file. */
+  final case class Listing(files: Seq[org.apache.hadoop.fs.FileStatus])(
+      readManifest: () => Option[Manifest]) {
+    lazy val manifest: Option[Manifest] = readManifest()
     def names: Set[String] = files.map(_.getPath.getName).toSet
     private def entries = files.map(f =>
       s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
@@ -89,8 +92,8 @@ object Catalog {
   private def listDir(spark: SparkSession, path: String): Listing = {
     val all = fsOf(spark, path).listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
     def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
-    Listing(all.filterNot(s => hidden(s.getPath.getName)).sortBy(_.getPath.getName),
-      all.find(_.getPath.getName == ManifestFile).flatMap(m => parseManifest(spark, m.getPath)))
+    Listing(all.filterNot(s => hidden(s.getPath.getName)).sortBy(_.getPath.getName))(
+      () => all.find(_.getPath.getName == ManifestFile).flatMap(parseManifest(spark, _)))
   }
 
   /** [[listDir]], or None when the listing fails for any non-fatal
@@ -190,17 +193,25 @@ object Catalog {
   /** Whether the scan of this listing can run as ONE partition, by
     * rules Spark already has. Either every data file fits one split
     * ([[singleSplit]]), or the listing is a compacted snapshot plus a
-    * delta where the snapshot files (listing ∩ manifest) fit one split
-    * and the delta files (listing − manifest) total at most
-    * spark.sql.autoBroadcastJoinThreshold bytes: a delta Spark would
-    * broadcast to the snapshot's task anyway. A never-compacted table
-    * takes the first rule only. */
-  private[graft] def onePartition(spark: SparkSession, l: Listing): Boolean =
-    singleSplit(spark, l.files.map(_.getLen)) || l.manifest.exists { m =>
+    * delta where
+    *  - the snapshot files (listing ∩ manifest) fit one split,
+    *  - the delta files (listing − manifest) total at most
+    *    spark.sql.autoBroadcastJoinThreshold bytes, a delta Spark would
+    *    broadcast to the snapshot's task anyway, and
+    *  - all their bytes as one file would fit one split, as they will
+    *    once compacted: the one task reads no more than Spark gives one
+    *    scan task. Only the per-file open cost of the delta's small files
+    *    is not charged.
+    * A never-compacted table takes the first rule only. */
+  private[graft] def onePartition(spark: SparkSession, l: Listing): Boolean = {
+    val lens = l.files.map(_.getLen)
+    singleSplit(spark, lens) || l.manifest.exists { m =>
       val (snapshot, delta) = l.files.partition(f => m.files(f.getPath.getName))
       singleSplit(spark, snapshot.map(_.getLen)) &&
-        delta.map(_.getLen).sum <= spark.sessionState.conf.autoBroadcastJoinThreshold
+        delta.map(_.getLen).sum <= spark.sessionState.conf.autoBroadcastJoinThreshold &&
+        singleSplit(spark, Seq(lens.sum))
     }
+  }
 
   /** Raw append-stream read (no merge semantics) of the table at `path`. */
   def rawRead(spark: SparkSession, path: String): DataFrame =
@@ -272,11 +283,12 @@ object Catalog {
   //                         one partition when the files fit one split
   //   listing ⊃ manifest  → DELTA: window only keys the delta touches;
   //                         one partition when the snapshot files fit
-  //                         one split and the delta files total at most
-  //                         autoBroadcastJoinThreshold bytes, so the key
-  //                         joins and the window run in one task with no
-  //                         exchange (compaction's rewrite, which reads
-  //                         through rawRead, takes the same scan)
+  //                         one split, the delta files total at most
+  //                         autoBroadcastJoinThreshold bytes and all the
+  //                         bytes as one file would fit one split, so
+  //                         the key joins and the window run in one task
+  //                         with no exchange (compaction's rewrite, which
+  //                         reads through rawRead, takes the same scan)
   //   no manifest         → full merge window (a torn or old-format
   //                         manifest counts as none); one partition when
   //                         the files fit one split
@@ -322,19 +334,24 @@ object Catalog {
   }
 
   /** (compacted seq bound, file listing at compaction time), if a
-    * compaction ever ran on this dir and its manifest is whole. */
+    * compaction ever ran on this dir and its manifest is whole: the
+    * listing's [[Listing.manifest]], for callers outside the engine
+    * (perfbench's read-path observer). */
   def readCompactionManifest(spark: SparkSession,
-      path: String): Option[(Long, Set[String])] = {
-    val p = new org.apache.hadoop.fs.Path(path, ManifestFile)
-    if (!fsOf(spark, path).exists(p)) None
-    else parseManifest(spark, p).map(m => (m.seq, m.files))
-  }
+      path: String): Option[(Long, Set[String])] =
+    listing(spark, path).flatMap(_.manifest).map(m => (m.seq, m.files))
 
-  /** The manifest at `p`, or None when it is torn or of an older,
+  /** Torn manifests already reported, by (path, modification time). */
+  private val tornReported = java.util.concurrent.ConcurrentHashMap
+    .newKeySet[(String, Long)]()
+
+  /** The manifest `st`, or None when it is torn or of an older,
     * trailer-less format: the table then reads with the full merge
-    * window, which is correct whatever the dir holds. */
+    * window, which is correct whatever the dir holds, until the next
+    * compaction writes a whole manifest. Reported once per manifest. */
   private def parseManifest(spark: SparkSession,
-      p: org.apache.hadoop.fs.Path): Option[Manifest] = {
+      st: org.apache.hadoop.fs.FileStatus): Option[Manifest] = {
+    val p = st.getPath
     def read = {
       val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
@@ -350,9 +367,10 @@ object Catalog {
       files = body.slice(1, body.size - 1)
       if body.size >= 2 && files.size == n
     } yield Manifest(seq, files.toSet)
-    if (whole.isEmpty) Console.err.println(
-      s"[catalog] compaction manifest $p is torn or has no entry-count trailer; " +
-        "reading with the full merge window")
+    if (whole.isEmpty && tornReported.add((p.toString, st.getModificationTime)))
+      Console.err.println(
+        s"[catalog] compaction manifest $p is torn or has no entry-count trailer; " +
+          "reading with the full merge window")
     whole
   }
 

@@ -1715,45 +1715,9 @@ final class GraftSession(spark0: SparkSession,
           }
         }
       }
-      // align to full target schema: missing columns become nulls, the
-      // sequence column is stamped per statement (write order for the
-      // last_row / last_non_null merge views)
-      // duplicate keys WITHIN one statement: the later row wins (write
-      // order), mirroring the reference's ingest; dedup here because the
-      // statement-level seq can't order rows inside the statement.
-      // max_by(struct(non-key cols), write-order id) replaces the r10
-      // row_number window (optimization round 11, guide §2.3): the
-      // aggregate does partial map-side combining and needs no
-      // partition sort, where the window sorted every batch row after
-      // the shuffle; semantics are identical because the order id is
-      // unique (no ties) and max_by keeps exactly the newest row's
-      // full column struct per key.
-      // A VALUES body is an inline table (LocalRelation) whose rows the
-      // statement text already holds, so it dedups in ONE partition: the
-      // aggregate plans no exchange, and the statement is one write job
-      // of one file.
-      var dedupApplied = false
-      if (spec.mergeMode == MergeMode.LastRow) {
-        val pkCols = spec.primaryKey.filter(cols.contains)
-        if (pkCols.nonEmpty) {
-          val origCols = df.columns.toSeq
-          val rest = origCols.filterNot(pkCols.contains)
-          if (df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
-            df = df.coalesce(1)
-          df =
-            if (rest.isEmpty) df.dropDuplicates(pkCols) // keys only: rows identical per key
-            else df.withColumn("__ord", monotonically_increasing_id())
-              .groupBy(pkCols.map(k => col(s"`$k`")): _*)
-              .agg(max_by(struct(rest.map(c => col(s"`$c`")): _*),
-                col("__ord")).as("__r"))
-              .select(origCols.map(c =>
-                if (pkCols.contains(c)) col(s"`$c`")
-                else col("__r").getField(c).as(c)): _*)
-          dedupApplied = true
-        }
-      }
       // a VALUES cell that cannot cast to the column type fails the whole
-      // statement, nothing inserted (insert/mysql_insert.result: '15a'
+      // statement, nothing inserted, checked before the in-statement dedup
+      // drops any row (insert/mysql_insert.result: '15a'
       // into INT errors and the companion '16' row must not land)
       // type-changed columns store as STRING but validate/convert
       // against the CURRENT logical type (typeHistory semantics)
@@ -1776,6 +1740,54 @@ final class GraftSession(spark0: SparkSession,
       if (badCast.nonEmpty && !df.filter(badCast.reduce(_ || _)).isEmpty)
         throw new IllegalArgumentException(
           "Unable to convert value to column datatype")
+      // align to full target schema: missing columns become nulls, the
+      // sequence column is stamped per statement (write order for the
+      // last_row / last_non_null merge views)
+      // duplicate keys WITHIN one statement: the later row wins (write
+      // order), mirroring the reference's ingest, which gives each row
+      // of a batch its own sequence; dedup here because the
+      // statement-level seq can't order rows inside the statement.
+      // last_row keeps the newest row per key: max_by(struct(non-key
+      // cols), write-order id) replaces the r10 row_number window
+      // (optimization round 11, guide §2.3): the aggregate does partial
+      // map-side combining and needs no partition sort, where the window
+      // sorted every batch row after the shuffle; semantics are
+      // identical because the order id is unique (no ties) and max_by
+      // keeps exactly the newest row's full column struct per key.
+      // last_non_null keeps, per field, the newest non-null value of the
+      // key's rows (max_by skips a null ordering), as if each row were
+      // its own write.
+      // A VALUES body is an inline table (LocalRelation) whose rows the
+      // statement text already holds, so it dedups in ONE partition: the
+      // aggregate plans no exchange, and the statement is one write job
+      // of one file.
+      var dedupApplied = false
+      if (spec.mergeMode != MergeMode.Append) {
+        val pkCols = spec.primaryKey.filter(cols.contains)
+        if (pkCols.nonEmpty) {
+          val origCols = df.columns.toSeq
+          val rest = origCols.filterNot(pkCols.contains)
+          if (df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
+            df = df.coalesce(1)
+          val byKey = df.withColumn("__ord", monotonically_increasing_id())
+            .groupBy(pkCols.map(k => col(s"`$k`")): _*)
+          df =
+            if (rest.isEmpty) df.dropDuplicates(pkCols) // keys only: rows identical per key
+            else if (spec.mergeMode == MergeMode.LastRow)
+              byKey.agg(max_by(struct(rest.map(c => col(s"`$c`")): _*),
+                col("__ord")).as("__r"))
+              .select(origCols.map(c =>
+                if (pkCols.contains(c)) col(s"`$c`")
+                else col("__r").getField(c).as(c)): _*)
+            else {
+              val newestNonNull = rest.map(c =>
+                max_by(col(s"`$c`"), when(col(s"`$c`").isNotNull, col("__ord"))).as(c))
+              byKey.agg(newestNonNull.head, newestNonNull.tail: _*)
+                .select(origCols.map(c => col(s"`$c`")): _*)
+            }
+          dedupApplied = true
+        }
+      }
       val seq = seqCounter.incrementAndGet()
       val numericTypes: Set[DataType] =
         Set(ByteType, ShortType, IntegerType, LongType)

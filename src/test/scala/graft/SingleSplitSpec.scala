@@ -131,14 +131,15 @@ class SingleSplitSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     agrees(bigFile, expected = false)
   }
 
-  /** A table `t` with a snapshot holding a null-tag key, compacted when
-    * `compact`, then a delta that rewrites snapshot keys (the null tag
-    * among them) and adds new ones. */
+  /** A table `t` with a snapshot holding a null-tag key and a key
+    * written twice in one INSERT, compacted when `compact`, then a delta
+    * that rewrites snapshot keys (the null tag among them) and adds new
+    * ones. */
   private def deltaTable(g: GraftSession, t: String, mode: String, compact: Boolean): Unit = {
     g.sql(s"""CREATE TABLE $t (ts TIMESTAMP(3) TIME INDEX, host STRING,
         a DOUBLE, b STRING, PRIMARY KEY (host)) WITH ('merge_mode'='$mode')""")
     g.sql(s"INSERT INTO $t VALUES (0, 'h0', 1.0, 'x'), (0, 'h1', 2.0, 'y'), " +
-      "(1000, 'h0', 3.0, 'z'), (0, NULL, 7.0, 'n'), (1000, NULL, 8.0, NULL)")
+      "(1000, 'h0', 3.0, 'z'), (0, 'h0', 4.0, NULL), (0, NULL, 7.0, 'n'), (1000, NULL, 8.0, NULL)")
     if (compact) g.sql(s"ADMIN compact_table('$t')").collect()
     g.sql(s"INSERT INTO $t (ts, host, a) VALUES (0, 'h1', NULL), (1000, 'h0', 5.0), " +
       "(0, 'h2', 6.0), (0, NULL, NULL)")
@@ -146,32 +147,50 @@ class SingleSplitSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   private def isDelta(g: GraftSession, t: String): Boolean = {
-    val path = g.catalog.spec(t).path
-    Catalog.readCompactionManifest(g.spark, path)
-      .exists(_._2 != Catalog.listing(g.spark, path).get.names)
+    val l = Catalog.listing(g.spark, g.catalog.spec(t).path).get
+    l.manifest.exists(_.files != l.names)
   }
 
   test("a DELTA read after compaction returns the never-compacted merge view's rows") {
     // a snapshot that fits one split plus a delta within
     // autoBroadcastJoinThreshold reads as one partition, so the merge
-    // plans no exchange; a threshold of -1 keeps the exchange plan
-    for (mode <- Seq("last_row", "last_non_null"); threshold <- Seq(None, Some("-1"))) {
-      val what = s"$mode, autoBroadcastJoinThreshold $threshold"
+    // plans no exchange; a threshold of -1 keeps the exchange plan, and
+    // minPartitionNum = 1 packs every file into one split either way
+    val settings = Seq(None, Some("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
+      Some("spark.sql.files.minPartitionNum" -> "1"))
+    for (mode <- Seq("last_row", "last_non_null"); setting <- settings) {
+      val what = s"$mode, $setting"
       val g = new GraftSession(spark, tmp(s"delta_$mode"))
-      threshold.foreach(g.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+      setting.foreach { case (k, v) => g.spark.conf.set(k, v) }
+      val split = setting.exists(_._1 == "spark.sql.files.minPartitionNum")
+      val one = !setting.exists(_._1 == "spark.sql.autoBroadcastJoinThreshold")
       deltaTable(g, "compacted", mode, compact = true)
       deltaTable(g, "plain", mode, compact = false)
       def rows(t: String) = sorted(g.sql(s"SELECT ts, host, a, b FROM $t").collect())
       val l = Catalog.listing(g.spark, g.catalog.spec("compacted").path).get
       assert(isDelta(g, "compacted"), s"$what: not on the DELTA path")
-      assert(!Catalog.singleSplit(g.spark, l.files.map(_.getLen)), what)
-      assert(Catalog.onePartition(g.spark, l) == threshold.isEmpty, what)
+      assert(Catalog.singleSplit(g.spark, l.files.map(_.getLen)) == split, what)
+      assert(Catalog.onePartition(g.spark, l) == one, what)
+      if (setting.isEmpty) {
+        // the last rule alone: a split size that holds the snapshot but
+        // not the snapshot and delta bytes together
+        val s = g.spark.newSession()
+        val (snapshot, delta) = l.files.partition(f => l.manifest.get.files(f.getPath.getName))
+        s.conf.set("spark.sql.files.maxPartitionBytes",
+          (snapshot.map(_.getLen).sum + delta.map(_.getLen).sum / 2).toString)
+        assert(Catalog.singleSplit(s, snapshot.map(_.getLen)), s"$what: ${l.files}")
+        assert(!Catalog.onePartition(s, l), s"$what: ${l.files}")
+      }
       val merge = g.sql("SELECT ts, host, a, b FROM compacted")
       merge.collect()
       val exchanges = collect(merge.queryExecution.executedPlan) { case e: Exchange => e }
-      assert(exchanges.isEmpty == threshold.isEmpty, s"$what: ${merge.queryExecution.executedPlan}")
+      assert(exchanges.isEmpty == one, s"$what: ${merge.queryExecution.executedPlan}")
       assert(rows("compacted") == rows("plain"), what)
       assert(rows("plain").size == 7, what)
+      // (0, 'h0') was written twice in one INSERT, then its b rewritten
+      val h0 = g.sql("SELECT a, b FROM plain WHERE host = 'h0' AND unix_millis(ts) = 0").collect()
+      assert(h0.map(_.toString).toSeq ==
+        Seq(if (mode == "last_row") "[null,w]" else "[4.0,w]"), what)
       assert(g.sql("SELECT ts FROM plain WHERE host IS NULL").collect().length == 3, what)
       // a second compaction merges snapshot and delta again
       g.sql("ADMIN compact_table('compacted')").collect()
@@ -191,7 +210,8 @@ class SingleSplitSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val path = g.catalog.spec("compacted").path
     val file = new java.io.File(path, "_graft_compaction")
     val whole = new String(java.nio.file.Files.readAllBytes(file.toPath), "UTF-8")
-    val (seq, files) = Catalog.readCompactionManifest(g.spark, path).get
+    def manifest = Catalog.listing(g.spark, path).get.manifest
+    val Catalog.Manifest(seq, files) = manifest.get
     def rows(t: String) =
       sorted(g.catalog.read(t).select("ts", "host", "a", "b").collect())
     val plain = rows("plain")
@@ -201,16 +221,15 @@ class SingleSplitSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         "empty" -> "")) {
       java.nio.file.Files.write(file.toPath, text.getBytes("UTF-8"))
       new java.io.File(path, "._graft_compaction.crc").delete()
-      assert(Catalog.readCompactionManifest(g.spark, path).isEmpty, what)
-      assert(Catalog.listing(g.spark, path).get.manifest.isEmpty, what)
+      assert(manifest.isEmpty, what)
       assert(rows("compacted") == plain, what)
     }
     // a rewrite replaces the manifest whole
     val names = Catalog.listing(g.spark, path).get.names
     Catalog.writeCompactionManifest(g.spark, path, seq)
-    assert(Catalog.readCompactionManifest(g.spark, path).contains((seq, names)))
+    assert(manifest.contains(Catalog.Manifest(seq, names)))
     Catalog.writeCompactionManifest(g.spark, path, seq + 1)
-    assert(Catalog.readCompactionManifest(g.spark, path).contains((seq + 1, names)))
+    assert(manifest.contains(Catalog.Manifest(seq + 1, names)))
   }
 
   test("job counts: INSERT VALUES, a DELTA point read, compaction and a clean read run one job each") {
@@ -235,27 +254,36 @@ class SingleSplitSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("INSERT VALUES: the later duplicate wins, the status counts distinct keys, one file per statement") {
-    val g = new GraftSession(spark, tmp("insert_dups"))
-    g.sql("CREATE TABLE t (ts TIMESTAMP(3) TIME INDEX, host STRING, v DOUBLE, PRIMARY KEY (host))")
-    val path = g.catalog.spec("t").path
-    def files = Catalog.listing(g.spark, path).get.files.size
-    def rows = sorted(g.sql("SELECT unix_millis(ts), host, v FROM t").collect())
-    val created = files // CREATE TABLE writes the schema as an empty file
-    val status = g.sql("INSERT INTO t VALUES (0, 'h0', 1.0), (0, 'h1', 2.0), " +
-      "(0, 'h0', 3.0), (1000, 'h0', 4.0), (0, 'h1', NULL), (0, NULL, 5.0), (0, NULL, 6.0)")
-      .collect().head.getString(0)
-    assert(status == "inserted 4 rows into t")
-    assert(files == created + 1)
-    assert(rows == Seq("[0,h0,3.0]", "[0,h1,null]", "[0,null,6.0]", "[1000,h0,4.0]"))
-    g.sql("INSERT INTO t VALUES " + (0 until 40).map(i => s"(${1000L * i}, 'h${i % 3}', $i.5)")
-      .mkString(", "))
-    assert(files == created + 2, "one INSERT adds one data file")
-    // a bad-cast cell rejects the whole statement, its good rows too
-    val before = rows
-    val err = intercept[Exception](
-      g.sql("INSERT INTO t VALUES (5000, 'h9', '1.5'), (6000, 'h9', 'abc'), (7000, 'h8', '2')"))
-    assert(err.getMessage.contains("Unable to convert"), err.getMessage)
-    assert(rows == before)
-    assert(files == created + 2)
+    for (mode <- Seq("last_row", "last_non_null")) {
+      val g = new GraftSession(spark, tmp(s"insert_dups_$mode"))
+      g.sql("CREATE TABLE t (ts TIMESTAMP(3) TIME INDEX, host STRING, v DOUBLE, " +
+        s"PRIMARY KEY (host)) WITH ('merge_mode'='$mode')")
+      val path = g.catalog.spec("t").path
+      def files = Catalog.listing(g.spark, path).get.files.size
+      def rows = sorted(g.sql("SELECT unix_millis(ts), host, v FROM t").collect())
+      val created = files // CREATE TABLE writes the schema as an empty file
+      val status = g.sql("INSERT INTO t VALUES (0, 'h0', 1.0), (0, 'h1', 2.0), " +
+        "(0, 'h0', 3.0), (1000, 'h0', 4.0), (0, 'h1', NULL), (0, NULL, 5.0), (0, NULL, 6.0)")
+        .collect().head.getString(0)
+      assert(status == "inserted 4 rows into t", mode)
+      assert(files == created + 1, mode)
+      // last_non_null keeps a field's newest non-null value, as separate
+      // INSERTs would
+      val h1 = if (mode == "last_row") "null" else "2.0"
+      assert(rows == Seq("[0,h0,3.0]", s"[0,h1,$h1]", "[0,null,6.0]", "[1000,h0,4.0]"), mode)
+      g.sql("INSERT INTO t VALUES " + (0 until 40).map(i => s"(${1000L * i}, 'h${i % 3}', $i.5)")
+        .mkString(", "))
+      assert(files == created + 2, s"$mode: one INSERT adds one data file")
+      // a bad-cast cell rejects the whole statement, its good rows too,
+      // also when a later row of the same key would replace it
+      val before = rows
+      for (bad <- Seq("(5000, 'h9', '1.5'), (6000, 'h9', 'abc'), (7000, 'h8', '2')",
+          "(5000, 'h9', 'abc'), (5000, 'h9', '1.5')")) {
+        val err = intercept[Exception](g.sql(s"INSERT INTO t VALUES $bad"))
+        assert(err.getMessage.contains("Unable to convert"), s"$mode: ${err.getMessage}")
+      }
+      assert(rows == before, mode)
+      assert(files == created + 2, mode)
+    }
   }
 }
