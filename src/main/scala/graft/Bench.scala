@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark. Prints ONE compact JSON line (the driver's
   * tail capture is 2000 chars — the line must stay well under that,
@@ -143,7 +142,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     // quiesce gate: end-of-round snapshots ran concurrent with other
     // work twice (r3 2.5×, r4 2.6× a clean run). Wait for the machine
@@ -159,14 +157,7 @@ object Bench {
     // up, so the end-of-run loadavg alone can't show the gate passed
     val loadAtGate = loadavg
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val qs = SparkEntry.queries
     // dev filter: SPARK_GRAFT_BENCH_ONLY=a,b restricts the set

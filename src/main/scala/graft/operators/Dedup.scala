@@ -798,6 +798,13 @@ object Dedup {
     // doc's prefix (rank <= sz - ceil(t*sz) + 1). Rank semantics are
     // unchanged: grams are distinct within a doc, so the (df, gram)
     // struct order is total and pos+1 equals the old row_number.
+    // Memory bound: the collect_list buffer is per doc and holds one
+    // (df, gram) struct per distinct gram of that doc, so it is capped
+    // by the doc's gram count __sz (at most its word count - n + 1),
+    // not by the corpus: 16 bytes of payload per gram plus JVM object
+    // overhead. One doc's buffer cannot spill, so the longest doc sets
+    // the peak; the aggregate spills across docs as any object-hash
+    // aggregate does.
     val prefix = grams.join(freq, "__gram")
       .groupBy(col("__id"))
       .agg(max(col("__sz")).as("__sz"),

@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.LocalSession
 import graft.operators.Similarity
 
 /** ANN audit one decade past the 200k round-5 table: 2M synthetic
@@ -20,18 +19,7 @@ object AnnScaleProbe {
     val dim = 64
     val nq = 64
     val k = 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val shuffle = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffle.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val spark = LocalSession()
     // clusters: center(id % 4096) + noise; both hash-derived so the
     // corpus is deterministic and never materialized off-JVM
     val emb = spark.range(n).select(col("id").as("vec_id"),
@@ -47,13 +35,9 @@ object AnnScaleProbe {
     queries.count()
 
     def timed[A](label: String)(f: => A): A = {
-      shuffle.set(0L)
-      val t0 = System.nanoTime()
-      val r = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(400)
-      println(f"[ann-2m] $label%-16s wall=$wall%7.2f s shuffleMB=${shuffle.get / 1e6}%8.2f")
-      r
+      val r = StageMeter.measure(spark)(f)
+      println(f"[ann-2m] $label%-16s wall=${r.wallS}%7.2f s shuffleMB=${r.shuffleMB}%8.2f")
+      r.result
     }
 
     def toMap(rows: Array[org.apache.spark.sql.Row]): Map[Long, Seq[Long]] =

@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.LocalSession
 
 /** Growth audit for Dedup.connectedComponents: synthetic edge lists at
   * 1M/10M edges in two topologies — 8-node cliques (the realistic
@@ -13,23 +12,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * shuffle linear in edges. */
 object CcScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     // GRAFT_CKPT_DIR exercises the cluster-grade reliable-checkpoint
     // path (Lineage.truncate) at probe volume instead of spec-toy size
     sys.env.get("GRAFT_CKPT_DIR").foreach { d =>
       spark.conf.set("graft.checkpoint.dir", d)
       println(s"[cc-scale] reliable checkpoints -> $d")
     }
-    val shuffle = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffle.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
     val sizes = sys.env.get("CC_EDGES")
       .map(_.split(",").map(_.toLong).toSeq)
       .getOrElse(Seq(1000000L, 10000000L))
@@ -56,14 +45,13 @@ object CcScaleProbe {
         }
       val e = edges.persist()
       val realEdges = e.count()
-      shuffle.set(0)
-      val t0 = System.nanoTime()
-      val comp = graft.operators.Dedup.connectedComponents(e, "id_a", "id_b")
-      val nComp = comp.select(countDistinct(col("comp"))).first().getLong(0)
-      val wall = (System.nanoTime() - t0) / 1e9
+      val r = StageMeter.measure(spark) {
+        val comp = graft.operators.Dedup.connectedComponents(e, "id_a", "id_b")
+        comp.select(countDistinct(col("comp"))).first().getLong(0)
+      }
       val shape = if (clique) "8-clique" else "16-chain"
-      println(f"[cc-scale] $shape%-9s edges=$realEdges%9d comps=$nComp%8d " +
-        f"wall=$wall%6.1f s shuffleMB=${shuffle.get / 1e6}%8.1f")
+      println(f"[cc-scale] $shape%-9s edges=$realEdges%9d comps=${r.result}%8d " +
+        f"wall=${r.wallS}%6.1f s shuffleMB=${r.shuffleMB}%8.1f")
       e.unpersist()
     }
     spark.stop()

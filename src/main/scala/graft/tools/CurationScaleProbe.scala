@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.LocalSession
 
 /** Growth audit for the curation operators (repetition filters, PII
   * redaction, TF-IDF, quantized k-means): wall + shuffle bytes on a
@@ -13,22 +12,7 @@ object CurationScaleProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/graft_cur10", "/tmp/graft_cur100")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val stages = new java.util.concurrent.atomic.AtomicLong(0)
-    val shuffle = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        shuffle.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-    })
+    val spark = LocalSession()
     // count() would let Spark prune the per-row projections entirely
     // (repetition/PII measured as a bare scan); checksum every output
     // column instead so the probe times the real work.
@@ -52,16 +36,9 @@ object CurationScaleProbe {
       for (op <- ops) {
         val q = graft.SparkEntry.queries(op)
         materialize(q(spark, dir)) // warm
-        Thread.sleep(300)
-        stages.set(0); shuffle.set(0)
-        val walls = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          materialize(q(spark, dir))
-          (System.nanoTime() - t0) / 1e9
-        }
-        Thread.sleep(500)
-        println(f"[curation-scale]   $op%-18s wall_min=${walls.min}%6.2f s " +
-          f"stages/run=${stages.get / 2} shuffleMB/run=${shuffle.get / 2e6}%8.2f")
+        val runs = (1 to 2).map(_ => StageMeter.measure(spark)(materialize(q(spark, dir))))
+        println(f"[curation-scale]   $op%-18s wall_min=${runs.map(_.wallS).min}%6.2f s " +
+          f"stages/run=${runs.map(_.stages).sum / 2} shuffleMB/run=${runs.map(_.shuffleMB).sum / 2}%8.2f")
         spark.catalog.clearCache()
       }
     }

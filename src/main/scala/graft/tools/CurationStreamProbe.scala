@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 import org.apache.spark.sql.functions._
 
 /** Semantics probe behind the `flow_stream_curation` entry — the
@@ -34,12 +34,7 @@ import org.apache.spark.sql.functions._
   */
 object CurationStreamProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val tmp = graft.queries.QueryDsl.tempDirCleanedOnExit("curprobe")
     val in = new java.io.File(s"$tmp/in"); in.mkdirs()

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.LocalSession
 import graft.operators.Dedup
 
 /** Growth audit for the dedup family (VERDICT r4 #8): runs the MinHash
@@ -13,33 +12,12 @@ import graft.operators.Dedup
 object DedupScaleProbe {
   def main(args: Array[String]): Unit = {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shuffleRows = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        shuffleBytes.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        shuffleRows.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-      }
-    })
+    val spark = LocalSession()
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val n = docs.count()
     def run(label: String)(f: => Long): Unit = {
-      shuffleBytes.set(0L)
-      shuffleRows.set(0L)
-      val t0 = System.nanoTime()
-      val pairs = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500)
-      println(f"[dedup-scale] $label%-16s docs=$n%-8d pairs=$pairs%-9d wall=$wall%7.2f s shuffleMB=${shuffleBytes.get / 1e6}%9.1f shuffleMrows=${shuffleRows.get / 1e6}%8.2f")
+      val r = StageMeter.measure(spark)(f)
+      println(f"[dedup-scale] $label%-16s docs=$n%-8d pairs=${r.result}%-9d wall=${r.wallS}%7.2f s shuffleMB=${r.shuffleMB}%9.1f shuffleMrows=${r.shuffleWriteRecords / 1e6}%8.2f")
     }
     run("minhash_lsh") {
       Dedup.minhashPairs(docs, "text", "doc_id").count()

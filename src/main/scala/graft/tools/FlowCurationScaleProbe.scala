@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** Growth check for the composed streaming curation pipeline: run the
   * `flow_stream_curation` entry (five micro-batches of the full
@@ -15,14 +15,7 @@ object FlowCurationScaleProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/graft_inc10")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val q = graft.SparkEntry.queries("flow_stream_curation")
     for (dir <- dirs if new java.io.File(s"$dir/documents.parquet").exists()) {
       val docs = spark.read.parquet(s"$dir/documents.parquet")

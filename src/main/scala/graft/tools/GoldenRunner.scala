@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 
 import scala.util.{Failure, Success, Try}
 
+import graft.LocalSession
 import graft.sql.GraftSession
 
 /** Golden-corpus runner: executes the reference's own sqlness test files
@@ -16,8 +17,9 @@ import graft.sql.GraftSession
   * casts, DataFusion-only functions, `arrow_typeof`, ...) count as
   * skipped; any executed comparison must match exactly.
   *
-  * Shared by GoldenCorpusSpec (pinned assertions) and GoldenSweep (the
-  * discovery tool that reports per-file pass/skip counts).
+  * Shared by GoldenRangeSpec and the GoldenRound*Spec suites (pinned
+  * assertions) and GoldenSweep (the discovery tool that reports
+  * per-file pass/skip counts).
   */
 object GoldenRunner {
 
@@ -724,7 +726,8 @@ object GoldenRunner {
 }
 
 /** Sweep the whole sqlness corpus and report per-file outcomes — dev
-  * tool for deciding which files to pin in GoldenCorpusSpec. */
+  * tool for deciding which files to pin in GoldenRangeSpec and the
+  * GoldenRound*Spec suites. */
 object GoldenSweep {
   /** Corpus roots beyond standalone/common that carry comparable (not
     * plan-text) semantics. optimizer/ and tql-explain-analyze/ are
@@ -762,13 +765,13 @@ object GoldenSweep {
     // views / function registry, shared context). Sequential: ~19 min;
     // 4 shards: under 8 — the per-commit-gate budget (r5 task #8).
     val shards = sys.env.get("GOLDEN_SHARDS").map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master(s"local[${math.max(8, shards * 8)}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(math.max(8, shards * 8))
+    // 8 shuffle partitions whatever the core count; a shard's
+    // newSession() starts from the context conf, so it sets them again
+    def sweepConf(s: SparkSession): SparkSession = {
+      s.conf.set("spark.sql.shuffle.partitions", "8"); s
+    }
+    sweepConf(spark)
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
     // recurse: the corpus nests files (common/types/float/*.result,
@@ -832,7 +835,7 @@ object GoldenSweep {
       .map(_._2.map(_._1))
     val threads = groups.map { g =>
       val t = new Thread(() => {
-        val session = spark.newSession()
+        val session = sweepConf(spark.newSession())
         g.foreach { case (rel, path) => process(session, rel, path) }
       })
       t.start(); t

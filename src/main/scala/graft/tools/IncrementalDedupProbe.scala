@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.LocalSession
 import graft.operators.Dedup
 
 /** Scale evidence for the incremental-dedup claim (VERDICT r9 #1):
@@ -23,29 +22,10 @@ object IncrementalDedupProbe {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/graft_scale")
     val shardRows = 5000L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
-    })
+    val spark = LocalSession()
     def timed[A](f: => A): (A, Double, Double) = {
-      // drain the async listener bus before reset AND before read, so
-      // one phase's stage metrics never leak into the next
-      Thread.sleep(700) // listener bus is async and private[spark]: settle it
-      shuffleBytes.set(0L)
-      val t0 = System.nanoTime()
-      val r = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(700) // listener bus is async and private[spark]: settle it
-      ((r, wall, shuffleBytes.get / 1e6))
+      val r = StageMeter.measure(spark)(f)
+      (r.result, r.wallS, r.shuffleMB)
     }
     for (dir <- dirs if new java.io.File(s"$dir/documents.parquet").exists()) {
       val docs = spark.read.parquet(s"$dir/documents.parquet")

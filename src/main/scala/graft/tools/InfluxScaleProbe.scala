@@ -1,20 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 import org.apache.spark.sql.functions._
 import graft.ingest.Protocols
 
 object InfluxScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/tmp/graft_scale"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"[probe] $label%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s")

@@ -1,5 +1,5 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 /** One-shot r10 measurement: IVF serve cost from the just-built lazy
@@ -8,10 +8,7 @@ import graft.operators.Similarity
 object IvfServeProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val probes = emb.filter(col("vec_id") >= 5 && col("vec_id") < 10)
       .select(col("vec_id").as("q_id"),

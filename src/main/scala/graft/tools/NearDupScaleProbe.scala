@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.LocalSession
 import graft.multimodal.Multimodal
 
 /** Growth audit for the composed Hamming near-dup pipeline (VERDICT r9
@@ -20,37 +19,19 @@ object NearDupScaleProbe {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val caps = if (args.length > 1) args.drop(1).map(_.toLong).toSeq
       else Seq(3000L, 30000L, 300000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
-    })
+    val spark = LocalSession()
     val ev = graft.Tables.load(spark, dir, "events")
     for (cap <- caps) {
       val assets = Multimodal.nearDupImageAssets(spark,
         ev.filter(col("event_id") < cap))
       val n = assets.count()
-      // drain the async listener bus around the measurement so stage
-      // metrics from the count above (or the previous cap) don't leak
-      Thread.sleep(700) // listener bus is async and private[spark]: settle it
-      shuffleBytes.set(0L)
-      val t0 = System.nanoTime()
-      val out = graft.queries.LlmQueries.nearDupPipeline(assets)
-      val comps = out.select(col("canonical_id")).distinct().count()
-      val rows = out.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(700) // listener bus is async and private[spark]: settle it
+      val r = StageMeter.measure(spark) {
+        val out = graft.queries.LlmQueries.nearDupPipeline(assets)
+        (out.select(col("canonical_id")).distinct().count(), out.count())
+      }
+      val (comps, rows) = r.result
       println(f"[neardup-scale] cap=$cap%-8d assets=$n%-8d rows=$rows%-8d " +
-        f"components=$comps%-6d wall=$wall%7.2f s shuffleMB=${shuffleBytes.get / 1e6}%9.1f")
+        f"components=$comps%-6d wall=${r.wallS}%7.2f s shuffleMB=${r.shuffleMB}%9.1f")
     }
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.LocalSession
 import graft.operators.Dedup
 
 /** Stage count + shuffle bytes of ngramJaccardPairs at sf0.1, small path
@@ -10,36 +9,18 @@ import graft.operators.Dedup
 object NgramStageProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val stages = new java.util.concurrent.atomic.AtomicLong(0)
-    val shuffle = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        shuffle.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-    })
+    val spark = LocalSession()
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     docs.count()
     def run(label: String, boundary: Long): Unit = {
       spark.conf.set(Dedup.VerifyBroadcastMinDocsKey, boundary.toString)
       try {
         Dedup.ngramJaccardPairs(docs, "text", "doc_id").count() // warm
-        Thread.sleep(500)
-        stages.set(0); shuffle.set(0)
-        val walls = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          Dedup.ngramJaccardPairs(docs, "text", "doc_id").count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        Thread.sleep(500)
+        val runs = (1 to 3).map(_ =>
+          StageMeter.measure(spark)(Dedup.ngramJaccardPairs(docs, "text", "doc_id").count()))
+        val walls = runs.map(_.wallS)
         println(f"[ngram-stage] $label%-12s wall_min=${walls.min}%5.2f s " +
-          f"stages/run=${stages.get / 3} shuffleMB/run=${shuffle.get / 3e6}%7.1f " +
+          f"stages/run=${runs.map(_.stages).sum / 3} shuffleMB/run=${runs.map(_.shuffleMB).sum / 3}%7.1f " +
           f"passes=${walls.map(w => f"$w%.2f").mkString(",")}")
       } finally spark.conf.unset(Dedup.VerifyBroadcastMinDocsKey)
     }

@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.LocalSession
 import graft.operators.{Dedup, Similarity}
 
 /** Round-10 growth audit (VERDICT r9 task #8) for the two composed
@@ -25,27 +24,10 @@ object PipelineGrowthProbe {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/tmp/graft_s10", "/tmp/graft_s100")
     val shardRows = 5000L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
-    })
+    val spark = LocalSession()
     def timed[A](f: => A): (A, Double, Double) = {
-      Thread.sleep(700) // async listener bus: settle before reset
-      shuffleBytes.set(0L)
-      val t0 = System.nanoTime()
-      val r = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(700)
-      ((r, wall, shuffleBytes.get / 1e6))
+      val r = StageMeter.measure(spark)(f)
+      (r.result, r.wallS, r.shuffleMB)
     }
 
     for (dir <- dirs if new java.io.File(s"$dir/documents.parquet").exists()) {

@@ -1,5 +1,5 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** Dump `.explain("formatted")` for named queries to plans/<tag>/<q>_<suffix>.txt
   * (the optimization-round evidence files). Usage:
@@ -12,13 +12,7 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val tag = args(0); val suffix = args(1); val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = new java.io.File(s"plans/$tag")
     outDir.mkdirs()

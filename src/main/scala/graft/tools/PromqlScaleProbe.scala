@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.LocalSession
 import graft.promql.PromQL
 import graft.promql.PromQL.{EvalParams, Metric}
 
@@ -20,21 +19,7 @@ object PromqlScaleProbe {
     // series label: event_type = 5 fat series (chunked-parallelism case),
     // user_id = thousands of thin series (wide-metric case)
     val labelArg = if (args.length > 3) args(3) else "event_type"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val spark = LocalSession()
 
     val ev = graft.Tables.load(spark, src, "events")
       .select(col(labelArg).cast("string").as("series"),
@@ -51,13 +36,8 @@ object PromqlScaleProbe {
       PromQL.GridFanoutMax = threshold
       // warmup once for JIT/scan caches, then measure
       PromQL.rangeFn("rate", m, p, rangeMs).df.count()
-      Thread.sleep(500)
-      shuffleBytes.set(0L)
-      val t0 = System.nanoTime()
-      val n = PromQL.rangeFn("rate", m, p, rangeMs).df.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // listener events drain async
-      println(f"[promql-scale] $label%-12s rows=$n%-9d wall=$wall%7.2f s shuffleMB=${shuffleBytes.get / 1e6}%9.1f")
+      val r = StageMeter.measure(spark)(PromQL.rangeFn("rate", m, p, rangeMs).df.count())
+      println(f"[promql-scale] $label%-12s rows=${r.result}%-9d wall=${r.wallS}%7.2f s shuffleMB=${r.shuffleMB}%9.1f")
     }
 
     println(s"[promql-scale] label=$labelArg span ${(hi - lo) / 1000}s, steps=${(hi - lo) / p.stepMs}, ratio=${rangeMs / p.stepMs}")

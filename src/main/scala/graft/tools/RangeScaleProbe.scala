@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.LocalSession
 import graft.operators.{RangeFolds, RangeSelect}
 import graft.operators.RangeSelect.RangeAgg
 
@@ -23,21 +22,7 @@ object RangeScaleProbe {
     val rangeMs = if (args.length > 2) args(2).toLong else 3600000L
     val byCol = if (args.length > 3) args(3) else "event_type"
     val scale = if (args.length > 4) args(4).toInt else 1
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val spark = LocalSession()
 
     var ev = graft.Tables.load(spark, src, "events")
       .select(col(byCol).cast("string").as("series"),
@@ -64,14 +49,9 @@ object RangeScaleProbe {
             RangeAgg("p50", ctx => percentile(ctx.value("v"), lit(0.5))),
             RangeAgg("p90", ctx => percentile(ctx.value("v"), lit(0.9)))))
       q().count() // warmup (JIT, scan caches)
-      Thread.sleep(500)
-      shuffleBytes.set(0L)
-      val t0 = System.nanoTime()
-      val n = q().count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // listener events drain async
-      println(f"[range-scale] $label%-12s rows=$n%-9d wall=$wall%7.2f s " +
-        f"shuffleMB=${shuffleBytes.get / 1e6}%9.1f")
+      val r = StageMeter.measure(spark)(q().count())
+      println(f"[range-scale] $label%-12s rows=${r.result}%-9d wall=${r.wallS}%7.2f s " +
+        f"shuffleMB=${r.shuffleMB}%9.1f")
     }
 
     println(s"[range-scale] events=$n0 (scale=$scale) by=$byCol " +

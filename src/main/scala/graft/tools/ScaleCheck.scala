@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 import org.apache.spark.sql.functions._
 
 /** Scale validation: synthesize an N× events table (default 100× → 10M
@@ -24,14 +24,7 @@ object ScaleCheck {
     val out = if (args.length > 1) args(1) else "/tmp/graft_scale"
     val evFan = if (args.length > 2) args(2).toInt else 100
     val docFan = if (args.length > 3) args(3).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
 
     val outDir = new java.io.File(out)
     if (outDir.exists()) {

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.LocalSession
 
 /** Growth audit for Clustering.semanticDedupPairs: the oracle query
   * pins k=10 (a replayable Lloyd history), but the 100 TB design point
@@ -12,29 +11,18 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 object SemDedupScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_cur10")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val shuffle = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffle.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val spark = LocalSession()
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val n = emb.count()
     for (k <- Seq(10, 40, 160)) {
-      shuffle.set(0)
-      val t0 = System.nanoTime()
-      val pairs = graft.operators.Clustering
-        .semanticDedupPairs(emb, "embedding", "vec_id",
-          threshold = 0.40, k = k, iters = 3)
-        .count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[semdedup-scale] n=$n k=$k%4d pairs=$pairs%8d " +
-        f"wall=$wall%6.1f s shuffleMB=${shuffle.get / 1e6}%8.1f")
+      val r = StageMeter.measure(spark) {
+        graft.operators.Clustering
+          .semanticDedupPairs(emb, "embedding", "vec_id",
+            threshold = 0.40, k = k, iters = 3)
+          .count()
+      }
+      println(f"[semdedup-scale] n=$n k=$k%4d pairs=${r.result}%8d " +
+        f"wall=${r.wallS}%6.1f s shuffleMB=${r.shuffleMB}%8.1f")
     }
     spark.stop()
   }

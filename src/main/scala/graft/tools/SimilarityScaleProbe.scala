@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.LocalSession
 import graft.operators.Similarity
 
 /** ANN growth audit: brute-force vs LSH vs IVF top-k over an embeddings
@@ -16,18 +15,7 @@ object SimilarityScaleProbe {
     val nq = if (args.length > 2) args(2).toInt else 16
     val nprobe = if (args.length > 3) args(3).toInt else 2
     val maxFlips = if (args.length > 4) args(4).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val spark = LocalSession()
     val emb = spark.read.parquet(s"$src/embeddings.parquet").cache()
     val n = emb.count()
     // deterministic query set: every (n/nq)-th vector by id
@@ -40,15 +28,12 @@ object SimilarityScaleProbe {
 
     def run(label: String)(f: => org.apache.spark.sql.DataFrame)
         : Map[Long, Seq[Long]] = {
-      shuffleBytes.set(0L)
-      val t0 = System.nanoTime()
-      val rows = f.select(col("q_id"), col("vec_id"), col("rank")).collect()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(400)
-      val byQ = rows.groupBy(_.getLong(0)).map { case (q, rs) =>
+      val r = StageMeter.measure(spark)(
+        f.select(col("q_id"), col("vec_id"), col("rank")).collect())
+      val byQ = r.result.groupBy(_.getLong(0)).map { case (q, rs) =>
         q -> rs.sortBy(_.getInt(2)).map(_.getLong(1)).toSeq
       }
-      println(f"[ann-scale] $label%-12s corpus=$n%-8d queries=${byQ.size}%-4d wall=$wall%7.2f s shuffleMB=${shuffleBytes.get / 1e6}%8.1f")
+      println(f"[ann-scale] $label%-12s corpus=$n%-8d queries=${byQ.size}%-4d wall=${r.wallS}%7.2f s shuffleMB=${r.shuffleMB}%8.1f")
       byQ
     }
 

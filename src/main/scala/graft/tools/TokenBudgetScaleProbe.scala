@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.LocalSession
 
 /** Growth audit for Sampling.tokenBudget: the adversarial mixture shape
   * — ONE stratum holding the entire corpus (5M docs) — which the old
@@ -12,18 +12,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * Window stage, wall flat-linear in docs. */
 object TokenBudgetScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val shuffle = new java.util.concurrent.atomic.AtomicLong(0)
+    val cores = LocalSession.defaultCores
+    val spark = LocalSession(cores)
     // max records seen by any single task of any stage: the serialization
-    // smoking gun — the window formulation put all n rows in one task
+    // smoking gun — the window formulation put all n rows in one task.
+    // It shares the listener bus queue with StageMeter's listener, so
+    // the meter's fence also delivers every task event of the body.
     val maxTaskRows = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
         if (m != null) {
           val rows = math.max(m.inputMetrics.recordsRead,
@@ -31,22 +28,20 @@ object TokenBudgetScaleProbe {
           maxTaskRows.getAndUpdate(x => math.max(x, rows))
         }
       }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffle.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
     })
     for (n <- Seq(500000L, 5000000L)) {
       val docs = spark.range(n).select(col("id"),
         lit(0L).as("src"), (col("id") % 97 + 3).as("toks")).persist()
       docs.count()
-      shuffle.set(0); maxTaskRows.set(0)
-      val t0 = System.nanoTime()
-      val out = graft.operators.Sampling.tokenBudget(
-        docs, col("src"), col("id"), col("toks"), budgetPerStratum = n * 13)
-      val kept = out.filter(col("kept")).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[tokbudget-scale] docs=$n%8d kept=$kept%8d wall=$wall%6.1f s " +
-        f"shuffleMB=${shuffle.get / 1e6}%7.1f maxTaskRows=${maxTaskRows.get}%9d " +
-        f"(fair=${n / 32}%d)")
+      maxTaskRows.set(0)
+      val r = StageMeter.measure(spark) {
+        val out = graft.operators.Sampling.tokenBudget(
+          docs, col("src"), col("id"), col("toks"), budgetPerStratum = n * 13)
+        out.filter(col("kept")).count()
+      }
+      println(f"[tokbudget-scale] docs=$n%8d kept=${r.result}%8d wall=${r.wallS}%6.1f s " +
+        f"shuffleMB=${r.shuffleMB}%7.1f maxTaskRows=${maxTaskRows.get}%9d " +
+        f"(fair=${n / cores}%d)")
       docs.unpersist()
     }
     spark.stop()

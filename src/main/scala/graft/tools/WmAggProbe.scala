@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 import org.apache.spark.sql.functions._
 
 /** Emission-timing probe for append-mode windowed aggregation under
@@ -17,12 +17,7 @@ import org.apache.spark.sql.functions._
   *     that arrived under late wm 2). */
 object WmAggProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val tmp = java.nio.file.Files.createTempDirectory("wmagg").toString
     val in = new java.io.File(s"$tmp/in"); in.mkdirs()

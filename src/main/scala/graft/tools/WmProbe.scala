@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 import org.apache.spark.sql.functions._
 
 /** Eviction-timing probe behind the `flow_stream_dedup_watermark`
@@ -14,12 +14,7 @@ import org.apache.spark.sql.functions._
   * Expected output: evens twice (0, 17), odds once (12), clock (25). */
 object WmProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     import spark.implicits._
 
     val tmp = java.nio.file.Files.createTempDirectory("wmprobe").toString

@@ -1,17 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import graft.ingest.ArrowFlight
 
 class ArrowFlightSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("flight-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = LocalSession(4)
 
   private val schema = StructType(Seq(
     StructField("host", StringType),

@@ -10,11 +10,7 @@ import graft.operators.{Clustering, TfIdf}
   * (repetition filters, PII redaction, TF-IDF, quantized k-means). */
 class CurationSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
   import spark.implicits._
 
   private def rep(text: String): Map[String, Any] = {

@@ -8,11 +8,7 @@ import graft.functions.TextAnalysis
 
 class DedupSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
   import spark.implicits._
 
   private def docs: DataFrame = Seq(

@@ -11,12 +11,7 @@ import graft.streaming.Flow.FlowDef
 
 class FlowSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
   import spark.implicits._
 
   private def tmpDir(prefix: String): String =

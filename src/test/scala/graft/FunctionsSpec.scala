@@ -7,12 +7,7 @@ import graft.functions._
 
 class FunctionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 
   test("matches_term — reference golden truth table (matches_term.result)") {
     val cases = Seq(

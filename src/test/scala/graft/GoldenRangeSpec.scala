@@ -9,12 +9,7 @@ import graft.tools.GoldenRunner
   * see graft.tools.GoldenRunner for the comparison contract. */
 class GoldenRangeSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 
   private val CorpusDir = "/root/reference/tests/cases/standalone/common/range"
 

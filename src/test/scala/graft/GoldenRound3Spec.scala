@@ -11,12 +11,7 @@ import graft.tools.GoldenRunner
   * edge cases) so regressions surface in `sbt test`, not the sweep. */
 class GoldenRound3Spec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 
   private val CorpusDir = "/root/reference/tests/cases/standalone/common"
 

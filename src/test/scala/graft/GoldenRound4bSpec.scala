@@ -16,12 +16,7 @@ import graft.tools.GoldenRunner
   * exceptions. */
 class GoldenRound4bSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 
   private val Cases = "/root/reference/tests/cases"
 

@@ -18,12 +18,7 @@ import graft.tools.GoldenRunner
   * count and zero statement exceptions. */
 class GoldenRound4cSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 
   private val Common = "/root/reference/tests/cases/standalone/common"
 

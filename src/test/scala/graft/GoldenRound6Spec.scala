@@ -17,12 +17,7 @@ import graft.tools.GoldenRunner
   * and zero exception skips per file. */
 class GoldenRound6Spec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 
   private val CorpusDir = "/root/reference/tests/cases/standalone/common"
 

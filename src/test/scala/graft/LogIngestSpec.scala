@@ -1,15 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.ingest.LogIngest
 
 class LogIngestSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("logingest-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = LocalSession(4)
 
   test("loki push: labels, ts, line, structured metadata; bad items dropped") {
     import spark.implicits._

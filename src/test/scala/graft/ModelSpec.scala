@@ -7,12 +7,7 @@ import graft.model.{Catalog, MergeMode, TableSpec}
 
 class ModelSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
   import spark.implicits._
 
   private def spec(mode: MergeMode, ttl: Option[Long] = None) = TableSpec(

@@ -7,11 +7,7 @@ import graft.multimodal.Multimodal
 
 class MultimodalSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
   import spark.implicits._
 
   test("pngFor emits real decodable PNGs with the declared dims") {

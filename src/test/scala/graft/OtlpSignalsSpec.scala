@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.ingest.{OtlpLogs, OtlpTrace}
 import graft.trace.Jaeger
 
@@ -9,11 +8,7 @@ import graft.trace.Jaeger
   * (`servers/src/otlp/trace/span.rs`, `servers/src/otlp/logs.rs`,
   * `frontend/src/instance/jaeger.rs`). */
 class OtlpSignalsSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("otlp-signals-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = LocalSession(4)
 
   private def b(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
 

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.StageMeter
 
 /** Plan-shape regression gate for the headline bench queries — pins the
   * structural properties the bench numbers depend on, so wall-clock
@@ -13,13 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * structurally on Spark's formatted physical plan. */
 class PlanShapeSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -244,36 +239,16 @@ class PlanShapeSpec extends AnyFunSuite {
     // chain and ~2x shuffle) and must fail here, not in a probe.
     val sf01 = "/root/testdata/sf0.1"
     assume(new java.io.File(s"$sf01/documents.parquet").exists())
-    val stages = new java.util.concurrent.atomic.AtomicLong(0)
-    val shuffle = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        shuffle.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-    }
     val docs = spark.read.parquet(s"$sf01/documents.parquet")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val n = graft.operators.TfIdf.topTerms(docs, "doc_id", "text", k = 3)
-        .count()
-      var last = -1L
-      var spins = 0
-      while (spins < 20 && (stages.get != last || last < 0)) {
-        last = stages.get
-        Thread.sleep(250)
-        spins += 1
-      }
-      assert(n > 0)
-      // measured baseline: 8 stages, 1.75 MB shuffle; a lost stage-cache
-      // reuse adds a >= 4-stage second scan chain and ~8 MB of duplicate
-      // explode+aggregate shuffle at this SF
-      assert(stages.get <= 11, s"stages=${stages.get} (baseline 8)")
-      assert(shuffle.get <= 4L * 1024 * 1024,
-        s"shuffleMB=${shuffle.get / 1e6} (baseline ~1.75)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val m = StageMeter.measure(spark)(
+      graft.operators.TfIdf.topTerms(docs, "doc_id", "text", k = 3).count())
+    assert(m.result > 0)
+    // measured baseline: 8 stages, 1.75 MB shuffle; a lost stage-cache
+    // reuse adds a >= 4-stage second scan chain and ~8 MB of duplicate
+    // explode+aggregate shuffle at this SF
+    assert(m.stages <= 11, s"stages=${m.stages} (baseline 8)")
+    assert(m.shuffleWriteBytes <= 4L * 1024 * 1024,
+      s"shuffleMB=${m.shuffleMB} (baseline ~1.75)")
   }
 
   test("dedup_ngram_jaccard: stage count and shuffle bytes stay bounded at sf0.1") {
@@ -285,35 +260,13 @@ class PlanShapeSpec extends AnyFunSuite {
     // blows the shuffle bound by an order of magnitude.
     val sf01 = "/root/testdata/sf0.1"
     assume(new java.io.File(s"$sf01/documents.parquet").exists())
-    val stages = new java.util.concurrent.atomic.AtomicLong(0)
-    val shuffle = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        shuffle.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-    }
     val docs = spark.read.parquet(s"$sf01/documents.parquet")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val n = graft.operators.Dedup.ngramJaccardPairs(docs, "text", "doc_id")
-        .count()
-      // listener events drain async — wait until the counters go quiet
-      // (fixed sleeps flake when the machine is loaded)
-      var last = -1L
-      var spins = 0
-      while (spins < 20 && (stages.get != last || last < 0)) {
-        last = stages.get
-        Thread.sleep(250)
-        spins += 1
-      }
-      assert(n > 0)
-      assert(stages.get <= 26, s"stages=${stages.get} (baseline 16)")
-      assert(shuffle.get <= 40L * 1024 * 1024,
-        s"shuffleMB=${shuffle.get / 1e6} (baseline ~15)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val m = StageMeter.measure(spark)(
+      graft.operators.Dedup.ngramJaccardPairs(docs, "text", "doc_id").count())
+    assert(m.result > 0)
+    assert(m.stages <= 26, s"stages=${m.stages} (baseline 16)")
+    assert(m.shuffleWriteBytes <= 40L * 1024 * 1024,
+      s"shuffleMB=${m.shuffleMB} (baseline ~15)")
   }
 
   test("compacted merge table: steady-state scan is window-free, appends re-enter the delta merge") {

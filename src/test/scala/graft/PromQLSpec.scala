@@ -10,12 +10,7 @@ import scala.jdk.CollectionConverters._
 
 class PromQLSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 
   private def mkDf(rows: Seq[(Double, Long, String)]): DataFrame =
     spark.createDataFrame(

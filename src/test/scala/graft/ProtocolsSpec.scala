@@ -6,11 +6,7 @@ import graft.ingest.{OtlpMetrics, Protocols, PromRemoteWrite, ProtoWire}
 
 class ProtocolsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
   import spark.implicits._
 
   test("influx line protocol: tags, typed fields, escapes, timestamps") {

@@ -11,12 +11,7 @@ import graft.operators.RangeSelect.{Fill, RangeAgg}
   * the host table (ts ms, host tag, val bigint with null gaps). */
 class RangeSelectSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 
   import scala.jdk.CollectionConverters._
   private def host(): DataFrame = {

@@ -1,15 +1,12 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeLike}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Catalog
 import graft.sql.GraftSession
+import graft.tools.StageMeter
 
 /** One-partition plans: when Spark would read a table's files as one
   * split, or a compacted snapshot as one split plus a delta small
@@ -20,45 +17,15 @@ import graft.sql.GraftSession
   * compaction manifest reads as none. */
 class SingleSplitSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(name).toString
 
-  private val groups = new AtomicInteger
-
-  /** Runs `body` in a fresh job group and returns its result with the
-    * number of Spark jobs the group started, counted by a listener. A
-    * marker job submitted afterwards fences the listener bus: its start
-    * event is delivered after every event of `body`'s jobs. */
+  /** `body`'s result and the number of Spark jobs it started. */
   private def withJobCount[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"single-split-${groups.incrementAndGet()}"
-    val marker = s"$group-marker"
-    val jobs = new AtomicInteger
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet(): Unit
-          case `marker` => fenced.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(fenced.await(30, TimeUnit.SECONDS), "listener bus never delivered the marker job")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val m = StageMeter.measure(spark)(body)
+    (m.result, m.jobs)
   }
 
   private def shuffles(df: DataFrame): Seq[ShuffleExchangeLike] =

@@ -7,11 +7,7 @@ import graft.aggregates._
 
 class SketchSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 
   test("hll: estimate within 2% on 10k distinct values") {
     val state = (1 to 10000).foldLeft(Hll.emptyState)((s, i) => Hll.add(s, s"val-$i"))

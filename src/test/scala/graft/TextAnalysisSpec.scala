@@ -11,11 +11,7 @@ import graft.functions.TextAnalysis
   * text_stats oracle re-pins the same values cross-engine. */
 class TextAnalysisSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
   import spark.implicits._
 
   private def compare(df: org.apache.spark.sql.DataFrame): Unit = {
