@@ -64,23 +64,40 @@ object Dedup {
     if (r >= P61) r - P61 else r
   }
 
-  /** Exact dedup: keep the smallest `idCol` per normalized-text group.
+  /** Exact dedup: keep the smallest `idCol` per normalized-text group. */
+  def exact(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    flagByDigest(withDigest(df, textCol), idCol).drop("__d")
+
+  /** `df` plus `__d`, the md5 of its normalized text: the exact-dedup
+    * key and the digest index's row key. */
+  private def withDigest(df: DataFrame, textCol: String): DataFrame =
+    df.withColumn("__d", md5(normText(col(textCol))))
+
+  /** Flag a digest-keyed frame (see [[withDigest]]): `is_dup` iff the
+    * row's id is not the smallest of its digest group, or its digest is
+    * in the `indexed` digest set (column `__hd`). Keeps `__d`.
+    *
     * Canonical ids come from a map-side-combined groupBy(min) + an
     * AQE-splittable join back — NOT a digest-partitioned window: this
     * operator's own target (one document copied 100M times) would put
     * the whole duplicate group into a single window task, and
-    * row_number-without-top-k-filter gets no WindowGroupLimit prune. */
-  def exact(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val keyed = df.withColumn("__d", md5(normText(col(textCol))))
-    // Null-safe join: null text -> null digest, and md5(null) is null.
-    // A plain USING join would silently DROP those rows; `<=>` keeps
-    // them as one dedup group (same semantics as the old null-partition
-    // window formulation).
+    * row_number-without-top-k-filter gets no WindowGroupLimit prune.
+    * Both joins are null-safe: null text -> null digest (md5(null) is
+    * null). A plain USING join would silently DROP those rows; `<=>`
+    * keeps them as one dedup group. */
+  private def flagByDigest(keyed: DataFrame, idCol: String,
+      indexed: Option[DataFrame] = None): DataFrame = {
     val canon = keyed.groupBy(col("__d")).agg(min(col(idCol)).as("__cid"))
       .withColumnRenamed("__d", "__dc")
-    keyed.join(canon, keyed("__d") <=> canon("__dc"))
-      .withColumn("is_dup", col(idCol) =!= col("__cid"))
-      .drop("__d", "__dc", "__cid")
+    val joined = keyed.join(canon, keyed("__d") <=> canon("__dc"))
+    val notCanon = col(idCol) =!= col("__cid")
+    indexed.fold(joined.withColumn("is_dup", notCanon)) { hit =>
+      joined
+        .join(hit.withColumn("__indexed", lit(true)),
+          keyed("__d") <=> col("__hd"), "left")
+        .withColumn("is_dup", coalesce(col("__indexed"), lit(false)) || notCanon)
+        .drop("__hd", "__indexed")
+    }.drop("__dc", "__cid")
   }
 
   /** Distinct word shingles of size n, one normalize+split+slide pass
@@ -182,10 +199,9 @@ object Dedup {
     * contract — fastest, zero index shuffle). Above it the broadcast
     * would be multi-GB (shard bands are ~1.6 KB/doc at k=64×16 bands;
     * Spark hard-caps a broadcast table at 8 GB and the driver pays
-    * materialization), so the plan switches to a partitioned shuffle
-    * join: the index's SIGNATURES are still never recomputed — only
-    * its band/digest rows shuffle, which is the unavoidable cost once
-    * both sides are large. */
+    * materialization), so the serve splits the shard into id-ranged
+    * chunks of at most this many docs, each broadcast into its own
+    * scan of the index: the index still never shuffles. */
   private[graft] val IncrementalBroadcastMaxDocsKey =
     "graft.dedup.incrementalBroadcastMaxDocs"
   private[graft] def incrementalBroadcastMaxDocs(
@@ -253,11 +269,10 @@ object Dedup {
 
   /** Candidate + verify pipeline over a prepared (__id, __mh)
     * signature frame — the ONE implementation of the banding/estimate/
-    * threshold machinery, shared by the recomputing path
-    * ([[minhashPairs]]) and the index-backed bootstrap path
-    * ([[minhashDedupFromIndex]]) so the output-bounded verify strategy
-    * can't drift between them. Returns the materialized (id_a, id_b,
-    * est_jaccard) pair list.
+    * threshold machinery, shared by [[minhashPairs]] and the index
+    * build [[minhashIndexWriteAndDedup]] so the output-bounded verify
+    * strategy can't drift between them. Returns the materialized
+    * (id_a, id_b, est_jaccard) pair list.
     *
     * Output-bounded verify at scale: persist candidates once (else the
     * band pipeline executes once per broadcast — measured 2× shuffle
@@ -302,12 +317,16 @@ object Dedup {
 
   /** Mark near-duplicates: a doc is a dup if it pairs with a smaller id. */
   def minhashDedup(df: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.7): DataFrame = {
-    val dups = minhashPairs(df, textCol, idCol, threshold)
-      .select(col("id_b").as(idCol)).distinct()
-    df.join(dups.withColumn("is_dup", lit(true)), Seq(idCol), "left")
+      threshold: Double = 0.7): DataFrame =
+    flagIds(df, minhashPairs(df, textCol, idCol, threshold)
+      .select(col("id_b").as(idCol)).distinct(), idCol)
+
+  /** `df` with `is_dup` = its `idCol` is in `dupIds` (one column,
+    * `idCol`, distinct). */
+  private def flagIds(df: DataFrame, dupIds: DataFrame,
+      idCol: String): DataFrame =
+    df.join(dupIds.withColumn("is_dup", lit(true)), Seq(idCol), "left")
       .withColumn("is_dup", coalesce(col("is_dup"), lit(false)))
-  }
 
   /** Slot-agreement estimate shared by the full-corpus and incremental
     * verify stages: fraction of the k minhash slots on which two
@@ -316,20 +335,23 @@ object Dedup {
     aggregate(zip_with(sa, sb, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v).cast("double") / k
 
-  // ── Incremental dedup against a persisted signature index ──────────
+  // ── Incremental dedup against persisted indexes ───────────────────
   //
   // A 100 TB corpus is not deduped in one shot: it grows by shards
   // (crawl snapshots, ingest days), and re-running the full-corpus
-  // MinHash pipeline per arrival makes ingest cost scale with the
-  // CORPUS. The production shape is an IVF-style build/serve split
-  // (compare Similarity.ivfIndex/ivfSearchIndexed): persist the
-  // signature table once, then dedup each arriving shard against the
-  // index + itself, and append the shard's signatures.
+  // pipeline per arrival makes ingest cost scale with the CORPUS. The
+  // production shape is an IVF-style build/serve protocol (compare
+  // Similarity.ivfIndex/ivfSearchIndexed), one per index — the exact
+  // digest index first, the MinHash signature index second:
+  //  - build: `*IndexWriteAndDedup` writes the index over the accepted
+  //    corpus and flags it in the same pass;
+  //  - serve: `*ServeAppend` flags an arriving shard against the index
+  //    + itself, then appends the shard's rows.
   //
-  // The index retains the signature of EVERY ingested doc, dups
-  // included — near-duplicate similarity is not transitive, so indexing
-  // only survivors would silently change the result (a new doc matching
-  // a dropped dup but not its canonical would slip through), and
+  // The signature index retains EVERY doc it serves, near-dups included —
+  // near-duplicate similarity is not transitive, so indexing only
+  // survivors would silently change the result (a new doc matching a
+  // dropped dup but not its canonical would slip through), and
   // retention is exactly what makes the incremental path equal to a
   // full-corpus recompute (the oracle pins that equivalence). Signature
   // rows are 8·k+8 bytes/doc (~520 B at k=64): ~0.5 TB per 1e9 docs —
@@ -338,28 +360,37 @@ object Dedup {
   // Serve-path scale shape: the shard's band table broadcasts into a
   // columnar SCAN of the index — the index is never shuffled and never
   // re-hashed; per-arrival CPU (shingle + k permutations) is paid on
-  // the SHARD only. Candidate signatures come back via a second
-  // broadcast semi-join on the same persisted table, so total arrival
-  // cost = shard-sized compute + two scan-only passes over the index
-  // (IncrementalDedupProbe measures the decade growth).
+  // the SHARD only, and the candidate's index signature rides the band
+  // join, so total arrival cost = shard-sized compute + one scan-only
+  // pass over the index (IncrementalDedupProbe measures the decade
+  // growth).
+  //
+  // Serve precondition (both indexes): the shard's rows are not in the
+  // index yet. A doc's own index row counts as a hit, so re-serving a
+  // shard — a replayed micro-batch — flags every doc (the replay defect
+  // of ROADMAP direction 2).
+
+  /** (id, mh) index rows of an (__id, __mh) signature frame, written
+    * with `mode`. */
+  private def writeSigs(sig: DataFrame, path: String, mode: String): Unit =
+    sig.select(col("__id").as("id"), col("__mh").as("mh"))
+      .write.mode(mode).parquet(path)
 
   /** Build (or rebuild) the persisted MinHash signature index for an
     * accepted corpus: one parquet table (id, mh array<long>[k]). Band
     * buckets are derived at read time (a column slice over the scan) so
-    * the index stays one narrow table. */
+    * the index stays one narrow table. For a corpus whose near-dup flags
+    * are wanted too, [[minhashIndexWriteAndDedup]] shingles it once for
+    * both. */
   def minhashIndexWrite(df: DataFrame, textCol: String, idCol: String,
       path: String, k: Int = 64, shingleSize: Int = 3): Unit =
-    minhashSignatures(df, textCol, idCol, k, shingleSize)
-      .select(col("__id").as("id"), col("__mh").as("mh"))
-      .write.mode("overwrite").parquet(path)
+    writeSigs(minhashSignatures(df, textCol, idCol, k, shingleSize),
+      path, "overwrite")
 
-  /** Index build + bootstrap dedup fused (optimization round 10): the
-    * one signature pipeline both writes the index AND feeds the pair
-    * build, where the split [[minhashIndexWrite]]-then-
-    * [[minhashDedupFromIndex]] sequence re-read the just-written
-    * parquet three times (strategy count + both verify streams).
-    * Verdicts and index bytes are bit-identical to the split sequence
-    * (same signatures, same shared pair machinery; DedupSpec pins it). */
+  /** Index build + bootstrap dedup: the one signature pipeline both
+    * writes the index and feeds the pair build, so the corpus is
+    * shingled once. Flags equal [[minhashDedup]]'s (shared pair
+    * machinery). */
   def minhashIndexWriteAndDedup(df: DataFrame, textCol: String,
       idCol: String, path: String, threshold: Double = 0.7,
       k: Int = 64, bands: Int = 16, shingleSize: Int = 3): DataFrame = {
@@ -367,139 +398,63 @@ object Dedup {
     val sig = minhashSignatures(df, textCol, idCol, k, shingleSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nDocs = sig.count()
-    sig.select(col("__id").as("id"), col("__mh").as("mh"))
-      .write.mode("overwrite").parquet(path)
-    // minhashPairsFromSig checkpoints its pair output, so `dups` (and
-    // the returned join) is independent of the cached sig frame
-    val dups = minhashPairsFromSig(sig, nDocs, threshold, k, bands)
-      .select(col("id_b").as(idCol)).distinct()
-    val out = df.join(dups.withColumn("is_dup", lit(true)), Seq(idCol), "left")
-      .withColumn("is_dup", coalesce(col("is_dup"), lit(false)))
+    writeSigs(sig, path, "overwrite")
+    // minhashPairsFromSig checkpoints its pair output, so the returned
+    // join is independent of the cached sig frame
+    val out = flagIds(df, minhashPairsFromSig(sig, nDocs, threshold, k, bands)
+      .select(col("id_b").as(idCol)).distinct(), idCol)
     sig.unpersist()
     out
   }
 
   /** Exact twin of [[minhashIndexWriteAndDedup]]: one normalize+md5
-    * pass both writes the digest index (mode overwrite) and flags the
-    * corpus — the split [[Dedup.exact]] + [[exactIndexWrite]] sequence
-    * ran the regex-normalization and md5 twice over the corpus. The
-    * returned frame is already materialized (it is the checkpoint the
-    * digest write reads). */
+    * pass both writes the (digest, id) index (mode overwrite) and flags
+    * the corpus as [[exact]] does. The returned frame is already
+    * materialized. */
   def exactIndexWriteAndDedup(df: DataFrame, textCol: String,
-      idCol: String, path: String): DataFrame = {
-    val keyed = df.withColumn("__d", md5(normText(col(textCol))))
-    val canon = keyed.groupBy(col("__d")).agg(min(col(idCol)).as("__cid"))
-      .withColumnRenamed("__d", "__dc")
-    val out = Lineage.truncate(
-      keyed.join(canon, keyed("__d") <=> canon("__dc"))
-        .withColumn("is_dup", col(idCol) =!= col("__cid"))
-        .drop("__dc", "__cid"))
+      idCol: String, path: String): DataFrame =
+    writeDigests(flagByDigest(withDigest(df, textCol), idCol), idCol,
+      path, "overwrite")
+
+  /** Materialize a digest-flagged frame, write its (digest, id) rows to
+    * the index at `path` with `mode`, and return it without `__d`. The
+    * checkpoint comes BEFORE the write: every index-reading node must
+    * execute before new digests land in the same path, and it makes the
+    * digest projection recompute-free. */
+  private def writeDigests(flagged: DataFrame, idCol: String,
+      path: String, mode: String): DataFrame = {
+    val out = Lineage.truncate(flagged)
     out.select(col("__d").as("digest"), col(idCol).as("id"))
-      .write.mode("overwrite").parquet(path)
+      .write.mode(mode).parquet(path)
     out.drop("__d")
   }
 
-  /** Append one ingested shard's signatures to the index (ALL of them,
-    * dups included — see the retention note above). Run AFTER
-    * [[minhashDedupIncremental]] flagged the shard. */
-  def minhashIndexAppend(df: DataFrame, textCol: String, idCol: String,
-      path: String, k: Int = 64, shingleSize: Int = 3): Unit =
-    minhashSignatures(df, textCol, idCol, k, shingleSize)
-      .select(col("__id").as("id"), col("__mh").as("mh"))
-      .write.mode("append").parquet(path)
-
-  /** Dedup a corpus whose signatures are ALREADY PERSISTED — the
-    * bootstrap pass of the incremental protocol, where
-    * [[minhashIndexWrite]] just ran: verdicts identical to
-    * [[minhashDedup]] (banding, estimate, threshold, smaller-id
-    * precedence all shared machinery), but bands and verify both READ
-    * the index, so the corpus is never re-shingled — each document's
-    * signature is computed exactly once in its lifetime. Contract: the
-    * index at `indexPath` holds exactly `df`'s documents (call BEFORE
-    * any shard appends). */
-  def minhashDedupFromIndex(df: DataFrame, idCol: String, indexPath: String,
-      threshold: Double = 0.7, k: Int = 64, bands: Int = 16): DataFrame = {
-    require(k % bands == 0, s"k=$k not divisible by bands=$bands")
-    val spark = df.sparkSession
-    // no cache: the signatures are a cheap columnar re-scan here, and
-    // the shared verify core already bounds what shuffles; the count
-    // picks the same broadcast-verify strategy as the recomputing path
-    // (the bootstrap corpus is the LARGEST input in the protocol —
-    // exactly where the output-bounded path matters)
-    val sig = spark.read.parquet(indexPath)
-      .select(col("id").as("__id"), col("mh").as("__mh"))
-    val nDocs = sig.count()
-    val dups = minhashPairsFromSig(sig, nDocs, threshold, k, bands)
-      .select(col("id_b").as(idCol)).distinct()
-    df.join(dups.withColumn("is_dup", lit(true)), Seq(idCol), "left")
-      .withColumn("is_dup", coalesce(col("is_dup"), lit(false)))
-  }
-
-  /** Exact-digest twin of [[minhashIndexWrite]]: persist (digest =
-    * md5 of normalized text, id) for every ingested doc — the second
-    * table of the production index pair (exact first, near-dup second).
-    * mode "overwrite" builds, "append" adds a flagged shard. */
-  def exactIndexWrite(df: DataFrame, textCol: String, idCol: String,
-      path: String, mode: String = "overwrite"): Unit =
-    df.select(md5(normText(col(textCol))).as("digest"), col(idCol).as("id"))
-      .write.mode(mode).parquet(path)
-
-  /** Serve + append fused (optimization round 10): flag the shard
-    * against the digest index exactly like [[exactDedupIncremental]],
-    * then append its digests — but the shard's normalize+md5 pipeline
-    * runs ONCE for both (the split API pays it twice: once to flag,
-    * once inside the caller's follow-up [[exactIndexWrite]] append),
-    * and the returned frame is already materialized (callers drop
-    * their own Lineage.truncate). One full regex-normalization pass
-    * over the shard saved per arrival — at 100 TB that is a second
-    * scan of the arriving text. Flags are bit-identical to
-    * serve-then-append (DedupSpec pins it). */
+  /** Serve + append on the digest index: flag an ARRIVING shard, then
+    * append its (digest, id) rows. A shard doc is a dup iff its
+    * normalized-text digest is already indexed, or belongs to a
+    * smaller-id shard doc. The shard's digest set BROADCASTS into one
+    * scan of the index (the index never shuffles and is never md5'd
+    * again), and the shard-internal stage is [[exact]]'s. With
+    * arrival-ordered ids the flags equal a full-corpus [[exact]] run
+    * restricted to the shard, null text included. The shard's
+    * normalize+md5 runs once for flags and append; the returned frame
+    * is already materialized. Precondition: the shard is not in the
+    * index yet (see the replay note above). */
   def exactServeAppend(shard: DataFrame, textCol: String, idCol: String,
       indexPath: String): DataFrame = {
-    val flaggedD = exactDedupIncrementalKeyed(shard, textCol, idCol, indexPath)
-    // materialize BEFORE the append: every index-reading node must be
-    // executed before new digests land in the same path — and the
-    // checkpoint also makes the digest projection below recompute-free
-    val out = Lineage.truncate(flaggedD)
-    out.select(col("__d").as("digest"), col(idCol).as("id"))
-      .write.mode("append").parquet(indexPath)
-    out.drop("__d")
-  }
-
-  /** Exact dedup of an ARRIVING shard against the persisted digest
-    * index + itself: a shard doc is a dup iff its normalized-text
-    * digest is already indexed, or belongs to a smaller-id shard doc.
-    * Same scale shape as the minhash serve path — the shard's digest
-    * set BROADCASTS into one scan of the index (the index never
-    * shuffles), and the shard-internal stage is [[exact]]'s
-    * map-combined groupBy(min) + join-back. With arrival-ordered ids
-    * the flags equal a full-corpus [[exact]] run restricted to the
-    * shard (null text forms one digest group, `<=>` join semantics
-    * as in [[exact]]). */
-  def exactDedupIncremental(shard: DataFrame, textCol: String,
-      idCol: String, indexPath: String): DataFrame =
-    exactDedupIncrementalKeyed(shard, textCol, idCol, indexPath).drop("__d")
-
-  /** [[exactDedupIncremental]] with the digest column (`__d`) kept on
-    * the output so [[exactServeAppend]] can write the index append
-    * without a second md5 pass. */
-  private def exactDedupIncrementalKeyed(shard: DataFrame, textCol: String,
-      idCol: String, indexPath: String): DataFrame = {
     val spark = shard.sparkSession
-    val keyed = shard.withColumn("__d", md5(normText(col(textCol))))
-    val shardDigests = keyed.select(col("__d")).distinct()
+    val keyed = withDigest(shard, textCol)
     if (checkArrivalOrder(spark))
       assertArrivalOrder(
         spark.read.parquet(indexPath).select(col("id").cast("long")),
-        shard.select(col(idCol).cast("long")), "exactDedupIncremental")
+        shard.select(col(idCol).cast("long")), "exactServeAppend")
     // large-shard guard: row count upper-bounds the distinct digest
     // count without forcing the md5 pipeline through an extra action.
     // Above the boundary the digest set is served in bounded broadcast
     // CHUNKS (id-ranged, unioned) instead of one oversized broadcast —
     // exact hits carry no precedence between chunks (a hit is just
     // "digest present in the fixed index"), so unlike the minhash
-    // chunks they need no ordering or spill, only k extra index scans;
-    // the index never shuffles and is never md5'd again on either path.
+    // chunks they need no ordering or spill, only k extra index scans.
     val boundary = math.max(1L, incrementalBroadcastMaxDocs(spark))
     val nShard = shard.count()
     def hitsFor(digests: DataFrame): DataFrame =
@@ -507,7 +462,7 @@ object Dedup {
         .select(col("digest"))
         .join(broadcast(digests), col("digest") <=> col("__d"), "leftsemi")
         .select(col("digest").as("__hd"))
-    val hit = (if (nShard <= boundary) hitsFor(shardDigests)
+    val hit = (if (nShard <= boundary) hitsFor(keyed.select(col("__d")).distinct())
       else {
         val nChunks = math.ceil(nShard.toDouble / boundary).toInt
         val probs = (1 until nChunks).map(_.toDouble / nChunks).toArray
@@ -523,50 +478,24 @@ object Dedup {
         }.reduce(_.unionByName(_))
       })
       .distinct()
-      .withColumn("__indexed", lit(true))
-    val canon = keyed.groupBy(col("__d")).agg(min(col(idCol)).as("__cid"))
-      .withColumnRenamed("__d", "__dc")
-    keyed
-      .join(canon, keyed("__d") <=> canon("__dc"))
-      .join(hit, keyed("__d") <=> col("__hd"), "left")
-      .withColumn("is_dup",
-        coalesce(col("__indexed"), lit(false)) || col(idCol) =!= col("__cid"))
-      .drop("__dc", "__cid", "__hd", "__indexed")
+    writeDigests(flagByDigest(keyed, idCol, Some(hit)), idCol, indexPath,
+      "append")
   }
 
-  /** Dedup an ARRIVING shard against the persisted index + itself: a
-    * shard doc is a dup iff it minhash-matches (est Jaccard ≥
-    * threshold) ANY indexed doc, or a smaller-id doc within the shard.
-    * When shard ids follow arrival order (every indexed id < every
-    * shard id), the flags are bit-identical to what a full-corpus
-    * [[minhashDedup]] over index∪shard would assign the shard — the
-    * `dedup_incremental` oracle replays exactly that equivalence.
-    * Returns the shard with `is_dup`. */
-  def minhashDedupIncremental(shard: DataFrame, textCol: String,
-      idCol: String, indexPath: String, threshold: Double = 0.7,
-      k: Int = 64, bands: Int = 16, shingleSize: Int = 3): DataFrame =
-    minhashServeImpl(shard, textCol, idCol, indexPath, threshold, k,
-      bands, shingleSize, appendAfterServe = false)
-
-  /** Serve + append fused (optimization round 10): flag the shard like
-    * [[minhashDedupIncremental]], then append its signatures to the
-    * index — from the SAME persisted signature frame, so the shard is
-    * shingled + permuted once per arrival instead of twice (the split
-    * serve-then-[[minhashIndexAppend]] sequence re-ran the whole
-    * signature pipeline — shingle UDF, k·shingles mulmods, and the
-    * repartition shuffle — just to write rows the serve already
-    * computed). Flags and appended bytes are bit-identical to the
-    * split sequence (DedupSpec pins it). */
+  /** Serve + append on the signature index: flag an ARRIVING shard,
+    * then append its signatures. A shard doc is a dup iff it
+    * minhash-matches (est Jaccard ≥ threshold) ANY indexed doc, or a
+    * smaller-id doc within the shard. When shard ids follow arrival
+    * order (every indexed id < every shard id), the flags are
+    * bit-identical to what a full-corpus [[minhashDedup]] over
+    * index∪shard would assign the shard — the `dedup_incremental`
+    * oracle replays exactly that equivalence. The shard is shingled
+    * once: the serve's persisted signatures are the rows the append
+    * writes. Precondition: the shard is not in the index yet (see the
+    * replay note above). Returns the shard with `is_dup`. */
   def minhashServeAppend(shard: DataFrame, textCol: String,
       idCol: String, indexPath: String, threshold: Double = 0.7,
-      k: Int = 64, bands: Int = 16, shingleSize: Int = 3): DataFrame =
-    minhashServeImpl(shard, textCol, idCol, indexPath, threshold, k,
-      bands, shingleSize, appendAfterServe = true)
-
-  private def minhashServeImpl(shard: DataFrame, textCol: String,
-      idCol: String, indexPath: String, threshold: Double,
-      k: Int, bands: Int, shingleSize: Int,
-      appendAfterServe: Boolean): DataFrame = {
+      k: Int = 64, bands: Int = 16, shingleSize: Int = 3): DataFrame = {
     // fail fast — bandBuckets would also catch it, but only after the
     // shard signature computation already ran
     require(k % bands == 0, s"k=$k not divisible by bands=$bands")
@@ -581,7 +510,7 @@ object Dedup {
     // the id ordering the contract is about
     if (checkArrivalOrder(spark))
       assertArrivalOrder(idxSig.select(col("__id").cast("long")),
-        shard.select(col(idCol).cast("long")), "minhashDedupIncremental")
+        shard.select(col(idCol).cast("long")), "minhashServeAppend")
     // shard-vs-index candidates in scan-only index passes: the shard
     // bands BROADCAST into the index scan (the index side never
     // shuffles — its band explode is a per-row column op riding the
@@ -613,14 +542,10 @@ object Dedup {
       else
         minhashChunkedDups(spark, idxSig, sig, nShard, boundary, threshold,
           k, bands, idCol))
-    // fused append: the serve's persisted signatures ARE the rows the
-    // index append needs — write them now (post-materialization, so
-    // the serve never sees its own shard as "indexed")
-    if (appendAfterServe)
-      sig.select(col("__id").as("id"), col("__mh").as("mh"))
-        .write.mode("append").parquet(indexPath)
-    val out = shard.join(dups.withColumn("is_dup", lit(true)), Seq(idCol), "left")
-      .withColumn("is_dup", coalesce(col("is_dup"), lit(false)))
+    // append only after the dup set materialized, so the serve never
+    // sees its own shard as "indexed"
+    writeSigs(sig, indexPath, "append")
+    val out = flagIds(shard, dups, idCol)
     sig.unpersist()
     out
   }
@@ -688,8 +613,7 @@ object Dedup {
         val d = Lineage.truncate(minhashServePassDups(idxAll, sigChunk,
           bandBuckets(sigChunk, k, bands), threshold, k, bands, idCol))
         if (i < nChunks - 1) {
-          sigChunk.select(col("__id").as("id"), col("__mh").as("mh"))
-            .write.mode("append").parquet(spill)
+          writeSigs(sigChunk, spill, "append")
           spilled = true
         }
         d

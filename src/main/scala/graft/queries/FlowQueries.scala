@@ -21,10 +21,11 @@ object FlowQueries {
 
   /** Watermark-clock document for the streaming-curation entry: a row
     * that must PASS the Gopher filter (a filtered row never reaches the
-    * EventTimeWatermark collector — CurationStreamProbe) — 54 varied
-    * words, 6 distinct required stop words, no repeated grams, all
-    * alphabetic. The oracle embeds the same literal and derives its
-    * token count by the same split, so nothing is hand-counted. */
+    * EventTimeWatermark collector — BENCH_NOTES "Streaming curation
+    * semantics") — 54 varied words, 6 distinct required stop words, no
+    * repeated grams, all alphabetic. The oracle embeds the same literal
+    * and derives its token count by the same split, so nothing is
+    * hand-counted. */
   private val CurationClockText: String =
     "the river keeps moving past old stone bridges and quiet farms while " +
     "travelers walk along its bank to watch herons lift from shallow water " +
@@ -254,7 +255,9 @@ object FlowQueries {
       // actually deploys, through the REAL engine in one query:
       // watermark → Gopher quality filter → keyed dedup with state
       // expiry → windowed per-source stats, append sink. Two stateful
-      // operators chained; semantics pinned by CurationStreamProbe:
+      // operators chained; semantics written down in BENCH_NOTES
+      // ("Streaming curation semantics") and pinned by this entry's
+      // oracle:
       //  - a row the quality filter drops does NOT advance the
       //    watermark (Catalyst pushes the filter below the
       //    EventTimeWatermark node) — so the watermark clocks are
@@ -356,7 +359,6 @@ object FlowQueries {
       val off1 = (maxId + 1) * 10; val off2 = (maxId + 1) * 11
       val dIdx = s"$tmp/digests"; val mIdx = s"$tmp/sigs"
       val boot = docs.filter(col("doc_id") <= c1)
-      // build + bootstrap-flags fused: one md5 pass (r10 optimization)
       val be = graft.operators.Dedup.exactIndexWriteAndDedup(
         boot, "text", "doc_id", dIdx)
       val beSurv = be.filter(!col("is_dup")).drop("is_dup")
@@ -373,8 +375,6 @@ object FlowQueries {
         .parquet(in)
       val q = src.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          // serve + append fused (r10 optimization): one md5 pass and
-          // one signature pipeline per micro-batch, same protocol
           val e = graft.operators.Dedup.exactServeAppend(
             batch, "text", "doc_id", dIdx)
           val surv = e.filter(!col("is_dup")).drop("is_dup")

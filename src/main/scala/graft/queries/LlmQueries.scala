@@ -46,15 +46,10 @@ object LlmQueries {
       val accepted = docs.filter(col("doc_id") <= cut)
       val shard = docs.filter(col("doc_id") > cut)
       val idx = tempDirCleanedOnExit("graft_mhidx") + "/index"
-      // index build + bootstrap dedup FUSED (r10 optimization): one
-      // signature pipeline writes the index and feeds the pair build —
-      // the accepted corpus is still shingled exactly once, and the
-      // just-written parquet is no longer re-read three times. The
-      // pair build checkpoints at call time, so the frame is safe
-      // against the shard append below
+      // the pair build checkpoints at call time, so b1 is safe against
+      // the shard append below
       val b1 = Dedup.minhashIndexWriteAndDedup(accepted, "text", "doc_id",
         idx, threshold = 0.5)
-      // serve + append fused: the shard is shingled once for both
       val b2 = Dedup.minhashServeAppend(shard, "text", "doc_id", idx,
         threshold = 0.5)
       b1.select(col("doc_id"), col("is_dup"))
@@ -71,10 +66,8 @@ object LlmQueries {
       val accepted = docs.filter(col("doc_id") <= cut)
       val shard = docs.filter(col("doc_id") > cut)
       val idx = tempDirCleanedOnExit("graft_exidx") + "/index"
-      // build + bootstrap fused: one normalize+md5 pass over accepted
       val b1 = Dedup.exactIndexWriteAndDedup(accepted, "text", "doc_id", idx)
-      // serve + append fused: the shard's normalize+md5 runs once, the
-      // flags materialize before the digests land in the index
+      // the flags materialize before the digests land in the index
       val b2 = Dedup.exactServeAppend(shard, "text", "doc_id", idx)
       b1.select(col("doc_id"), col("is_dup"))
         .unionByName(b2.select(col("doc_id"), col("is_dup")))
@@ -110,23 +103,16 @@ object LlmQueries {
       val verdict = dupVerdict _
       // bootstrap: the accepted corpus processed one-shot, both
       // indexes built (digests = every doc; signatures = survivors).
-      // b1e is materialized: it feeds THREE consumers (the signature
-      // index write, b1n's join-back side, the final verdict) — lazy,
-      // the exact-dedup plan would re-execute for each
-      // both bootstrap stages build+dedup FUSED (r10 optimization):
-      // one md5 pass writes the digest index AND flags the corpus (the
-      // returned frame is materialized — it still feeds three
-      // consumers); one signature pipeline writes the survivor index
-      // AND feeds the pair build, checkpointed at call time, before
-      // the arrival appends touch the same path
+      // b1e comes back materialized: it feeds THREE consumers (the
+      // signature index write, b1n's join-back side, the final verdict)
+      // — lazy, the exact-dedup plan would re-execute for each. b1n's
+      // pair build is checkpointed at call time, before the arrival
+      // appends touch the same path
       val b1e = Dedup.exactIndexWriteAndDedup(accepted, "text", "doc_id", dIdx)
       val b1Surv = b1e.filter(!col("is_dup")).drop("is_dup")
       val b1n = Dedup.minhashIndexWriteAndDedup(b1Surv, "text", "doc_id",
         mIdx, threshold = 0.5)
-      // arrival, both stages serve+append FUSED (r10 optimization): the
-      // exact stage's one md5 pass flags the shard AND writes its
-      // digests; the minhash stage's one signature pipeline serves AND
-      // appends. Each append runs after its own serve materializes;
+      // arrival: each append runs after its own serve materializes;
       // the two indexes are independent
       val s1 = Dedup.exactServeAppend(shard, "text", "doc_id", dIdx)
       val sSurv = s1.filter(!col("is_dup")).drop("is_dup")
@@ -154,7 +140,7 @@ object LlmQueries {
       val tmp = tempDirCleanedOnExit("graft_multidx")
       val dIdx = s"$tmp/digests"; val mIdx = s"$tmp/sigs"
       val boot = docs.filter(col("doc_id") <= edges.head)
-      // fused bootstrap, same as dedup_incremental_pipeline
+      // bootstrap, same as dedup_incremental_pipeline
       val b1e = Dedup.exactIndexWriteAndDedup(boot, "text", "doc_id", dIdx)
       val b1Surv = b1e.filter(!col("is_dup")).drop("is_dup")
       val b1n = Dedup.minhashIndexWriteAndDedup(b1Surv, "text", "doc_id",
@@ -163,9 +149,8 @@ object LlmQueries {
       for (i <- 1 to 3) {
         val shard = docs.filter(
           col("doc_id") > edges(i - 1) && col("doc_id") <= edges(i))
-        // serve + append fused per arrival (r10 optimization): one md5
-        // pass and one signature pipeline per shard; each append lands
-        // after its own serve materializes, before the next arrival
+        // each append lands after its own serve materializes, before
+        // the next arrival
         val s1 = Dedup.exactServeAppend(shard, "text", "doc_id", dIdx)
         val sSurv = s1.filter(!col("is_dup")).drop("is_dup")
         val s2 = Dedup.minhashServeAppend(sSurv, "text", "doc_id", mIdx,

@@ -34,33 +34,31 @@ object PipelineGrowthProbe {
       // ── composed two-index arrival ─────────────────────────────────
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
-      val maxId = docs.agg(max("doc_id")).head.getLong(0)
-      val cut = maxId - shardRows
-      val accepted = docs.filter(col("doc_id") <= cut)
-      val shard = docs.filter(col("doc_id") > cut)
-      val nIdx = accepted.count()
-      val tmp = graft.queries.QueryDsl.tempDirCleanedOnExit("graft_pgrow")
-      val dIdx = s"$tmp/digests"; val mIdx = s"$tmp/sigs"
-      val (_, buildWall, buildMb) = timed {
-        val be = graft.operators.Lineage.truncate(
-          Dedup.exact(accepted, "text", "doc_id"))
-        Dedup.exactIndexWrite(accepted, "text", "doc_id", dIdx)
-        Dedup.minhashIndexWrite(be.filter(!col("is_dup")).drop("is_dup"),
-          "text", "doc_id", mIdx)
+      if (docs.count() <= shardRows)
+        println(s"[pipe-grow] dir=$dir skipped: corpus not larger than one shard")
+      else {
+        val maxId = docs.agg(max("doc_id")).head.getLong(0)
+        val cut = maxId - shardRows
+        val accepted = docs.filter(col("doc_id") <= cut)
+        val shard = docs.filter(col("doc_id") > cut)
+        val nIdx = accepted.count()
+        val tmp = graft.queries.QueryDsl.tempDirCleanedOnExit("graft_pgrow")
+        val dIdx = s"$tmp/digests"; val mIdx = s"$tmp/sigs"
+        val (_, buildWall, buildMb) = timed {
+          val be = Dedup.exactIndexWriteAndDedup(accepted, "text", "doc_id", dIdx)
+          Dedup.minhashIndexWrite(be.filter(!col("is_dup")).drop("is_dup"),
+            "text", "doc_id", mIdx)
+        }
+        val (nDups, arrWall, arrMb) = timed {
+          val e = Dedup.exactServeAppend(shard, "text", "doc_id", dIdx)
+          val n = Dedup.minhashServeAppend(e.filter(!col("is_dup")).drop("is_dup"),
+            "text", "doc_id", mIdx, threshold = 0.5)
+          e.filter(col("is_dup")).count() + n.filter(col("is_dup")).count()
+        }
+        println(f"[pipe-grow] dir=$dir%-20s index=$nIdx%-8d shard=$shardRows " +
+          f"build=$buildWall%7.2f s/${buildMb}%8.1f MB  " +
+          f"arrival=$arrWall%7.2f s/${arrMb}%8.1f MB  dups=$nDups")
       }
-      val ((nDups, arrWall, arrMb)) = timed {
-        val e = graft.operators.Lineage.truncate(
-          Dedup.exactDedupIncremental(shard, "text", "doc_id", dIdx))
-        val surv = e.filter(!col("is_dup")).drop("is_dup")
-        val n = Dedup.minhashDedupIncremental(surv, "text", "doc_id", mIdx,
-          threshold = 0.5)
-        Dedup.exactIndexWrite(shard, "text", "doc_id", dIdx, mode = "append")
-        Dedup.minhashIndexAppend(surv, "text", "doc_id", mIdx)
-        e.filter(col("is_dup")).count() + n.filter(col("is_dup")).count()
-      }
-      println(f"[pipe-grow] dir=$dir%-20s index=$nIdx%-8d shard=$shardRows " +
-        f"build=$buildWall%7.2f s/${buildMb}%8.1f MB  " +
-        f"arrival=$arrWall%7.2f s/${arrMb}%8.1f MB  dups=$nDups")
 
       // ── decontaminate serve ────────────────────────────────────────
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -72,7 +70,8 @@ object PipelineGrowthProbe {
           transform(col("embedding"), (x, j) =>
             x * (lit(1.0f) + ((j % 5) - 2).cast("float") * lit(0.008f))).as("q_vec"))
       val nProbes = probes.count()
-      val idxPath = s"$tmp/ivf"
+      val idxPath =
+        graft.queries.QueryDsl.tempDirCleanedOnExit("graft_pgrow_ivf") + "/ivf"
       val (_, ivfBuildWall, ivfBuildMb) = timed {
         Similarity.ivfIndexWrite(emb, "embedding", "vec_id", 16, idxPath)
       }

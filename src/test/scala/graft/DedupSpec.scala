@@ -53,54 +53,45 @@ class DedupSpec extends AnyFunSuite {
     assert(out(4L) == false)
   }
 
+  private def flagMap(df: DataFrame): Map[Long, Boolean] =
+    df.select($"doc_id", $"is_dup").collect()
+      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+
+  /** docs plus a null-text doc: the bootstrap batch of the index specs. */
+  private def batch1: DataFrame = docs.unionByName(
+    Seq((6L, null.asInstanceOf[String])).toDF("doc_id", "text"))
+
+  /** An arriving shard: 10 repeats doc 1, 11 is fresh, 12 has null text
+    * (joins batch 1's null group), 13 normalizes to 11's text. */
+  private def arrivingShard: DataFrame = Seq(
+    (10L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+    (11L, "unrelated shard document discussing columnar storage formats and parquet footers"),
+    (12L, null.asInstanceOf[String]),
+    (13L, "unrelated  SHARD document discussing columnar storage formats and parquet footers")
+  ).toDF("doc_id", "text")
+
   test("incremental minhash: index retains dup signatures, shard flags equal full recompute") {
     val idx = java.nio.file.Files.createTempDirectory("graft_mhidx_spec")
       .toString + "/index"
-    // batch 1 = docs 1-5 (2 and 5 are dups of 1); arriving shard = two
-    // docs above the batch-1 id range, one matching doc 1's content
-    val shard = Seq(
-      (10L, "the quick brown fox jumps over the lazy dog near the river bank today"),
-      (11L, "unrelated shard document discussing columnar storage formats and parquet footers")
-    ).toDF("doc_id", "text")
-    Dedup.minhashIndexWrite(docs, "text", "doc_id", idx)
+    Dedup.minhashIndexWrite(batch1, "text", "doc_id", idx)
     // retention contract: EVERY batch-1 doc's signature is in the index,
     // dups included (near-dup similarity is not transitive — survivor-only
-    // indexing would change results)
+    // indexing would change results); null text has no shingles, so no
+    // signature
     val idxIds = spark.read.parquet(idx).select($"id")
       .collect().map(_.getLong(0)).toSet
     assert(idxIds == Set(1L, 2L, 3L, 4L, 5L))
-    val inc = Dedup.minhashDedupIncremental(shard, "text", "doc_id", idx,
-        threshold = 0.5)
-      .select($"doc_id", $"is_dup").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(inc == Map(10L -> true, 11L -> false))
+    val inc = flagMap(Dedup.minhashServeAppend(arrivingShard, "text",
+      "doc_id", idx, threshold = 0.5))
+    assert(inc == Map(10L -> true, 11L -> false, 12L -> false, 13L -> true))
     // equivalence: the one-shot full-corpus recompute assigns the shard
     // the same flags
-    val full = Dedup.minhashDedup(docs.unionByName(shard), "text", "doc_id",
-        threshold = 0.5)
-      .filter($"doc_id" >= 10L)
-      .select($"doc_id", $"is_dup").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    val full = flagMap(Dedup.minhashDedup(batch1.unionByName(arrivingShard),
+      "text", "doc_id", threshold = 0.5).filter($"doc_id" >= 10L))
     assert(full == inc)
-    // arrival protocol: appending the shard leaves the index covering
-    // every ingested doc
-    Dedup.minhashIndexAppend(shard, "text", "doc_id", idx)
-    assert(spark.read.parquet(idx).count() == 7L)
-  }
-
-  test("minhashDedupFromIndex: index-backed bootstrap equals the recomputing path") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_mhidx_boot")
-      .toString + "/index"
-    Dedup.minhashIndexWrite(docs, "text", "doc_id", idx)
-    val fromIdx = Dedup.minhashDedupFromIndex(docs, "doc_id", idx,
-        threshold = 0.5)
-      .select($"doc_id", $"is_dup").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val recomputed = Dedup.minhashDedup(docs, "text", "doc_id", threshold = 0.5)
-      .select($"doc_id", $"is_dup").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(fromIdx == recomputed)
-    assert(fromIdx(2L) && fromIdx(5L) && !fromIdx(1L) && !fromIdx(4L))
+    // arrival protocol: the append leaves the index covering every
+    // ingested doc that has a signature
+    assert(spark.read.parquet(idx).count() == 8L)
   }
 
   test("incremental exact: digest-index flags equal full recompute, nulls included") {
@@ -110,8 +101,6 @@ class DedupSpec extends AnyFunSuite {
     // doc 1 (via case/space normalization), a fresh doc, a second
     // null-text doc (must hit batch 1's null-digest group via <=>),
     // and an intra-shard dup pair
-    val b1 = docs.unionByName(
-      Seq((6L, null.asInstanceOf[String])).toDF("doc_id", "text"))
     val shard = Seq(
       (10L, "THE QUICK BROWN fox jumps over the lazy dog near the river bank today"),
       (11L, "a genuinely fresh shard document"),
@@ -119,16 +108,12 @@ class DedupSpec extends AnyFunSuite {
       (13L, "another fresh one"),
       (14L, "another  FRESH one")
     ).toDF("doc_id", "text")
-    Dedup.exactIndexWrite(b1, "text", "doc_id", idx)
-    val inc = Dedup.exactDedupIncremental(shard, "text", "doc_id", idx)
-      .select($"doc_id", $"is_dup").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    Dedup.exactIndexWriteAndDedup(batch1, "text", "doc_id", idx)
+    val inc = flagMap(Dedup.exactServeAppend(shard, "text", "doc_id", idx))
     assert(inc == Map(10L -> true, 11L -> false, 12L -> true,
       13L -> false, 14L -> true))
-    val full = Dedup.exact(b1.unionByName(shard), "text", "doc_id")
-      .filter($"doc_id" >= 10L)
-      .select($"doc_id", $"is_dup").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    val full = flagMap(Dedup.exact(batch1.unionByName(shard), "text", "doc_id")
+      .filter($"doc_id" >= 10L))
     assert(full == inc)
   }
 
@@ -138,24 +123,24 @@ class DedupSpec extends AnyFunSuite {
     // sub-batch PER DOC here, with the minhash path spilling served
     // chunks so later ones see them as indexed; verdicts must be
     // identical to the default single-broadcast serve on both the
-    // minhash and the exact index.
-    val mhIdx = java.nio.file.Files.createTempDirectory("graft_mhidx_large")
-      .toString + "/index"
-    val exIdx = java.nio.file.Files.createTempDirectory("graft_exidx_large")
-      .toString + "/index"
+    // minhash and the exact index. Each serve appends the shard, so
+    // each gets a fresh index.
     val shard = Seq(
       (10L, "the quick brown fox jumps over the lazy dog near the river bank today"),
       (11L, "unrelated shard document discussing columnar storage formats and parquet footers"),
       (12L, "THE QUICK brown fox jumps over the lazy dog near the river bank today")
     ).toDF("doc_id", "text")
-    Dedup.minhashIndexWrite(docs, "text", "doc_id", mhIdx)
-    Dedup.exactIndexWrite(docs, "text", "doc_id", exIdx)
-    def flags(mh: Boolean): Map[Long, Boolean] =
-      (if (mh) Dedup.minhashDedupIncremental(shard, "text", "doc_id", mhIdx,
-        threshold = 0.5)
-      else Dedup.exactDedupIncremental(shard, "text", "doc_id", exIdx))
-        .select($"doc_id", $"is_dup").collect()
-        .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    def flags(mh: Boolean): Map[Long, Boolean] = {
+      val idx = java.nio.file.Files.createTempDirectory("graft_idx_large")
+        .toString + "/index"
+      flagMap(if (mh) {
+        Dedup.minhashIndexWrite(docs, "text", "doc_id", idx)
+        Dedup.minhashServeAppend(shard, "text", "doc_id", idx, threshold = 0.5)
+      } else {
+        Dedup.exactIndexWriteAndDedup(docs, "text", "doc_id", idx)
+        Dedup.exactServeAppend(shard, "text", "doc_id", idx)
+      })
+    }
     val (mhSmall, exSmall) = (flags(true), flags(false))
     spark.conf.set(Dedup.IncrementalBroadcastMaxDocsKey, "0")
     try {
@@ -166,89 +151,38 @@ class DedupSpec extends AnyFunSuite {
     assert(exSmall == Map(10L -> true, 11L -> false, 12L -> true))
   }
 
-  test("fused serve+append equals split serve-then-append (flags AND index bytes)") {
-    // r10 optimization: exactServeAppend / minhashServeAppend run the
-    // shard's md5 / signature pipeline once for both the serve and the
-    // index append. This pins bit-equality with the split sequence on
-    // flags, index row sets, and signature values.
-    val base = java.nio.file.Files.createTempDirectory("graft_fused").toString
-    val shard = Seq(
-      (10L, "the quick brown fox jumps over the lazy dog near the river bank today"),
-      (11L, "unrelated shard document discussing columnar storage formats and parquet footers"),
-      (12L, null.asInstanceOf[String]),
-      (13L, "unrelated  SHARD document discussing columnar storage formats and parquet footers")
-    ).toDF("doc_id", "text")
-    val b1 = docs.unionByName(
-      Seq((6L, null.asInstanceOf[String])).toDF("doc_id", "text"))
-    // exact: split
-    Dedup.exactIndexWrite(b1, "text", "doc_id", s"$base/exS")
-    val exSplit = Dedup.exactDedupIncremental(shard, "text", "doc_id", s"$base/exS")
-      .select($"doc_id", $"is_dup").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    Dedup.exactIndexWrite(shard, "text", "doc_id", s"$base/exS", mode = "append")
-    // exact: fused
-    Dedup.exactIndexWrite(b1, "text", "doc_id", s"$base/exF")
-    val exFused = Dedup.exactServeAppend(shard, "text", "doc_id", s"$base/exF")
-      .select($"doc_id", $"is_dup").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(exFused == exSplit)
+  test("build then serve+append leaves the index rows of a one-shot build over batch and shard") {
+    val base = java.nio.file.Files.createTempDirectory("graft_idxrows").toString
+    val all = batch1.unionByName(arrivingShard)
     def exRows(p: String) = spark.read.parquet(p)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(exRows(s"$base/exF") == exRows(s"$base/exS"))
-    // minhash: split
-    Dedup.minhashIndexWrite(docs, "text", "doc_id", s"$base/mhS")
-    val mhSplit = Dedup.minhashDedupIncremental(shard, "text", "doc_id",
-        s"$base/mhS", threshold = 0.5)
-      .select($"doc_id", $"is_dup").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    Dedup.minhashIndexAppend(shard, "text", "doc_id", s"$base/mhS")
-    // minhash: fused
-    Dedup.minhashIndexWrite(docs, "text", "doc_id", s"$base/mhF")
-    val mhFused = Dedup.minhashServeAppend(shard, "text", "doc_id",
-        s"$base/mhF", threshold = 0.5)
-      .select($"doc_id", $"is_dup").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(mhFused == mhSplit)
     def mhRows(p: String) = spark.read.parquet(p)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
-    assert(mhRows(s"$base/mhF") == mhRows(s"$base/mhS"))
-    // the fused exact frame is pre-materialized and survives the append
-    // (its own flags were computed against the PRE-append index);
-    // 13 normalizes to 11's text, so it is an intra-shard dup
-    assert(exFused == Map(10L -> true, 11L -> false, 12L -> true, 13L -> true))
-  }
-
-  test("fused build+bootstrap equals split write-then-dedup (flags AND index bytes)") {
-    val base = java.nio.file.Files.createTempDirectory("graft_fusedb").toString
-    val b1 = docs.unionByName(
-      Seq((6L, null.asInstanceOf[String])).toDF("doc_id", "text"))
-    def flags(df: DataFrame): Map[Long, Boolean] = df
-      .select($"doc_id", $"is_dup").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    // exact: split vs fused
-    Dedup.exactIndexWrite(b1, "text", "doc_id", s"$base/exS")
-    val exSplit = flags(Dedup.exact(b1, "text", "doc_id"))
-    val exFused = flags(Dedup.exactIndexWriteAndDedup(b1, "text", "doc_id", s"$base/exF"))
-    assert(exFused == exSplit)
-    def exRows(p: String) = spark.read.parquet(p)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(exRows(s"$base/exF") == exRows(s"$base/exS"))
-    // minhash: split vs fused
-    Dedup.minhashIndexWrite(docs, "text", "doc_id", s"$base/mhS")
-    val mhSplit = flags(Dedup.minhashDedupFromIndex(docs, "doc_id", s"$base/mhS",
-      threshold = 0.5))
-    val mhFused = flags(Dedup.minhashIndexWriteAndDedup(docs, "text", "doc_id",
-      s"$base/mhF", threshold = 0.5))
-    assert(mhFused == mhSplit)
-    def mhRows(p: String) = spark.read.parquet(p)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
-    assert(mhRows(s"$base/mhF") == mhRows(s"$base/mhS"))
+    // the build flags the batch as the one-shot operators do
+    assert(flagMap(Dedup.exactIndexWriteAndDedup(batch1, "text", "doc_id",
+      s"$base/exA")) == flagMap(Dedup.exact(batch1, "text", "doc_id")))
+    // 12 joins batch 1's null group; 13 normalizes to 11's text
+    assert(flagMap(Dedup.exactServeAppend(arrivingShard, "text", "doc_id",
+      s"$base/exA")) == Map(10L -> true, 11L -> false, 12L -> true, 13L -> true))
+    Dedup.exactIndexWriteAndDedup(all, "text", "doc_id", s"$base/exB")
+    assert(exRows(s"$base/exA") == exRows(s"$base/exB"))
+    assert(exRows(s"$base/exA").size == 10)
+    assert(flagMap(Dedup.minhashIndexWriteAndDedup(batch1, "text", "doc_id",
+      s"$base/mhA", threshold = 0.5)) ==
+      flagMap(Dedup.minhashDedup(batch1, "text", "doc_id", threshold = 0.5)))
+    Dedup.minhashServeAppend(arrivingShard, "text", "doc_id", s"$base/mhA",
+      threshold = 0.5)
+    Dedup.minhashIndexWriteAndDedup(all, "text", "doc_id", s"$base/mhB",
+      threshold = 0.5)
+    assert(mhRows(s"$base/mhA") == mhRows(s"$base/mhB"))
+    // null-text docs have no shingles, so no signature row
+    assert(mhRows(s"$base/mhA").map(_._1) == Set(1L, 2L, 3L, 4L, 5L, 10L, 11L, 13L))
   }
 
   test("arrival-order debug guard fires on out-of-order shard ids, passes in order") {
     val idx = java.nio.file.Files.createTempDirectory("graft_ordidx")
       .toString + "/index"
-    Dedup.exactIndexWrite(docs, "text", "doc_id", idx) // ids 1-5 indexed
+    Dedup.exactIndexWriteAndDedup(docs, "text", "doc_id", idx) // ids 1-5 indexed
     Dedup.minhashIndexWrite(docs, "text", "doc_id", idx + "_mh")
     val okShard = Seq((10L, "fresh doc"), (11L, "other fresh doc"))
       .toDF("doc_id", "text")
@@ -257,19 +191,19 @@ class DedupSpec extends AnyFunSuite {
     spark.conf.set(Dedup.CheckArrivalOrderKey, "true")
     try {
       // in-order shards pass under the guard on both serve paths
-      Dedup.exactDedupIncremental(okShard, "text", "doc_id", idx).collect()
-      Dedup.minhashDedupIncremental(okShard, "text", "doc_id", idx + "_mh")
+      Dedup.exactServeAppend(okShard, "text", "doc_id", idx).collect()
+      Dedup.minhashServeAppend(okShard, "text", "doc_id", idx + "_mh")
         .collect()
       val e1 = intercept[IllegalArgumentException](
-        Dedup.exactDedupIncremental(badShard, "text", "doc_id", idx).collect())
+        Dedup.exactServeAppend(badShard, "text", "doc_id", idx).collect())
       assert(e1.getMessage.contains("arrival-order contract"))
       val e2 = intercept[IllegalArgumentException](
-        Dedup.minhashDedupIncremental(badShard, "text", "doc_id", idx + "_mh")
+        Dedup.minhashServeAppend(badShard, "text", "doc_id", idx + "_mh")
           .collect())
       assert(e2.getMessage.contains("arrival-order contract"))
     } finally spark.conf.unset(Dedup.CheckArrivalOrderKey)
     // guard off (default): the same out-of-order shard runs unchecked
-    Dedup.exactDedupIncremental(badShard, "text", "doc_id", idx).collect()
+    Dedup.exactServeAppend(badShard, "text", "doc_id", idx).collect()
   }
 
   test("simhash: identical texts have distance 0, near-dups small") {

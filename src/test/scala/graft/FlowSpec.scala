@@ -118,7 +118,7 @@ class FlowSpec extends AnyFunSuite {
     val in = new java.io.File(s"$tmp/in"); in.mkdirs()
     val boot = Seq((1L, "seed document one"), (2L, "seed document two"))
       .toDF("doc_id", "text")
-    Dedup.exactIndexWrite(boot, "text", "doc_id", dIdx)
+    Dedup.exactIndexWriteAndDedup(boot, "text", "doc_id", dIdx)
     def stage(name: String, df: DataFrame): Unit = {
       val st = s"$tmp/stage_$name"
       df.coalesce(1).write.parquet(st)
@@ -132,9 +132,7 @@ class FlowSpec extends AnyFunSuite {
       val q = spark.readStream.schema(schema).parquet(in.toString)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          val e = graft.operators.Lineage.truncate(
-            Dedup.exactDedupIncremental(batch, "text", "doc_id", dIdx))
-          Dedup.exactIndexWrite(batch, "text", "doc_id", dIdx, mode = "append")
+          val e = Dedup.exactServeAppend(batch, "text", "doc_id", dIdx)
           e.select(col("doc_id"), col("is_dup"))
             .write.mode("append").parquet(s"$tmp/verdicts")
           (): Unit
