@@ -151,27 +151,56 @@ class DedupSpec extends AnyFunSuite {
     assert(exSmall == Map(10L -> true, 11L -> false, 12L -> true))
   }
 
-  test("build then serve+append leaves the index rows of a one-shot build over batch and shard") {
-    val base = java.nio.file.Files.createTempDirectory("graft_idxrows").toString
+  private def exRows(p: String): Set[(String, Long)] = spark.read.parquet(p)
+    .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+  private def mhRows(p: String): Set[(Long, Seq[Long])] = spark.read.parquet(p)
+    .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
+
+  test("fused build+bootstrap equals split write-then-dedup (flags AND index bytes)") {
+    // the build's flags equal the one-shot operators' and its index rows
+    // equal a flag-free index write (minhash) or one (digest, id) row per
+    // doc keyed like exact's groups (exact)
+    val base = java.nio.file.Files.createTempDirectory("graft_fusedb").toString
+    val exFused = flagMap(Dedup.exactIndexWriteAndDedup(batch1, "text",
+      "doc_id", s"$base/exF"))
+    assert(exFused == flagMap(Dedup.exact(batch1, "text", "doc_id")))
+    val ex = exRows(s"$base/exF")
+    assert(ex.map(_._2) == Set(1L, 2L, 3L, 4L, 5L, 6L))
+    assert(ex.groupBy(_._1).values.map(_.map(_._2)).toSet ==
+      Set(Set(1L, 2L, 5L), Set(3L), Set(4L), Set(6L)))
+    // null text -> null digest, one row like any other doc
+    assert(ex.collect { case (null, id) => id } == Set(6L))
+    Dedup.minhashIndexWrite(batch1, "text", "doc_id", s"$base/mhS")
+    val mhFused = flagMap(Dedup.minhashIndexWriteAndDedup(batch1, "text",
+      "doc_id", s"$base/mhF", threshold = 0.5))
+    assert(mhFused == flagMap(Dedup.minhashDedup(batch1, "text", "doc_id",
+      threshold = 0.5)))
+    assert(mhRows(s"$base/mhF") == mhRows(s"$base/mhS"))
+    assert(mhFused(2L) && mhFused(5L) && !mhFused(1L) && !mhFused(4L))
+  }
+
+  test("fused serve+append equals split serve-then-append (flags AND index bytes)") {
+    // serve+append after a build leaves the flags of a full-corpus
+    // recompute on the shard and the index rows of a one-shot build over
+    // batch and shard
+    val base = java.nio.file.Files.createTempDirectory("graft_fused").toString
     val all = batch1.unionByName(arrivingShard)
-    def exRows(p: String) = spark.read.parquet(p)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    def mhRows(p: String) = spark.read.parquet(p)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
-    // the build flags the batch as the one-shot operators do
-    assert(flagMap(Dedup.exactIndexWriteAndDedup(batch1, "text", "doc_id",
-      s"$base/exA")) == flagMap(Dedup.exact(batch1, "text", "doc_id")))
+    Dedup.exactIndexWriteAndDedup(batch1, "text", "doc_id", s"$base/exA")
+    val exFused = flagMap(Dedup.exactServeAppend(arrivingShard, "text",
+      "doc_id", s"$base/exA"))
+    assert(exFused == flagMap(Dedup.exact(all, "text", "doc_id")
+      .filter($"doc_id" >= 10L)))
     // 12 joins batch 1's null group; 13 normalizes to 11's text
-    assert(flagMap(Dedup.exactServeAppend(arrivingShard, "text", "doc_id",
-      s"$base/exA")) == Map(10L -> true, 11L -> false, 12L -> true, 13L -> true))
+    assert(exFused == Map(10L -> true, 11L -> false, 12L -> true, 13L -> true))
     Dedup.exactIndexWriteAndDedup(all, "text", "doc_id", s"$base/exB")
     assert(exRows(s"$base/exA") == exRows(s"$base/exB"))
     assert(exRows(s"$base/exA").size == 10)
-    assert(flagMap(Dedup.minhashIndexWriteAndDedup(batch1, "text", "doc_id",
-      s"$base/mhA", threshold = 0.5)) ==
-      flagMap(Dedup.minhashDedup(batch1, "text", "doc_id", threshold = 0.5)))
-    Dedup.minhashServeAppend(arrivingShard, "text", "doc_id", s"$base/mhA",
+    Dedup.minhashIndexWriteAndDedup(batch1, "text", "doc_id", s"$base/mhA",
       threshold = 0.5)
+    val mhFused = flagMap(Dedup.minhashServeAppend(arrivingShard, "text",
+      "doc_id", s"$base/mhA", threshold = 0.5))
+    assert(mhFused == flagMap(Dedup.minhashDedup(all, "text", "doc_id",
+      threshold = 0.5).filter($"doc_id" >= 10L)))
     Dedup.minhashIndexWriteAndDedup(all, "text", "doc_id", s"$base/mhB",
       threshold = 0.5)
     assert(mhRows(s"$base/mhA") == mhRows(s"$base/mhB"))
