@@ -300,36 +300,114 @@ object Catalog {
     * reader from treating it as data. */
   private val ManifestFile = "_graft_compaction"
 
-  /** Last manifest line: the number of file entries above it. */
-  private val ManifestTrailer = "_entries"
+  /** Last line of a [[writeCounted]] file: the number of lines above it. */
+  private val CountTrailer = "_entries"
 
   private def fsOf(spark: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Record a just-finished compaction: the seq bound, one line per data
-    * file, then an entry-count trailer, every line newline-terminated.
-    * The text goes to a hidden temp file that is renamed into place, so
-    * a reader sees the whole manifest or none; a manifest cut short
-    * anyway fails the trailer check and reads as none. */
+  /** Record a just-finished compaction: the seq bound, then one line per
+    * data file, written by [[writeCounted]]. */
   def writeCompactionManifest(spark: SparkSession, path: String,
-      seq: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val files = listDir(spark, path).names.toSeq.sorted
-    val fs = fsOf(spark, path)
-    val target = new Path(path, ManifestFile)
-    val tmp = new Path(path, ManifestFile + ".tmp")
+      seq: Long): Unit =
+    writeCounted(spark, new org.apache.hadoop.fs.Path(path, ManifestFile),
+      seq.toString +: listDir(spark, path).names.toSeq.sorted)
+
+  /** Write `lines`, then an entry-count trailer, every line
+    * newline-terminated. The text goes to a hidden temp file that is
+    * renamed into place, so a reader sees the whole file or none; a file
+    * cut short anyway fails [[readCounted]]'s trailer check. Driver-sized
+    * on-disk metadata (the compaction manifest, the IVF centroid
+    * sidecar) is committed this way. */
+  private[graft] def writeCounted(spark: SparkSession,
+      target: org.apache.hadoop.fs.Path, lines: Seq[String]): Unit = {
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new org.apache.hadoop.fs.Path(target.getParent, s".${target.getName}.tmp")
     val out = fs.create(tmp, true)
-    try out.write((seq.toString +: files :+ s"$ManifestTrailer ${files.size}")
+    try out.write((lines :+ s"$CountTrailer ${lines.size}")
       .mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
-    // a local rename replaces an old manifest in one step; where the
-    // file system refuses to, the old one goes first, and a reader in
-    // between sees none (the full merge window, still correct)
+    // a local rename replaces an old file in one step; where the file
+    // system refuses to, the old one goes first, and a reader in
+    // between sees none
     if (!fs.rename(tmp, target)) {
       fs.delete(target, false)
       if (!fs.rename(tmp, target))
         throw new java.io.IOException(s"cannot rename $tmp to $target")
+    }
+  }
+
+  /** The lines a [[writeCounted]] file holds, or None when it has no
+    * whole trailer: torn, empty, or written without one. */
+  private[graft] def readCounted(spark: SparkSession,
+      p: org.apache.hadoop.fs.Path): Option[Seq[String]] = {
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    val lines = text.split("\n", -1).toSeq
+    for {
+      body <- Some(lines.init).filter(_ => lines.last.isEmpty) // newline-terminated
+      n <- body.lastOption.filter(_.startsWith(CountTrailer + " "))
+        .flatMap(_.stripPrefix(CountTrailer + " ").toIntOption)
+      if n == body.size - 1
+    } yield body.init
+  }
+
+  /** Commit a rewrite of the dir `path` (a table dir, a flow sink) by one
+    * checked swap. `write` fills a fresh staging dir beside `path`; the
+    * live dir is renamed aside, the staged one renamed in, and the aside
+    * deleted. A refused rename restores the aside and throws, so `path`
+    * holds its old files or its new ones, never none (a reader racing
+    * the two renames can still find it briefly absent). With `levels` > 0
+    * the staging dir holds partition dirs (`k=v`) that many levels deep,
+    * and each swaps in for its counterpart under `path` alone: partitions
+    * the write did not stage stay, and a failure partway leaves the
+    * partitions swapped before it new.
+    *
+    * Staging and aside names start with a dot, which Spark's file
+    * listing skips, so one left by a crash or a failed delete is never
+    * read (an underscore would not do: Spark lists `_` names that contain
+    * `=`, as a partition's aside does). A later swap clears it. Ends by
+    * refreshing Spark's cached listing of `path`. */
+  def replaceDir(spark: SparkSession, path: String, levels: Int = 0)(
+      write: String => Unit): Unit = {
+    import org.apache.hadoop.fs.Path
+    val fs = fsOf(spark, path)
+    def beside(p: Path, suffix: String) = new Path(p.getParent, s".${p.getName}$suffix")
+    def clear(p: Path): Unit =
+      if (fs.exists(p) && !fs.delete(p, true))
+        throw new java.io.IOException(s"cannot delete $p")
+    def rename(from: Path, to: Path) =
+      try fs.rename(from, to) catch { case _: java.io.IOException => false }
+    // (staged dir, live dir) pairs, `depth` partition levels down
+    def pairs(from: Path, to: Path, depth: Int): Seq[(Path, Path)] =
+      if (depth == 0) Seq(from -> to)
+      else fs.listStatus(from).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
+        .flatMap(s => pairs(s.getPath, new Path(to, s.getPath.getName), depth - 1))
+    val live = new Path(path)
+    val staging = beside(live, "__staging")
+    clear(staging)
+    try {
+      write(staging.toString)
+      for ((from, to) <- pairs(staging, live, levels)) {
+        val aside = beside(to, "__old")
+        clear(aside)
+        val had = fs.exists(to)
+        if (had && !rename(to, aside))
+          throw new java.io.IOException(s"cannot move $to aside to $aside")
+        if (!had) fs.mkdirs(to.getParent)
+        if (!rename(from, to)) {
+          if (had && !rename(aside, to))
+            throw new java.io.IOException(
+              s"cannot rename $from to $to, nor restore $to from $aside")
+          throw new java.io.IOException(s"cannot rename $from to $to")
+        }
+        if (had) scala.util.Try(fs.delete(aside, true))
+      }
+    } finally {
+      scala.util.Try(fs.delete(staging, true))
+      try spark.catalog.refreshByPath(path) catch { case _: Throwable => () }
     }
   }
 
@@ -352,21 +430,11 @@ object Catalog {
   private def parseManifest(spark: SparkSession,
       st: org.apache.hadoop.fs.FileStatus): Option[Manifest] = {
     val p = st.getPath
-    def read = {
-      val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
     val whole = for {
       // a failed read (a checksum mismatch, say) is a torn manifest too
-      text <- scala.util.Try(read).toOption
-      lines = text.split("\n", -1).toSeq
-      body <- Some(lines.init).filter(_ => lines.last.isEmpty) // newline-terminated
-      seq <- body.headOption.flatMap(_.toLongOption)
-      n <- body.lastOption.filter(_.startsWith(ManifestTrailer + " "))
-        .flatMap(_.stripPrefix(ManifestTrailer + " ").toIntOption)
-      files = body.slice(1, body.size - 1)
-      if body.size >= 2 && files.size == n
-    } yield Manifest(seq, files.toSet)
+      lines <- scala.util.Try(readCounted(spark, p)).toOption.flatten
+      seq <- lines.headOption.flatMap(_.toLongOption)
+    } yield Manifest(seq, lines.tail.toSet)
     if (whole.isEmpty && tornReported.add((p.toString, st.getModificationTime)))
       Console.err.println(
         s"[catalog] compaction manifest $p is torn or has no entry-count trailer; " +

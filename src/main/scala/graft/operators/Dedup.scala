@@ -397,14 +397,14 @@ object Dedup {
     require(k % bands == 0, s"k=$k not divisible by bands=$bands")
     val sig = minhashSignatures(df, textCol, idCol, k, shingleSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nDocs = sig.count()
-    writeSigs(sig, path, "overwrite")
-    // minhashPairsFromSig checkpoints its pair output, so the returned
-    // join is independent of the cached sig frame
-    val out = flagIds(df, minhashPairsFromSig(sig, nDocs, threshold, k, bands)
-      .select(col("id_b").as(idCol)).distinct(), idCol)
-    sig.unpersist()
-    out
+    try {
+      val nDocs = sig.count()
+      writeSigs(sig, path, "overwrite")
+      // minhashPairsFromSig checkpoints its pair output, so the returned
+      // join is independent of the cached sig frame
+      flagIds(df, minhashPairsFromSig(sig, nDocs, threshold, k, bands)
+        .select(col("id_b").as(idCol)).distinct(), idCol)
+    } finally sig.unpersist()
   }
 
   /** Exact twin of [[minhashIndexWriteAndDedup]]: one normalize+md5
@@ -502,52 +502,52 @@ object Dedup {
     val spark = shard.sparkSession
     val sig = minhashSignatures(shard, textCol, idCol, k, shingleSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nShard = sig.count()
-    val idxSig = spark.read.parquet(indexPath)
-      .select(col("id").as("__id"), col("mh").as("__mh"))
-    // raw shard ids, not sig ids: a too-short doc (fewer tokens than
-    // the shingle width) has no signature but still participates in
-    // the id ordering the contract is about
-    if (checkArrivalOrder(spark))
-      assertArrivalOrder(idxSig.select(col("__id").cast("long")),
-        shard.select(col(idCol).cast("long")), "minhashServeAppend")
-    // shard-vs-index candidates in scan-only index passes: the shard
-    // bands BROADCAST into the index scan (the index side never
-    // shuffles — its band explode is a per-row column op riding the
-    // scan), and the index signature RIDES the join output so the
-    // verify stage needs no second index pass (measured 23 → 14 s at a
-    // 495k-doc index). Carried arrays are candidate-bounded. Above the
-    // large-shard boundary ONE broadcast (~1.6 KB/doc of band rows)
-    // would blow Spark's 8 GB cap — the serve switches to CHUNKED
-    // passes: the shard splits into id-ordered sub-batches of at most
-    // `boundary` docs, each broadcast into a scan of the index plus the
-    // already-served chunks' signatures (spilled once, never the real
-    // index file) — so the index STILL never shuffles and per-pass cost
-    // stays bounded, at the price of one extra index scan per chunk.
-    // (A partitioned join instead would shuffle the index's band rows —
-    // ∝ corpus per arrival, measured 3.5 GB at a 495k index vs the
-    // chunked path's shard-sized tens of MB.)
-    val boundary = math.max(1L, incrementalBroadcastMaxDocs(spark))
-    // the dup id SET is what must materialize before any index append —
-    // it is the only index-reading subtree, and it is near-dup-sized
-    // (truncating the whole flagged shard instead, as earlier rounds
-    // did, checkpointed a shard-sized frame for no extra safety). The
-    // band table is recomputed from the persisted signatures where
-    // needed — a column slice over cached rows, cheaper than a second
-    // persist + materializing count.
-    val dups = Lineage.truncate(
-      if (nShard <= boundary)
-        minhashServePassDups(idxSig, sig, bandBuckets(sig, k, bands),
-          threshold, k, bands, idCol)
-      else
-        minhashChunkedDups(spark, idxSig, sig, nShard, boundary, threshold,
-          k, bands, idCol))
-    // append only after the dup set materialized, so the serve never
-    // sees its own shard as "indexed"
-    writeSigs(sig, indexPath, "append")
-    val out = flagIds(shard, dups, idCol)
-    sig.unpersist()
-    out
+    try {
+      val nShard = sig.count()
+      val idxSig = spark.read.parquet(indexPath)
+        .select(col("id").as("__id"), col("mh").as("__mh"))
+      // raw shard ids, not sig ids: a too-short doc (fewer tokens than
+      // the shingle width) has no signature but still participates in
+      // the id ordering the contract is about
+      if (checkArrivalOrder(spark))
+        assertArrivalOrder(idxSig.select(col("__id").cast("long")),
+          shard.select(col(idCol).cast("long")), "minhashServeAppend")
+      // shard-vs-index candidates in scan-only index passes: the shard
+      // bands BROADCAST into the index scan (the index side never
+      // shuffles — its band explode is a per-row column op riding the
+      // scan), and the index signature RIDES the join output so the
+      // verify stage needs no second index pass (measured 23 → 14 s at a
+      // 495k-doc index). Carried arrays are candidate-bounded. Above the
+      // large-shard boundary ONE broadcast (~1.6 KB/doc of band rows)
+      // would blow Spark's 8 GB cap — the serve switches to CHUNKED
+      // passes: the shard splits into id-ordered sub-batches of at most
+      // `boundary` docs, each broadcast into a scan of the index plus the
+      // already-served chunks' signatures (spilled once, never the real
+      // index file) — so the index STILL never shuffles and per-pass cost
+      // stays bounded, at the price of one extra index scan per chunk.
+      // (A partitioned join instead would shuffle the index's band rows —
+      // ∝ corpus per arrival, measured 3.5 GB at a 495k index vs the
+      // chunked path's shard-sized tens of MB.)
+      val boundary = math.max(1L, incrementalBroadcastMaxDocs(spark))
+      // the dup id SET is what must materialize before any index append —
+      // it is the only index-reading subtree, and it is near-dup-sized
+      // (truncating the whole flagged shard instead, as earlier rounds
+      // did, checkpointed a shard-sized frame for no extra safety). The
+      // band table is recomputed from the persisted signatures where
+      // needed — a column slice over cached rows, cheaper than a second
+      // persist + materializing count.
+      val dups = Lineage.truncate(
+        if (nShard <= boundary)
+          minhashServePassDups(idxSig, sig, bandBuckets(sig, k, bands),
+            threshold, k, bands, idCol)
+        else
+          minhashChunkedDups(spark, idxSig, sig, nShard, boundary, threshold,
+            k, bands, idCol))
+      // append only after the dup set materialized, so the serve never
+      // sees its own shard as "indexed"
+      writeSigs(sig, indexPath, "append")
+      flagIds(shard, dups, idCol)
+    } finally sig.unpersist()
   }
 
   /** One serve pass: candidates of `sigChunk` (bands in `bandsChunk`)
@@ -1226,9 +1226,9 @@ object Dedup {
       hooked.as("l")
         .join(hooked.select(col("id").as("__jid"), col("comp").as("__jc")),
           col("comp") === col("__jid"))
-        .select(col("id"), col("comp").as("__old"), col("__jc").as("comp"))
+        .select(col("id"), col("comp").as("__prev"), col("__jc").as("comp"))
         .observe(obs,
-          coalesce(sum(when(col("comp") < col("__old"), 1L).otherwise(0L)),
+          coalesce(sum(when(col("comp") < col("__prev"), 1L).otherwise(0L)),
             lit(0L)).as("changed"))
         .select(col("id"), col("comp"))
     def changedMetric(obs: org.apache.spark.sql.Observation): Long =
@@ -1239,7 +1239,7 @@ object Dedup {
     while (hookChanged > 0 && it <= maxIters) {
       val hookObs = org.apache.spark.sql.Observation()
       val jumpObs = org.apache.spark.sql.Observation()
-      // hook: min label over the closed neighborhood. __old is
+      // hook: min label over the closed neighborhood. __prev is
       // projected away before the jump so the transient comparison
       // column never rides into the checkpoint (a third more bytes at
       // the 100M-edge probe otherwise).
@@ -1247,7 +1247,7 @@ object Dedup {
         if (labels == null)
           // round 1 on identity labels: neighbor label == neighbor id
           edges.groupBy(col("__s").as("id")).agg(min(col("__t")).as("__nc"))
-            .select(col("id"), col("id").as("__old"),
+            .select(col("id"), col("id").as("__prev"),
               least(col("id"), col("__nc")).as("comp"))
         else {
           val nbrMin = edges
@@ -1256,11 +1256,11 @@ object Dedup {
             .groupBy(col("__s").as("id"))
             .agg(min(col("__tc")).as("__nc"))
           labels.join(nbrMin, Seq("id"), "left")
-            .select(col("id"), col("comp").as("__old"),
+            .select(col("id"), col("comp").as("__prev"),
               least(col("comp"), coalesce(col("__nc"), col("comp"))).as("comp"))
         }
       val hooked = hooked0.observe(hookObs,
-        coalesce(sum(when(col("comp") < col("__old"), 1L).otherwise(0L)),
+        coalesce(sum(when(col("comp") < col("__prev"), 1L).otherwise(0L)),
           lit(0L)).as("changed"))
         .select(col("id"), col("comp"))
       labels = Lineage.truncate(hooked)

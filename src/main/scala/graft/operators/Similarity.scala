@@ -241,34 +241,31 @@ object Similarity {
 
   /** Centroid sidecar IO (optimization round 11): the sidecar is
     * ncentroids·dim floats — driver-sized metadata, the same class as
-    * the compaction manifest. r10 wrote/read it as a 1-partition
-    * parquet table, paying a full Spark JOB on each side (two ~0.15 s
-    * scheduler floors per build/reload at any scale); a driver-side
-    * file write/read does the identical data movement with zero jobs.
+    * the compaction manifest, and committed the same way
+    * ([[graft.model.Catalog.writeCounted]]: temp file + rename +
+    * entry-count trailer). r10 wrote/read it as a 1-partition parquet
+    * table, paying a full Spark JOB on each side (two ~0.15 s scheduler
+    * floors per build/reload at any scale); a driver-side file
+    * write/read does the identical data movement with zero jobs.
     * Line i is centroid i (cent_id order), comma-separated floats;
     * Float.toString/parseFloat round-trips every value exactly. */
   private def centroidsPath(path: String) =
     new org.apache.hadoop.fs.Path(path + "/centroids")
 
   private def writeCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String, cents: Array[Array[Float]]): Unit = {
-    val p = centroidsPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(cents.map(_.mkString(",")).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+      path: String, cents: Array[Array[Float]]): Unit =
+    graft.model.Catalog.writeCounted(spark, centroidsPath(path),
+      cents.toSeq.map(_.mkString(",")))
 
+  /** The sidecar's centroids; a sidecar cut short, or written without
+    * the trailer, throws rather than reading as fewer centroids. */
   private def readCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Float]] = {
     val p = centroidsPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    text.split("\n").filter(_.nonEmpty)
-      .map(_.split(",").map(java.lang.Float.parseFloat))
+    graft.model.Catalog.readCounted(spark, p).getOrElse(
+      throw new java.io.IOException(
+        s"IVF centroid sidecar $p has no whole entry-count trailer: torn, or of an older format"))
+      .map(_.split(",").map(java.lang.Float.parseFloat)).toArray
   }
 
   /** Append an ARRIVING batch to a persisted IVF index: assign each

@@ -102,7 +102,9 @@ object Copy {
     Option(dest.getParent).foreach(fs.mkdirs(_))
     if (fs.exists(dest)) fs.delete(dest, true)
     opts.compression match {
-      case None => fs.rename(part, dest)
+      case None =>
+        if (!fs.rename(part, dest))
+          throw new java.io.IOException(s"cannot rename $part to $dest")
       case Some(c) =>
         val in = fs.open(part)
         val out = new org.apache.commons.compress.compressors.CompressorStreamFactory()

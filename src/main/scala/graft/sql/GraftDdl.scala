@@ -1319,19 +1319,12 @@ private[sql] trait GraftDdl { self: GraftSession =>
     * reference migrates lazily per-file, which Parquet mergeSchema
     * cannot express for type changes. */
   private[sql] def migrateParquet(spec: TableSpec)(f: DataFrame => DataFrame): Unit = {
-    val in = graft.model.Catalog.rawRead(spark, spec.path)
+    val in = Catalog.rawRead(spark, spec.path)
     val out = f(in)
-    val tmp = spec.path + "__mig_tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(spec.path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(spec.path), true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(spec.path))
-    refreshPath(spec.path)
+    Catalog.replaceDir(spark, spec.path)(out.write.mode("overwrite").parquet(_))
     // a rewrite that kept the schema (compaction, TTL, truncate) spares
     // the next read its footer-union job
-    graft.model.Catalog.primeSchemaCacheAfterRewrite(spark, spec.path, in.schema, out.schema)
+    Catalog.primeSchemaCacheAfterRewrite(spark, spec.path, in.schema, out.schema)
   }
 
   private[sql] def alterAddColumn(name: String, body0: String): Unit = {

@@ -876,30 +876,18 @@ final class GraftSession(spark0: SparkSession,
             .cast(f.dataType).as(f.name)): _*)
         if (appendMode) {
           aligned.write.mode("append").parquet(spec.path)
-          refreshPath(spec.path)
           flowLastSeq.put(name, seqCounter.get())
         }
         else if (spec.mergeMode == MergeMode.LastNonNull)
           // the sink's own merge view coalesces per column (null keeps
           // the old value) — append and let storage-merge resolve, like
           // the reference region write path (flow_last_non_null)
-          { aligned.write.mode("append").parquet(spec.path); refreshPath(spec.path) }
+          aligned.write.mode("append").parquet(spec.path)
         else if (flowDef.keys.nonEmpty)
           Flow.upsert(aligned, spec.path, flowDef.keys)
-        else {
-          // keyless flow (global aggregate): full recompute replaces the
-          // sink — staging + rename so readers never see a partial sink
-          val fs = new org.apache.hadoop.fs.Path(spec.path)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val staging = new org.apache.hadoop.fs.Path(spec.path + "__staging")
-          aligned.write.mode("overwrite").parquet(staging.toString)
-          val old = new org.apache.hadoop.fs.Path(spec.path + "__old")
-          if (fs.exists(old)) fs.delete(old, true)
-          val sinkP = new org.apache.hadoop.fs.Path(spec.path)
-          if (fs.exists(sinkP)) fs.rename(sinkP, old)
-          fs.rename(staging, sinkP)
-          fs.delete(old, true)
-        }
+        else
+          // keyless flow (global aggregate): full recompute replaces the sink
+          Catalog.replaceDir(spark, spec.path)(aligned.write.mode("overwrite").parquet(_))
         refreshPath(spec.path)
         refreshView(meta.sinkTable)
       case None =>
@@ -1960,7 +1948,6 @@ final class GraftSession(spark0: SparkSession,
       // (delete.result's `DELETE FROM MoNiToR` hits table `monitor`)
       val name = normTable(rawName)
       val spec = catalog.spec(name)
-      val raw = graft.model.Catalog.rawRead(spark, spec.path)
       // integer literals compared against the time index are epoch
       // units of the column's precision (TypeConversionRule)
       val condSql = Option(condOpt).map { c0 =>
@@ -1971,17 +1958,9 @@ final class GraftSession(spark0: SparkSession,
           if (us > 0) s"$$1 $$2 TIMESTAMP_MICROS(CAST($$3 AS BIGINT) * $us)"
           else s"$$1 $$2 TIMESTAMP_MICROS(CAST($$3 AS BIGINT) div 1000)")
       }
-      val cond = condSql.map(c => expr(dialect(c))).getOrElse(lit(true))
-      val kept = raw.filter(!coalesce(cond, lit(false)))
-      val n = raw.count() - kept.count()
-      val tmp = spec.path + "__del_tmp"
-      kept.write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(spec.path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(spec.path), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(spec.path))
-      refreshPath(spec.path)
+      val hit = coalesce(condSql.map(c => expr(dialect(c))).getOrElse(lit(true)), lit(false))
+      val n = Catalog.rawRead(spark, spec.path).filter(hit).count()
+      migrateParquet(spec)(_.filter(!hit))
       refreshView(name)
       status(s"deleted $n rows from $name")
     case _ => throw new IllegalArgumentException(s"cannot parse: $stmt")

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.model.Catalog
 
 /** Continuous queries — the reference's `CREATE FLOW <name> SINK TO
   * <sink> [EXPIRE AFTER <d>] AS SELECT ...` (sql/src/statements/
@@ -103,8 +104,8 @@ object Flow {
 
   /** Key-replace upsert into a Parquet dir: existing rows whose key
     * matches an incoming row are dropped, then the batch is appended.
-    * Written via a staging dir + rename so a concurrent reader never
-    * sees a half-written sink. With `partitionCols`, only partitions
+    * Committed by [[Catalog.replaceDir]], so a reader never sees a
+    * half-written sink. With `partitionCols`, only partitions
     * present in the batch are rewritten (the 100 TB path: time-bucket
     * partitions make a refresh O(dirty windows), not O(sink)). */
   def upsert(batch: DataFrame, sink: String, keys: Seq[String],
@@ -112,34 +113,19 @@ object Flow {
     val spark = batch.sparkSession
     val sinkPath = new Path(sink)
     val fs = sinkPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    // every exit invalidates Spark's cached file listing for the sink:
-    // plans resolved pre-rewrite would otherwise read renamed-away files
-    // (FAILED_READ_FILE.FILE_NOT_EXIST under concurrent readers)
-    def refreshed[A](a: A): A = {
-      try spark.catalog.refreshByPath(sink) catch { case _: Throwable => () }
-      a
-    }
     val sinkHasData = fs.exists(sinkPath) && fs.listStatus(sinkPath).nonEmpty
     if (!sinkHasData) {
       val w = batch.write.mode("overwrite")
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(sink)
-      return refreshed(())
-    }
-
-    if (partitionCols.nonEmpty) {
+      // plans resolved before the write would read a stale listing
+      try spark.catalog.refreshByPath(sink) catch { case _: Throwable => () }
+    } else if (partitionCols.nonEmpty) {
       // Rewrite only the partitions the batch touches: merged (kept rows
       // of touched partitions + the batch) is staged PARTITIONED once,
-      // then each staged partition directory is swapped into the sink by
-      // rename — one write of the dirty set (the old formulation staged
-      // unpartitioned, re-read, and rewrote: a second full write+read
-      // roundtrip of the dirty rows per refresh). The swap renames the
-      // old partition aside (dest__old) before moving the staged one in,
-      // checks every rename result, and restores the old dir on failure —
-      // a crash mid-swap leaves either the old or the new partition on
-      // disk, never neither. (Each individual rename is atomic on local
-      // FS / HDFS, but the aside→swap sequence is not: a reader racing
-      // the swap can observe the partition briefly absent.)
+      // then each staged partition dir swaps in for its sink partition —
+      // one write of the dirty set. Each swap leaves the old partition or
+      // the new one, never neither; a failure between two swaps leaves
+      // the earlier partitions new.
       val existing = spark.read.parquet(sink)
       val touched = batch.select(partitionCols.map(col): _*).distinct()
       val kept = existing
@@ -149,52 +135,14 @@ object Flow {
       // exist only as declared metadata (ALTER ADD COLUMN on an empty
       // sink — flow_aft_alter's sample_cnt); old rows take null
       val merged = kept.unionByName(batch, allowMissingColumns = true)
-      val staging = new Path(sink + "__staging")
-      merged.write.mode("overwrite")
-        .partitionBy(partitionCols: _*).parquet(staging.toString)
-      // leaf partition dirs sit partitionCols.length levels deep
-      def leaves(p: Path, depth: Int): Seq[Path] =
-        if (depth == 0) Seq(p)
-        else fs.listStatus(p).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-          .flatMap(s => leaves(s.getPath, depth - 1))
-      val stagingPrefix = staging.toUri.getPath
-      for (part <- leaves(staging, partitionCols.length)) {
-        val rel = part.toUri.getPath.stripPrefix(stagingPrefix).stripPrefix("/")
-        val dest = new Path(sinkPath, rel)
-        fs.mkdirs(dest.getParent)
-        val aside = new Path(dest.getParent, dest.getName + "__old")
-        if (fs.exists(aside)) fs.delete(aside, true)
-        val hadDest = fs.exists(dest)
-        if (hadDest && !fs.rename(dest, aside))
-          throw new java.io.IOException(
-            s"flow refresh: failed to move aside partition $dest")
-        if (!fs.rename(part, dest)) {
-          if (hadDest) fs.rename(aside, dest) // restore the old partition
-          throw new java.io.IOException(
-            s"flow refresh: failed to swap in partition $dest")
-        }
-        if (hadDest) fs.delete(aside, true)
-      }
-      fs.delete(staging, true)
-      refreshed(())
+      Catalog.replaceDir(spark, sink, partitionCols.length)(
+        merged.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(_))
     } else {
       val existing = spark.read.parquet(sink)
       val merged = existing
         .join(batch.select(keys.map(k => col(s"`$k`")): _*).distinct(), keys, "left_anti")
         .unionByName(batch, allowMissingColumns = true)
-      val staging = new Path(sink + "__staging")
-      merged.write.mode("overwrite").parquet(staging.toString)
-      val old = new Path(sink + "__old")
-      if (fs.exists(old)) fs.delete(old, true)
-      if (!fs.rename(sinkPath, old))
-        throw new java.io.IOException(s"flow refresh: failed to move aside $sink")
-      if (!fs.rename(staging, sinkPath)) {
-        fs.rename(old, sinkPath) // restore
-        throw new java.io.IOException(s"flow refresh: failed to swap in $sink")
-      }
-      fs.delete(old, true)
-      refreshed(())
+      Catalog.replaceDir(spark, sink)(merged.write.mode("overwrite").parquet(_))
     }
   }
 }

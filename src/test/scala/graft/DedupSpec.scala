@@ -223,6 +223,10 @@ class DedupSpec extends AnyFunSuite {
       Dedup.exactServeAppend(okShard, "text", "doc_id", idx).collect()
       Dedup.minhashServeAppend(okShard, "text", "doc_id", idx + "_mh")
         .collect()
+      // earlier serves' checkpoints are dead data by now: drop them, so
+      // what stays persisted below is what the throwing serves left
+      val sc = spark.sparkContext
+      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       val e1 = intercept[IllegalArgumentException](
         Dedup.exactServeAppend(badShard, "text", "doc_id", idx).collect())
       assert(e1.getMessage.contains("arrival-order contract"))
@@ -230,6 +234,8 @@ class DedupSpec extends AnyFunSuite {
         Dedup.minhashServeAppend(badShard, "text", "doc_id", idx + "_mh")
           .collect())
       assert(e2.getMessage.contains("arrival-order contract"))
+      // the minhash serve persisted its signatures before the guard ran
+      assert(sc.getPersistentRDDs.isEmpty, sc.getPersistentRDDs.values.mkString(", "))
     } finally spark.conf.unset(Dedup.CheckArrivalOrderKey)
     // guard off (default): the same out-of-order shard runs unchecked
     Dedup.exactServeAppend(badShard, "text", "doc_id", idx).collect()

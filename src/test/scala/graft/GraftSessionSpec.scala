@@ -187,4 +187,87 @@ class GraftSessionSpec extends AnyFunSuite {
       g.sql("DECLARE c2 CURSOR FOR INSERT INTO cur_t VALUES (6000, 6.0)"))
     g.sql("DROP TABLE cur_t")
   }
+
+  // ---- rewrite statements: each replaces the table's (or sink's) dir ----
+
+  private def rows(q: String): Seq[String] =
+    g.sql(q).collect().map(_.toSeq.mkString("|")).toSeq
+
+  test("DELETE with an integer time-index literal removes the matching rows") {
+    g.sql("CREATE TABLE del_t (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, v DOUBLE)")
+    g.sql("INSERT INTO del_t VALUES (1000, 'a', 1.0), (2000, 'a', 2.0), (3000, 'b', 3.0)")
+    // 2000 is epoch milliseconds at TIMESTAMP(3): rows at 2 s and 3 s match
+    assert(rows("DELETE FROM del_t WHERE ts >= 2000") == Seq("deleted 2 rows from del_t"))
+    assert(rows("SELECT unix_millis(ts), host, v FROM del_t ORDER BY ts") == Seq("1000|a|1.0"))
+    assert(rows("DELETE FROM del_t WHERE ts = 1000 AND host = 'b'") ==
+      Seq("deleted 0 rows from del_t"))
+    g.sql("INSERT INTO del_t VALUES (2000, 'a', 2.5)")
+    assert(rows("SELECT unix_millis(ts), host, v FROM del_t ORDER BY ts") ==
+      Seq("1000|a|1.0", "2000|a|2.5"))
+  }
+
+  test("TRUNCATE empties the table, which then takes new rows") {
+    g.sql("CREATE TABLE trunc_t (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, v DOUBLE)")
+    g.sql("INSERT INTO trunc_t VALUES (1000, 'a', 1.0), (2000, 'b', 2.0)")
+    assert(rows("TRUNCATE TABLE trunc_t") == Seq("table trunc_t truncated"))
+    assert(rows("SELECT count(*) FROM trunc_t") == Seq("0"))
+    g.sql("INSERT INTO trunc_t VALUES (3000, 'c', 3.0)")
+    assert(rows("SELECT unix_millis(ts), host, v FROM trunc_t") == Seq("3000|c|3.0"))
+  }
+
+  test("ADMIN compact_table on a duration-TTL table drops expired rows and merges versions") {
+    g.sql("CREATE TABLE ttl_t (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, v DOUBLE) " +
+      "WITH (ttl = '1h')")
+    val now = System.currentTimeMillis()
+    g.sql(s"INSERT INTO ttl_t VALUES (1000, 'old', 1.0), ($now, 'new', 2.0)")
+    g.sql(s"INSERT INTO ttl_t VALUES ($now, 'new', 3.0)")
+    // a duration TTL defers expiry to compaction: the old row still reads
+    assert(rows("SELECT host, v FROM ttl_t ORDER BY host") == Seq("new|3.0", "old|1.0"))
+    g.sql("ADMIN compact_table('ttl_t')").collect()
+    assert(rows("SELECT host, v FROM ttl_t ORDER BY host") == Seq("new|3.0"))
+    // on disk: the expired row and the overwritten version are gone
+    assert(g.catalog.raw("ttl_t").select("host", "v").collect()
+      .map(_.toSeq.mkString("|")).toSeq == Seq("new|3.0"))
+  }
+
+  test("a keyless (global-aggregate) flow replaces its sink on every refresh") {
+    g.sql("CREATE TABLE gsrc (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, v DOUBLE)")
+    g.sql("CREATE FLOW gtotal SINK TO gtotal_sink AS SELECT count(*) AS n, sum(v) AS total FROM gsrc")
+    g.sql("INSERT INTO gsrc VALUES (1000, 'a', 1.0), (2000, 'b', 2.0)")
+    g.sql("ADMIN flush_flow('gtotal')")
+    assert(rows("SELECT n, total FROM gtotal_sink") == Seq("2|3.0"))
+    g.sql("INSERT INTO gsrc VALUES (3000, 'c', 4.0), (1000, 'a', 10.0)")
+    g.sql("ADMIN flush_flow('gtotal')")
+    // (1000, a) was overwritten: 3 rows, 10 + 2 + 4
+    assert(rows("SELECT n, total FROM gtotal_sink") == Seq("3|16.0"))
+    // replaced, not appended: the sink holds the last refresh's file only
+    assert(graft.model.Catalog.listing(g.spark, g.catalog.spec("gtotal_sink").path)
+      .get.files.size == 1)
+  }
+
+  test("re-ADD of a dropped column reads null for the old rows") {
+    g.sql("CREATE TABLE readd_t (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, " +
+      "v DOUBLE, note STRING)")
+    g.sql("INSERT INTO readd_t VALUES (1000, 'a', 1.0, 'old')")
+    g.sql("ALTER TABLE readd_t DROP COLUMN note")
+    g.sql("ALTER TABLE readd_t ADD COLUMN note STRING")
+    assert(rows("SELECT host, v, note FROM readd_t") == Seq("a|1.0|null"))
+    g.sql("INSERT INTO readd_t VALUES (2000, 'b', 2.0, 'new')")
+    assert(rows("SELECT host, v, note FROM readd_t ORDER BY ts") ==
+      Seq("a|1.0|null", "b|2.0|new"))
+  }
+
+  test("restart() keeps a skip_wal table's flushed rows and drops the rest") {
+    g.sql("CREATE TABLE wal_t (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, v DOUBLE) " +
+      "WITH ('skip_wal' = 'true')")
+    g.sql("INSERT INTO wal_t VALUES (1000, 'a', 1.0)")
+    g.sql("ADMIN flush_table('wal_t')").collect()
+    g.sql("INSERT INTO wal_t VALUES (2000, 'b', 2.0), (1000, 'a', 5.0)")
+    g.sql("INSERT INTO trunc_t VALUES (4000, 'd', 4.0)")
+    g.restart()
+    assert(rows("SELECT unix_millis(ts), host, v FROM wal_t") == Seq("1000|a|1.0"))
+    // a table without skip_wal keeps everything
+    assert(rows("SELECT unix_millis(ts), host FROM trunc_t ORDER BY ts") ==
+      Seq("3000|c", "4000|d"))
+  }
 }
