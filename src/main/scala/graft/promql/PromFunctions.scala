@@ -1,16 +1,16 @@
 package graft.promql
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** PromQL range-vector functions (SURVEY.md §2.6) — reference
   * src/promql/src/functions/ (rate/increase/delta with Prometheus'
   * extrapolation, idelta/irate, changes, resets, deriv, predict_linear,
-  * *_over_time). Each is a UDF over the collected window
-  * `Array[(tsMs, value)]` produced by [[PromQL.rangeVector]], matching
-  * the reference's RangeManipulate + per-window evaluation split.
-  * The algorithms are the public Prometheus semantics.
+  * *_over_time). Each kernel maps one window's samples
+  * `Seq[(tsMs, value)]`, sorted by time, to a value; [[windowEval]]
+  * picks the kernel the PromQL fold runs on every step's window,
+  * matching the reference's RangeManipulate + per-window evaluation
+  * split. The algorithms are the public Prometheus semantics.
   */
 object PromFunctions {
 
@@ -59,17 +59,6 @@ object PromFunctions {
     Some(resultValue * factor)
   }
 
-  private def mk(f: (Seq[Sample], Long, Long) => Option[Double]): UserDefinedFunction =
-    udf((samples: Seq[(Long, Double)], startMs: Long, endMs: Long) =>
-      f(samples, startMs, endMs).map(java.lang.Double.valueOf).orNull)
-
-  lazy val rateUdf: UserDefinedFunction =
-    mk((s, a, b) => extrapolatedRate(s, a, b, isCounter = true, isRate = true))
-  lazy val increaseUdf: UserDefinedFunction =
-    mk((s, a, b) => extrapolatedRate(s, a, b, isCounter = true, isRate = false))
-  lazy val deltaUdf: UserDefinedFunction =
-    mk((s, a, b) => extrapolatedRate(s, a, b, isCounter = false, isRate = false))
-
   /** irate/idelta: instantaneous rate from the last two samples. */
   def instantDiff(samples: Seq[Sample], isCounter: Boolean, perSecond: Boolean): Option[Double] = {
     if (samples == null || samples.size < 2) return None
@@ -81,25 +70,12 @@ object PromFunctions {
     if (dt <= 0) None else Some(if (perSecond) dv / dt else dv)
   }
 
-  lazy val irateUdf: UserDefinedFunction = udf((s: Seq[(Long, Double)]) =>
-    instantDiff(s, isCounter = true, perSecond = true).map(java.lang.Double.valueOf).orNull)
-  lazy val idextaUdf: UserDefinedFunction = udf((s: Seq[(Long, Double)]) =>
-    instantDiff(s, isCounter = false, perSecond = false).map(java.lang.Double.valueOf).orNull)
-
   def countChanges(s: Seq[Sample]): Double =
     s.sliding(2).count(p => p.size == 2 && p(1)._2 != p(0)._2 &&
       !(p(1)._2.isNaN && p(0)._2.isNaN)).toDouble
 
   def countResets(s: Seq[Sample]): Double =
     s.sliding(2).count(p => p.size == 2 && p(1)._2 < p(0)._2).toDouble
-
-  lazy val changesUdf: UserDefinedFunction = udf((s: Seq[(Long, Double)]) =>
-    if (s == null || s.isEmpty) null
-    else java.lang.Double.valueOf(countChanges(s)))
-
-  lazy val resetsUdf: UserDefinedFunction = udf((s: Seq[(Long, Double)]) =>
-    if (s == null || s.isEmpty) null
-    else java.lang.Double.valueOf(countResets(s)))
 
   /** Least-squares slope/intercept vs the range end (Prometheus deriv /
     * predict_linear). Intercept is at the evaluation timestamp. */
@@ -118,17 +94,8 @@ object PromFunctions {
     Some((slope, intercept))
   }
 
-  lazy val derivUdf: UserDefinedFunction = udf((s: Seq[(Long, Double)], endMs: Long) =>
-    linearRegression(s, endMs).map(r => java.lang.Double.valueOf(r._1)).orNull)
-
-  lazy val predictLinearUdf: UserDefinedFunction =
-    udf((s: Seq[(Long, Double)], endMs: Long, aheadSeconds: Double) =>
-      linearRegression(s, endMs)
-        .map { case (m, b) => java.lang.Double.valueOf(b + m * aheadSeconds) }.orNull)
-
   // ---- *_over_time ----------------------------------------------------
-  /** Raw value-sequence reduction for each `*_over_time` fn — shared by
-    * the grid-explode UDFs and the fold path's in-partition evaluation. */
+  /** Raw value-sequence reduction for each `*_over_time` fn. */
   def overTimeFn(name: String): Seq[Double] => Double = name match {
     case "avg_over_time" => v => v.sum / v.size
     // Prometheus funcMin/MaxOverTime: NaN loses to any real value (an
@@ -144,16 +111,6 @@ object PromFunctions {
     case other => throw new IllegalArgumentException(s"unknown over-time fn: $other")
   }
 
-  private def overTime(f: Seq[Double] => Double): UserDefinedFunction =
-    udf((s: Seq[(Long, Double)]) =>
-      if (s == null || s.isEmpty) null else java.lang.Double.valueOf(f(s.map(_._2))))
-
-  lazy val avgOverTime: UserDefinedFunction = overTime(overTimeFn("avg_over_time"))
-  lazy val minOverTime: UserDefinedFunction = overTime(overTimeFn("min_over_time"))
-  lazy val maxOverTime: UserDefinedFunction = overTime(overTimeFn("max_over_time"))
-  lazy val sumOverTime: UserDefinedFunction = overTime(overTimeFn("sum_over_time"))
-  lazy val countOverTime: UserDefinedFunction = overTime(overTimeFn("count_over_time"))
-  lazy val lastOverTime: UserDefinedFunction = overTime(overTimeFn("last_over_time"))
   /** Welford's incremental variance — the exact algorithm Prometheus
     * uses (funcStdvarOverTime), so equal samples give exactly 0. */
   def welfordVar(v: Seq[Double]): Double = {
@@ -166,9 +123,6 @@ object PromFunctions {
     }
     aux / count
   }
-  lazy val stddevOverTime: UserDefinedFunction = overTime(v => math.sqrt(welfordVar(v)))
-  lazy val stdvarOverTime: UserDefinedFunction = overTime(welfordVar)
-  lazy val presentOverTime: UserDefinedFunction = overTime(_ => 1.0)
 
   /** Prometheus double exponential smoothing (holt_winters /
     * double_exponential_smoothing): level smoothed by sf, trend by tf;
@@ -189,10 +143,6 @@ object PromFunctions {
     Some(s)
   }
 
-  lazy val holtWintersUdf: UserDefinedFunction =
-    udf((s: Seq[(Long, Double)], sf: Double, tf: Double) =>
-      doubleExponentialSmoothing(s, sf, tf).map(java.lang.Double.valueOf).orNull)
-
   /** Prometheus quantile: linear interpolation over the sorted values. */
   def promQuantile(q: Double, values: Seq[Double]): Double = {
     if (values.isEmpty) return Double.NaN
@@ -205,10 +155,10 @@ object PromFunctions {
     lower + (upper - lower) * (rank - math.floor(rank))
   }
 
-  lazy val quantileOverTime: UserDefinedFunction =
-    udf((q: Double, s: Seq[(Long, Double)]) =>
-      if (s == null || s.isEmpty) null
-      else java.lang.Double.valueOf(promQuantile(q, s.map(_._2))))
+  /** PromQL `quantile(q, v)` aggregate over one group's collected
+    * non-null values; an empty group gives null. */
+  lazy val quantileUdf: UserDefinedFunction = udf((q: Double, v: Seq[Double]) =>
+    if (v.isEmpty) null else java.lang.Double.valueOf(promQuantile(q, v)))
 
   /** histogram_quantile bucket interpolation (public Prometheus
     * algorithm) over (le, count) pairs of one (labels, ts) group —
@@ -249,11 +199,11 @@ object PromFunctions {
     udf((q: Double, b: Seq[(Double, Double)]) => histogramQuantile(q, b))
 
   /** One-window evaluator `(samples, windowStartMs, windowEndMs) =>
-    * value` for every range-vector function — the fold path
-    * ([[PromQL]] foldWindowsAtGrid) computes results in-partition from
-    * the sliding deque, skipping `__samples` array materialization and
-    * UDF (de)serialization entirely. Must match the UDF battery above
-    * exactly; the PromQLSpec fold-vs-explode test pins the parity. */
+    * value` for every range-vector function, None for no value. The
+    * PromQL fold ([[PromQL.rangeFn]]) calls it in-partition on each
+    * step's window of non-null samples, so no `__samples` array is
+    * built or passed through a UDF. PromQLSpec pins the fold against a
+    * plain-Scala reference evaluator that calls this same dispatch. */
   def windowEval(name: String, args: Seq[Double])
       : (Seq[Sample], Long, Long) => Option[Double] = name match {
     case "rate" => (s, a, b) => extrapolatedRate(s, a, b, isCounter = true, isRate = true)
@@ -276,18 +226,5 @@ object PromFunctions {
     case overName =>
       val f = overTimeFn(overName)
       (s, _, _) => if (s.isEmpty) None else Some(f(s.map(_._2)))
-  }
-
-  def overTimeUdf(name: String): UserDefinedFunction = name match {
-    case "avg_over_time" => avgOverTime
-    case "min_over_time" => minOverTime
-    case "max_over_time" => maxOverTime
-    case "sum_over_time" => sumOverTime
-    case "count_over_time" => countOverTime
-    case "last_over_time" => lastOverTime
-    case "stddev_over_time" => stddevOverTime
-    case "stdvar_over_time" => stdvarOverTime
-    case "present_over_time" => presentOverTime
-    case other => throw new IllegalArgumentException(s"unknown over-time fn: $other")
   }
 }

@@ -8,20 +8,22 @@ import org.apache.spark.sql.functions._
   * reference's PromPlanner (query/src/promql/planner.rs) and its
   * extension nodes:
   *
-  *  - SeriesNormalize  -> offset shift + NaN staleness filter
-  *  - InstantManipulate -> grid explode + max_by(value, ts) per step
-  *    (latest sample within lookback at each step)
-  *  - RangeManipulate  -> grid explode + sort_array(collect_list)
-  *  - SeriesDivide     -> implicit in groupBy(labels)
+  *  - SeriesNormalize  -> offset shift (staleness markers never reach
+  *    parquet, so no sample is filtered)
+  *  - InstantManipulate -> [[foldWindowsAtGrid]]: the latest sample
+  *    within the lookback at each step
+  *  - RangeManipulate  -> [[foldWindowsAtGrid]] with the range function
+  *    evaluated on each step's window
+  *  - SeriesDivide     -> the fold's shuffle on the series labels
   *  - EmptyMetric      -> sequence() grid for literal expressions
   *  - UnionDistinctOn  -> `or` via left ∪ (right anti left)
   *  - HistogramFold    -> le-bucket collect + interpolation UDF
   *
-  * Scale: the grid explode fans each sample out to ≤ lookback/step (or
-  * range/step) grid cells, then partial aggregation combines map-side;
-  * the shuffle carries #series × #steps rows. Vector-vector binary ops
-  * are equi-joins on (ts, labels) — Catalyst picks hash joins, and AQE
-  * handles skew.
+  * Scale: a selector shuffles each sample once (twice when its window
+  * crosses a time-slice boundary) and emits one row per (series, step)
+  * with a non-empty window, at every window/step ratio. Vector-vector
+  * binary ops are equi-joins on (ts, labels) — Catalyst picks hash
+  * joins, and AQE handles skew.
   */
 object PromQL {
 
@@ -46,41 +48,29 @@ object PromQL {
       df.select((col("__ts") +: labels.sorted.map(lcol)) :+ col("__val"): _*)
   }
 
-  /** At or above this window/step ratio, range/instant evaluation uses
-    * the deque fold ([[foldWindowsAtGrid]]) instead of the grid explode.
-    * PromqlScaleProbe measured the fold faster at EVERY ratio — 2× wall
-    * and 3-6× less shuffle at ratios 1-3 on sf0.1, growing to 15.7×
-    * wall and 77× shuffle at ratio 240 on 10× events — so the fold is
-    * the default path (threshold 1); gridExplode remains for ratio-0
-    * windows (range < step, where fan-out is sub-1 and the explode is a
-    * plain codegen'd filter+agg) and as the reference implementation
-    * the PromQLSpec battery pins the fold against. The reference's
-    * RangeManipulate (promql/src/extension_plan/range_manipulate.rs:64)
-    * likewise folds windows over one sorted per-series stream. */
-  private[graft] var GridFanoutMax = 1L
-
-  /** RangeManipulate without fan-out — the reference's formulation
-    * (range_manipulate.rs:64): one shuffle on the series labels, each
+  /** The one window evaluator behind every selector: InstantManipulate
+    * and RangeManipulate as the reference formulates them
+    * (range_manipulate.rs:64). One shuffle on (series, time slice), each
     * partition sorted by (series, ts, v) and folded in a single linear
-    * pass with a sliding deque. CPU is O(samples + Σ|window|) — the
-    * output size — where the rangeBetween-window formulation tried
-    * first recomputed each frame per ROW (quadratic on dense series:
-    * 5.6× slower wall at 10× events despite 42× less shuffle).
+    * pass with a sliding deque over the left-exclusive window
+    * (t - windowMs, t] of each grid anchor t. CPU is
+    * O(samples + Σ|window|) — the output size — at every window/step
+    * ratio; the rangeBetween-window formulation tried first recomputed
+    * each frame per ROW (quadratic on dense series: 5.6× slower wall at
+    * 10× events despite 42× less shuffle).
     *
-    * `latestOnly=false`: per-anchor sorted sample arrays (labels...,
-    * __ts, __samples array<struct<_1 ts, _2 v>>), anchors with empty
-    * windows dropped — exactly [[gridExplode]]+collect_list's output.
-    * `latestOnly=true`: per-anchor latest sample (labels..., __ts,
+    * `evalF = None`: per-anchor latest sample (labels..., __ts,
     * __latest struct<_1 ts, _2 v>) for the instant/lookback path.
-    * `evalF=Some(f)`: the range function is evaluated IN the fold —
+    * `evalF = Some(f)`: the range function is evaluated IN the fold —
     * f(window samples, winStartMs, winEndMs) emits `__val` directly
-    * (None anchors dropped, matching the UDF path's isNotNull filter),
-    * so no per-anchor sample array is ever built or serialized. */
+    * (None anchors dropped), so no per-anchor sample array is ever
+    * built or serialized. Anchors with empty windows emit nothing. */
   private def foldWindowsAtGrid(base: DataFrame, labels: Seq[String],
-      p: EvalParams, windowMs: Long, latestOnly: Boolean,
-      evalF: Option[(Seq[PromFunctions.Sample], Long, Long) => Option[Double]] = None)
+      p: EvalParams, windowMs: Long,
+      evalF: Option[(Seq[PromFunctions.Sample], Long, Long) => Option[Double]])
       : DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     // samples outside (start-window, end] can contribute to no anchor
     val pruned = base.filter(
       col("__sample_ts") > p.startMs - windowMs && col("__sample_ts") <= p.endMs)
@@ -110,24 +100,13 @@ object PromQL {
         .otherwise(array().cast("array<long>"))))
       .repartition(col("__k"), col("__c"))
       .sortWithinPartitions(col("__k"), col("__c"), col("__t"), col("__vv"))
-    val sampleT = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("_1",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("_2",
-        org.apache.spark.sql.types.DoubleType, nullable = true)))
-    val outT = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__k",
-        keyed.schema("__k").dataType, nullable = labels.nonEmpty),
-      org.apache.spark.sql.types.StructField("__ts",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      if (evalF.isDefined)
-        org.apache.spark.sql.types.StructField("__val",
-          org.apache.spark.sql.types.DoubleType, nullable = false)
-      else if (latestOnly)
-        org.apache.spark.sql.types.StructField("__latest", sampleT)
-      else
-        org.apache.spark.sql.types.StructField("__samples",
-          org.apache.spark.sql.types.ArrayType(sampleT, containsNull = false))))
+    val outT = StructType(Seq(
+      StructField("__k", keyed.schema("__k").dataType, nullable = labels.nonEmpty),
+      StructField("__ts", LongType, nullable = false),
+      if (evalF.isDefined) StructField("__val", DoubleType, nullable = false)
+      else StructField("__latest", StructType(Seq(
+        StructField("_1", LongType, nullable = false),
+        StructField("_2", DoubleType, nullable = true))))))
     val (startMs, stepMs, endMs) = (p.startMs, p.stepMs, p.endMs)
     val nSteps = (endMs - startMs) / stepMs
     val folded = keyed.mapPartitions { it =>
@@ -162,13 +141,7 @@ object PromQL {
                   f(scala.collection.immutable.ArraySeq.unsafeWrapArray(
                       if (i == s.length) s else java.util.Arrays.copyOf(s, i)),
                     t - windowMs, t).foreach(v => out += Row(curKey, t, v))
-                case None if latestOnly => out += Row(curKey, t, deque.peekLast)
-                case None =>
-                  val arr = new Array[Row](deque.size)
-                  var i = 0
-                  val di = deque.iterator()
-                  while (di.hasNext) { arr(i) = di.next(); i += 1 }
-                  out += Row(curKey, t, arr.toSeq)
+                case None => out += Row(curKey, t, deque.peekLast)
               }
             }
             nextK += 1
@@ -210,140 +183,52 @@ object PromQL {
         def next(): Row = { if (out.isEmpty) advance(); out.dequeue() }
       }
     }(Encoders.row(outT))
-    val dataCol =
-      if (evalF.isDefined) col("__val")
-      else if (latestOnly) col("__latest") else col("__samples")
+    val dataCol = if (evalF.isDefined) col("__val") else col("__latest")
     if (labels.isEmpty) folded.select(col("__ts"), dataCol)
     else folded.select((labels.map(l => col(s"__k.`$l`").as(l)) :+
       col("__ts")) :+ dataCol: _*)
   }
 
-  private def gridExplode(
-      df: DataFrame, tsCol: Column, p: EvalParams, windowMs: Long): DataFrame = {
-    // Parallelize narrow few-partition sources (a single parquet file =
-    // one task) before the fan-out; the explode multiplies work, so the
-    // cheap round-robin shuffle of the projected input pays for itself.
-    // Unconditional: probing df.rdd.getNumPartitions would materialize
-    // RDD lineage on the driver per selector, and AQE coalesces the
-    // shuffle back down when the input is already wide.
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val spread = df.repartition(par)
-    // slot indices k with t = start + k*step, ts <= t < ts + window
-    val kLo = ceil((tsCol - p.startMs).cast("double") / p.stepMs).cast("long")
-    val kHi = floor((tsCol + windowMs - 1 - p.startMs).cast("double") / p.stepMs).cast("long")
-    val nSteps = (p.endMs - p.startMs) / p.stepMs
-    val lo = greatest(kLo, lit(0L))
-    val hi = least(kHi, lit(nSteps))
-    // rows whose window misses the grid entirely have lo > hi — guard
-    // them out, or sequence() runs DESCENDING and explodes a row into
-    // |lo-hi| elements (billions for far-out-of-range timestamps)
-    spread.withColumn("__k",
-        explode(when(lo <= hi, sequence(lo, hi))
-          .otherwise(array().cast("array<long>"))))
-      .withColumn("__ts", col("__k") * p.stepMs + p.startMs)
-      .filter(col("__ts") >= tsCol && col("__ts") < tsCol + windowMs)
-      .drop("__k")
-  }
+  /** SeriesNormalize: labels..., `__sample_ts` (offset-shifted ms),
+    * `__v`. Ordinary NaN values are REAL samples, and so are NULL-valued
+    * rows: promql/scalar.result pins NaN keeping cpu0 present in count()
+    * AND the NULL sample keeping cpu2 present as a zero-count group —
+    * null rides through as a null-valued sample and the aggregate's SQL
+    * null semantics do the rest. */
+  private def samples(m: Metric, offsetMs: Long): DataFrame =
+    m.df.select((m.labels.map(lcol) :+ (col(m.tsMs) + offsetMs).as("__sample_ts")) :+
+      lcol(m.value).as("__v"): _*)
+
+  /** The latest sample within the lookback at each step, `value` read off
+    * its `__latest` (ts, v) struct. The lookback window is LEFT-EXCLUSIVE
+    * (t - lookback, t]: a sample exactly lookback old is stale
+    * (promql/subquery.result, t=359 case). */
+  private def latestAtGrid(m: Metric, p: EvalParams, offsetMs: Long,
+      value: Column): InstantVector = InstantVector(
+    foldWindowsAtGrid(samples(m, offsetMs), m.labels, p, p.lookbackMs, evalF = None)
+      .withColumn("__val", value).drop("__latest"),
+    m.labels)
 
   /** Selector -> instant vector (SeriesNormalize + InstantManipulate). */
-  def instant(m: Metric, p: EvalParams, offsetMs: Long = 0L): InstantVector = {
-    val ts = (col(m.tsMs) + offsetMs).as("__sample_ts")
-    // ordinary NaN values are REAL samples, and so are NULL-valued rows:
-    // promql/scalar.result pins NaN keeping cpu0 present in count() AND
-    // the NULL sample keeping cpu2 present as a zero-count group — null
-    // rides through as a null-valued sample and the aggregate's SQL null
-    // semantics do the rest. Only the reference's staleness marker —
-    // which never reaches parquet — is filtered.
-    val base = m.df
-      .select((m.labels.map(lcol) :+ ts) :+ lcol(m.value).as("__v"): _*)
-    // lookback window is LEFT-EXCLUSIVE (t - lookback, t]: a sample
-    // exactly lookback old is stale (promql/subquery.result, t=359 case)
-    val grouped =
-      if (p.lookbackMs / p.stepMs >= GridFanoutMax)
-        foldWindowsAtGrid(base, m.labels, p, p.lookbackMs, latestOnly = true)
-          .withColumn("__val", col("__latest._2")).drop("__latest")
-      else
-        gridExplode(base, col("__sample_ts"), p, p.lookbackMs)
-          .groupBy((m.labels.map(lcol) :+ col("__ts")): _*)
-          .agg(max_by(col("__v"), col("__sample_ts")).as("__val"))
-    InstantVector(grouped, m.labels)
-  }
+  def instant(m: Metric, p: EvalParams, offsetMs: Long = 0L): InstantVector =
+    latestAtGrid(m, p, offsetMs, col("__latest._2"))
 
   /** timestamp(selector): instant vector whose value is the selected
     * sample's own timestamp in SECONDS (prometheus timestamp();
     * promql/timestamp_fn.result pins pre-alignment sample times). */
-  def timestampInstant(m: Metric, p: EvalParams, offsetMs: Long = 0L): InstantVector = {
-    val ts = (col(m.tsMs) + offsetMs).as("__sample_ts")
-    val base = m.df
-      .select((m.labels.map(lcol) :+ ts) :+ lcol(m.value).as("__v"): _*)
-    val grouped =
-      if (p.lookbackMs / p.stepMs >= GridFanoutMax)
-        foldWindowsAtGrid(base, m.labels, p, p.lookbackMs, latestOnly = true)
-          .withColumn("__val", col("__latest._1").cast("double") / 1000.0)
-          .drop("__latest")
-      else
-        gridExplode(base, col("__sample_ts"), p, p.lookbackMs)
-          .groupBy((m.labels.map(lcol) :+ col("__ts")): _*)
-          .agg((max(col("__sample_ts")).cast("double") / 1000.0).as("__val"))
-    InstantVector(grouped, m.labels)
-  }
+  def timestampInstant(m: Metric, p: EvalParams, offsetMs: Long = 0L): InstantVector =
+    latestAtGrid(m, p, offsetMs, col("__latest._1").cast("double") / 1000.0)
 
-  /** Selector[range] -> per-step collected windows (RangeManipulate):
-    * columns __ts, labels..., __samples array<struct<ts,v>> sorted. */
-  def rangeVector(m: Metric, p: EvalParams, rangeMs: Long, offsetMs: Long = 0L): DataFrame = {
-    val ts = (col(m.tsMs) + offsetMs).as("__sample_ts")
-    val base = m.df
-      .select((m.labels.map(lcol) :+ ts) :+ lcol(m.value).as("__v"): _*)
-    if (rangeMs / p.stepMs >= GridFanoutMax)
-      foldWindowsAtGrid(base, m.labels, p, rangeMs, latestOnly = false)
-    else
-      gridExplode(base, col("__sample_ts"), p, rangeMs)
-        .groupBy((m.labels.map(lcol) :+ col("__ts")): _*)
-        .agg(sort_array(collect_list(struct(col("__sample_ts").as("_1"),
-          col("__v").as("_2")))).as("__samples"))
-  }
-
-  /** Apply a range-vector function over the collected windows.
-    * On the fold path (range/step ≥ [[GridFanoutMax]]) the function is
-    * evaluated inside the fold — no `__samples` array is materialized
-    * or pushed through a UDF; the explode path keeps the codegen'd
-    * collect_list + UDF formulation. `fnArgs`: predict_linear's
-    * look-ahead, quantile_over_time's q, holt_winters' (sf, tf). */
+  /** Range-vector function over each step's window (RangeManipulate):
+    * [[PromFunctions.windowEval]] runs inside the fold, so no per-step
+    * sample array is built. `fnArgs`: predict_linear's look-ahead,
+    * quantile_over_time's q, holt_winters' (sf, tf). */
   def rangeFn(name: String, m: Metric, p: EvalParams, rangeMs: Long,
-      offsetMs: Long = 0L, fnArgs: Seq[Double] = Nil): InstantVector = {
-    if (rangeMs / p.stepMs >= GridFanoutMax) {
-      val ts = (col(m.tsMs) + offsetMs).as("__sample_ts")
-      val base = m.df
-        .select((m.labels.map(lcol) :+ ts) :+ lcol(m.value).as("__v"): _*)
-      return InstantVector(
-        foldWindowsAtGrid(base, m.labels, p, rangeMs, latestOnly = false,
-          evalF = Some(PromFunctions.windowEval(name, fnArgs))),
-        m.labels)
-    }
-    val rv = rangeVector(m, p, rangeMs, offsetMs)
-    val winStart = col("__ts") - rangeMs
-    val winEnd = col("__ts")
-    val v = name match {
-      case "rate" => PromFunctions.rateUdf(col("__samples"), winStart, winEnd)
-      case "increase" => PromFunctions.increaseUdf(col("__samples"), winStart, winEnd)
-      case "delta" => PromFunctions.deltaUdf(col("__samples"), winStart, winEnd)
-      case "irate" => PromFunctions.irateUdf(col("__samples"))
-      case "idelta" => PromFunctions.idextaUdf(col("__samples"))
-      case "changes" => PromFunctions.changesUdf(col("__samples"))
-      case "resets" => PromFunctions.resetsUdf(col("__samples"))
-      case "deriv" => PromFunctions.derivUdf(col("__samples"), winEnd)
-      case "predict_linear" =>
-        PromFunctions.predictLinearUdf(col("__samples"), winEnd, lit(fnArgs.head))
-      case "quantile_over_time" =>
-        PromFunctions.quantileOverTime(lit(fnArgs.head), col("__samples"))
-      case "holt_winters" | "double_exponential_smoothing" =>
-        PromFunctions.holtWintersUdf(col("__samples"), lit(fnArgs(0)), lit(fnArgs(1)))
-      case other => PromFunctions.overTimeUdf(other)(col("__samples"))
-    }
+      offsetMs: Long = 0L, fnArgs: Seq[Double] = Nil): InstantVector =
     InstantVector(
-      rv.withColumn("__val", v).filter(col("__val").isNotNull).drop("__samples"),
+      foldWindowsAtGrid(samples(m, offsetMs), m.labels, p, rangeMs,
+        evalF = Some(PromFunctions.windowEval(name, fnArgs))),
       m.labels)
-  }
 
   /** absent(): 1 at grid steps where the selector returns nothing; the
     * output series carries labels from the selector's `=` matchers
@@ -406,9 +291,7 @@ object PromQL {
           case "group" => lit(1.0)
           case "stddev" => stddev_pop(x)
           case "stdvar" => var_pop(x)
-          case "quantile" =>
-            PromFunctions.quantileOverTime(lit(param.get),
-              sort_array(collect_list(struct(lit(0L).as("_1"), x.as("_2")))))
+          case "quantile" => PromFunctions.quantileUdf(lit(param.get), collect_list(x))
           case other => throw new IllegalArgumentException(s"unknown aggr: $other")
         }
         InstantVector(iv.df.groupBy(keys: _*).agg(agg.as("__val")), keep)

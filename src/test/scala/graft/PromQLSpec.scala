@@ -23,8 +23,9 @@ class PromQLSpec extends AnyFunSuite {
       "j", "i", Seq("k")))
 
   private def eval(q: String, startS: Long = 0, endS: Long = 10, stepS: Long = 5,
-      catalog: Map[String, Metric] = basicCatalog): Seq[(Long, String, Double)] = {
-    val p = EvalParams(startS * 1000, endS * 1000, stepS * 1000)
+      catalog: Map[String, Metric] = basicCatalog,
+      lookbackS: Long = 300): Seq[(Long, String, Double)] = {
+    val p = EvalParams(startS * 1000, endS * 1000, stepS * 1000, lookbackS * 1000)
     val out = new PromEval(spark, catalog, p).evalQuery(q)
     out.collect().toSeq.map { r =>
       val ts = r.getLong(r.fieldIndex("__ts"))
@@ -32,6 +33,35 @@ class PromQLSpec extends AnyFunSuite {
       (ts, k, r.getDouble(r.fieldIndex("__val")))
     }.sortBy(x => (x._2, x._1))
   }
+
+  private type WindowFn = (Seq[PromFunctions.Sample], Long, Long) => Option[Double]
+
+  /** Reference window evaluator over plain Scala collections,
+    * independent of the fold's chunk and deque arithmetic: for each
+    * series and grid anchor t, the series' samples (timestamps shifted
+    * by `offsetS`) in (t - w, t], sorted by (ts, value), mapped by
+    * `f(samples, t - w, t)`; an empty window or a None drops the
+    * anchor. Rows are mkDf's (value, ts ms, series); the result is
+    * sorted like [[eval]]'s. */
+  private def reference(rows: Seq[(Double, Long, String)], startS: Long, endS: Long,
+      stepS: Long, wS: Long, f: WindowFn, offsetS: Long = 0): Seq[(Long, String, Double)] = {
+    val w = wS * 1000
+    val byTsThenValue = Ordering.Tuple2(Ordering.Long, Ordering.Double.TotalOrdering)
+    (for {
+      (k, rs) <- rows.groupBy(_._3).toSeq
+      t <- (startS * 1000) to (endS * 1000) by (stepS * 1000)
+      win = rs.map(r => (r._2 + offsetS * 1000, r._1))
+        .filter(s => s._1 > t - w && s._1 <= t).sorted(byTsThenValue)
+      if win.nonEmpty
+      v <- f(win, t - w, t)
+    } yield (t, k, v)).sortBy(x => (x._2, x._1))
+  }
+
+  /** The instant selector: the latest sample's value. */
+  private val latest: WindowFn = (s, _, _) => Some(s.last._2)
+  /** timestamp(selector): the latest sample's time in seconds. */
+  private val stamp: WindowFn = (s, _, _) => Some(s.last._1 / 1000.0)
+  private def fn(name: String, args: Double*): WindowFn = PromFunctions.windowEval(name, args)
 
   test("instant selector — tql/basic.result golden") {
     // expected: (5s,a,2),(10s,a,2),(5s,b,1),(10s,b,1); nothing at 0s
@@ -286,99 +316,159 @@ class PromQLSpec extends AnyFunSuite {
     assert(eval("clamp(test, 1.5, 1.8)")(0)._3 == 1.8)
   }
 
-  test("fold path (GridFanoutMax=1) matches grid-explode across the battery") {
-    // Forces every range/instant evaluation through foldWindowsAtGrid
-    // (the mapPartitions deque fold used when range/step >= threshold)
-    // and pins its output to the explode path's, query by query.
+  test("fold matches the reference evaluator across the battery") {
+    // Every range/instant evaluation runs through foldWindowsAtGrid; each
+    // query is pinned to the reference evaluator above, composed the way
+    // PromEval composes the operator around the selector.
     val rows = (0 to 6).map(i => (i * 10.0, i * 10000L, if (i % 2 == 0) "a" else "b"))
     val cat = Map("m" -> Metric(mkDf(rows), "j", "i", Seq("k")))
-    val cases = Seq[(String, (Long, Long, Long))](
-      ("m", (0, 60, 10)),
-      ("rate(m[30s])", (30, 60, 10)),
-      ("increase(m[30s])", (30, 60, 15)),
-      ("irate(m[30s])", (30, 60, 10)),
-      ("changes(m[40s])", (40, 60, 10)),
-      ("avg_over_time(m[25s])", (0, 60, 5)),
-      ("count_over_time(m[30s])", (0, 60, 10)),
-      ("last_over_time(m[20s])", (0, 60, 10)),
-      ("quantile_over_time(0.5, m[30s])", (30, 60, 10)),
-      ("absent_over_time(m[5s])", (0, 70, 5)),
-      ("sum by (k) (rate(m[30s]))", (30, 60, 10)),
-      ("timestamp(m)", (0, 60, 10)),
-      ("max_over_time(m[30s:10s])", (30, 60, 10)),
-      ("count_over_time(m[30s] @ 60)", (0, 60, 10)),
-      ("rate(m[30s] offset 10s)", (40, 60, 10)))
-    def run(q: String, w: (Long, Long, Long), threshold: Long) = {
-      PromQL.GridFanoutMax = threshold
-      try eval(q, w._1, w._2, w._3, cat)
-      finally PromQL.GridFanoutMax = 1L
-    }
-    for ((q, w) <- cases) {
-      val explode = run(q, w, Long.MaxValue)
-      val fold = run(q, w, 1L)
-      assert(fold == explode, s"fold != explode for $q: $fold vs $explode")
-      assert(explode.nonEmpty, s"empty battery case $q")
+    def ref(g: (Long, Long, Long), wS: Long, f: WindowFn, offsetS: Long = 0) =
+      reference(rows, g._1, g._2, g._3, wS, f, offsetS)
+    // absent_over_time: 1 at the steps where no series has a sample
+    val present = ref((0, 70, 5), 5, fn("present_over_time")).map(_._1).toSet
+    val absentRef = (0L to 70000L by 5000L).filterNot(present).map(t => (t, "", 1.0))
+    // subquery m[30s:10s]: the inner selector on the 10 s grid from 0 s
+    // (start - range, step-aligned), folded as a range vector
+    val inner = ref((0, 60, 10), 300, latest).map { case (t, k, v) => (v, t, k) }
+    val subqueryRef = reference(inner, 30, 60, 10, 30, fn("max_over_time"))
+    // @ 60 pins the window at 60 s; its value repeats at every step
+    val pinnedRef = (for {
+      (_, k, v) <- ref((60, 60, 10), 30, fn("count_over_time"))
+      t <- 0L to 60000L by 10000L
+    } yield (t, k, v)).sortBy(x => (x._2, x._1))
+    val cases = Seq[(String, (Long, Long, Long), Seq[(Long, String, Double)])](
+      ("m", (0, 60, 10), ref((0, 60, 10), 300, latest)),
+      ("rate(m[30s])", (30, 60, 10), ref((30, 60, 10), 30, fn("rate"))),
+      ("increase(m[30s])", (30, 60, 15), ref((30, 60, 15), 30, fn("increase"))),
+      ("irate(m[30s])", (30, 60, 10), ref((30, 60, 10), 30, fn("irate"))),
+      ("changes(m[40s])", (40, 60, 10), ref((40, 60, 10), 40, fn("changes"))),
+      ("avg_over_time(m[25s])", (0, 60, 5), ref((0, 60, 5), 25, fn("avg_over_time"))),
+      ("count_over_time(m[30s])", (0, 60, 10), ref((0, 60, 10), 30, fn("count_over_time"))),
+      ("last_over_time(m[20s])", (0, 60, 10), ref((0, 60, 10), 20, fn("last_over_time"))),
+      ("quantile_over_time(0.5, m[30s])", (30, 60, 10),
+        ref((30, 60, 10), 30, fn("quantile_over_time", 0.5))),
+      ("absent_over_time(m[5s])", (0, 70, 5), absentRef),
+      // k is the only label, so sum by (k) keeps each series as is
+      ("sum by (k) (rate(m[30s]))", (30, 60, 10), ref((30, 60, 10), 30, fn("rate"))),
+      ("timestamp(m)", (0, 60, 10), ref((0, 60, 10), 300, stamp)),
+      ("max_over_time(m[30s:10s])", (30, 60, 10), subqueryRef),
+      ("count_over_time(m[30s] @ 60)", (0, 60, 10), pinnedRef),
+      ("rate(m[30s] offset 10s)", (40, 60, 10), ref((40, 60, 10), 30, fn("rate"), offsetS = 10)))
+    for ((q, g, expected) <- cases) {
+      assert(expected.nonEmpty, s"empty battery case $q")
+      val got = eval(q, g._1, g._2, g._3, cat)
+      assert(got == expected, s"fold != reference for $q: $got vs $expected")
     }
   }
 
-  test("fold == explode on seeded-random series across random grids") {
-    // Property-style pin for chunk-boundary arithmetic: random sample
-    // layouts × random (start, end, step, range) grids, both paths must
-    // agree exactly. (The span-end clamp bug was exactly this class.)
+  test("fold == reference on seeded-random series across random grids") {
+    // Property-style pin for the fold's chunk-boundary arithmetic: random
+    // sample layouts × random (start, end, step, window) grids, about
+    // half of them with the window shorter than the step (ratio 0) and
+    // some with an end off the step grid. (The span-end clamp bug was
+    // exactly this class.)
     val rnd = new scala.util.Random(20260815L)
-    for (trial <- 1 to 6) {
+    for (trial <- 1 to 16) {
       val series = 1 + rnd.nextInt(3)
       val rows = (0 until 200).map { _ =>
         val k = ('a' + rnd.nextInt(series)).toChar.toString
         (rnd.nextInt(1000).toDouble, rnd.nextLong(120000L), k)
       }
       val cat = Map("m" -> Metric(mkDf(rows), "j", "i", Seq("k")))
-      val stepS = 1 + rnd.nextInt(9)
+      val ratio0 = rnd.nextBoolean()
+      val stepS = if (ratio0) 2 + rnd.nextInt(40) else 1 + rnd.nextInt(9)
       val startS = rnd.nextInt(30)
-      val endS = startS + stepS * (1 + rnd.nextInt(20))
-      val rangeS = 1 + rnd.nextInt(40)
-      val fn = Seq("count_over_time", "sum_over_time", "last_over_time",
-        "min_over_time", "rate", "delta")(rnd.nextInt(6))
-      val q = s"$fn(m[${rangeS}s])"
-      def run(threshold: Long) = {
-        PromQL.GridFanoutMax = threshold
-        try eval(q, startS, endS, stepS, cat)
-        finally PromQL.GridFanoutMax = 1L
+      val endS = startS + stepS * (1 + rnd.nextInt(20)) + rnd.nextInt(stepS)
+      val rangeS = if (ratio0) 1 + rnd.nextInt(stepS - 1) else 1 + rnd.nextInt(40)
+      val fnName = Seq("count_over_time", "sum_over_time", "last_over_time",
+        "min_over_time", "rate", "delta", "irate", "changes", "", "timestamp")(rnd.nextInt(10))
+      // the bare selector and timestamp() take the window as lookback
+      val (q, f) = fnName match {
+        case "" => ("m", latest)
+        case "timestamp" => ("timestamp(m)", stamp)
+        case name => (s"$name(m[${rangeS}s])", fn(name))
       }
-      val explode = run(Long.MaxValue)
-      val fold = run(1L)
-      assert(fold == explode,
-        s"trial $trial: $q start=$startS end=$endS step=$stepS — $fold vs $explode")
+      val got = eval(q, startS, endS, stepS, cat, lookbackS = rangeS)
+      val expected = reference(rows, startS, endS, stepS, rangeS, f)
+      assert(got == expected,
+        s"trial $trial: $q start=$startS end=$endS step=$stepS window=$rangeS — $got vs $expected")
     }
+  }
+
+  /** Ratio-0 fixture: two series on a 60 s step over [0 s, 250 s], an
+    * end off the step grid (anchors 0, 60, 120, 180, 240 s). Series a
+    * has samples exactly at t - 20 s (40, 100 s) and exactly at t (0, 60,
+    * 120, 180, 240 s), and one after the last anchor (245 s). */
+  private val ratio0Rows: Seq[(Double, Long, String)] =
+    Seq(0, 15, 40, 45, 60, 100, 110, 120, 175, 180, 240, 245).zipWithIndex
+      .map { case (s, i) => (i + 1.0, s * 1000L, "a") } ++
+    Seq(10, 59, 61, 119, 130, 200, 239).zipWithIndex
+      .map { case (s, i) => (i + 1.0, s * 1000L, "b") }
+  private lazy val ratio0Cat = Map("m" -> Metric(mkDf(ratio0Rows), "j", "i", Seq("k")))
+
+  test("window shorter than the step: rate and count_over_time at a 60 s step") {
+    for (name <- Seq("rate", "count_over_time")) {
+      val got = eval(s"$name(m[20s])", 0, 250, 60, ratio0Cat)
+      assert(got == reference(ratio0Rows, 0, 250, 60, 20, fn(name)), s"$name: $got")
+    }
+    // rate needs two samples in (t - 20 s, t]: a at 60 (45, 60 s), 120
+    // (110, 120 s) and 180 s (175, 180 s); b never has two
+    assert(eval("rate(m[20s])", 0, 250, 60, ratio0Cat).map(x => (x._1, x._2)) ==
+      Seq((60000L, "a"), (120000L, "a"), (180000L, "a")))
+  }
+
+  test("window shorter than the step: selector and timestamp() with a 20 s lookback") {
+    val sel = eval("m", 0, 250, 60, ratio0Cat, lookbackS = 20)
+    assert(sel == reference(ratio0Rows, 0, 250, 60, 20, latest))
+    assert(sel == Seq((0L, "a", 1.0), (60000L, "a", 5.0), (120000L, "a", 8.0),
+      (180000L, "a", 10.0), (240000L, "a", 11.0),
+      (60000L, "b", 2.0), (120000L, "b", 4.0), (240000L, "b", 7.0)))
+    val ts = eval("timestamp(m)", 0, 250, 60, ratio0Cat, lookbackS = 20)
+    assert(ts == reference(ratio0Rows, 0, 250, 60, 20, stamp))
+    assert(ts.map(x => (x._2, x._3)) == Seq(("a", 0.0), ("a", 60.0), ("a", 120.0),
+      ("a", 180.0), ("a", 240.0), ("b", 59.0), ("b", 119.0), ("b", 239.0)))
+  }
+
+  test("window shorter than the step: t - w excluded, t included, end off the grid") {
+    // hand-derived from the fixture: a's windows (40, 60] and (100, 120]
+    // drop the samples at 40 s and 100 s and keep those at 60 s and
+    // 120 s; the 245 s sample serves no anchor; b has nothing in (-20, 0]
+    // or (160, 180]
+    val got = eval("count_over_time(m[20s])", 0, 250, 60, ratio0Cat)
+    assert(got == Seq((0L, "a", 1.0), (60000L, "a", 2.0), (120000L, "a", 2.0),
+      (180000L, "a", 2.0), (240000L, "a", 1.0),
+      (60000L, "b", 1.0), (120000L, "b", 1.0), (240000L, "b", 1.0)))
   }
 
   test("NULL samples: presence in count() (scalar.result), valueless to range fns") {
     // promql/scalar.result pins a NULL-valued row keeping its series
     // PRESENT as a zero-count group — null rides the selector as a
-    // null-valued sample on both evaluation paths; range functions see
-    // only the non-null values (the fold must not read null as 0.0).
+    // null-valued sample; range functions see only the non-null values
+    // (the fold must not read null as 0.0).
     def mk(rows: Seq[Row]) = spark.createDataFrame(rows.asJava,
       StructType.fromDDL("i DOUBLE, j BIGINT, k STRING"))
     val cat = Map("m" -> Metric(mk(Seq(
       Row(1.0, 1000L, "a"), Row(null, 1000L, "b"),
       Row(11.0, 11000L, "a"), Row(21.0, 21000L, "a"))), "j", "i", Seq("k")))
-    def run(q: String, threshold: Long, c: Map[String, Metric] = cat) = {
-      PromQL.GridFanoutMax = threshold
-      try eval(q, 1, 21, 10, c) finally PromQL.GridFanoutMax = 1L
-    }
-    for (th <- Seq(Long.MaxValue, 1L)) {
-      val got = run("count(m) by (k)", th)
-      assert(got.contains((1000L, "b", 0.0)), s"th=$th: $got")
-      assert(got.contains((1000L, "a", 1.0)), s"th=$th: $got")
-    }
-    // fold-path range fns: the null sample contributes presence only —
-    // results equal the same series with the null row absent
+    def run(q: String, c: Map[String, Metric] = cat) = eval(q, 1, 21, 10, c)
+    val got = run("count(m) by (k)")
+    assert(got.contains((1000L, "b", 0.0)), got)
+    assert(got.contains((1000L, "a", 1.0)), got)
+    // range fns: the null sample contributes presence only — results
+    // equal the same series with the null row absent, at ratio 2 and 0
     val noNull = Map("m" -> Metric(mk(Seq(
       Row(1.0, 1000L, "a"), Row(11.0, 11000L, "a"),
       Row(21.0, 21000L, "a"))), "j", "i", Seq("k")))
-    assert(run("rate(m[20s])", 1L) == run("rate(m[20s])", 1L, noNull))
-    assert(run("count_over_time(m[20s])", 1L) ==
-      run("count_over_time(m[20s])", 1L, noNull))
+    for (q <- Seq("rate(m[20s])", "count_over_time(m[20s])", "count_over_time(m[5s])"))
+      assert(run(q) == run(q, noNull), q)
+    // the quantile aggregate skips the null value like sum() does; a
+    // group of only null values gives a null quantile
+    assert(run("quantile(0.5, m)") == run("quantile(0.5, m)", noNull))
+    val byK = new PromEval(spark, cat, EvalParams(1000, 21000, 10000))
+      .evalQuery("quantile by (k) (0.5, m)").collect()
+      .filter(r => r.getString(r.fieldIndex("k")) == "b")
+    assert(byK.nonEmpty && byK.forall(_.isNullAt(byK.head.fieldIndex("__val"))),
+      byK.mkString(", "))
   }
 
   test("scalar-scalar precedence") {
