@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField}
 
 /** GreptimeDB RANGE query (SURVEY.md §2.5) as a DataFrame expansion.
   *
@@ -22,11 +23,14 @@ import org.apache.spark.sql.functions._
   *    head/tail from the nearest two points, and is a no-op when a
   *    series has <2 non-null slots (plan.rs:113-187)
   *
-  * Scale design: the explode factor is ceil(range/align) (identical to
-  * the reference's per-row accumulator fan-out); partial aggregation
-  * combines map-side, so the shuffle carries #series × #slots rows, not
-  * #input × fanout. The fill pass re-uses one (by)-hash-partitioned sort
-  * across all window stages.
+  * Scale design: algebraic aggregates ([[RangeAgg]]) explode each row
+  * into its ceil(range/align) slots (the reference's per-row
+  * accumulator fan-out); partial aggregation combines map-side, so the
+  * shuffle carries #series × #slots rows, not #input × fanout.
+  * Collect-buffering aggregates ([[FoldAgg]]) run in the per-series
+  * [[WindowFold]] sweep, which shuffles each row at most twice; the two
+  * parts join on (by, slot). The fill pass re-uses one
+  * (by)-hash-partitioned sort across all window stages.
   */
 object RangeSelect {
 
@@ -61,37 +65,29 @@ object RangeSelect {
   }
 
   /** A collect-buffering aggregate (exact/approx percentile, WITHIN
-    * GROUP, array_agg) evaluated INSIDE a per-series sliding-window fold
-    * instead of the slot explode — the reference's `RangeSelectStream`
-    * shape (query/src/range_select/plan.rs:967: per-window accumulators
-    * updated in one pass over the sorted series). The explode path
-    * serializes every input row into ceil(range/align) aggregation
+    * GROUP, array_agg, first/last by time) evaluated inside the
+    * per-series [[WindowFold]] instead of the slot explode. The explode
+    * path serializes every input row into ceil(range/align) aggregation
     * buffers — 240× shuffle amplification at RANGE '1h' ALIGN '15s' —
     * where the fold shuffles each row at most twice (chunk-boundary
     * copy). Algebraic aggregates (min/max/sum/count/avg) should STAY on
     * the explode path: partial aggregation already combines them
     * map-side, and the codegen'd hash aggregate beats the fold there.
     *
-    * @param eval window evaluator over the non-null (ts, value) samples
-    *             of [[input]] with slot <= ts < slot + range, in
-    *             ascending (ts, value) order; None → NULL output for the
+    * @param eval window evaluator over the (ts, value) samples of
+    *             [[input]] with slot <= ts < slot + range, in ascending
+    *             (ts, value) order, null values included (see
+    *             [[RangeFolds.skipNulls]]); None → NULL output for the
     *             slot
     * @param dataType Spark type of the evaluator's result
-    * @param evalWithNulls when set, takes precedence over [[eval]] and
-    *             receives ALL window samples including null-valued ones
-    *             (first_value/last_value carry nulls; percentile drops
-    *             them)
     */
   final case class FoldAgg(
       alias: String,
       input: String,
-      eval: IndexedSeq[(Long, Double)] => Option[Any],
+      eval: RangeFolds.Eval,
       fill: Fill = Fill.None,
       rangeMs: Option[Long] = scala.None,
-      dataType: org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.DoubleType,
-      evalWithNulls: Option[IndexedSeq[(Long, java.lang.Double)] => Option[Any]] =
-        scala.None)
+      dataType: DataType = DoubleType)
 
   /** Explode-to-fold switchover for SQL-surfaced collect-buffering RANGE
     * aggregates (graft.sql.RangeSql): when ceil(range/align) reaches
@@ -149,9 +145,23 @@ object RangeSelect {
         .agg(aggCols.head, aggCols.tail: _*)
     }
 
-    val foldPart: Option[DataFrame] =
-      if (foldAggs.isEmpty) scala.None
-      else Some(foldSlots(df, tsMs, by, alignMs, alignToMs, rangeMs, foldAggs))
+    // slot i = i*align + align_to covers [slot, slot + maxRange); each
+    // FoldAgg sees the prefix of that window with ts < slot + its range.
+    // A chunk is one maxRange-wide band of slots, so per-series
+    // parallelism is the series' time span / maxRange.
+    val foldPart: Option[DataFrame] = if (foldAggs.isEmpty) scala.None else Some {
+      val ranges = foldAggs.map(_.rangeMs.getOrElse(rangeMs)).toArray
+      val maxR = ranges.max
+      val inputs = foldAggs.map(_.input).distinct
+      val aggIn = foldAggs.map(a => inputs.indexOf(a.input)).toArray
+      val evals = foldAggs.map(_.eval).toArray
+      WindowFold(df, by, ts, inputs.map(col),
+        WindowFold.Slots(alignMs, alignToMs, 0L, maxR, (maxR + alignMs - 1) / alignMs),
+        Slot, foldAggs.map(a => StructField(a.alias, a.dataType, nullable = true))) {
+        (slotTs, w) => Array.tabulate[Any](evals.length)(a =>
+          evals(a)(WindowFold.series(w, aggIn(a), slotTs + ranges(a))).orNull)
+      }
+    }
 
     // slot presence = ANY aggregate's window saw a row (the reference
     // keys output rows off the union of accumulator windows); the
@@ -171,165 +181,6 @@ object RangeSelect {
     filled.withColumnRenamed(Slot, tsMs)
       .select((tsMs +: by) ++ (aggs.map(_.alias) ++ foldAggs.map(_.alias))
         map col: _*)
-  }
-
-  /** The fold evaluation of [[FoldAgg]]s: one shuffle on (series,
-    * slot-chunk), each partition sorted by ts and swept once with a
-    * sliding deque — shuffle volume is ≤2× the input (chunk-boundary
-    * copies), independent of range/align, vs the explode's
-    * ceil(range/align)× buffer amplification. Mirrors
-    * graft.promql.PromQL.foldWindowsAtGrid but with RANGE's
-    * FORWARD-looking window (slot <= ts < slot + range) and a
-    * data-driven slot set (a slot exists iff its max-range window is
-    * non-empty) instead of a fixed eval grid. */
-  private def foldSlots(df: DataFrame, tsMs: String, by: Seq[String],
-      alignMs: Long, alignToMs: Long, defaultRangeMs: Long,
-      foldAggs: Seq[FoldAgg]): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val ranges = foldAggs.map(_.rangeMs.getOrElse(defaultRangeMs))
-    val maxR = ranges.max
-    val inputs = foldAggs.map(_.input).distinct.toIndexedSeq
-    val aggIn = foldAggs.map(a => inputs.indexOf(a.input)).toArray
-    val evals = foldAggs.map(_.eval).toArray
-    val evalsNul = foldAggs.map(_.evalWithNulls).toArray
-    val rArr = ranges.toArray
-    val nIn = inputs.length
-    val nAgg = foldAggs.length
-
-    val keyCol = if (by.isEmpty) lit(0L) else struct(by.map(col): _*)
-    val projected = df.select(
-      keyCol.as("__k") +: col(tsMs).cast("long").as("__t") +:
-        inputs.zipWithIndex.map { case (c, i) =>
-          col(c).cast("double").as(s"__in$i") }: _*)
-    // slot indices this sample feeds: forward window t <= ts < t + maxR
-    // → i in [iLo, iHi]
-    val t = col("__t")
-    val iHi = floor((t - alignToMs).cast("double") / alignMs).cast("long")
-    val iLo = floor((t - maxR - alignToMs).cast("double") / alignMs)
-      .cast("long") + 1
-    // chunk = one maxR-wide band of slot indices → a sample lands in ≤2
-    // chunks; per-series parallelism = series time-span / maxR
-    val m = math.max(1L, (maxR + alignMs - 1) / alignMs)
-    val keyed = projected
-      .filter(iLo <= iHi) // range < align can orphan a row from every slot
-      .withColumn("__c", explode(sequence(
-        floor(iLo.cast("double") / m).cast("long"),
-        floor(iHi.cast("double") / m).cast("long"))))
-      .repartition(col("__k"), col("__c"))
-      // inputs ride the sort as ts tie-breaks: deterministic window
-      // order, and for single-input first/last it reproduces the
-      // explode path's struct-lexicographic (ts, value) tie resolution
-      .sortWithinPartitions(col("__k") +: col("__c") +: col("__t") +:
-        (0 until nIn).map(i => col(s"__in$i")): _*)
-
-    val outT = StructType(
-      StructField("__k", keyed.schema("__k").dataType, nullable = by.nonEmpty) +:
-        StructField(Slot, LongType, nullable = false) +:
-        foldAggs.map(a => StructField(a.alias, a.dataType, nullable = true)))
-    val (alignL, alignToL, maxRL, mL) = (alignMs, alignToMs, maxR, m)
-
-    val folded = keyed.mapPartitions { it =>
-      new Iterator[Row] {
-        private val out = scala.collection.mutable.Queue.empty[Row]
-        private var curKey: Any = null
-        private var curChunk = 0L
-        private var started = false
-        // entries: Array(ts: Long, in0: java.lang.Double|null, ...)
-        private val deque = new java.util.ArrayDeque[Array[Any]]()
-        private var nextI = 0L // next unemitted slot index of the chunk
-        private var endI = 0L  // first slot index past the chunk
-        private def emitUpTo(limit0: Long): Unit = {
-          val lim = math.min(limit0, endI)
-          while (nextI < lim) {
-            val slotTs = nextI * alignL + alignToL
-            while (!deque.isEmpty &&
-              deque.peekFirst()(0).asInstanceOf[Long] < slotTs)
-              deque.pollFirst()
-            if (deque.isEmpty) nextI = lim // no samples until the next row
-            else {
-              // invariant (emitUpTo precedes every insert): all deque
-              // entries have ts < slotTs + maxR — the deque IS the
-              // max-range window; per-agg windows are its prefixes
-              val w = deque.toArray(new Array[Array[Any]](deque.size))
-              val vals = new Array[Any](2 + nAgg)
-              vals(0) = curKey
-              vals(1) = slotTs
-              var a = 0
-              while (a < nAgg) {
-                val end = slotTs + rArr(a)
-                vals(2 + a) = evalsNul(a) match {
-                  case Some(fn) =>
-                    val buf = IndexedSeq.newBuilder[(Long, java.lang.Double)]
-                    var j = 0
-                    var inWin = true
-                    while (j < w.length && inWin) {
-                      val sts = w(j)(0).asInstanceOf[Long]
-                      if (sts >= end) inWin = false
-                      else buf += ((sts, w(j)(1 + aggIn(a)).asInstanceOf[java.lang.Double]))
-                      j += 1
-                    }
-                    fn(buf.result()).orNull
-                  case scala.None =>
-                    val buf = IndexedSeq.newBuilder[(Long, Double)]
-                    var j = 0
-                    var inWin = true
-                    while (j < w.length && inWin) {
-                      val sts = w(j)(0).asInstanceOf[Long]
-                      if (sts >= end) inWin = false
-                      else {
-                        val v = w(j)(1 + aggIn(a))
-                        if (v != null) buf += ((sts, v.asInstanceOf[Double]))
-                      }
-                      j += 1
-                    }
-                    evals(a)(buf.result()).orNull
-                }
-                a += 1
-              }
-              out += Row.fromSeq(
-                scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
-              nextI += 1
-            }
-          }
-        }
-        private def advance(): Unit = {
-          while (out.isEmpty && it.hasNext) {
-            val r = it.next()
-            val k = r.get(0)
-            val c = r.getLong(2 + nIn)
-            if (!started || k != curKey || c != curChunk) {
-              if (started) { emitUpTo(endI); deque.clear() }
-              curKey = k
-              curChunk = c
-              nextI = c * mL
-              endI = (c + 1) * mL
-              started = true
-            }
-            val sts = r.getLong(1)
-            // slots strictly before this sample's first slot are final
-            emitUpTo(Math.floorDiv(sts - maxRL - alignToL, alignL) + 1)
-            val e = new Array[Any](1 + nIn)
-            e(0) = sts
-            var i = 0
-            while (i < nIn) {
-              e(1 + i) = if (r.isNullAt(2 + i)) null else Double.box(r.getDouble(2 + i))
-              i += 1
-            }
-            deque.addLast(e)
-          }
-          if (out.isEmpty && started) {
-            emitUpTo(endI); deque.clear(); started = false
-          }
-        }
-        def hasNext: Boolean = { if (out.isEmpty) advance(); out.nonEmpty }
-        def next(): Row = { if (out.isEmpty) advance(); out.dequeue() }
-      }
-    }(Encoders.row(outT))
-
-    if (by.isEmpty) folded.select(col(Slot) +: foldAggs.map(a => col(a.alias)): _*)
-    else folded.select((by.map(b => col(s"__k.`$b`").as(b)) :+ col(Slot)) ++
-      foldAggs.map(a => col(a.alias)): _*)
   }
 
   /** Per-series dense grid from first to last populated slot, left-joined

@@ -3,6 +3,8 @@ package graft.promql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField}
+import graft.operators.WindowFold
 
 /** PromQL engine (SURVEY.md §2.6/§3.2) — the Spark re-expression of the
   * reference's PromPlanner (query/src/promql/planner.rs) and its
@@ -10,20 +12,21 @@ import org.apache.spark.sql.functions._
   *
   *  - SeriesNormalize  -> offset shift (staleness markers never reach
   *    parquet, so no sample is filtered)
-  *  - InstantManipulate -> [[foldWindowsAtGrid]]: the latest sample
-  *    within the lookback at each step
-  *  - RangeManipulate  -> [[foldWindowsAtGrid]] with the range function
+  *  - InstantManipulate -> [[instant]]: the latest sample within the
+  *    lookback at each step, from the shared [[WindowFold]] sweep
+  *  - RangeManipulate  -> [[rangeFn]]: the same sweep, the range function
   *    evaluated on each step's window
-  *  - SeriesDivide     -> the fold's shuffle on the series labels
+  *  - SeriesDivide     -> the sweep's shuffle on (series labels, time
+  *    slice), sorted by ts within each slice
   *  - EmptyMetric      -> sequence() grid for literal expressions
   *  - UnionDistinctOn  -> `or` via left ∪ (right anti left)
   *  - HistogramFold    -> le-bucket collect + interpolation UDF
   *
-  * Scale: a selector shuffles each sample once (twice when its window
-  * crosses a time-slice boundary) and emits one row per (series, step)
-  * with a non-empty window, at every window/step ratio. Vector-vector
-  * binary ops are equi-joins on (ts, labels) — Catalyst picks hash
-  * joins, and AQE handles skew.
+  * Scale: a selector shuffles each sample that some step's window holds
+  * once (twice when its window crosses a time-slice boundary) and emits
+  * one row per (series, step) with a non-empty window, at every
+  * window/step ratio. Vector-vector binary ops are equi-joins on
+  * (ts, labels) — Catalyst picks hash joins, and AQE handles skew.
   */
 object PromQL {
 
@@ -48,145 +51,26 @@ object PromQL {
       df.select((col("__ts") +: labels.sorted.map(lcol)) :+ col("__val"): _*)
   }
 
-  /** The one window evaluator behind every selector: InstantManipulate
-    * and RangeManipulate as the reference formulates them
-    * (range_manipulate.rs:64). One shuffle on (series, time slice), each
-    * partition sorted by (series, ts, v) and folded in a single linear
-    * pass with a sliding deque over the left-exclusive window
-    * (t - windowMs, t] of each grid anchor t. CPU is
-    * O(samples + Σ|window|) — the output size — at every window/step
-    * ratio; the rangeBetween-window formulation tried first recomputed
-    * each frame per ROW (quadratic on dense series: 5.6× slower wall at
-    * 10× events despite 42× less shuffle).
-    *
-    * `evalF = None`: per-anchor latest sample (labels..., __ts,
-    * __latest struct<_1 ts, _2 v>) for the instant/lookback path.
-    * `evalF = Some(f)`: the range function is evaluated IN the fold —
-    * f(window samples, winStartMs, winEndMs) emits `__val` directly
-    * (None anchors dropped), so no per-anchor sample array is ever
-    * built or serialized. Anchors with empty windows emit nothing. */
-  private def foldWindowsAtGrid(base: DataFrame, labels: Seq[String],
-      p: EvalParams, windowMs: Long,
-      evalF: Option[(Seq[PromFunctions.Sample], Long, Long) => Option[Double]])
-      : DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    // samples outside (start-window, end] can contribute to no anchor
-    val pruned = base.filter(
-      col("__sample_ts") > p.startMs - windowMs && col("__sample_ts") <= p.endMs)
-    val keyCol =
-      if (labels.isEmpty) lit(0L).as("__k0") else struct(labels.map(lcol): _*)
-    // TIME-SLICED parallelism: few-series metrics would otherwise fold
-    // on #series cores. Each series splits into ~64 chunks of the eval
-    // span (never narrower than the window, so a sample lands in ≤2
-    // chunks — the copy into the successor covers its early anchors).
-    // A sample at offset o serves anchors in [o, o+window) → chunks
-    // floor(o/span) .. floor((o+window-1)/span).
-    val totalSpan = math.max(1L, p.endMs - p.startMs)
-    val chunkSpan = math.max(windowMs, (totalSpan + 63) / 64)
-    val lastChunk = (totalSpan - 1) / chunkSpan
-    val off = col("__t") - p.startMs
-    // clamp into [0, lastChunk]: a sample at exactly the span end (the
-    // last grid anchor's own timestamp) computes chunk lastChunk+1
-    val cLo = least(
-      greatest(floor(off.cast("double") / chunkSpan).cast("long"), lit(0L)),
-      lit(lastChunk))
-    val cHi = least(floor((off + windowMs - 1).cast("double") / chunkSpan).cast("long"),
-      lit(lastChunk))
-    val keyed = pruned
-      .select(keyCol.as("__k"), col("__sample_ts").as("__t"),
-        col("__v").cast("double").as("__vv"))
-      .withColumn("__c", explode(when(cLo <= cHi, sequence(cLo, cHi))
-        .otherwise(array().cast("array<long>"))))
-      .repartition(col("__k"), col("__c"))
-      .sortWithinPartitions(col("__k"), col("__c"), col("__t"), col("__vv"))
-    val outT = StructType(Seq(
-      StructField("__k", keyed.schema("__k").dataType, nullable = labels.nonEmpty),
-      StructField("__ts", LongType, nullable = false),
-      if (evalF.isDefined) StructField("__val", DoubleType, nullable = false)
-      else StructField("__latest", StructType(Seq(
-        StructField("_1", LongType, nullable = false),
-        StructField("_2", DoubleType, nullable = true))))))
-    val (startMs, stepMs, endMs) = (p.startMs, p.stepMs, p.endMs)
-    val nSteps = (endMs - startMs) / stepMs
-    val folded = keyed.mapPartitions { it =>
-      new Iterator[Row] {
-        private val out = scala.collection.mutable.Queue.empty[Row]
-        private var curKey: Any = null
-        private var curChunk = -1L
-        private var started = false
-        private val deque = new java.util.ArrayDeque[Row]() // (ts, v) rows
-        private var nextK = 0L // next unemitted grid slot of the chunk
-        private var endK = 0L  // first slot past the chunk (exclusive)
-        private def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
-        private def emitUpTo(kLimit: Long): Unit = {
-          val lim = math.min(kLimit, endK)
-          while (nextK < lim) {
-            val t = startMs + nextK * stepMs
-            while (!deque.isEmpty && deque.peekFirst.getLong(0) <= t - windowMs)
-              deque.pollFirst()
-            if (!deque.isEmpty) {
-              evalF match {
-                case Some(f) =>
-                  // NULL-valued samples carry PRESENCE (instant path) but
-                  // no value a range function can use — skipped here, so
-                  // a null never reads as 0.0 via getDouble
-                  val s = new Array[PromFunctions.Sample](deque.size)
-                  var i = 0
-                  val di = deque.iterator()
-                  while (di.hasNext) {
-                    val r = di.next()
-                    if (!r.isNullAt(1)) { s(i) = (r.getLong(0), r.getDouble(1)); i += 1 }
-                  }
-                  f(scala.collection.immutable.ArraySeq.unsafeWrapArray(
-                      if (i == s.length) s else java.util.Arrays.copyOf(s, i)),
-                    t - windowMs, t).foreach(v => out += Row(curKey, t, v))
-                case None => out += Row(curKey, t, deque.peekLast)
-              }
-            }
-            nextK += 1
-          }
-        }
-        private def flushChunk(): Unit = {
-          emitUpTo(endK)
-          deque.clear()
-        }
-        private def startChunk(c: Long): Unit = {
-          curChunk = c
-          nextK = ceilDiv(c * chunkSpan, stepMs)
-          // the last chunk also owns any anchor at exactly the span end
-          endK =
-            if (c == lastChunk) nSteps + 1
-            else math.min(nSteps + 1, ceilDiv((c + 1) * chunkSpan, stepMs))
-        }
-        private def advance(): Unit = {
-          while (out.isEmpty && it.hasNext) {
-            val r = it.next()
-            val k = r.get(0)
-            val c = r.getLong(3)
-            if (!started || k != curKey || c != curChunk) {
-              if (started) flushChunk()
-              curKey = k
-              startChunk(c)
-              started = true
-            }
-            val ts = r.getLong(1)
-            // every anchor strictly before this sample's slot is final
-            emitUpTo(
-              if (ts < startMs) 0L
-              else math.floorDiv(ts - startMs + stepMs - 1, stepMs))
-            deque.addLast(Row(ts, if (r.isNullAt(2)) null else r.getDouble(2)))
-          }
-          if (out.isEmpty && started) { flushChunk(); started = false }
-        }
-        def hasNext: Boolean = { if (out.isEmpty) advance(); out.nonEmpty }
-        def next(): Row = { if (out.isEmpty) advance(); out.dequeue() }
-      }
-    }(Encoders.row(outT))
-    val dataCol = if (evalF.isDefined) col("__val") else col("__latest")
-    if (labels.isEmpty) folded.select(col("__ts"), dataCol)
-    else folded.select((labels.map(l => col(s"__k.`$l`").as(l)) :+
-      col("__ts")) :+ dataCol: _*)
+  /** The window evaluator behind every selector: [[WindowFold]] with
+    * grid anchor i (t = start + i·step, 0 ≤ i ≤ nSteps) as slot i over
+    * the left-exclusive window (t - windowMs, t]. Each series splits into
+    * ~64 time slices of the grid, never narrower than the window, so
+    * few-series metrics still fold on every core. The prune to
+    * (start - window, end] is a filter the scan can push down.
+    * `emit` maps an anchor's non-empty window to its output values. */
+  private def foldAtGrid(base: DataFrame, labels: Seq[String], p: EvalParams,
+      windowMs: Long, out: StructField)(
+      emit: (Long, Array[WindowFold.Entry]) => Array[Any]): DataFrame = {
+    val nSteps = (p.endMs - p.startMs) / p.stepMs
+    def ceilDiv(a: Long, b: Long) = (a + b - 1) / b
+    WindowFold(
+      base.filter(col("__sample_ts") > p.startMs - windowMs &&
+        col("__sample_ts") <= p.endMs),
+      labels, col("__sample_ts"), Seq(col("__v")),
+      WindowFold.Slots(p.stepMs, p.startMs, 1 - windowMs, windowMs,
+        math.max(ceilDiv(windowMs, p.stepMs), ceilDiv(nSteps + 1, 64)),
+        Some((0L, nSteps))),
+      "__ts", Seq(out))(emit)
   }
 
   /** SeriesNormalize: labels..., `__sample_ts` (offset-shifted ms),
@@ -199,36 +83,45 @@ object PromQL {
     m.df.select((m.labels.map(lcol) :+ (col(m.tsMs) + offsetMs).as("__sample_ts")) :+
       lcol(m.value).as("__v"): _*)
 
-  /** The latest sample within the lookback at each step, `value` read off
-    * its `__latest` (ts, v) struct. The lookback window is LEFT-EXCLUSIVE
-    * (t - lookback, t]: a sample exactly lookback old is stale
-    * (promql/subquery.result, t=359 case). */
+  /** The latest sample within the lookback at each step, `__val` read
+    * off it by `value` (a NULL-valued sample is still the latest). The
+    * lookback window is LEFT-EXCLUSIVE (t - lookback, t]: a sample
+    * exactly lookback old is stale (promql/subquery.result, t=359
+    * case). */
   private def latestAtGrid(m: Metric, p: EvalParams, offsetMs: Long,
-      value: Column): InstantVector = InstantVector(
-    foldWindowsAtGrid(samples(m, offsetMs), m.labels, p, p.lookbackMs, evalF = None)
-      .withColumn("__val", value).drop("__latest"),
+      value: WindowFold.Entry => Any): InstantVector = InstantVector(
+    foldAtGrid(samples(m, offsetMs), m.labels, p, p.lookbackMs,
+      StructField("__val", DoubleType, nullable = true))(
+      (_, w) => Array(value(w.last))),
     m.labels)
 
   /** Selector -> instant vector (SeriesNormalize + InstantManipulate). */
   def instant(m: Metric, p: EvalParams, offsetMs: Long = 0L): InstantVector =
-    latestAtGrid(m, p, offsetMs, col("__latest._2"))
+    latestAtGrid(m, p, offsetMs, _(1))
 
   /** timestamp(selector): instant vector whose value is the selected
     * sample's own timestamp in SECONDS (prometheus timestamp();
     * promql/timestamp_fn.result pins pre-alignment sample times). */
   def timestampInstant(m: Metric, p: EvalParams, offsetMs: Long = 0L): InstantVector =
-    latestAtGrid(m, p, offsetMs, col("__latest._1").cast("double") / 1000.0)
+    latestAtGrid(m, p, offsetMs, e => e(0).asInstanceOf[Long] / 1000.0)
 
   /** Range-vector function over each step's window (RangeManipulate):
-    * [[PromFunctions.windowEval]] runs inside the fold, so no per-step
-    * sample array is built. `fnArgs`: predict_linear's look-ahead,
-    * quantile_over_time's q, holt_winters' (sf, tf). */
+    * [[PromFunctions.windowEval]] runs inside the fold on the window's
+    * non-null samples — a NULL-valued sample carries presence to the
+    * instant path only — and a None drops the anchor. `fnArgs`:
+    * predict_linear's look-ahead, quantile_over_time's q, holt_winters'
+    * (sf, tf). */
   def rangeFn(name: String, m: Metric, p: EvalParams, rangeMs: Long,
-      offsetMs: Long = 0L, fnArgs: Seq[Double] = Nil): InstantVector =
+      offsetMs: Long = 0L, fnArgs: Seq[Double] = Nil): InstantVector = {
+    val f = PromFunctions.windowEval(name, fnArgs)
     InstantVector(
-      foldWindowsAtGrid(samples(m, offsetMs), m.labels, p, rangeMs,
-        evalF = Some(PromFunctions.windowEval(name, fnArgs))),
+      foldAtGrid(samples(m, offsetMs), m.labels, p, rangeMs,
+        StructField("__val", DoubleType, nullable = false)) { (t, w) =>
+        f(WindowFold.values(w, 0), t - rangeMs, t)
+          .map(v => Array[Any](v)).orNull
+      },
       m.labels)
+  }
 
   /** absent(): 1 at grid steps where the selector returns nothing; the
     * output series carries labels from the selector's `=` matchers

@@ -102,10 +102,8 @@ object RangeQueries {
       import graft.operators.{RangeFolds, RangeSelect => RS}
       RS(events(s, d), "ts_ms", Seq("event_type"), HM, 2 * H, Nil,
         foldAggs = Seq(
-          RS.FoldAgg("first_v", "value", _ => scala.None,
-            evalWithNulls = Some(RangeFolds.firstValueByTime)),
-          RS.FoldAgg("last_v", "value", _ => scala.None,
-            evalWithNulls = Some(RangeFolds.lastValueByTime))))
+          RS.FoldAgg("first_v", "value", RangeFolds.firstValueByTime),
+          RS.FoldAgg("last_v", "value", RangeFolds.lastValueByTime)))
         .orderBy(col("ts_ms"), col("event_type"))
     })
   )

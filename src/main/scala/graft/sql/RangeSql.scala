@@ -566,7 +566,7 @@ object RangeSql {
             case _ => false
           }
           val td = graft.operators.RangeFolds.percentileTDigest(q)
-          val ev: IndexedSeq[(Long, Double)] => Option[Any] =
+          val ev: graft.operators.RangeFolds.Eval =
             if (integral) s => td(s).map(_.asInstanceOf[Double].toLong) else td
           RangeSelect.FoldAgg(a.alias, x, ev, fill = fill,
             dataType = if (integral) org.apache.spark.sql.types.LongType
@@ -588,10 +588,10 @@ object RangeSql {
             case ("first_value", true) => RangeFolds.firstValueByTimeDesc
             case _ => RangeFolds.lastValueByTimeDesc
           }
-          val conv: IndexedSeq[(Long, java.lang.Double)] => Option[Any] =
+          val conv: RangeFolds.Eval =
             s => raw(s).map(v => if (v == null) null else back(v))
-          RangeSelect.FoldAgg(a.alias, x, _ => scala.None, fill = fill,
-            dataType = base.schema(x).dataType, evalWithNulls = Some(conv))
+          RangeSelect.FoldAgg(a.alias, x, conv, fill = fill,
+            dataType = base.schema(x).dataType)
         }
       })
     }

@@ -84,6 +84,9 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("range_percentile: fold path shows no slot explode on the percentile side") {
     val p = plan("range_percentile")
+    // explode-part agg, fold repartition, the fold side's exchange into
+    // the (by, slot) full-outer join, output sort
+    assert(nodeIds(p, "Exchange").size <= 4, s"shuffles=${nodeIds(p, "Exchange")}")
     // the fold keeps ONE Generate (the explode part's count path may
     // carry one); the old all-explode formulation had the percentile
     // riding a Generate into an ObjectHashAggregate

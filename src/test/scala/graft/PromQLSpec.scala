@@ -5,6 +5,7 @@ import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.promql._
 import graft.promql.PromQL.{EvalParams, Metric}
+import graft.tools.StageMeter
 
 import scala.jdk.CollectionConverters._
 
@@ -317,11 +318,14 @@ class PromQLSpec extends AnyFunSuite {
   }
 
   test("fold matches the reference evaluator across the battery") {
-    // Every range/instant evaluation runs through foldWindowsAtGrid; each
-    // query is pinned to the reference evaluator above, composed the way
+    // Every range/instant evaluation runs through the WindowFold sweep;
+    // each query is pinned to the reference evaluator above, composed the way
     // PromEval composes the operator around the selector.
     val rows = (0 to 6).map(i => (i * 10.0, i * 10000L, if (i % 2 == 0) "a" else "b"))
-    val cat = Map("m" -> Metric(mkDf(rows), "j", "i", Seq("k")))
+    // u: the same samples as one label-less series
+    val uRows = rows.map(r => (r._1, r._2, ""))
+    val cat = Map("m" -> Metric(mkDf(rows), "j", "i", Seq("k")),
+      "u" -> Metric(mkDf(uRows), "j", "i", Nil))
     def ref(g: (Long, Long, Long), wS: Long, f: WindowFn, offsetS: Long = 0) =
       reference(rows, g._1, g._2, g._3, wS, f, offsetS)
     // absent_over_time: 1 at the steps where no series has a sample
@@ -353,7 +357,9 @@ class PromQLSpec extends AnyFunSuite {
       ("timestamp(m)", (0, 60, 10), ref((0, 60, 10), 300, stamp)),
       ("max_over_time(m[30s:10s])", (30, 60, 10), subqueryRef),
       ("count_over_time(m[30s] @ 60)", (0, 60, 10), pinnedRef),
-      ("rate(m[30s] offset 10s)", (40, 60, 10), ref((40, 60, 10), 30, fn("rate"), offsetS = 10)))
+      ("rate(m[30s] offset 10s)", (40, 60, 10), ref((40, 60, 10), 30, fn("rate"), offsetS = 10)),
+      ("u", (0, 60, 10), reference(uRows, 0, 60, 10, 300, latest)),
+      ("rate(u[30s])", (30, 60, 10), reference(uRows, 30, 60, 10, 30, fn("rate"))))
     for ((q, g, expected) <- cases) {
       assert(expected.nonEmpty, s"empty battery case $q")
       val got = eval(q, g._1, g._2, g._3, cat)
@@ -438,6 +444,17 @@ class PromQLSpec extends AnyFunSuite {
     assert(got == Seq((0L, "a", 1.0), (60000L, "a", 2.0), (120000L, "a", 2.0),
       (180000L, "a", 2.0), (240000L, "a", 1.0),
       (60000L, "b", 1.0), (120000L, "b", 1.0), (240000L, "b", 1.0)))
+  }
+
+  test("window shorter than the step: only samples some window holds are shuffled") {
+    // each sample feeds at most one anchor at this ratio, so the fold's
+    // one exchange writes exactly the samples in some (t - 20 s, t]
+    val anchors = 0L to 250000L by 60000L
+    val held = ratio0Rows.count(r => anchors.exists(t => r._2 > t - 20000L && r._2 <= t))
+    assert(held == 11 && held < ratio0Rows.length)
+    val m = StageMeter.measure(spark)(PromQL.rangeFn("count_over_time",
+      ratio0Cat("m"), EvalParams(0L, 250000L, 60000L), 20000L).df.collect())
+    assert(m.shuffleWriteRecords == held, s"shuffled ${m.shuffleWriteRecords} samples")
   }
 
   test("NULL samples: presence in count() (scalar.result), valueless to range fns") {

@@ -159,7 +159,8 @@ class RangeSelectSpec extends AnyFunSuite {
   }
 
   private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
-    df.orderBy("host", "ts").collect().toSeq.map(_.toSeq)
+    df.orderBy(Seq("host", "ts").filter(df.columns.contains).map(col): _*)
+      .collect().toSeq.map(_.toSeq)
 
   private def assertSame(a: DataFrame, b: DataFrame): Unit = {
     val (ra, rb) = (sortedRows(a), sortedRows(b))
@@ -176,20 +177,23 @@ class RangeSelectSpec extends AnyFunSuite {
   test("fold percentile ≡ explode percentile at every range/align shape") {
     import graft.operators.{RangeFolds, RangeSelect => RS}
     val df = randomSeries(42).cache()
-    // (align, range): sliding, tumbling, range<align, non-divisible
-    for ((a, r) <- Seq((5000L, 40000L), (10000L, 10000L),
-        (10000L, 4000L), (7000L, 30000L))) {
-      val explode = RangeSelect(df, "ts", Seq("host"), a, r, Seq(
+    // (align, range, align_to, by): sliding, tumbling, range<align,
+    // non-divisible, an offset grid, and one series keyed by lit(0)
+    for ((a, r, to, by) <- Seq((5000L, 40000L, 0L, Seq("host")),
+        (10000L, 10000L, 0L, Seq("host")), (10000L, 4000L, 0L, Seq("host")),
+        (7000L, 30000L, 0L, Seq("host")), (7000L, 30000L, 2500L, Seq("host")),
+        (5000L, 40000L, 0L, Nil))) {
+      val explode = RangeSelect(df, "ts", by, a, r, Seq(
         RangeAgg("n", ctx => count(ctx.value("val"))),
         RangeAgg("p50", ctx => percentile(ctx.value("val"), lit(0.5))),
-        RangeAgg("p90", ctx => percentile(ctx.value("val"), lit(0.9)))))
-      val fold = RangeSelect(df, "ts", Seq("host"), a, r, Seq(
-        RangeAgg("n", ctx => count(ctx.value("val")))),
+        RangeAgg("p90", ctx => percentile(ctx.value("val"), lit(0.9)))), to)
+      val fold = RangeSelect(df, "ts", by, a, r, Seq(
+        RangeAgg("n", ctx => count(ctx.value("val")))), to,
         foldAggs = Seq(
           RS.FoldAgg("p50", "val", RangeFolds.percentileCont(0.5)),
           RS.FoldAgg("p90", "val", RangeFolds.percentileCont(0.9))))
-      assertSame(explode.select("ts", "host", "n", "p50", "p90"),
-        fold.select("ts", "host", "n", "p50", "p90"))
+      val cols = ("ts" +: by) ++ Seq("n", "p50", "p90")
+      assertSame(explode.select(cols.map(col): _*), fold.select(cols.map(col): _*))
     }
     df.unpersist()
   }
@@ -242,14 +246,10 @@ class RangeSelectSpec extends AnyFunSuite {
         RangeAgg("ld", _ => encoded("last_value", "DESC"))))
       val fold = RangeSelect(df, "ts", Seq("host"), a, r, Nil,
         foldAggs = Seq(
-          RS.FoldAgg("fa", "val", _ => None,
-            evalWithNulls = Some(RangeFolds.firstValueByTime)),
-          RS.FoldAgg("la", "val", _ => None,
-            evalWithNulls = Some(RangeFolds.lastValueByTime)),
-          RS.FoldAgg("fd", "val", _ => None,
-            evalWithNulls = Some(RangeFolds.firstValueByTimeDesc)),
-          RS.FoldAgg("ld", "val", _ => None,
-            evalWithNulls = Some(RangeFolds.lastValueByTimeDesc))))
+          RS.FoldAgg("fa", "val", RangeFolds.firstValueByTime),
+          RS.FoldAgg("la", "val", RangeFolds.lastValueByTime),
+          RS.FoldAgg("fd", "val", RangeFolds.firstValueByTimeDesc),
+          RS.FoldAgg("ld", "val", RangeFolds.lastValueByTimeDesc)))
       assertSame(explode.select("ts", "host", "fa", "la", "fd", "ld"),
         fold.select("ts", "host", "fa", "la", "fd", "ld"))
     }
