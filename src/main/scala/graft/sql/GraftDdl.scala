@@ -38,17 +38,6 @@ private[sql] trait GraftDdl { self: GraftSession =>
     }
   }
 
-  /** Declared column metadata, in declared order — drives DESC TABLE,
-    * INSERT defaults and FIRST/AFTER column placement. */
-  private[sql] case class ColMeta(name: String, gtype: String, nullable: Boolean,
-      default: Option[String],
-      sqlType: Option[String] = None,    // declared token when it differs
-                                         // from the canonical rendering
-                                         // (VARBINARY vs BINARY)
-      indexDecl: Option[String] = None,  // FULLTEXT/SKIPPING/INVERTED
-                                         // INDEX clause for SHOW CREATE
-      comment: Option[String] = None)    // column COMMENT 'text'
-
   /** Column index modifier → SHOW CREATE rendering with the reference's
     * default parameters merged in (create/create_with_{fulltext,
     * skipping_index}.result). */
@@ -89,29 +78,6 @@ private[sql] trait GraftDdl { self: GraftSession =>
     val r = parts.result()
     if (r.isEmpty) None else Some(r.mkString(" "))
   }
-  private[sql] val colMeta =
-    scala.collection.concurrent.TrieMap.empty[String, Vector[ColMeta]]
-  /** ADD COLUMN ... DEFAULT backfills: (column, default expr, seq at
-    * ALTER time) — rows written before the ALTER read the default. */
-  private[sql] val backfills =
-    scala.collection.concurrent.TrieMap.empty[String, Vector[(String, String, Long)]]
-  /** MODIFY COLUMN type changes, applied as casts in the read view. */
-  private[sql] val colCasts =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, DataType]]
-  /** Per-column write-time type history after MODIFY COLUMN type
-    * changes: (seq watermark, greptime type) — rows with __seq <= the
-    * watermark were written under that type; storage is STRING and each
-    * row casts write-type -> current type at read (alter_table.result). */
-  private[sql] val typeHistory =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, Vector[(Long, String)]]]
-  /** Timestamp defaults resolved to absolute instants at DDL time —
-    * the reference parses the literal under the session timezone ONCE
-    * (alter_table_default.result: a later SET time_zone must not move
-    * an already-declared default). ColMeta keeps the original string
-    * for DESC/SHOW CREATE display. */
-  private[sql] val colDefaultResolved =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, String]]
-
   /** Quoted datetime default → `TIMESTAMP_MICROS(n)` under the CURRENT
     * session timezone; non-timestamp or non-literal defaults unchanged. */
   private[sql] def resolveTsDefault(gtype: String, d: String): String = {
@@ -356,7 +322,7 @@ private[sql] trait GraftDdl { self: GraftSession =>
       val target = m.group(1)
       val src = normTable(m.group(2))
       val spec = catalog.spec(src)
-      val metas = colMeta.getOrElse(src, Vector.empty)
+      val metas = metaOf(src).colMeta
       val colsSql = metas.map { cm =>
         s""""${cm.name}" ${showCreateType(cm.gtype)}""" +
           (if (!cm.nullable) " NOT NULL" else "") +
@@ -399,6 +365,7 @@ private[sql] trait GraftDdl { self: GraftSession =>
       var tiCount = 0
       var tags = Vector.empty[String]
       var hintsByCol = Map.empty[String, Vector[J2Hint]]
+      var tsUs = TableMeta.Empty.tsLiteralUs
       val fields = Vector.newBuilder[StructField]
 
       val metas = Vector.newBuilder[ColMeta]
@@ -433,12 +400,12 @@ private[sql] trait GraftDdl { self: GraftSession =>
           if (cd.isPrimaryKey) tags :+= cd.name
           val gtype = greptimeTypeName(cd.typeTok)
           if (cd.isTimeIndex || timeIndex.contains(cd.name))
-            tsLiteralUs.put(name, gtype match {
+            tsUs = gtype match {
               case "TimestampSecond" => 1000000L
               case "TimestampMicrosecond" => 1L
               case "TimestampNanosecond" => -1L
               case _ => 1000L
-            })
+            }
           if (gtype == "Json2" && cd.typeTok.contains('(')) {
             val hs = parseJ2Hints(cd.typeTok)
             if (hs.nonEmpty) hintsByCol += cd.name -> hs
@@ -488,14 +455,12 @@ private[sql] trait GraftDdl { self: GraftSession =>
       // SHOW CREATE echoes the original key quoting: WITH(COMMENT='x')
       // renders bare, WITH('comment'='x') quoted (create/create.result
       // vs the flow sink comment)
-      Option(withPart).foreach { w =>
-        val quoted = splitTop(w).flatMap(_.split("=", 2) match {
+      val quoted = Option(withPart).toSeq.flatMap(w =>
+        splitTop(w).flatMap(_.split("=", 2) match {
           case Array(k, _) if k.trim.startsWith("'") =>
             Some(unq(k).toLowerCase(Locale.ROOT))
           case _ => None
-        }).toSet
-        quotedOptNames.put(name, quoted)
-      }
+        })).toSet
       // database options inherit into the table at create time — except
       // ttl (resolved dynamically so ALTER DATABASE SET ttl keeps
       // affecting existing tables) and compaction.* (db-level only,
@@ -547,12 +512,12 @@ private[sql] trait GraftDdl { self: GraftSession =>
         val phyName = normTable(opts("on_physical_table"))
         val phy = metricPhy.getOrElse(phyName, throw new IllegalArgumentException(
           s"physical table $phyName not found"))
-        val phyMetas = colMeta.getOrElse(phyName, Vector.empty)
+        val phyMetas = metaOf(phyName).colMeta
         val phySpec = catalog.spec(phyName)
         val myTags = tags.distinct.toSet
         // logical partition rule must equal the physical one verbatim
         partClause.foreach { case (_, rules) =>
-          val phyRules = partitionClause.get(phyName).map(_._2).getOrElse(Nil)
+          val phyRules = metaOf(phyName).partitionClause.map(_._2).getOrElse(Nil)
           if (rules.nonEmpty && rules != phyRules)
             throw new IllegalArgumentException(
               "Invalid partition rule: logical table partition rule must " +
@@ -585,7 +550,7 @@ private[sql] trait GraftDdl { self: GraftSession =>
           }
         }
         // inherit the physical table's partition columns as extra tags
-        val phyPartCols = partitionClause.get(phyName).map(_._1).getOrElse(Nil)
+        val phyPartCols = metaOf(phyName).partitionClause.map(_._1).getOrElse(Nil)
         phyPartCols.filterNot(c => metasV.exists(_.name == c)).foreach { c =>
           metasV :+= ColMeta(c, "String", nullable = true, None)
           tags :+= c
@@ -595,22 +560,20 @@ private[sql] trait GraftDdl { self: GraftSession =>
         metasV = metasV.sortBy(_.name)
         tags = tags.distinct.sortBy(identity)
         // add new tags to the physical table schema
-        val phyAdd = tags.filterNot(t => colMeta.getOrElse(phyName, Vector.empty)
-          .exists(_.name == t))
+        val phyAdd = tags.filterNot(t => phyMetas.exists(_.name == t))
         if (phyAdd.nonEmpty) {
-          val decor = tableOpts.getOrElse(phyName, Nil).toMap.get("index.type") match {
+          val phyOpts = metaOf(phyName).tableOpts.toMap
+          val decor = phyOpts.get("index.type") match {
             case Some("skipping") =>
-              val fpr = tableOpts.getOrElse(phyName, Nil).toMap
-                .getOrElse("index.false_positive_rate", "0.01")
-              val gran = tableOpts.getOrElse(phyName, Nil).toMap
-                .getOrElse("index.granularity", "10240")
+              val fpr = phyOpts.getOrElse("index.false_positive_rate", "0.01")
+              val gran = phyOpts.getOrElse("index.granularity", "10240")
               Some(s"SKIPPING INDEX WITH(false_positive_rate = '$fpr', " +
                 s"granularity = '$gran', type = 'BLOOM')")
             case _ => None
           }
-          colMeta.put(phyName, colMeta.getOrElse(phyName, Vector.empty) ++
+          editMeta(phyName)(m => m.copy(colMeta = m.colMeta ++
             phyAdd.map(t => ColMeta(t, "String", nullable = true, None,
-              indexDecl = decor)))
+              indexDecl = decor))))
           catalog.register(phySpec.copy(tags = (phySpec.tags ++ phyAdd).distinct))
           phy.addedTags ++= phyAdd
         }
@@ -623,10 +586,8 @@ private[sql] trait GraftDdl { self: GraftSession =>
         // survive in t1)
         inheritMerge = Some(catalog.spec(phyName).mergeMode)
       }
-      if (engine != "mito") tableEngine.put(name, engine)
       if (isMetricPhy)
         metricPhy.put(name, new PhyState())
-      partClause.foreach(pc => partitionClause.put(name, pc))
 
       // a table with its own compaction.* options is marked as
       // overriding the database's (create_database_opts.result)
@@ -635,7 +596,6 @@ private[sql] trait GraftDdl { self: GraftSession =>
           !optSeq.exists(_._1 == "compaction.override"))
           optSeq :+ ("compaction.override" -> "true")
         else optSeq
-      tableOpts.put(name, withOverride ++ inheritable)
 
       val ti = timeIndex.getOrElse(
         throw new IllegalArgumentException(s"table $name: TIME INDEX is mandatory"))
@@ -655,8 +615,9 @@ private[sql] trait GraftDdl { self: GraftSession =>
       }.orElse(inheritTtl)
       val path = opts.getOrElse("path", s"$warehouse/${currentDb}__$name")
 
-      colMeta.put(name, metasV)
-      if (hintsByCol.nonEmpty) j2Hints.put(name, hintsByCol)
+      tableMeta.put(name, TableMeta(colMeta = metasV, tsLiteralUs = tsUs,
+        j2Hints = hintsByCol, tableOpts = withOverride ++ inheritable,
+        quotedOptNames = quoted, tableEngine = engine, partitionClause = partClause))
       val declaredFields = fields.result()
       val orderedFields = metasV.flatMap { m =>
         val f = declaredFields.find(_.name == m.name).getOrElse(
@@ -690,7 +651,7 @@ private[sql] trait GraftDdl { self: GraftSession =>
   private[sql] def phyShapedRows(phyName: String, child: String,
       tableId: Long): DataFrame = {
     val ps = metricPhy(phyName)
-    val metas = colMeta.getOrElse(phyName, Vector.empty)
+    val metas = metaOf(phyName).colMeta
     val declared = metas.filterNot(m => ps.addedTags.contains(m.name))
     val added = metas.filter(m => ps.addedTags.contains(m.name))
     val cdf = spark.table(child)
@@ -746,25 +707,22 @@ private[sql] trait GraftDdl { self: GraftSession =>
       else catalog.read(name)
     seqFloor.foreach(s => df = df.filter(col(SeqCol) > s))
     rowFilter.foreach(f => df = df.filter(f))
+    val meta = metaOf(name)
     // rows predating an ALTER ... DEFAULT read the default
-    backfills.getOrElse(name, Vector.empty).foreach { case (c, d, seqAt) =>
+    meta.backfills.foreach { case (c, d, seqAt) =>
       if (df.columns.contains(c))
         df = df.withColumn(c,
           when(col(s"`$c`").isNull && col(SeqCol) < seqAt, expr(dialect(d)))
             .otherwise(col(s"`$c`")))
     }
-    // MODIFY-COLUMN casts are LOSSY like the reference's: a value the
-    // narrower type can't hold reads as NULL, never an ANSI error
-    // (change_col_type.sql's 'greptime' back to INTEGER)
-    colCasts.getOrElse(name, Map.empty).foreach { case (c, t) =>
-      if (df.columns.contains(c))
-        df = df.withColumn(c, expr(s"try_cast(`$c` AS ${t.sql})"))
-    }
     // type-changed columns: each row casts its write-time type to the
-    // current one, selected by write sequence (alter_table.result)
-    typeHistory.getOrElse(name, Map.empty).foreach { case (c, hist) =>
+    // current one, selected by write sequence (alter_table.result); the
+    // casts are LOSSY like the reference's: a value the narrower type
+    // can't hold reads as NULL, never an ANSI error (change_col_type.sql's
+    // 'greptime' back to INTEGER)
+    meta.typeHistory.foreach { case (c, hist) =>
       if (df.columns.contains(c)) {
-        val curG = colMeta.getOrElse(name, Vector.empty)
+        val curG = meta.colMeta
           .find(_.name == c).map(_.gtype).getOrElse("String")
         val cur = showCreateType(curG)
         def chain(from: String): org.apache.spark.sql.Column =
@@ -781,10 +739,10 @@ private[sql] trait GraftDdl { self: GraftSession =>
     // derivation collects the column's documents; bounded per refresh
     // and gated to JSON2 tables, this is golden-dialect introspection,
     // not the scale path.
-    val j2cols = colMeta.getOrElse(name, Vector.empty)
+    val j2cols = meta.colMeta
       .filter(_.gtype == "Json2").map(_.name)
     for (c <- j2cols if df.columns.contains(c)) {
-      val bounds = j2Boundaries.getOrElse(name, Vector.empty)
+      val bounds = meta.j2Boundaries
       val rows = df.select(col(SeqCol).cast(LongType), col(s"`$c`").cast(StringType))
         .collect().map(r => (if (r.isNullAt(0)) 0L else r.getLong(0),
           if (r.isNullAt(1)) null else r.getString(1)))
@@ -808,34 +766,32 @@ private[sql] trait GraftDdl { self: GraftSession =>
           call_udf("__json2_apply", col(s"`$c`"), caseCol))
       }
     }
-    df = df.drop(SeqCol +: droppedCols.getOrElse(name, Set.empty).toSeq: _*)
+    df = df.drop(SeqCol +: meta.droppedCols.toSeq: _*)
     // declared order drives SELECT * and DESC; case-collision shadow
     // columns (alter/add_col.sql "IdC") surface as their default value,
     // aliased in the SAME single select — any later by-name reference
     // would be ambiguous under case-insensitive resolution
-    val shadowMap = shadowCols.getOrElse(name, Vector.empty)
+    val shadowMap = meta.shadowCols
       .map { case (cn, d, tok) => cn -> ((d, tok)) }.toMap
-    colMeta.get(name).foreach { metas =>
-      val declared = metas.map(_.name)
-      val cols = declared.flatMap { n =>
-        if (df.columns.contains(n)) Some(col(s"`$n`"))
-        else shadowMap.get(n).map { case (d, tok) =>
-          d.map(x => expr(dialect(x))).getOrElse(lit(null))
-            .cast(sparkType(tok)).as(n)
-        }
+    val declared = meta.colMeta.map(_.name)
+    val cols = declared.flatMap { n =>
+      if (df.columns.contains(n)) Some(col(s"`$n`"))
+      else shadowMap.get(n).map { case (d, tok) =>
+        d.map(x => expr(dialect(x))).getOrElse(lit(null))
+          .cast(sparkType(tok)).as(n)
       }
-      val extraAll = df.columns.filterNot(declared.contains)
-      // sub-µs remainder companions stay hidden from the user-facing
-      // view (SELECT * must not show them); the __nsq_ variant below
-      // keeps them for the ns-fidelity statement rewrites
-      val extra = extraAll.filterNot(_.startsWith("__nsr_"))
-      // flow-sink columns carry dots/parens in their names — backtick
-      if (cols.nonEmpty) {
-        if (extraAll.exists(_.startsWith("__nsr_")))
-          df.select(cols ++ extraAll.map(c => col(s"`$c`")): _*)
-            .createOrReplaceTempView(s"__nsq_$name")
-        df = df.select(cols ++ extra.map(c => col(s"`$c`")): _*)
-      }
+    }
+    val extraAll = df.columns.filterNot(declared.contains)
+    // sub-µs remainder companions stay hidden from the user-facing
+    // view (SELECT * must not show them); the __nsq_ variant below
+    // keeps them for the ns-fidelity statement rewrites
+    val extra = extraAll.filterNot(_.startsWith("__nsr_"))
+    // flow-sink columns carry dots/parens in their names — backtick
+    if (cols.nonEmpty) {
+      if (extraAll.exists(_.startsWith("__nsr_")))
+        df.select(cols ++ extraAll.map(c => col(s"`$c`")): _*)
+          .createOrReplaceTempView(s"__nsq_$name")
+      df = df.select(cols ++ extra.map(c => col(s"`$c`")): _*)
     }
     df.createOrReplaceTempView(name)
     rebuildViews()
@@ -924,37 +880,6 @@ private[sql] trait GraftDdl { self: GraftSession =>
       status(s"view $name created")
     case _ => throw new IllegalArgumentException(s"cannot parse: $stmt")
   }
-
-  /** Dropped columns are session metadata (files keep the bytes); adds
-    * materialize a zero-row file carrying the widened schema so the
-    * mergeSchema read picks it up without rewriting data. */
-  private[sql] val droppedCols =
-    scala.collection.concurrent.TrieMap.empty[String, Set[String]]
-
-  /** table -> µs-per-unit for numeric literals into its TIME INDEX
-    * (TIMESTAMP(0)=s, (3)=ms, (6)=µs, (9)=ns — reference precision). */
-  private[sql] val tsLiteralUs = scala.collection.concurrent.TrieMap.empty[String, Long]
-  /** Tables holding at least one row with a nonzero sub-µs remainder.
-    * Only these need the ns-fidelity statement rewrites — everything
-    * else renders identically from µs storage, so the rewrites (and
-    * their blast radius) stay off for ordinary TIMESTAMP(9) tables. */
-  private[sql] val nsRemainderTables =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  /** JSON2 shredding generations: the seq recorded at each flush bounds
-    * a schema-union batch; compaction collapses prior batches into one
-    * (types/json/json2.sql — rows 1-6 share one union after swcs). */
-  private[sql] val j2Boundaries =
-    scala.collection.concurrent.TrieMap.empty[String, Vector[Long]]
-
-  /** One JSON2 type hint: dotted path, normalized SQL + arrow type
-    * names, nullability, declared DEFAULT literal text
-    * (sql/src/parsers/create_parser/json.rs; types/json/
-    * json2_type_hints.sql). */
-  private[sql] case class J2Hint(path: Vector[String], sqlType: String,
-      arrowType: String, nullable: Boolean, default: Option[String])
-  /** table → JSON2 column → its declared hints. */
-  private[sql] val j2Hints =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, Vector[J2Hint]]]
 
   /** Parse + validate the hint block of `JSON2 ( path TYPE [opts], ... )`.
     * Error shapes follow the reference parser (create_parser/json.rs). */
@@ -1066,6 +991,8 @@ private[sql] trait GraftDdl { self: GraftSession =>
       val spec = catalog.spec(name)
       val tail = tail0.trim
       val up = tail.toUpperCase(Locale.ROOT)
+      def editOpts(f: Seq[(String, String)] => Seq[(String, String)]): Unit =
+        editMeta(name)(m => m.copy(tableOpts = f(m.tableOpts)))
       if (up.matches("(?s)^ADD\\s+COLUMN\\b.*")) {
         // the metric engine forbids structural alters on physical tables
         // (alter/alter_physical_table.result)
@@ -1080,15 +1007,15 @@ private[sql] trait GraftDdl { self: GraftSession =>
         // a logical metric table keeps alphabetical column order and
         // propagates new tags onto the physical table
         logicalParent.get(name).foreach { phyName =>
-          colMeta.get(name).foreach(m => colMeta.put(name, m.sortBy(_.name)))
+          editMeta(name)(m => m.copy(colMeta = m.colMeta.sortBy(_.name)))
           val mySpec = catalog.spec(name)
           catalog.register(mySpec.copy(tags = mySpec.tags.sorted))
           val phySpec = catalog.spec(phyName)
           val newTags = mySpec.tags.filterNot(phySpec.tags.contains)
-            .filterNot(t => colMeta.getOrElse(phyName, Vector.empty).exists(_.name == t))
+            .filterNot(t => metaOf(phyName).colMeta.exists(_.name == t))
           if (newTags.nonEmpty) {
-            colMeta.put(phyName, colMeta.getOrElse(phyName, Vector.empty) ++
-              newTags.map(t => ColMeta(t, "String", nullable = true, None)))
+            editMeta(phyName)(m => m.copy(colMeta = m.colMeta ++
+              newTags.map(t => ColMeta(t, "String", nullable = true, None))))
             catalog.register(phySpec.copy(tags = (phySpec.tags ++ newTags).distinct))
             metricPhy.get(phyName).foreach(_.addedTags ++= newTags)
           }
@@ -1099,35 +1026,32 @@ private[sql] trait GraftDdl { self: GraftSession =>
         if (metricPhy.contains(name))
           throw new IllegalArgumentException(
             s"Not allowed to remove index column $colName from table $name")
-        droppedCols.put(name, droppedCols.getOrElse(name, Set.empty) + colName)
-        colMeta.get(name).foreach(m =>
-          colMeta.put(name, m.filterNot(_.name == colName)))
+        editMeta(name)(m => m.copy(droppedCols = m.droppedCols + colName,
+          colMeta = m.colMeta.filterNot(_.name == colName)))
       } else if (up.matches("(?s)^(MODIFY|CHANGE)\\s+COLUMN\\b.*")) {
         // comma-chained clauses each carry their own column + action
         splitTop(tail).foreach { clause =>
           val body = clause.trim.replaceAll("(?is)^(MODIFY|CHANGE)\\s+COLUMN\\s+", "").trim
           val bodyUp = body.toUpperCase(Locale.ROOT)
           val colName = unquote(body.takeWhile(!_.isWhitespace))
+          def editCol(f: ColMeta => ColMeta): Unit = editMeta(name)(m =>
+            m.copy(colMeta = m.colMeta.map(c => if (c.name == colName) f(c) else c)))
           if (bodyUp.contains("UNSET") && bodyUp.contains("INDEX")) {
-            colMeta.get(name).foreach(m => colMeta.put(name,
-              m.map(c => if (c.name == colName) c.copy(indexDecl = None) else c)))
+            editCol(_.copy(indexDecl = None))
           } else if (bodyUp.contains("SET") && bodyUp.contains("INDEX")) {
             // SET FULLTEXT/SKIPPING/INVERTED INDEX [WITH(...)]
             // (alter/change_col_fulltext_options.result)
-            colMeta.get(name).foreach(m => colMeta.put(name,
-              m.map(c => if (c.name == colName) c.copy(indexDecl = indexDeclOf(body)) else c)))
+            editCol(_.copy(indexDecl = indexDeclOf(body)))
           } else if (bodyUp.contains("SET DEFAULT")) {
             val d = body.replaceAll("(?is).*?SET\\s+DEFAULT\\s+", "").trim
-            colMeta.get(name).foreach(m => colMeta.put(name,
-              m.map(c => if (c.name == colName) c.copy(default = Some(d)) else c)))
+            editCol(_.copy(default = Some(d)))
           } else if (bodyUp.contains("DROP DEFAULT")) {
-            colMeta.get(name).foreach(m => colMeta.put(name,
-              m.map(c => if (c.name == colName) c.copy(default = None) else c)))
+            editCol(_.copy(default = None))
             // the resolved-at-DDL-time copy must go too, or DEFAULT
             // keywords keep resolving to the dropped value
             // (alter_table_alter_column_drop_default.result)
-            colDefaultResolved.put(name,
-              colDefaultResolved.getOrElse(name, Map.empty) - colName)
+            editMeta(name)(m =>
+              m.copy(colDefaultResolved = m.colDefaultResolved - colName))
           } else if (bodyUp.contains("INDEX")) {
             // bare index hints: no-op
           } else {
@@ -1150,7 +1074,7 @@ private[sql] trait GraftDdl { self: GraftSession =>
                 s"Not allowed to change timestamp index column '${ci.get.name}' datatype")
             // NOT NULL columns reject type changes
             // (alter/change_col_type_not_null.result)
-            if (colMeta.getOrElse(name, Vector.empty)
+            if (metaOf(name).colMeta
                 .find(_.name == ci.get.name).exists(!_.nullable))
               throw new IllegalArgumentException(
                 s"Invalid alter table($name) request: column '${ci.get.name}' " +
@@ -1170,21 +1094,18 @@ private[sql] trait GraftDdl { self: GraftSession =>
             // STRING once; every row casts original-type -> current at
             // read, selected by its write sequence.
             val cn = ci.get.name
-            val oldG = colMeta.getOrElse(name, Vector.empty)
+            val oldG = metaOf(name).colMeta
               .find(_.name == cn).map(_.gtype)
               .getOrElse(greptimeNameOf(ci.get.dataType))
             val newG = greptimeTypeName(typeTok)
             if (oldG != newG) {
-              if (!typeHistory.getOrElse(name, Map.empty).contains(cn))
+              if (!metaOf(name).typeHistory.contains(cn))
                 migrateParquet(spec)(df =>
                   df.withColumn(cn, col(s"`$cn`").cast("string")))
-              val hist = typeHistory.getOrElse(name, Map.empty)
-              typeHistory.put(name, hist +
-                (cn -> (hist.getOrElse(cn, Vector.empty) :+
-                  ((seqCounter.get(), oldG)))))
+              val written = (seqCounter.get(), oldG)
               // the declared default converts through the cast chain
               // (DESC pins 0.1 -> BOOLEAN -> INTEGER as 1)
-              val newDefault = colMeta.getOrElse(name, Vector.empty)
+              val newDefault = metaOf(name).colMeta
                 .find(_.name == cn).flatMap(_.default).flatMap { d =>
                   try {
                     val v = spark.sql(
@@ -1193,9 +1114,11 @@ private[sql] trait GraftDdl { self: GraftSession =>
                     Option(v).map(_.toString)
                   } catch { case _: Exception => Some(d) }
                 }
-              colMeta.get(name).foreach(m => colMeta.put(name, m.map(c =>
-                if (c.name == cn) c.copy(gtype = newG, default = newDefault) else c)))
-              colCasts.put(name, colCasts.getOrElse(name, Map.empty) - cn)
+              editMeta(name)(m => m.copy(
+                typeHistory = m.typeHistory +
+                  (cn -> (m.typeHistory.getOrElse(cn, Vector.empty) :+ written)),
+                colMeta = m.colMeta.map(c =>
+                  if (c.name == cn) c.copy(gtype = newG, default = newDefault) else c)))
             }
           }
         }
@@ -1210,12 +1133,7 @@ private[sql] trait GraftDdl { self: GraftSession =>
           throw new IllegalArgumentException(s"table $newName already exists")
         catalog.deregister(name)
         catalog.register(spec.copy(name = newName))
-        colMeta.remove(name).foreach(colMeta.put(newName, _))
-        droppedCols.remove(name).foreach(droppedCols.put(newName, _))
-        backfills.remove(name).foreach(backfills.put(newName, _))
-        colCasts.remove(name).foreach(colCasts.put(newName, _))
-        colDefaultResolved.remove(name).foreach(colDefaultResolved.put(newName, _))
-        tsLiteralUs.remove(name).foreach(tsLiteralUs.put(newName, _))
+        tableMeta.remove(name).foreach(tableMeta.put(newName, _))
         spark.catalog.dropTempView(name)
         refreshView(newName)
         return status(s"table $name renamed to $newName")
@@ -1258,8 +1176,7 @@ private[sql] trait GraftDdl { self: GraftSession =>
                   migrateParquet(cur)(Catalog.dedupLastRow(_, cur))
                 else migrateParquet(cur)(Catalog.dedupLastNonNull(_, cur))
                 // append tables carry no merge_mode option
-                tableOpts.put(name,
-                  tableOpts.getOrElse(name, Nil).filterNot(_._1 == "merge_mode"))
+                editOpts(_.filterNot(_._1 == "merge_mode"))
               }
               catalog.register(cur.copy(
                 mergeMode = if (toAppend) MergeMode.Append else MergeMode.LastRow))
@@ -1273,20 +1190,18 @@ private[sql] trait GraftDdl { self: GraftSession =>
                   "Invalid set table option request: Invalid set region " +
                     s"option request, key: skip_wal, value: ${v.getOrElse("")}")
               // rows written while the WAL was on stay restart-durable
-              durableSeq.put(name, seqCounter.get())
+              editMeta(name)(_.copy(durableSeq = seqCounter.get()))
             case _ => ()
           }
           val stored =
             if (key == "ttl" && v.isEmpty) Seq(key -> "forever") // SET ttl=NULL
             else v.map(key -> _).toSeq
-          tableOpts.put(name, tableOpts.getOrElse(name, Nil)
-            .filterNot(_._1 == key) ++ stored)
+          editOpts(_.filterNot(_._1 == key) ++ stored)
           // any compaction.twcs.* option implies the twcs strategy
           // (alter_table_options.result renders compaction.type = 'twcs')
-          if (key.startsWith("compaction.twcs.") &&
-            !tableOpts.getOrElse(name, Nil).exists(_._1 == "compaction.type"))
-            tableOpts.put(name,
-              tableOpts.getOrElse(name, Nil) :+ ("compaction.type" -> "twcs"))
+          if (key.startsWith("compaction.twcs."))
+            editOpts(o => if (o.exists(_._1 == "compaction.type")) o
+              else o :+ ("compaction.type" -> "twcs"))
         }
       } else if (up.startsWith("UNSET")) {
         "'([^']*)'".r.findFirstMatchIn(tail).foreach { m =>
@@ -1296,7 +1211,7 @@ private[sql] trait GraftDdl { self: GraftSession =>
               "Invalid unset table option request: Invalid set region " +
                 "option request, key: skip_wal")
           if (key == "ttl") catalog.register(spec.copy(ttlMillis = None))
-          tableOpts.put(name, tableOpts.getOrElse(name, Nil).filterNot(_._1 == key))
+          editOpts(_.filterNot(_._1 == key))
         }
       } else throw new IllegalArgumentException(s"cannot parse: $stmt")
       refreshView(name)
@@ -1358,9 +1273,9 @@ private[sql] trait GraftDdl { self: GraftSession =>
       .trim
     if (leftovers.nonEmpty)
       throw new IllegalArgumentException(s"cannot parse column def: $body")
-    val metas = colMeta.getOrElse(name, Vector.empty)
-    if (metas.exists(_.name == cd.name) &&
-      !droppedCols.getOrElse(name, Set.empty).contains(cd.name)) {
+    val metas = metaOf(name).colMeta
+    val wasDropped = metaOf(name).droppedCols.contains(cd.name)
+    if (metas.exists(_.name == cd.name) && !wasDropped) {
       if (ifNotExists) return
       throw new IllegalArgumentException(s"column ${cd.name} already exists")
     }
@@ -1370,10 +1285,10 @@ private[sql] trait GraftDdl { self: GraftSession =>
     // file under Spark's case-insensitive resolution — keep it as a
     // SHADOW column: declared metadata + default-valued in the view
     if (metas.exists(m => m.name.equalsIgnoreCase(cd.name) && m.name != cd.name)) {
-      shadowCols.put(name, shadowCols.getOrElse(name, Vector.empty) :+
-        ((cd.name, cd.default, cd.typeTok)))
-      colMeta.put(name, metas :+
-        ColMeta(cd.name, greptimeTypeName(cd.typeTok), cd.nullable, cd.default))
+      editMeta(name)(m => m.copy(
+        shadowCols = m.shadowCols :+ ((cd.name, cd.default, cd.typeTok)),
+        colMeta = metas :+
+          ColMeta(cd.name, greptimeTypeName(cd.typeTok), cd.nullable, cd.default)))
       if (cd.isPrimaryKey)
         catalog.register(spec.copy(tags = spec.tags :+ cd.name))
       refreshView(name)
@@ -1386,14 +1301,13 @@ private[sql] trait GraftDdl { self: GraftSession =>
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], widened)
         .write.mode("append").parquet(spec.path)
       refreshPath(spec.path)
-    } else if (droppedCols.getOrElse(name, Set.empty).contains(cd.name)) {
+    } else if (wasDropped) {
       // re-ADD of a DROPped column: the old values are gone in the
       // reference; purge them so only the new default shows
       // (alter/drop_add_col.result)
       migrateParquet(spec)(df =>
         df.withColumn(cd.name, lit(null).cast(t)))
     }
-    droppedCols.put(name, droppedCols.getOrElse(name, Set.empty) - cd.name)
     val meta = ColMeta(cd.name, greptimeTypeName(cd.typeTok), cd.nullable, cd.default)
     val withoutOld = metas.filterNot(_.name == cd.name)
     val placed =
@@ -1405,7 +1319,7 @@ private[sql] trait GraftDdl { self: GraftSession =>
           else (withoutOld.take(i + 1) :+ meta) ++ withoutOld.drop(i + 1)
         case None => withoutOld :+ meta
       }
-    colMeta.put(name, placed)
+    editMeta(name)(m => m.copy(colMeta = placed, droppedCols = m.droppedCols - cd.name))
     if (cd.isPrimaryKey)
       catalog.register(spec.copy(tags = spec.tags :+ cd.name))
     // rows written before this ALTER read the column default (reference
@@ -1413,11 +1327,12 @@ private[sql] trait GraftDdl { self: GraftSession =>
     // string defaults resolve against the session tz NOW, not at read.
     cd.default.foreach { d =>
       val resolved = resolveTsDefault(meta.gtype, d)
-      if (resolved != d)
-        colDefaultResolved.put(name,
-          colDefaultResolved.getOrElse(name, Map.empty) + (cd.name -> resolved))
-      backfills.put(name, backfills.getOrElse(name, Vector.empty) :+
-        ((cd.name, resolved, seqCounter.incrementAndGet())))
+      val seqAt = seqCounter.incrementAndGet()
+      editMeta(name)(m => m.copy(
+        colDefaultResolved =
+          if (resolved != d) m.colDefaultResolved + (cd.name -> resolved)
+          else m.colDefaultResolved,
+        backfills = m.backfills :+ ((cd.name, resolved, seqAt))))
     }
   }
 
@@ -1466,8 +1381,6 @@ private[sql] trait GraftDdl { self: GraftSession =>
         ps.childIds.remove(name)
       }
     }
-    tableEngine.remove(name)
-    partitionClause.remove(name)
     // flows bound to this incarnation stop refreshing (flow_rebuild)
     tableEpoch.put(name, tableEpoch.getOrElse(name, 0L) + 1L)
     spark.catalog.dropTempView(name)
@@ -1480,20 +1393,10 @@ private[sql] trait GraftDdl { self: GraftSession =>
         refreshPath(spec.path)
       }
     }
-    // a re-CREATE of the same name must not see stale column metadata
+    // a re-CREATE of the same name must not see stale metadata
     // (alter/change_col_type: leftover MODIFY casts broke the new table)
-    droppedCols.remove(name)
-    colMeta.remove(name)
-    colCasts.remove(name)
-    j2Hints.remove(name)
-    j2Boundaries.remove(name)
-    shadowCols.remove(name)
+    tableMeta.remove(name)
     sstFiles.filterInPlace(_.table != name)
-    sstFlushSeq.remove(name)
-    colDefaultResolved.remove(name)
-    backfills.remove(name)
-    tsLiteralUs.remove(name)
-    tableOpts.remove(name)
     // a logical metric table's physical view unions its children's
     // files — rebuild AFTER this table's parquet is gone so a later
     // scan doesn't chase deleted part files

@@ -435,7 +435,7 @@ private[sql] trait GraftDialect { self: GraftSession =>
       val isTs = scala.util.Try(spark.table(t).schema(ti).dataType).toOption
         .exists(d => d == TimestampType || d == TimestampNTZType)
       if (isTs) {
-        val us = tsLiteralUs.getOrElse(t, 1000L)
+        val us = metaOf(t).tsLiteralUs
         val conv = (n: String) =>
           if (us > 0) s"TIMESTAMP_MICROS($n * $us)"
           else s"TIMESTAMP_MICROS($n div 1000)"
@@ -468,9 +468,9 @@ private[sql] trait GraftDialect { self: GraftSession =>
     // __nsq_ view that exposes the remainder.
     {
       val nsTabs = fromClauseTables(r).filter(t =>
-        nsRemainderTables.contains(t) && catalog.tables.contains(t))
+        metaOf(t).nsRemainder && catalog.tables.contains(t))
       for (t <- nsTabs) {
-        val nsCols = colMeta.getOrElse(t, Vector.empty)
+        val nsCols = metaOf(t).colMeta
           .filter(_.gtype == "TimestampNanosecond").map(_.name)
         // comparisons vs datetime string literals: lexicographic
         // (µs, remainder) pair compare — `ts = '….000000195'` must hit
@@ -503,7 +503,7 @@ private[sql] trait GraftDialect { self: GraftSession =>
         // SELECT * over a remainder table: expand to the declared list
         // so the hidden companion stays hidden and the ns column renders
         // at 9 digits
-        val collist = colMeta.getOrElse(t, Vector.empty).map { cm =>
+        val collist = metaOf(t).colMeta.map { cm =>
           if (cm.gtype == "TimestampNanosecond")
             s"__ns_render(`${cm.name}`, `__nsr_${cm.name}`) AS `${cm.name}`"
           else s"`${cm.name}`"
@@ -559,7 +559,7 @@ private[sql] trait GraftDialect { self: GraftSession =>
     // `select j.a.b + 1` renders integers, non-numeric leaves → null)
     {
       val j2cols: Seq[String] = fromClauseTables(r).toSeq
-        .flatMap(t => colMeta.getOrElse(t, Vector.empty)
+        .flatMap(t => metaOf(t).colMeta
           .filter(_.gtype == "Json2").map(_.name)).distinct
       for (c <- j2cols) {
         val qc = java.util.regex.Pattern.quote(c)
@@ -580,7 +580,7 @@ private[sql] trait GraftDialect { self: GraftSession =>
     // TIMESTAMP(3) column excludes the .000 row)
     {
       val tsCols: Set[String] = fromClauseTables(r).flatMap(t =>
-        colMeta.getOrElse(t, Vector.empty)
+        metaOf(t).colMeta
           .filter(cm => cm.gtype.startsWith("Timestamp") &&
             cm.gtype != "TimestampNanosecond")
           .map(_.name)).toSet
@@ -694,7 +694,7 @@ private[sql] trait GraftDialect { self: GraftSession =>
             val lenient = "(?i)json_get\\s*\\(\\s*`?([A-Za-z_][A-Za-z0-9_]*)`?".r
               .findFirstMatchIn(operand).exists(mm =>
                 fromClauseTables(rr).exists(tb =>
-                  colMeta.getOrElse(tb, Vector.empty).exists(cm =>
+                  metaOf(tb).colMeta.exists(cm =>
                     cm.name.equalsIgnoreCase(mm.group(1)) && cm.gtype == "Json2")))
             val raw = "(?i)\\bjson_get\\s*\\(".r
               .replaceAllIn(operand, "__json_get_raw(")
@@ -783,9 +783,8 @@ private[sql] trait GraftDialect { self: GraftSession =>
           else if (typeTok.trim.equalsIgnoreCase("TIME")) {
             val op = operand.trim.stripPrefix("`").stripSuffix("`")
             val isNsCol = op.matches("[A-Za-z_][A-Za-z0-9_]*") && {
-              import scala.jdk.CollectionConverters._
-              nsRemainderTables.asScala.exists(t =>
-                colMeta.getOrElse(t, Vector.empty).exists(cm =>
+              tableMeta.values.exists(m => m.nsRemainder &&
+                m.colMeta.exists(cm =>
                   cm.name == op && cm.gtype == "TimestampNanosecond"))
             }
             if (isNsCol)
@@ -1213,7 +1212,7 @@ private[sql] trait GraftDialect { self: GraftSession =>
     if (cmp.findFirstIn(s).isEmpty) return s
     val fromTable = "(?is)\\bFROM\\s+([A-Za-z_][A-Za-z0-9_]*)".r
       .findFirstMatchIn(s).map(_.group(1))
-    val usPerUnit = fromTable.flatMap(tsLiteralUs.get).getOrElse(1000L)
+    val usPerUnit = fromTable.map(metaOf(_).tsLiteralUs).getOrElse(1000L)
     // derived column list `FROM v1 t1(x)` (view/view.sql): the renamed
     // columns map positionally onto the relation's schema
     val aliasTypes: Map[String, DataType] =

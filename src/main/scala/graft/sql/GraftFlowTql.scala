@@ -157,10 +157,6 @@ private[sql] trait GraftFlowTql { self: GraftSession =>
   /** DDL procedure log for information_schema.procedure_info */
   private[sql] val procedureLog =
     scala.collection.mutable.ListBuffer.empty[(String, String)]
-  /** case-collision shadow columns: (name, default, typeTok) per table —
-    * declared but not parquet-materialized (alter/add_col.sql "IdC") */
-  private[sql] val shadowCols =
-    scala.collection.concurrent.TrieMap.empty[String, Vector[(String, Option[String], String)]]
   /** per-table generation counter: DROP TABLE bumps it, so a flow bound
     * to the old incarnation stops refreshing (flow_rebuild.result pins
     * that a re-created source is "a different table" to the flow) */
@@ -502,7 +498,7 @@ private[sql] trait GraftFlowTql { self: GraftSession =>
       // sink: align by NAME, flow_tql_avg.result)
       val finalNames =
         if (preExisting) {
-          val declared = colMeta.getOrElse(sinkName, Vector.empty).map(_.name)
+          val declared = metaOf(sinkName).colMeta.map(_.name)
           if (names.length > declared.length)
             throw new IllegalArgumentException(
               s"flow $name: ${names.length} outputs exceed sink $sinkName's " +
@@ -514,7 +510,7 @@ private[sql] trait GraftFlowTql { self: GraftSession =>
             // columns with a declared default (and the engine's own
             // update_at/placeholder) are fillable — only a defaultless
             // uncovered column demands per-column merge
-            val defaulted = colMeta.getOrElse(sinkName, Vector.empty)
+            val defaulted = metaOf(sinkName).colMeta
               .filter(_.default.isDefined).map(_.name).toSet
             val missing = declared.toSet -- names.toSet -- defaulted -
               "update_at" - "__ts_placeholder"
@@ -528,7 +524,7 @@ private[sql] trait GraftFlowTql { self: GraftSession =>
             // positional mapping must be type-sound: a numeric output
             // cannot land in a timestamp column (show_create_flow's
             // n1,n2 → (number, ts) replace errors in the reference)
-            val declMeta = colMeta.getOrElse(sinkName, Vector.empty)
+            val declMeta = metaOf(sinkName).colMeta
             names.zip(qdf.schema.fields).zipWithIndex.foreach {
               case ((_, f), i) =>
                 val declTs = declMeta.lift(i)
@@ -969,9 +965,9 @@ private[sql] trait GraftFlowTql { self: GraftSession =>
         table match {
           case Some(t) =>
             val spec = catalog.spec(t)
-            val declared = colMeta.get(t).map(_.map(_.name))
+            val declared = declaredCols(t).map(_.map(_.name))
               .getOrElse(spark.table(t).columns.toVector)
-              .filterNot(droppedCols.getOrElse(t, Set.empty))
+              .filterNot(metaOf(t).droppedCols)
             def toCol(c: String): Option[org.apache.spark.sql.Column] =
               if (c == spec.timeIndex) Some(ts)
               else if (labels.contains(c)) Some(lcol(c))
@@ -983,7 +979,7 @@ private[sql] trait GraftFlowTql { self: GraftSession =>
             val extra = labels.filterNot(declared.contains).sorted.map(lcol)
             // non-ms time index is cast by the planner, which moves the
             // ts column to the end: [fields, tags, ts]
-            (if (tsLiteralUs.get(t).exists(_ != 1000L))
+            (if (metaOf(t).tsLiteralUs != 1000L)
               (declared.filterNot(c => c == spec.timeIndex || spec.tags.contains(c))
                 .flatMap(toCol) ++
                 declared.filter(spec.tags.contains).flatMap(toCol)) :+ ts

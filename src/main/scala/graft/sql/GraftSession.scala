@@ -87,16 +87,23 @@ final class GraftSession(spark0: SparkSession,
     .createOrReplaceTempView("numbers")
 
   // ---- databases (catalog/src/schema; USE swaps the visible tables) --
-  /** Per-database saved table state: specs + session metadata, swapped
-    * wholesale on USE. */
-  private[sql] case class DbState(
-      specs: Map[String, TableSpec],
-      meta: Map[String, Vector[ColMeta]],
-      dropped: Map[String, Set[String]],
-      bfills: Map[String, Vector[(String, String, Long)]],
-      casts: Map[String, Map[String, DataType]],
-      tsUs: Map[String, Long],
-      opts: Map[String, Seq[(String, String)]])
+  /** Per-database saved table state: the specs and the metadata
+    * records, swapped wholesale on USE. */
+  private[sql] case class DbState(specs: Map[String, TableSpec],
+      meta: Map[String, TableMeta])
+  private val EmptyDb = DbState(Map.empty, Map.empty)
+  /** The current database's per-table metadata records, by table name. */
+  private[sql] val tableMeta = scala.collection.concurrent.TrieMap.empty[String, TableMeta]
+  private[sql] def metaOf(t: String): TableMeta = tableMeta.getOrElse(t, TableMeta.Empty)
+  /** Table `t`'s record in database `db`, current or saved. */
+  private[sql] def metaIn(db: String, t: String): TableMeta =
+    if (db == currentDb) metaOf(t)
+    else dbSaved.get(db).flatMap(_.meta.get(t)).getOrElse(TableMeta.Empty)
+  private[sql] def editMeta(t: String)(f: TableMeta => TableMeta): Unit =
+    tableMeta.put(t, f(metaOf(t)))
+  /** Declared columns, or None for a table registered without DDL. */
+  private[sql] def declaredCols(t: String): Option[Vector[ColMeta]] =
+    Some(metaOf(t).colMeta).filter(_.nonEmpty)
   private[sql] val dbOpts =
     scala.collection.concurrent.TrieMap[String, Seq[(String, String)]]("public" -> Nil)
   private[sql] val dbSaved = scala.collection.concurrent.TrieMap.empty[String, DbState]
@@ -150,9 +157,9 @@ final class GraftSession(spark0: SparkSession,
     else if (up.startsWith("DROP TABLE")) {
       val tgt = normTable(stmt.split("\\s+")
         .filterNot(t => t.equalsIgnoreCase("IF") || t.equalsIgnoreCase("EXISTS")).last)
-      if (externalTables.contains(tgt)) {
+      if (metaOf(tgt).external) {
         spark.catalog.dropTempView(tgt)
-        externalTables -= tgt
+        tableMeta.remove(tgt)
         status("table dropped")
       } else dropTable(stmt)
     }
@@ -292,7 +299,7 @@ final class GraftSession(spark0: SparkSession,
             case x => Some(parseTtlMs(x))
           }
           catalog.tables.foreach { t =>
-            if (!tableOpts.getOrElse(t, Nil).exists(_._1 == "ttl")) {
+            if (!metaOf(t).tableOpts.exists(_._1 == "ttl")) {
               catalog.register(catalog.spec(t).copy(ttlMillis = ms))
               refreshView(t)
             }
@@ -424,7 +431,7 @@ final class GraftSession(spark0: SparkSession,
       val t = normTable(m.group(1))
       if (!catalog.tables.contains(t))
         throw new IllegalArgumentException(s"Table not found: $t")
-      val n = partitionClause.get(t).map(_._2.size).getOrElse(1).max(1)
+      val n = metaOf(t).partitionClause.map(_._2.size).getOrElse(1).max(1)
       val df = (0 until n).map(i => (t, 4398046511104L + i, 0, "Yes"))
         .toDF("Table", "Region", "Peer", "Leader")
       Option(m.group(2)).map(w => df.where(w.trim.stripSuffix(";"))).getOrElse(df)
@@ -847,7 +854,7 @@ final class GraftSession(spark0: SparkSession,
         val sinkP = new org.apache.hadoop.fs.Path(spec.path)
         val sinkFs = sinkP.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val target: StructType = {
-          val declared = colMeta.getOrElse(meta.sinkTable, Vector.empty)
+          val declared = metaOf(meta.sinkTable).colMeta
           if (sinkFs.exists(sinkP) && sinkFs.listStatus(sinkP).nonEmpty) {
             val phys = graft.model.Catalog.schemaOf(spark, spec.path)
             // ALTER ADD COLUMN on the sink may exist only as declared
@@ -865,7 +872,7 @@ final class GraftSession(spark0: SparkSession,
         // a sink column the flow doesn't produce takes its DECLARED
         // default (show_create_flow: ts DEFAULT CURRENT_TIMESTAMP gives
         // each appended batch a distinct ts), else null
-        val sinkDefaults = colMeta.getOrElse(meta.sinkTable, Vector.empty)
+        val sinkDefaults = metaOf(meta.sinkTable).colMeta
           .flatMap(m => m.default.map(m.name -> _)).toMap
         val aligned = out.select(target.map(f =>
           (if (out.columns.contains(f.name)) col(s"`${f.name}`")
@@ -1029,26 +1036,13 @@ final class GraftSession(spark0: SparkSession,
     scala.collection.concurrent.TrieMap.empty[String, PhyState]
   private[sql] val logicalParent =
     scala.collection.concurrent.TrieMap.empty[String, String]
-  /** Table engine when not mito (metric; numbers' test_engine is
-    * hardcoded in refreshInfoSchema). */
-  private[sql] val tableEngine =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  /** PARTITION ON COLUMNS (cols) (rules) clause, normalized. */
-  private[sql] val partitionClause =
-    scala.collection.concurrent.TrieMap.empty[String, (Seq[String], Seq[String])]
-
-  /** WITH-option keys the user single-quoted (SHOW CREATE echoes the
-    * original quoting). */
-  private[sql] val quotedOptNames =
-    scala.collection.concurrent.TrieMap.empty[String, Set[String]]
-
   private def showCreateTable(name: String): DataFrame = {
     import spark.implicits._
     val spec = catalog.spec(name)
-    val metas = colMeta.getOrElse(name, Vector.empty)
-      .filterNot(m => droppedCols.getOrElse(name, Set.empty).contains(m.name))
+    val meta = metaOf(name)
+    val metas = meta.colMeta.filterNot(m => meta.droppedCols.contains(m.name))
     val colLines: Vector[Vector[String]] = metas.map { m =>
-      val hinted = j2Hints.getOrElse(name, Map.empty).get(m.name)
+      val hinted = meta.j2Hints.get(m.name)
         .filter(_ => m.gtype == "Json2")
       val base = hinted match {
         case Some(_) => s"""  "${m.name}" JSON2("""
@@ -1096,7 +1090,7 @@ final class GraftSession(spark0: SparkSession,
       if (i < innerBlocks.size - 1) block.init :+ (block.last + ",")
       else block
     }
-    val own = tableOpts.getOrElse(name, Nil)
+    val own = meta.tableOpts
     // a db-level ttl shows as an (inherited) table option; the WITH
     // block renders sorted by key (create/create_database_opts.result)
     val effective = (if (own.exists(_._1 == "ttl")) own
@@ -1120,7 +1114,7 @@ final class GraftSession(spark0: SparkSession,
         val key =
           if (bareKeys(k)) k
           else if (k.matches("[A-Za-z_][A-Za-z0-9_]*") &&
-            !quotedOptNames.getOrElse(name, Set.empty).contains(k)) k
+            !meta.quotedOptNames.contains(k)) k
           else s"'$k'"
         val ev0 = (if (k == "ttl") humanDuration(v) else v)
           .replace("\\", "\\\\") // backslashes render escaped (CJK comment golden)
@@ -1134,10 +1128,10 @@ final class GraftSession(spark0: SparkSession,
     // golden shape: ")", partition clause (or blank slot), ENGINE=<e>,
     // then the WITH block or a trailing blank. Logical metric tables
     // render their physical table's partition clause.
-    val engineLabel = "ENGINE=" + tableEngine.getOrElse(name, "mito")
+    val engineLabel = "ENGINE=" + meta.tableEngine
     val partLines: Vector[String] =
-      logicalParent.get(name).flatMap(partitionClause.get)
-        .orElse(partitionClause.get(name))
+      logicalParent.get(name).flatMap(metaOf(_).partitionClause)
+        .orElse(meta.partitionClause)
         .filter(_._2.nonEmpty)
         .map { case (cols, rules) =>
           (s"PARTITION ON COLUMNS (${cols.map(c => s""""$c"""").mkString(", ")}) (" +:
@@ -1186,8 +1180,8 @@ final class GraftSession(spark0: SparkSession,
   private def showCreateForeignTable(name: String): DataFrame = {
     import spark.implicits._
     val spec = catalog.spec(name)
-    val metas = colMeta.getOrElse(name, Vector.empty)
-      .filterNot(m => droppedCols.getOrElse(name, Set.empty).contains(m.name))
+    val meta = metaOf(name)
+    val metas = meta.colMeta.filterNot(m => meta.droppedCols(m.name))
     def pgType(g: String): String = g match {
       case "Int8" | "Int16" | "UInt8" => "INT2"
       case "Int32" | "UInt16" | "UInt32" => "INT4"
@@ -1293,17 +1287,25 @@ final class GraftSession(spark0: SparkSession,
       opts.find(_._1 == "ttl").map(_._2).filter(_.nonEmpty)
         .filterNot(v => v == "instant" || v == "forever").foreach(parseTtlMs)
       dbOpts.put(name, opts)
-      dbSaved.put(name, DbState(Map.empty, Map.empty, Map.empty, Map.empty,
-        Map.empty, Map.empty, Map.empty))
+      dbSaved.put(name, EmptyDb)
       status(s"database $name created")
     case _ => throw new IllegalArgumentException(s"cannot parse: $stmt")
   }
 
-  private def saveCurrentDb(): Unit = {
+  private def saveCurrentDb(): Unit =
     dbSaved.put(currentDb, DbState(
-      catalog.tables.map(t => t -> catalog.spec(t)).toMap,
-      colMeta.toMap, droppedCols.toMap, backfills.toMap, colCasts.toMap,
-      tsLiteralUs.toMap, tableOpts.toMap))
+      catalog.tables.map(t => t -> catalog.spec(t)).toMap, tableMeta.toMap))
+
+  /** Replace the visible tables and their records with `st`'s. */
+  private def loadDb(st: DbState): Unit = {
+    catalog.tables.foreach { t =>
+      spark.catalog.dropTempView(t)
+      catalog.deregister(t)
+    }
+    tableMeta.clear()
+    tableMeta ++= st.meta
+    st.specs.values.foreach(catalog.register)
+    st.specs.keys.foreach(t => refreshView(t))
   }
 
   private def useDatabase(name0: String): DataFrame = {
@@ -1315,23 +1317,12 @@ final class GraftSession(spark0: SparkSession,
         .find(_.equalsIgnoreCase(name0)).getOrElse(name0)
     if (name != currentDb) {
       val target = dbSaved.getOrElse(name,
-        if (name == "public") DbState(Map.empty, Map.empty, Map.empty,
-          Map.empty, Map.empty, Map.empty, Map.empty)
+        if (name == "public") EmptyDb
         else throw new IllegalArgumentException(s"database $name not found"))
       if (!dbOpts.contains(name) && name != "public")
         throw new IllegalArgumentException(s"database $name not found")
       saveCurrentDb()
-      catalog.tables.foreach { t =>
-        spark.catalog.dropTempView(t)
-        catalog.deregister(t)
-      }
-      colMeta.clear(); droppedCols.clear(); backfills.clear()
-      colCasts.clear(); tsLiteralUs.clear(); tableOpts.clear()
-      target.specs.values.foreach(catalog.register)
-      colMeta ++= target.meta; droppedCols ++= target.dropped
-      backfills ++= target.bfills; colCasts ++= target.casts
-      tsLiteralUs ++= target.tsUs; tableOpts ++= target.opts
-      target.specs.keys.foreach(t => refreshView(t))
+      loadDb(target)
       currentDb = name
     }
     status(s"using $name")
@@ -1342,19 +1333,8 @@ final class GraftSession(spark0: SparkSession,
       .filterNot(t => t.equalsIgnoreCase("IF") || t.equalsIgnoreCase("EXISTS"))
       .last.stripPrefix("'").stripSuffix("'"))
     if (name == currentDb) {
-      catalog.tables.foreach { t =>
-        spark.catalog.dropTempView(t); catalog.deregister(t)
-      }
-      colMeta.clear(); droppedCols.clear(); backfills.clear()
-      colCasts.clear(); tsLiteralUs.clear(); tableOpts.clear()
       currentDb = "public"
-      dbSaved.get("public").foreach { s =>
-        s.specs.values.foreach(catalog.register)
-        colMeta ++= s.meta; droppedCols ++= s.dropped
-        backfills ++= s.bfills; colCasts ++= s.casts
-        tsLiteralUs ++= s.tsUs; tableOpts ++= s.opts
-        s.specs.keys.foreach(t => refreshView(t))
-      }
+      loadDb(dbSaved.getOrElse("public", EmptyDb))
     }
     // per-schema mangled tables/views of the dropped db go away too
     // (select/multi_column_ref.sql's DROP SCHEMA)
@@ -1362,7 +1342,7 @@ final class GraftSession(spark0: SparkSession,
     catalog.tables.filter(_.startsWith(prefix)).foreach { t =>
       spark.catalog.dropTempView(t)
       catalog.deregister(t)
-      colMeta.remove(t); tableOpts.remove(t)
+      tableMeta.remove(t)
     }
     userViews.filter(_.startsWith(prefix)).foreach { v =>
       spark.catalog.dropTempView(v); userViews -= v; userViewDefs -= v
@@ -1400,7 +1380,7 @@ final class GraftSession(spark0: SparkSession,
     * both against the same inventory). */
   private[sql] def indexRowsOf(t: String): Seq[(String, Int, String, Int, String, String, String)] = {
     val spec = catalog.spec(t)
-    val metas = colMeta.getOrElse(t, Vector.empty)
+    val metas = metaOf(t).colMeta
     def nullCell(c: String): String =
       if (c == spec.timeIndex) ""
       else if (metas.find(_.name == c).forall(_.nullable)) "YES" else ""
@@ -1453,8 +1433,8 @@ final class GraftSession(spark0: SparkSession,
           return empty.limit(0)
         }
         val spec = catalog.spec(name)
-        val dropped = droppedCols.getOrElse(name, Set.empty)
-        val metas = colMeta.getOrElse(name,
+        val dropped = metaOf(name).droppedCols
+        val metas = declaredCols(name).getOrElse(
           graft.model.Catalog.schemaOf(spark, spec.path)
             .filterNot(f => f.name == SeqCol)
             .map(f => ColMeta(f.name, greptimeNameOf(f.dataType), f.nullable, None, None))
@@ -1500,8 +1480,8 @@ final class GraftSession(spark0: SparkSession,
   private[sql] def describeTable(name: String): DataFrame = {
     import spark.implicits._
     val spec = catalog.spec(name)
-    val dropped = droppedCols.getOrElse(name, Set.empty)
-    val rows: Seq[(String, String, Boolean)] = colMeta.get(name) match {
+    val dropped = metaOf(name).droppedCols
+    val rows: Seq[(String, String, Boolean)] = declaredCols(name) match {
       case Some(metas) =>
         metas.filterNot(m => dropped.contains(m.name))
           .map(m => (m.name, m.gtype,
@@ -1512,7 +1492,7 @@ final class GraftSession(spark0: SparkSession,
           .map(f => (f.name, greptimeNameOf(f.dataType),
             f.nullable && f.name != spec.timeIndex))
     }
-    val defaults = colMeta.getOrElse(name, Vector.empty)
+    val defaults = metaOf(name).colMeta
       .map(m => m.name -> m.default).toMap
     // a metric physical table that ever hosted a logical table exposes
     // the reserved __table_id/__tsid tags between its declared columns
@@ -1576,11 +1556,11 @@ final class GraftSession(spark0: SparkSession,
       cols: Seq[String]): String = {
     if (!body.trim.toUpperCase(Locale.ROOT).startsWith("VALUES") ||
       !"(?i)\\bDEFAULT\\b".r.findFirstIn(body).isDefined) return body
-    val resolved = colDefaultResolved.getOrElse(table, Map.empty)
-    val defaults = colMeta.getOrElse(table, Vector.empty)
-      .map(m => m.name -> resolved.get(m.name).orElse(m.default)).toMap
+    val meta = metaOf(table)
+    val metas = meta.colMeta
+    val defaults = metas
+      .map(m => m.name -> meta.colDefaultResolved.get(m.name).orElse(m.default)).toMap
     val ti = scala.util.Try(catalog.spec(table).timeIndex).toOption
-    val metas = colMeta.getOrElse(table, Vector.empty)
     val tuples = splitTop(body.trim.substring("VALUES".length)).map { t0 =>
       val t = t0.trim
       if (!t.startsWith("(")) t
@@ -1616,15 +1596,15 @@ final class GraftSession(spark0: SparkSession,
         .getOrElse {
           // positional VALUES follow the declared (FIRST/AFTER-adjusted)
           // column order, not the physical parquet order
-          val dropped = droppedCols.getOrElse(name, Set.empty)
-          colMeta.get(name).map(_.map(_.name).filterNot(dropped.contains))
+          val dropped = metaOf(name).droppedCols
+          declaredCols(name).map(_.map(_.name).filterNot(dropped))
             .filter(_.nonEmpty)
             .getOrElse(target.map(_.name).toSeq.filterNot(_ == SeqCol))
         }
       // omitting the time index without a default is rejected
       // (insert/logical_metric_table.result t_default)
       if (!cols.exists(_.equalsIgnoreCase(spec.timeIndex)) &&
-        !colMeta.getOrElse(name, Vector.empty)
+        !metaOf(name).colMeta
           .find(_.name == spec.timeIndex).exists(_.default.isDefined))
         throw new IllegalArgumentException(
           s"Invalid request for region, reason: missing required time index column ${spec.timeIndex}")
@@ -1636,7 +1616,7 @@ final class GraftSession(spark0: SparkSession,
       // the ns-fidelity read path (rewrites in dialect())
       if (target.exists(_.name.startsWith("__nsr_")) &&
           "[.]\\d{6}\\d*[1-9]".r.findFirstIn(cleanBody).isDefined)
-        nsRemainderTables.add(name)
+        editMeta(name)(_.copy(nsRemainder = true))
       if (cleanBody.toUpperCase(Locale.ROOT).startsWith("VALUES"))
         splitTop(cleanBody.substring("VALUES".length)).map(_.trim)
           .filter(_.startsWith("(")).foreach { t =>
@@ -1659,7 +1639,7 @@ final class GraftSession(spark0: SparkSession,
         val tuples = splitTop(valuesBody.trim.substring("VALUES".length)).map(_.trim)
         if (tuples.isEmpty || !tuples.forall(_.startsWith("("))) return valuesBody
         val cells = tuples.map(t => splitTop(t.stripPrefix("(").stripSuffix(")")))
-        val us = tsLiteralUs.getOrElse(name, 1000L)
+        val us = metaOf(name).tsLiteralUs
         def isNum(t: String) = t.matches("-?\\d+")
         def isStr(t: String) = t.startsWith("'") && t.endsWith("'")
         val needCoerce = tsIdx.filter { i =>
@@ -1689,7 +1669,7 @@ final class GraftSession(spark0: SparkSession,
       // JSON2 type hints validate + materialize defaults at write time
       // (types/json/json2_type_hints.sql); eager so a violation aborts
       // the statement with the reference's message
-      j2Hints.getOrElse(name, Map.empty).foreach { case (c, hs) =>
+      metaOf(name).j2Hints.foreach { case (c, hs) =>
         if (cols.contains(c)) {
           val hintSpec = j2HintSpecJson(hs)
           df = df.withColumn(c,
@@ -1709,9 +1689,9 @@ final class GraftSession(spark0: SparkSession,
       // into INT errors and the companion '16' row must not land)
       // type-changed columns store as STRING but validate/convert
       // against the CURRENT logical type (typeHistory semantics)
-      val histCols = typeHistory.getOrElse(name, Map.empty).keySet
+      val histCols = metaOf(name).typeHistory.keySet
       def curTypeOf(c: String): DataType = sparkType(showCreateType(
-        colMeta.getOrElse(name, Vector.empty).find(_.name == c)
+        metaOf(name).colMeta.find(_.name == c)
           .map(_.gtype).getOrElse("String")))
       val badCast = target.filter(f => cols.contains(f.name)).flatMap { f =>
         val srcType = df.schema(f.name).dataType
@@ -1811,7 +1791,7 @@ final class GraftSession(spark0: SparkSession,
           if (isTs && (numericTypes.contains(srcType) ||
               srcType == DoubleType || srcType == FloatType ||
               srcType.isInstanceOf[DecimalType])) {
-            val us = tsLiteralUs.getOrElse(name, 1000L)
+            val us = metaOf(name).tsLiteralUs
             val micros =
               // exact when in range; saturate instead of ANSI-overflowing
               // (types/string/scan_big_varchar.sql multiplies epoch
@@ -1832,7 +1812,7 @@ final class GraftSession(spark0: SparkSession,
             // numeric strings follow the same epoch convention
             // (insert/mysql_insert.result: '3' -> 00:00:00.003);
             // non-numeric strings parse as datetimes
-            val us = tsLiteralUs.getOrElse(name, 1000L)
+            val us = metaOf(name).tsLiteralUs
             val asNum = expr(s"try_cast(`${f.name}` AS BIGINT)")
             val micros =
               if (us > 0) asNum * lit(us) else expr(s"try_cast(`${f.name}` AS BIGINT) div 1000")
@@ -1852,8 +1832,8 @@ final class GraftSession(spark0: SparkSession,
         } else {
           // unspecified column: declared DEFAULT, else null
           // (datatypes/src/schema/constraint.rs)
-          val d = colDefaultResolved.getOrElse(name, Map.empty).get(f.name)
-            .orElse(colMeta.getOrElse(name, Vector.empty)
+          val d = metaOf(name).colDefaultResolved.get(f.name)
+            .orElse(metaOf(name).colMeta
               .find(_.name == f.name).flatMap(_.default))
           val isTs = f.dataType == TimestampType || f.dataType == TimestampNTZType
           d.map { x =>
@@ -1885,7 +1865,7 @@ final class GraftSession(spark0: SparkSession,
       // values truncate to the column's declared precision on write
       // (timestamp_precision_display.result: a TIMESTAMP(0) column
       // drops sub-second input; (3) drops sub-millisecond)
-      val gtypeOf = colMeta.getOrElse(name, Vector.empty)
+      val gtypeOf = metaOf(name).colMeta
         .map(c => c.name -> c.gtype).toMap
       val alignedP = target.zip(aligned).map { case (f, c) =>
         if (f.dataType == TimestampType || f.dataType == TimestampNTZType)
@@ -1951,7 +1931,7 @@ final class GraftSession(spark0: SparkSession,
       // integer literals compared against the time index are epoch
       // units of the column's precision (TypeConversionRule)
       val condSql = Option(condOpt).map { c0 =>
-        val us = tsLiteralUs.getOrElse(name, 1000L)
+        val us = metaOf(name).tsLiteralUs
         val ti = java.util.regex.Pattern.quote(spec.timeIndex)
         c0.replaceAll(
           s"(?i)\\b($ti)\\s*(=|!=|<>|<=|>=|<|>)\\s*(\\d+)\\b",
@@ -2078,7 +2058,7 @@ final class GraftSession(spark0: SparkSession,
     val src0 = graft.sources.Copy.importFiles(spark, files, copyWriteOpts(opts))
     val srcCols = src0.schema.fields.map(f => f.name.toLowerCase(Locale.ROOT) -> f.name).toMap
     val target = graft.model.Catalog.schemaOf(spark, spec.path)
-    val metas = colMeta.getOrElse(name, Vector.empty)
+    val metas = metaOf(name).colMeta
     val seq = seqCounter.incrementAndGet()
     val aligned = target.map { f =>
       if (f.name == SeqCol) lit(seq).cast(f.dataType).as(f.name)
@@ -2094,7 +2074,7 @@ final class GraftSession(spark0: SparkSession,
               .cast(f.dataType).as(f.name)
           else col(s"`$srcName`").cast(f.dataType).as(f.name)
         case None =>
-          val d = colDefaultResolved.getOrElse(name, Map.empty).get(f.name)
+          val d = metaOf(name).colDefaultResolved.get(f.name)
             .orElse(metas.find(_.name == f.name).flatMap(_.default))
           val isTs = f.dataType == TimestampType || f.dataType == TimestampNTZType
           d.map { x =>
@@ -2127,7 +2107,6 @@ final class GraftSession(spark0: SparkSession,
     * standalone/local_file_access.result). Schema is inferred from the
     * files; an explicit column list is accepted and used as-declared
     * names only (the file carries the types). */
-  private val externalTables = scala.collection.mutable.Set.empty[String]
   private val CreateExtRx =
     ("(?is)CREATE\\s+EXTERNAL\\s+TABLE\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?" +
       "(\"[^\"]+\"|`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)\\s*" +
@@ -2143,7 +2122,7 @@ final class GraftSession(spark0: SparkSession,
       if (fmt == "csv")
         r = r.option("header", "true").option("inferSchema", "true")
       r.load(loc).createOrReplaceTempView(name)
-      externalTables += name
+      editMeta(name)(_.copy(external = true))
       status("external table created")
     case _ => throw new IllegalArgumentException(
       s"cannot parse CREATE EXTERNAL TABLE: $stmt")
@@ -2166,22 +2145,23 @@ final class GraftSession(spark0: SparkSession,
           if (!catalog.tables.contains(t))
             throw new IllegalArgumentException(
               s"Table not found: greptime.$currentDb.$t")
-          val rest = tableOpts.getOrElse(t, Nil).filterNot(_._1 == "comment")
-          val next = cmt.map(c => rest :+ ("comment" -> c)).getOrElse(rest)
-          if (next.isEmpty) tableOpts.remove(t) else tableOpts.put(t, next)
+          editMeta(t) { m =>
+            val rest = m.tableOpts.filterNot(_._1 == "comment")
+            m.copy(tableOpts = rest ++ cmt.map("comment" -> _))
+          }
         case "COLUMN" =>
           val i = target.lastIndexOf('.')
           if (i <= 0) throw new IllegalArgumentException(
             "COMMENT ON COLUMN expects table.column")
           val t = normTable(target.substring(0, i))
           val c = normIdent(unquote(target.substring(i + 1)))
-          val ms = colMeta.getOrElse(t,
+          val ms = declaredCols(t).getOrElse(
             throw new IllegalArgumentException(
               s"Table not found: greptime.$currentDb.$t"))
           if (!ms.exists(_.name == c))
             throw new IllegalArgumentException(s"Column not found: $c")
-          colMeta.put(t, ms.map(m =>
-            if (m.name == c) m.copy(comment = cmt) else m))
+          editMeta(t)(_.copy(colMeta = ms.map(m =>
+            if (m.name == c) m.copy(comment = cmt) else m)))
         case "FLOW" =>
           val f = unquote(target)
           if (!flows.contains(f))
@@ -2220,7 +2200,7 @@ final class GraftSession(spark0: SparkSession,
           val tables = catalog.tables.filterNot(_.contains("__schema__"))
           if (toDir)
             tables.map(t => copyTableTo(t, s"${path.stripSuffix("/")}/$t.$ext", opts)).sum +
-              externalTables.toSeq.sorted.map { t =>
+              tableMeta.collect { case (t, m) if m.external => t }.toSeq.sorted.map { t =>
                 val df = spark.table(t)
                 val cnt = df.count()
                 graft.sources.Copy.exportSingleFile(df,
@@ -2336,14 +2316,14 @@ final class GraftSession(spark0: SparkSession,
             }
             if (fnl.startsWith("flush_table")) {
               recordSstFlush(t)
-              durableSeq.put(t, seqCounter.get()) // flushed = restart-durable
+              // flushed = restart-durable
+              editMeta(t)(_.copy(durableSeq = seqCounter.get()))
             }
             // JSON2 shredding generations (types/json/json2.sql)
-            if (colMeta.getOrElse(t, Vector.empty).exists(_.gtype == "Json2")) {
-              if (fnl.startsWith("compact_table"))
-                j2Boundaries.put(t, Vector(seqCounter.get()))
-              else j2Boundaries.put(t,
-                j2Boundaries.getOrElse(t, Vector.empty) :+ seqCounter.get())
+            if (metaOf(t).colMeta.exists(_.gtype == "Json2")) {
+              val at = seqCounter.get()
+              editMeta(t)(m => m.copy(j2Boundaries =
+                if (fnl.startsWith("compact_table")) Vector(at) else m.j2Boundaries :+ at))
               refreshView(t)
             }
           }

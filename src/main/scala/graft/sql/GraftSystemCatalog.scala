@@ -27,7 +27,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
       .toDF("observed_at", "entity_type", "entity_id", "entity_id_attrs",
         "scope", "descriptive", "source_tables")
     val parts = catalog.tables.toSeq.sorted.flatMap { t =>
-      val opts = tableOpts.getOrElse(t, Seq.empty).toMap
+      val opts = metaOf(t).tableOpts.toMap
       val spec = catalog.spec(t)
       def recent = spark.table(t).filter(
         col(s"`${spec.timeIndex}`").cast("timestamp") >=
@@ -99,7 +99,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
         "rel_type", "provenance", "confidence", "request_count",
         "error_count", "duration_sum", "duration_count", "attributes")
     val parts = catalog.tables.toSeq.sorted.flatMap { t =>
-      val opts = tableOpts.getOrElse(t, Seq.empty).toMap
+      val opts = metaOf(t).tableOpts.toMap
       if (!opts.get("table_data_model").contains("greptime_trace_v1")) Nil
       else {
         val spec = catalog.spec(t)
@@ -211,7 +211,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
         "dattablespace", "daticulocale", "daticurules", "datacl")
       .createOrReplaceTempView("__pg_database")
     val attrRows = live.flatMap { case (_, bare, key) =>
-      colMeta.getOrElse(key, Vector.empty).zipWithIndex.map { case (cm, i) =>
+      metaOf(key).colMeta.zipWithIndex.map { case (cm, i) =>
         (pgOids(bare), cm.name, pgTypeOid(cm.gtype), i + 1)
       }
     }
@@ -226,7 +226,6 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
       fileNo: Long, numRows: Long, minTsMs: Long, maxTsMs: Long,
       pkMin: String, pkMax: String, seq: Long)
   private[sql] val sstFiles = scala.collection.mutable.ListBuffer.empty[SstEntry]
-  private[sql] val sstFlushSeq = scala.collection.concurrent.TrieMap.empty[String, Long]
   private[sql] var sstFileCounter = 0L
 
   /** mito's memcomparable primary-key encoding for an INT32 tag:
@@ -241,10 +240,10 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
 
   private[sql] def recordSstFlush(t: String): Unit = try {
     val spec = catalog.spec(t)
-    val since = sstFlushSeq.getOrElse(t, 0L)
+    val since = metaOf(t).sstFlushSeq
     val newRows = catalog.read(t).filter(col(SeqCol) > since)
     if (newRows.isEmpty) { return }
-    val rules = partitionClause.get(t).map(_._2).getOrElse(Nil)
+    val rules = metaOf(t).partitionClause.map(_._2).getOrElse(Nil)
     val regions = if (rules.isEmpty) Seq((0, newRows))
       else rules.zipWithIndex.map { case (rule, i) => (i, newRows.filter(expr(rule))) }
     val tid = 1024L + catalog.tables.toSeq.sorted.indexOf(t)
@@ -281,7 +280,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
         }
       }
     }
-    sstFlushSeq.put(t, seqCounter.get())
+    editMeta(t)(_.copy(sstFlushSeq = seqCounter.get()))
   } catch { case _: Exception => () }
 
   /** Index blobs inside each flushed SST's puffin file — one entry per
@@ -301,7 +300,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
   /** (column position, physical index backend, declaration text) for
     * every indexed column of a table. */
   private[sql] def indexedColsOf(t: String): Seq[(Int, String, String)] =
-    colMeta.getOrElse(t, Vector.empty).zipWithIndex.flatMap { case (cm, i) =>
+    metaOf(t).colMeta.zipWithIndex.flatMap { case (cm, i) =>
       cm.indexDecl.toSeq.flatMap { d =>
         val du = d.toUpperCase(Locale.ROOT)
         val b = Seq.newBuilder[(Int, String, String)]
@@ -319,7 +318,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
     * region). */
   private[sql] def regionDf(t: String, regionNo: Int): DataFrame = {
     val df = catalog.read(t)
-    partitionClause.get(t).map(_._2) match {
+    metaOf(t).partitionClause.map(_._2) match {
       case Some(rules) if rules.nonEmpty && regionNo < rules.size =>
         df.filter(expr(rules(regionNo)))
       case _ => df
@@ -328,7 +327,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
 
   private[sql] def addOneIndexEntry(t: String, fileNo: Long, ci: Int,
       kind: String, decl: String, df: => DataFrame, rows: Long): Unit = {
-    val cname = colMeta(t)(ci).name
+    val cname = metaOf(t).colMeta(ci).name
     if (kind == "inverted") {
       // Σ(16 + 2·count) over groups = 16·ndv + 2·rows — computed
       // executor-side so a high-cardinality tag never lands on the
@@ -570,9 +569,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
     final case class InfoT(schema: String, name: String, ttype: String,
       id: Long, engine: String, temporary: String, cmt: String = "")
     def tableCommentOf(db: String, t: String): String =
-      (if (db == currentDb) tableOpts.getOrElse(t, Nil)
-       else dbSaved.get(db).map(_.opts.getOrElse(t, Nil)).getOrElse(Nil))
-        .find(_._1 == "comment").map(_._2).getOrElse("")
+      metaIn(db, t).tableOpts.find(_._1 == "comment").map(_._2).getOrElse("")
     // real wall-clock (create_time > now()-interval filters run on it);
     // sqlness REPLACEs it to DATETIME in the goldens
     val fixedTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
@@ -581,7 +578,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
       InfoT("information_schema", n, "LOCAL TEMPORARY", id.toLong, "", "Y") }
     val userT = (currentRows ++ savedRows).zipWithIndex.map { case (r, i) =>
       InfoT(r._2, r._3, "BASE TABLE", 1024L + i,
-        tableEngine.getOrElse(r._3, "mito"), "N", tableCommentOf(r._2, r._3)) }
+        metaIn(r._2, r._3).tableEngine, "N", tableCommentOf(r._2, r._3)) }
     val viewT = userViews.toSeq.distinct.zipWithIndex.map { case (v, i) =>
       InfoT(if (infoDb) "public" else currentDb, v, "VIEW", 2048L + i, "", "N") }
     val numT =
@@ -700,12 +697,12 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
       describeTable(t).collect().zipWithIndex.map { case (r, i) =>
         colRow(currentDb, t, r.getString(0), i + 1, r.getString(1),
           r.getString(3) == "YES", r.getString(5), r.getString(4),
-          colMeta.getOrElse(t, Vector.empty).find(_.name == r.getString(0))
+          metaOf(t).colMeta.find(_.name == r.getString(0))
             .flatMap(_.comment).getOrElse(""))
       }
     } ++ dbSaved.toSeq.filterNot(_._1 == currentDb).flatMap { case (db, st) =>
       st.specs.toSeq.sortBy(_._1).flatMap { case (t, spec) =>
-        st.meta.getOrElse(t, Vector.empty).zipWithIndex.map { case (cm, i) =>
+        st.meta.getOrElse(t, TableMeta.Empty).colMeta.zipWithIndex.map { case (cm, i) =>
           val sem = if (cm.name == spec.timeIndex) "TIMESTAMP"
             else if (spec.tags.contains(cm.name)) "TAG" else "FIELD"
           colRow(db, t, cm.name, i + 1, cm.gtype, cm.nullable, sem,
@@ -886,7 +883,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
     // 'greptime.semantic.*' WITH options, promoted columns + residual
     // JSON (information_schema/table_semantics.result)
     val semRows = (currentRows ++ savedRows).flatMap { case (_, db, t, _, _, _, _) =>
-      val opts = tableOpts.getOrElse(t, Seq.empty)
+      val opts = metaIn(db, t).tableOpts
         .collect { case (k, v) if k.startsWith("greptime.semantic.") =>
           k.stripPrefix("greptime.semantic.") -> v }
       if (opts.isEmpty) None
@@ -921,7 +918,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
     // (information_schema/region_peers.result: 4 tables → 6 regions)
     var regionIdx = 0L
     val peerRows = (currentRows ++ savedRows).flatMap { case (_, db, t, _, _, _, _) =>
-      val n = partitionClause.get(t).map(_._2.size).getOrElse(1).max(1)
+      val n = metaIn(db, t).partitionClause.map(_._2.size).getOrElse(1).max(1)
       (0 until n).map { _ =>
         regionIdx += 1
         ("greptime", db, t, 4398046511104L + regionIdx, 0L,
@@ -941,7 +938,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
         "default_collation_name", "sql_path", "options")
       .createOrReplaceTempView("__info_schemata")
     val partRows = (currentRows ++ savedRows).flatMap { case (_, db, t, _, _, _, _) =>
-      partitionClause.get(t) match {
+      metaIn(db, t).partitionClause match {
         case Some((cols, rules)) =>
           // an empty rule list still has ONE region (PARTITION ON
           // COLUMNS (host) () — starrocks_compatibility.sql); the rule
@@ -964,20 +961,18 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
     val tableIds = (currentRows ++ savedRows).zipWithIndex
       .map { case (r, i) => r._3 -> (1024L + i) }.toMap
     var ri = 0L
-    val regionRows = (currentRows ++ savedRows).flatMap { case (_, _, t, _, _, _, _) =>
-      val n = partitionClause.get(t).map(_._2.size).getOrElse(1).max(1)
+    val regionRows = (currentRows ++ savedRows).flatMap { case (_, db, t, _, _, _, _) =>
+      val meta = metaIn(db, t)
+      val n = meta.partitionClause.map(_._2.size).getOrElse(1).max(1)
+      val sstFormat = meta.tableOpts.toMap.getOrElse("sst_format", "primary_key")
       (0 until n).map { k =>
         ri += 1
-        (4398046511104L + ri, tableIds.getOrElse(t, 0L), k, t)
+        (4398046511104L + ri, tableIds.getOrElse(t, 0L), k, t, sstFormat)
       }
     }
-    regionRows.map { case (rid, tid, k, t) =>
+    regionRows.map { case (rid, tid, k, _, sstFormat) =>
       (rid, tid, k, 0, k, "Leader(Writable)", "Leader", true, 1L, 1L, 1L,
-        null: String,
-        s"""{"compaction":{}}""",
-        tableOpts.getOrElse(t, Seq.empty).toMap
-          .getOrElse("sst_format", "primary_key"),
-        0L)
+        null: String, s"""{"compaction":{}}""", sstFormat, 0L)
     }.toDF("region_id", "table_id", "region_number", "region_group",
       "region_sequence", "state", "role", "writable", "committed_sequence",
       "flushed_sequence", "manifest_version", "compaction_time_window",
@@ -993,7 +988,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
       sstFiles.toSeq.groupBy(e => (e.table, e.regionNo))
         .map { case (key, es) =>
           key -> es.map(e => puffinBySst.getOrElse(e.fileNo, 0L)).sum }
-    regionRows.map { case (rid, tid, k, t) =>
+    regionRows.map { case (rid, tid, k, t, _) =>
       (rid, tid, k, 3L, 100L, 1L, 1L, 100L, 1L,
         idxSizeByRegion.getOrElse((t, k), 0L), "mito", "Leader",
         100L, 1L, 100L)
@@ -1178,26 +1173,15 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
       if (r.isEmpty) "0s" else r.mkString(" ")
     } catch { case _: Exception => s }
 
-  /** Original WITH options per table, for SHOW CREATE TABLE. */
-  private[sql] val tableOpts =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String)]]
-
-  /** Per-table durability watermark for skip_wal tables: rows with
-    * `__seq` <= watermark survive a restart (they were WAL-protected
-    * before skip_wal was enabled, or flushed to SST). A skip_wal table
-    * with no watermark loses everything unflushed (common/skip_wal
-    * .result). */
-  private[sql] val durableSeq = scala.collection.concurrent.TrieMap.empty[String, Long]
-
   /** Emulate a server restart: skip-WAL tables drop rows newer than
     * their durability watermark; everything else persists (the catalog
     * itself is durable — create/recover_created.result). */
   def restart(): Unit =
     catalog.tables.foreach { t =>
-      val skip = tableOpts.getOrElse(t, Nil)
+      val skip = metaOf(t).tableOpts
         .exists(o => o._1 == "skip_wal" && o._2 == "true")
       if (skip) {
-        val wm = durableSeq.getOrElse(t, Long.MinValue)
+        val wm = metaOf(t).durableSeq
         val spec = catalog.spec(t)
         migrateParquet(spec)(_.filter(col(SeqCol) <= wm))
         refreshView(t)

@@ -270,4 +270,145 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(rows("SELECT unix_millis(ts), host FROM trunc_t ORDER BY ts") ==
       Seq("3000|c", "4000|d"))
   }
+
+  // ---- per-table metadata through RENAME, DROP and USE ----
+  // Each case runs in its own session: USE and restart() act on the
+  // whole session.
+
+  private def rowsOf(s: GraftSession, q: String): Seq[String] =
+    s.sql(q).collect().map(_.toSeq.mkString("|")).toSeq
+
+  private def showCreate(s: GraftSession, t: String): Seq[String] =
+    s.sql(s"SHOW CREATE TABLE $t").collect().map(_.getString(1)).toSeq
+
+  test("RENAME keeps the column's type history") {
+    val s = new GraftSession(spark)
+    s.sql("CREATE TABLE m1 (ts TIMESTAMP(3) TIME INDEX, h STRING PRIMARY KEY, i DOUBLE)")
+    s.sql("INSERT INTO m1 VALUES (1000, 'a', 0.1)")
+    s.sql("ALTER TABLE m1 MODIFY COLUMN i BOOLEAN")
+    s.sql("ALTER TABLE m1 MODIFY COLUMN i INT")
+    // 0.1 was written as DOUBLE: it reads through DOUBLE -> INT as 0
+    assert(rowsOf(s, "SELECT h, i FROM m1") == Seq("a|0"))
+    s.sql("ALTER TABLE m1 RENAME m1r")
+    assert(rowsOf(s, "SELECT h, i FROM m1r") == Seq("a|0"))
+  }
+
+  test("RENAME keeps the table options: skip_wal still governs restart()") {
+    val s = new GraftSession(spark)
+    s.sql("CREATE TABLE w1 (ts TIMESTAMP(3) TIME INDEX, h STRING PRIMARY KEY, v DOUBLE) " +
+      "WITH ('skip_wal' = 'true')")
+    s.sql("INSERT INTO w1 VALUES (1000, 'a', 1.0)")
+    s.sql("ALTER TABLE w1 RENAME w1r")
+    assert(showCreate(s, "w1r").takeRight(3) == Seq("WITH(", "  skip_wal = 'true'", ")"))
+    s.restart()
+    // the one row was never flushed, so a skip_wal table loses it
+    assert(rowsOf(s, "SELECT count(*) FROM w1r") == Seq("0"))
+  }
+
+  test("DROP clears the type history: a re-created table migrates on MODIFY") {
+    val s = new GraftSession(spark)
+    val ddl = "CREATE TABLE d1 (ts TIMESTAMP(3) TIME INDEX, h STRING PRIMARY KEY, i DOUBLE)"
+    s.sql(ddl)
+    s.sql("ALTER TABLE d1 MODIFY COLUMN i STRING")
+    s.sql("DROP TABLE d1")
+    s.sql(ddl)
+    s.sql("INSERT INTO d1 VALUES (1000, 'a', 0.5)")
+    s.sql("ALTER TABLE d1 MODIFY COLUMN i STRING")
+    s.sql("INSERT INTO d1 VALUES (2000, 'b', 'abc')")
+    assert(rowsOf(s, "SELECT h, i FROM d1 ORDER BY ts") == Seq("a|0.5", "b|abc"))
+  }
+
+  test("USE keeps each database's PARTITION clause") {
+    val s = new GraftSession(spark)
+    s.sql("CREATE TABLE pt (ts TIMESTAMP(3) TIME INDEX, h STRING PRIMARY KEY, v DOUBLE) " +
+      "PARTITION ON COLUMNS (h) (h < 'm', h >= 'm')")
+    val table = Seq(
+      """CREATE TABLE IF NOT EXISTS "pt" (""",
+      """  "ts" TIMESTAMP(3) NOT NULL,""",
+      """  "h" STRING NULL,""",
+      """  "v" DOUBLE NULL,""",
+      """  TIME INDEX ("ts"),""",
+      """  PRIMARY KEY ("h")""",
+      ")")
+    val partitioned = table ++ Seq("""PARTITION ON COLUMNS ("h") (""",
+      "  h < 'm',", "  h >= 'm'", ")", "ENGINE=mito", "")
+    assert(showCreate(s, "pt") == partitioned)
+    s.sql("CREATE DATABASE d2")
+    s.sql("USE d2")
+    s.sql("CREATE TABLE pt (ts TIMESTAMP(3) TIME INDEX, h STRING PRIMARY KEY, v DOUBLE)")
+    assert(showCreate(s, "pt") == table ++ Seq("", "ENGINE=mito", ""))
+    s.sql("DROP TABLE pt")
+    s.sql("USE public")
+    assert(showCreate(s, "pt") == partitioned)
+  }
+
+  test("USE round trip: each database reads its own table metadata") {
+    val s = new GraftSession(spark)
+    val ddl = "CREATE TABLE t (ts TIMESTAMP(3) TIME INDEX, h STRING PRIMARY KEY, i DOUBLE)"
+    s.sql(ddl)
+    s.sql("INSERT INTO t VALUES (1000, 'a', 2.5)")
+    s.sql("ALTER TABLE t MODIFY COLUMN i INT")
+    s.sql("CREATE DATABASE d2")
+    s.sql("USE d2")
+    s.sql(ddl)
+    s.sql("INSERT INTO t VALUES (1000, 'b', 1.5)")
+    s.sql("ALTER TABLE t MODIFY COLUMN i SET DEFAULT 7.5")
+    s.sql("INSERT INTO t (ts, h) VALUES (2000, 'c')")
+    s.sql("COMMENT ON TABLE t IS 'd2 table'")
+    val comments = Seq("d2|d2 table", "public|")
+    def checkPublic(): Unit = {
+      // 2.5 was written as DOUBLE and reads through DOUBLE -> INT as 2
+      assert(rowsOf(s, "SELECT h, i FROM t ORDER BY ts") == Seq("a|2"))
+      assert(rowsOf(s, "DESC TABLE t") == Seq(
+        "ts|TimestampMillisecond|PRI|NO||TIMESTAMP", "h|String|PRI|YES||TAG",
+        "i|Int32||YES||FIELD"))
+      assert(rowsOf(s, "SELECT table_schema, table_comment FROM information_schema.tables " +
+        "WHERE table_name = 't' ORDER BY table_schema") == comments)
+    }
+    def checkD2(): Unit = {
+      assert(rowsOf(s, "SELECT h, i FROM t ORDER BY ts") == Seq("b|1.5", "c|7.5"))
+      assert(rowsOf(s, "DESC TABLE t") == Seq(
+        "ts|TimestampMillisecond|PRI|NO||TIMESTAMP", "h|String|PRI|YES||TAG",
+        "i|Float64||YES|7.5|FIELD"))
+      assert(rowsOf(s, "SELECT table_schema, table_comment FROM information_schema.tables " +
+        "WHERE table_name = 't' ORDER BY table_schema") == comments)
+    }
+    checkD2()
+    s.sql("USE public")
+    checkPublic()
+    s.sql("USE d2")
+    checkD2()
+    s.sql("DROP DATABASE d2")
+    assert(rowsOf(s, "SHOW SEARCH_PATH") == Seq("public"))
+    assert(rowsOf(s, "SELECT h, i FROM t ORDER BY ts") == Seq("a|2"))
+    assert(rowsOf(s, "DESC TABLE t") == Seq(
+      "ts|TimestampMillisecond|PRI|NO||TIMESTAMP", "h|String|PRI|YES||TAG",
+      "i|Int32||YES||FIELD"))
+    assert(rowsOf(s, "SELECT table_schema, table_comment FROM information_schema.tables " +
+      "WHERE table_name = 't'") == Seq("public|"))
+  }
+
+  test("RENAME keeps everything SHOW CREATE TABLE renders") {
+    val s = new GraftSession(spark)
+    val cols = "ts TIMESTAMP(3) TIME INDEX, h STRING PRIMARY KEY, v DOUBLE"
+    // (DDL, a SHOW CREATE line the case is about)
+    Seq(
+      s"CREATE TABLE r_opt ($cols) WITH ('comment' = 'c1', write_buffer_size = '1KiB')" ->
+        "  'comment' = 'c1',",
+      s"CREATE TABLE r_part ($cols) PARTITION ON COLUMNS (h) (h < 'm', h >= 'm')" ->
+        "  h < 'm',",
+      s"CREATE TABLE r_phy ($cols) ENGINE=metric WITH ('physical_metric_table' = '')" ->
+        "ENGINE=metric",
+      "CREATE TABLE r_j2 (ts TIMESTAMP(3) TIME INDEX, j JSON2(a.b INT, c STRING NOT NULL))" ->
+        "    \"c\" STRING NOT NULL"
+    ).foreach { case (ddl, line) =>
+      val t = "CREATE TABLE (\\w+)".r.findFirstMatchIn(ddl).get.group(1)
+      s.sql(ddl)
+      val before = showCreate(s, t)
+      assert(before.contains(line), before)
+      s.sql(s"ALTER TABLE $t RENAME ${t}_new")
+      assert(showCreate(s, s"${t}_new") ==
+        before.updated(0, before.head.replace(s""""$t"""", s""""${t}_new"""")))
+    }
+  }
 }
