@@ -1134,6 +1134,8 @@ private[sql] trait GraftDdl { self: GraftSession =>
         catalog.deregister(name)
         catalog.register(spec.copy(name = newName))
         tableMeta.remove(name).foreach(tableMeta.put(newName, _))
+        sstFiles.mapInPlace(e => if (e.table == name) e.copy(table = newName) else e)
+        sstIndexEntries.mapInPlace(e => if (e.table == name) e.copy(table = newName) else e)
         spark.catalog.dropTempView(name)
         refreshView(newName)
         return status(s"table $name renamed to $newName")
@@ -1397,6 +1399,7 @@ private[sql] trait GraftDdl { self: GraftSession =>
     // (alter/change_col_type: leftover MODIFY casts broke the new table)
     tableMeta.remove(name)
     sstFiles.filterInPlace(_.table != name)
+    sstIndexEntries.filterInPlace(_.table != name)
     // a logical metric table's physical view unions its children's
     // files — rebuild AFTER this table's parquet is gone so a later
     // scan doesn't chase deleted part files

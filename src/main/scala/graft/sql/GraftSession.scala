@@ -111,12 +111,6 @@ final class GraftSession(spark0: SparkSession,
   /** inside `USE information_schema` (virtual database: the real catalog
     * stays loaded; bare table names address the schema tables) */
   private[sql] var infoDb: Boolean = false
-  private val InfoBareRx =
-    ("(?i)\\b(FROM|JOIN)\\s+(TABLES|COLUMNS|FLOWS|TABLE_CONSTRAINTS|VIEWS|" +
-      "TABLE_SEMANTICS|PROCEDURE_INFO|REGION_PEERS|SCHEMATA|PARTITIONS|" +
-      "REGION_INFO|REGION_STATISTICS|KEY_COLUMN_USAGE|ENGINES|BUILD_INFO|" +
-      "CHARACTER_SETS|COLLATIONS|COLLATION_CHARACTER_SET_APPLICABILITY|" +
-      "COLUMN_PRIVILEGES|COLUMN_STATISTICS|CHECK_CONSTRAINTS|CLUSTER_INFO)\\b").r
 
   /** Deployment shape the engine reports through
     * information_schema.cluster_info / ssts node_id: a standalone node
@@ -157,7 +151,7 @@ final class GraftSession(spark0: SparkSession,
     else if (up.startsWith("DROP TABLE")) {
       val tgt = normTable(stmt.split("\\s+")
         .filterNot(t => t.equalsIgnoreCase("IF") || t.equalsIgnoreCase("EXISTS")).last)
-      if (metaOf(tgt).external) {
+      if (metaOf(tgt).external.isDefined) {
         spark.catalog.dropTempView(tgt)
         tableMeta.remove(tgt)
         status("table dropped")
@@ -197,7 +191,7 @@ final class GraftSession(spark0: SparkSession,
       val like = "(?i)\\bLIKE\\s+'([^']*)'".r.findFirstMatchIn(stmt).map(_.group(1))
       val where = "(?is)\\bWHERE\\s+(.*)$".r.findFirstMatchIn(stmt).map(_.group(1).trim)
       val db = fromDb.getOrElse(if (infoDb) "information_schema" else currentDb)
-      var df = spark.table("__info_tables")
+      var df = spark.table(InfoSchema("tables").view)
         .filter(col("table_schema") === db)
         .select(col("table_name").as("Name"), col("engine").as("Engine"),
           col("version").as("Version"), col("row_format").as("Row_format"),
@@ -319,14 +313,12 @@ final class GraftSession(spark0: SparkSession,
       val infoQualified = rawTarget.toLowerCase(Locale.ROOT)
         .startsWith("information_schema.")
       val bare = target.stripPrefix("information_schema__schema__")
-      if (bare.startsWith("pg_") && infoTableDescs.contains(bare))
-        describeInfoTable(bare)
-      else if ((infoDb || infoQualified) && target.endsWith("table_constraints"))
-        describeInfoConstraints()
-      else if ((infoDb || infoQualified) && target.endsWith("table_semantics"))
-        describeInfoTableSemantics()
-      else if ((infoDb || infoQualified) && infoTableDescs.contains(bare))
-        describeInfoTable(bare)
+      if (bare.startsWith("pg_") && pgTableDescs.contains(bare))
+        describeSystemTable(pgTableDescs(bare))
+      else if (infoDb || infoQualified)
+        InfoSchema.get(bare).map(t => describeSystemTable(
+          t.cols.map(c => (c.name, c.gtype, if (c.nullable) "YES" else "NO"))))
+          .getOrElse(describeTable(target))
       else describeTable(target)
     }
     else if (up.startsWith("COMMENT ON ")) commentOn(stmt)
@@ -453,7 +445,7 @@ final class GraftSession(spark0: SparkSession,
       // no-match result renders headerless-empty like the reference
       import spark.implicits._
       val like = "(?i)LIKE\\s+'([^']*)'".r.findFirstMatchIn(stmt).map(_.group(1))
-      val rx = like.map(p => ("^" + p.replace("%", ".*").replace("_", ".") + "$").r)
+      val rx = like.map(p => likeRegex(p).r)
       val names = flows.keys.toSeq.filter(f => rx.forall(_.matches(f))).sorted
       names.map { f =>
         val meta = flowMeta.get(f)
@@ -468,7 +460,7 @@ final class GraftSession(spark0: SparkSession,
     else if (up.startsWith("SHOW FLOWS")) {
       import spark.implicits._
       val like = "(?i)LIKE\\s+'([^']*)'".r.findFirstMatchIn(stmt).map(_.group(1))
-      val rx = like.map(p => ("^" + p.replace("%", ".*").replace("_", ".") + "$").r)
+      val rx = like.map(p => likeRegex(p).r)
       flows.keys.toSeq.filter(f => rx.forall(_.matches(f))).sorted.toDF("Flows")
     }
     else if (up.startsWith("PREPARE")) {
@@ -585,14 +577,10 @@ final class GraftSession(spark0: SparkSession,
     else if (up.contains("INFORMATION_SCHEMA.") ||
         "(?s).*\\bPG_(CATALOG|NAMESPACE|CLASS|DATABASE|ATTRIBUTE|TYPE)\\b.*".r
           .matches(up) ||
-        (infoDb && InfoBareRx.findFirstIn(stmt).isDefined)) {
+        (infoDb && InfoSchema.readsBare(stmt))) {
       refreshInfoSchema()
       refreshPgCatalog()
-      // inside `USE information_schema`, bare names address its tables
-      val qualified0 =
-        if (infoDb) InfoBareRx.replaceAllIn(stmt, m =>
-          s"${m.group(1)} information_schema.${m.group(2)}")
-        else stmt
+      val qualified0 = if (infoDb) InfoSchema.qualifyBare(stmt) else stmt
       // pg_catalog surface (system/pg_catalog.sql): strip the schema
       // qualifier, map the tables to materialized views, fold the
       // postgres-only functions/operators
@@ -631,36 +619,7 @@ final class GraftSession(spark0: SparkSession,
       qualified = ("(?is)\\(\\s*SELECT\\s+CASE\\s+WHEN\\s+trim\\(s\\[i\\]\\).*?" +
         "string_to_array\\(current_setting\\('search_path'\\),','\\)\\s+s\\s*\\)").r
         .replaceAllIn(qualified, _ => "('')")
-      spark.sql(dialect(qualified)
-        .replaceAll("(?i)information_schema\\.table_constraints", "__info_constraints")
-        .replaceAll("(?i)information_schema\\.table_semantics", "__info_table_semantics")
-        .replaceAll("(?i)information_schema\\.tables", "__info_tables")
-        .replaceAll("(?i)information_schema\\.columns", "__info_columns")
-        .replaceAll("(?i)information_schema\\.flow_statistics", "__info_flow_statistics")
-        .replaceAll("(?i)information_schema\\.statistics", "__info_statistics")
-        .replaceAll("(?i)information_schema\\.flows", "__info_flows")
-        .replaceAll("(?i)information_schema\\.views", "__info_views")
-        .replaceAll("(?i)information_schema\\.procedure_info", "__info_procedure_info")
-        .replaceAll("(?i)information_schema\\.region_peers", "__info_region_peers")
-        .replaceAll("(?i)information_schema\\.schemata", "__info_schemata")
-        .replaceAll("(?i)information_schema\\.partitions", "__info_partitions")
-        .replaceAll("(?i)information_schema\\.region_info", "__info_region_info")
-        .replaceAll("(?i)information_schema\\.region_statistics",
-          "__info_region_statistics")
-        .replaceAll("(?i)information_schema\\.ssts_manifest", "__info_ssts_manifest")
-        .replaceAll("(?i)information_schema\\.ssts_storage", "__info_ssts_storage")
-        .replaceAll("(?i)information_schema\\.ssts_index_meta", "__info_ssts_index_meta")
-        .replaceAll("(?i)information_schema\\.key_column_usage", "__info_key_column_usage")
-        .replaceAll("(?i)information_schema\\.engines", "__info_engines")
-        .replaceAll("(?i)information_schema\\.build_info", "__info_build_info")
-        .replaceAll("(?i)information_schema\\.character_sets", "__info_character_sets")
-        .replaceAll("(?i)information_schema\\.collation_character_set_applicability",
-          "__info_collation_character_set_applicability")
-        .replaceAll("(?i)information_schema\\.collations", "__info_collations")
-        .replaceAll("(?i)information_schema\\.column_privileges", "__info_column_privileges")
-        .replaceAll("(?i)information_schema\\.column_statistics", "__info_column_statistics")
-        .replaceAll("(?i)information_schema\\.check_constraints", "__info_check_constraints")
-        .replaceAll("(?i)information_schema\\.cluster_info", "__info_cluster_info"))
+      spark.sql(InfoSchema.toViews(dialect(qualified)))
     }
     else if (up.startsWith("SELECT") && RangeSql.looksLikeRange(stmt))
       RangeSql.execute(spark, rewriteAtAt(stmt), name => {
@@ -1148,24 +1107,6 @@ final class GraftSession(spark0: SparkSession,
       .toDF("Table", "Create Table")
   }
 
-  /** The information_schema virtual tables with their fixed table ids
-    * (reference src/common/catalog/src/consts.rs; pinned by
-    * system/information_schema.result). */
-  private[graft] val InfoTables: Seq[(String, Int)] = Seq(
-    "build_info" -> 8, "character_sets" -> 9, "check_constraints" -> 12,
-    "cluster_info" -> 31, "collation_character_set_applicability" -> 11,
-    "collations" -> 10, "column_privileges" -> 6, "column_statistics" -> 7,
-    "columns" -> 4, "engines" -> 5, "events" -> 13, "files" -> 14,
-    "flow_statistics" -> 45, "flows" -> 33, "global_status" -> 25,
-    "key_column_usage" -> 16, "optimizer_trace" -> 17, "parameters" -> 18,
-    "partitions" -> 28, "procedure_info" -> 34, "process_list" -> 36,
-    "profiling" -> 19, "referential_constraints" -> 20, "region_info" -> 41,
-    "region_peers" -> 29, "region_statistics" -> 35, "routines" -> 21,
-    "schema_privileges" -> 22, "schemata" -> 15, "session_status" -> 26,
-    "ssts_index_meta" -> 39, "ssts_manifest" -> 37, "ssts_storage" -> 38,
-    "statistics" -> 43, "table_constraints" -> 30, "table_privileges" -> 23,
-    "table_semantics" -> 42, "tables" -> 3, "views" -> 32)
-
   /** SQL LIKE pattern → anchored regex. */
   private def likeRegex(p: String): String =
     p.flatMap {
@@ -1215,7 +1156,7 @@ final class GraftSession(spark0: SparkSession,
     val where = "(?is)\\bWHERE\\s+(.*)$".r.findFirstMatchIn(stmt).map(_.group(1).trim)
     val db = fromDb.getOrElse(if (infoDb) "information_schema" else currentDb)
     val rows: Seq[(String, String)] =
-      if (db == "information_schema") InfoTables.map(t => (t._1, "LOCAL TEMPORARY"))
+      if (db == "information_schema") InfoSchema.tables.map(t => (t.name, "LOCAL TEMPORARY"))
       else {
         val base: Seq[(String, String)] =
           if (db == currentDb)
@@ -1302,10 +1243,14 @@ final class GraftSession(spark0: SparkSession,
       spark.catalog.dropTempView(t)
       catalog.deregister(t)
     }
+    // external tables are temp views outside the catalog
+    tableMeta.foreach { case (t, m) => m.external.foreach(_ => spark.catalog.dropTempView(t)) }
     tableMeta.clear()
     tableMeta ++= st.meta
     st.specs.values.foreach(catalog.register)
     st.specs.keys.foreach(t => refreshView(t))
+    st.meta.foreach { case (t, m) =>
+      m.external.foreach { case (fmt, loc) => externalView(t, fmt, loc) } }
   }
 
   private def useDatabase(name0: String): DataFrame = {
@@ -1439,7 +1384,7 @@ final class GraftSession(spark0: SparkSession,
             .filterNot(f => f.name == SeqCol)
             .map(f => ColMeta(f.name, greptimeNameOf(f.dataType), f.nullable, None, None))
             .toVector)
-        val like = Option(likeOpt).map(_.replace("%", ".*").replace("_", "."))
+        val like = Option(likeOpt).map(likeRegex)
         val df0 = metas.filterNot(mm => dropped.contains(mm.name))
           .filter(mm => like.forall(p => mm.name.matches(p)))
           .sortBy(_.name)
@@ -2118,14 +2063,17 @@ final class GraftSession(spark0: SparkSession,
       val loc = opts.getOrElse("location", throw new IllegalArgumentException(
         "Invalid SQL, error: location is required for external table"))
       val fmt = opts.getOrElse("format", "parquet").toLowerCase(Locale.ROOT)
-      var r = spark.read.format(fmt)
-      if (fmt == "csv")
-        r = r.option("header", "true").option("inferSchema", "true")
-      r.load(loc).createOrReplaceTempView(name)
-      editMeta(name)(_.copy(external = true))
+      externalView(name, fmt, loc)
+      editMeta(name)(_.copy(external = Some((fmt, loc))))
       status("external table created")
     case _ => throw new IllegalArgumentException(
       s"cannot parse CREATE EXTERNAL TABLE: $stmt")
+  }
+  private def externalView(name: String, fmt: String, loc: String): Unit = {
+    var r = spark.read.format(fmt)
+    if (fmt == "csv")
+      r = r.option("header", "true").option("inferSchema", "true")
+    r.load(loc).createOrReplaceTempView(name)
   }
 
   /** `COMMENT ON TABLE|COLUMN|FLOW <target> IS '<text>'|NULL` —
@@ -2200,7 +2148,7 @@ final class GraftSession(spark0: SparkSession,
           val tables = catalog.tables.filterNot(_.contains("__schema__"))
           if (toDir)
             tables.map(t => copyTableTo(t, s"${path.stripSuffix("/")}/$t.$ext", opts)).sum +
-              tableMeta.collect { case (t, m) if m.external => t }.toSeq.sorted.map { t =>
+              tableMeta.collect { case (t, m) if m.external.isDefined => t }.toSeq.sorted.map { t =>
                 val df = spark.table(t)
                 val cnt = df.count()
                 graft.sources.Copy.exportSingleFile(df,

@@ -2,7 +2,9 @@ package graft.sql
 
 import java.util.Locale
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.promql.PromParser
@@ -384,9 +386,8 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
     }
   }
 
-  /** DESC schemas of the storage-introspection info tables
-    * (information_schema/{region_info,region_statistics,ssts}.result). */
-  private[sql] val infoTableDescs: Map[String, Seq[(String, String, String)]] = Map(
+  /** DESC schemas of the pg_catalog tables (system/pg_catalog.result). */
+  private[sql] val pgTableDescs: Map[String, Seq[(String, String, String)]] = Map(
     "pg_class" -> Seq(
       ("oid", "Int32", "NO"), ("relname", "String", "NO"),
       ("relnamespace", "Int32", "NO"), ("reltype", "Int32", "NO"),
@@ -408,146 +409,48 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
     "pg_namespace" -> Seq(
       ("oid", "Int32", "NO"), ("nspname", "String", "NO"),
       ("nspowner", "Int32", "NO"), ("nspacl", "String", "YES"),
-      ("options", "String", "YES")),
-    "schemata" -> Seq(
-      ("catalog_name", "String", "NO"), ("schema_name", "String", "NO"),
-      ("default_character_set_name", "String", "NO"),
-      ("default_collation_name", "String", "NO"),
-      ("sql_path", "String", "YES"), ("options", "String", "YES")),
-    "build_info" -> Seq(
-      ("git_branch", "String", "NO"), ("git_commit", "String", "NO"),
-      ("git_commit_short", "String", "NO"), ("git_clean", "String", "NO"),
-      ("pkg_version", "String", "NO")),
-    "key_column_usage" -> Seq(
-      ("constraint_catalog", "String", "NO"),
-      ("constraint_schema", "String", "NO"),
-      ("constraint_name", "String", "NO"),
-      ("table_catalog", "String", "NO"),
-      ("real_table_catalog", "String", "NO"),
-      ("table_schema", "String", "NO"), ("table_name", "String", "NO"),
-      ("column_name", "String", "NO"), ("ordinal_position", "UInt32", "NO"),
-      ("position_in_unique_constraint", "UInt32", "YES"),
-      ("referenced_table_schema", "String", "YES"),
-      ("referenced_table_name", "String", "YES"),
-      ("referenced_column_name", "String", "YES"),
-      ("greptime_index_type", "String", "YES")),
-    "column_privileges" -> Seq(
-      ("grantee", "String", "NO"), ("table_catalog", "String", "NO"),
-      ("table_schema", "String", "NO"), ("table_name", "String", "NO"),
-      ("column_name", "String", "NO"), ("privilege_type", "String", "NO"),
-      ("is_grantable", "String", "NO")),
-    "column_statistics" -> Seq(
-      ("schema_name", "String", "NO"), ("table_name", "String", "NO"),
-      ("column_name", "String", "NO"), ("histogram", "String", "NO")),
-    "check_constraints" -> Seq(
-      ("constraint_catalog", "String", "NO"),
-      ("constraint_schema", "String", "NO"),
-      ("constraint_name", "String", "NO"), ("check_clause", "String", "NO")),
-    "region_peers" -> Seq(
-      ("table_catalog", "String", "NO"), ("table_schema", "String", "NO"),
-      ("table_name", "String", "NO"), ("region_id", "UInt64", "NO"),
-      ("peer_id", "UInt64", "YES"), ("peer_addr", "String", "YES"),
-      ("is_leader", "String", "YES"), ("status", "String", "YES"),
-      ("down_seconds", "Int64", "YES")),
-    "region_info" -> Seq(
-      ("region_id", "UInt64", "NO"), ("table_id", "UInt32", "NO"),
-      ("region_number", "UInt32", "NO"), ("region_group", "UInt8", "NO"),
-      ("region_sequence", "UInt32", "NO"), ("state", "String", "NO"),
-      ("role", "String", "NO"), ("writable", "Boolean", "NO"),
-      ("committed_sequence", "UInt64", "NO"),
-      ("flushed_sequence", "UInt64", "YES"),
-      ("manifest_version", "UInt64", "NO"),
-      ("compaction_time_window", "String", "YES"),
-      ("region_options", "String", "NO"), ("sst_format", "String", "NO"),
-      ("node_id", "UInt64", "YES")),
-    "region_statistics" -> Seq(
-      ("region_id", "UInt64", "NO"), ("table_id", "UInt32", "NO"),
-      ("region_number", "UInt32", "NO"), ("region_rows", "UInt64", "YES"),
-      ("disk_size", "UInt64", "YES"), ("memtable_size", "UInt64", "YES"),
-      ("manifest_size", "UInt64", "YES"), ("sst_size", "UInt64", "YES"),
-      ("sst_num", "UInt64", "YES"), ("index_size", "UInt64", "YES"),
-      ("engine", "String", "YES"), ("region_role", "String", "YES"),
-      ("written_bytes_since_open", "UInt64", "YES"),
-      ("query_cpu_time_millis", "UInt64", "YES"),
-      ("query_scanned_bytes", "UInt64", "YES")),
-    "ssts_manifest" -> Seq(
-      ("table_dir", "String", "NO"), ("region_id", "UInt64", "NO"),
-      ("table_id", "UInt32", "NO"), ("region_number", "UInt32", "NO"),
-      ("region_group", "UInt8", "NO"), ("region_sequence", "UInt32", "NO"),
-      ("file_id", "String", "NO"), ("index_version", "UInt64", "NO"),
-      ("level", "UInt8", "NO"), ("file_path", "String", "NO"),
-      ("file_size", "UInt64", "NO"), ("index_file_path", "String", "YES"),
-      ("index_file_size", "UInt64", "YES"), ("num_rows", "UInt64", "NO"),
-      ("num_row_groups", "UInt64", "NO"), ("num_series", "UInt64", "YES"),
-      ("min_ts", "TimestampNanosecond", "YES"),
-      ("max_ts", "TimestampNanosecond", "YES"),
-      ("sequence", "UInt64", "YES"), ("origin_region_id", "UInt64", "NO"),
-      ("node_id", "UInt64", "YES"), ("visible", "Boolean", "NO"),
-      ("primary_key_min", "Binary", "YES"), ("primary_key_max", "Binary", "YES")),
-    "ssts_storage" -> Seq(
-      ("file_path", "String", "NO"), ("file_size", "UInt64", "YES"),
-      ("last_modified_ms", "TimestampMillisecond", "YES"),
-      ("node_id", "UInt64", "YES")),
-    // DESC COLUMNS: the columns table's own schema is its rows in the
-    // static inventory (system/information_schema.result)
-    "columns" -> InfoColumnsData.rows.filter(_.startsWith("columns|")).map { l =>
-      val p = l.split("\\|")
-      (p(1), p(2), if (p(3) == "Y") "YES" else "NO")
-    },
-    "cluster_info" -> Seq(
-      ("peer_id", "Int64", "NO"), ("peer_type", "String", "NO"),
-      ("peer_addr", "String", "YES"), ("peer_hostname", "String", "YES"),
-      ("total_cpu_millicores", "Int64", "NO"),
-      ("total_memory_bytes", "Int64", "NO"),
-      ("cpu_usage_millicores", "Int64", "NO"),
-      ("memory_usage_bytes", "Int64", "NO"),
-      ("version", "String", "NO"), ("git_commit", "String", "NO"),
-      ("start_time", "TimestampMillisecond", "YES"),
-      ("uptime", "String", "YES"), ("active_time", "String", "YES"),
-      ("node_status", "String", "YES")),
-    "ssts_index_meta" -> Seq(
-      ("table_dir", "String", "NO"), ("index_file_path", "String", "NO"),
-      ("region_id", "UInt64", "NO"), ("table_id", "UInt32", "NO"),
-      ("region_number", "UInt32", "NO"), ("region_group", "UInt8", "NO"),
-      ("region_sequence", "UInt32", "NO"), ("file_id", "String", "NO"),
-      ("index_file_size", "UInt64", "YES"), ("index_type", "String", "NO"),
-      ("target_type", "String", "NO"), ("target_key", "String", "NO"),
-      ("target_json", "String", "NO"), ("blob_size", "UInt64", "NO"),
-      ("meta_json", "String", "YES"), ("node_id", "UInt64", "YES")))
+      ("options", "String", "YES")))
 
-  private[sql] def describeInfoTable(name: String): DataFrame = {
+  /** DESC of a system table from its (column, type, null) triples. */
+  private[sql] def describeSystemTable(cols: Seq[(String, String, String)]): DataFrame = {
     import spark.implicits._
-    infoTableDescs(name).map { case (c, t, n) => (c, t, "", n, "", "FIELD") }
+    cols.map { case (c, t, n) => (c, t, "", n, "", "FIELD") }
       .toDF("Column", "Type", "Key", "Null", "Default", "Semantic Type")
   }
 
-  /** DESC of information_schema.table_semantics (its reference schema;
-    * information_schema/table_semantics.result). */
-  private[sql] def describeInfoTableSemantics(): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("table_catalog", "String", "NO"), ("table_schema", "String", "NO"),
-      ("table_name", "String", "NO"), ("table_id", "UInt32", "NO"),
-      ("signal_type", "String", "YES"), ("source", "String", "YES"),
-      ("source_version", "String", "YES"), ("pipeline", "String", "YES"),
-      ("metadata_quality", "String", "YES"), ("semantic_options", "String", "YES"))
-      .map { case (c, t, n) => (c, t, "", n, "", "FIELD") }
-      .toDF("Column", "Type", "Key", "Null", "Default", "Semantic Type")
+  /** Registers `df` as information_schema table `t`: the registry's
+    * columns in registry order. A frame of tuple columns (`_1`, `_2`, …)
+    * takes the registry's leading names; a named frame is matched by
+    * name. A registry column the frame lacks reads as a typed NULL. */
+  private def registerInfoView(t: InfoTable, df: DataFrame): Unit = {
+    val names = t.cols.map(_.name)
+    val named =
+      if (df.columns.headOption.contains("_1")) df.toDF(names.take(df.columns.length): _*)
+      else df
+    val extra = named.columns.filterNot(names.contains)
+    require(extra.isEmpty,
+      s"information_schema.${t.name} declares no column ${extra.mkString(", ")}")
+    named.select(t.cols.map(c =>
+      if (named.columns.contains(c.name)) col(s"`${c.name}`")
+      else lit(null).cast(c.sparkType).as(c.name)): _*)
+      .createOrReplaceTempView(t.view)
   }
 
-  /** DESC of information_schema.table_constraints (its reference schema). */
-  private[sql] def describeInfoConstraints(): DataFrame = {
-    import spark.implicits._
-    Seq("constraint_catalog", "constraint_schema", "constraint_name",
-      "table_schema", "table_name", "constraint_type", "enforced")
-      .map(c => (c, "String", "", "NO", "", "FIELD"))
-      .toDF("Column", "Type", "Key", "Null", "Default", "Semantic Type")
-  }
-
-  /** information_schema.tables / .columns (reference information_schema
-    * provider) materialized as temp views on demand. */
+  /** Every information_schema table (InfoSchema) materialized as a temp
+    * view on demand; a table without a builder reads empty. */
   private[sql] def refreshInfoSchema(): Unit = {
     import spark.implicits._
+    val built = scala.collection.mutable.Set.empty[String]
+    def infoView(name: String, df: DataFrame): Unit = {
+      built += name
+      registerInfoView(InfoSchema(name), df)
+    }
+    // rows typed column by column in registry order
+    def infoRows(name: String, types: Seq[DataType], rows: Seq[Row]): Unit =
+      infoView(name, spark.createDataFrame(rows.asJava, StructType(
+        InfoSchema(name).cols.zip(types).map { case (c, ty) => StructField(c.name, ty) })))
+    val (bool, int, long, str, ts) =
+      (BooleanType, IntegerType, LongType, StringType, TimestampType)
     // all databases: live catalog rows for the current one, saved states
     // for the rest, plus the numbers builtin under public
     val currentRows = catalog.tables.map { t =>
@@ -574,8 +477,8 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
     // sqlness REPLACEs it to DATETIME in the goldens
     val fixedTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
       .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS"))
-    val infoT = InfoTables.map { case (n, id) =>
-      InfoT("information_schema", n, "LOCAL TEMPORARY", id.toLong, "", "Y") }
+    val infoT = InfoSchema.tables.map(t =>
+      InfoT("information_schema", t.name, "LOCAL TEMPORARY", t.id.toLong, "", "Y"))
     val userT = (currentRows ++ savedRows).zipWithIndex.map { case (r, i) =>
       InfoT(r._2, r._3, "BASE TABLE", 1024L + i,
         metaIn(r._2, r._3).tableEngine, "N", tableCommentOf(r._2, r._3)) }
@@ -584,26 +487,12 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
     val numT =
       if (numbersRow.nonEmpty) Seq(InfoT("public", "numbers", "LOCAL TEMPORARY", 2L,
         "test_engine", "Y")) else Nil
-    val tblSchema = StructType(Seq(
-      StructField("table_catalog", StringType), StructField("table_schema", StringType),
-      StructField("table_name", StringType), StructField("table_type", StringType),
-      StructField("table_id", LongType), StructField("data_length", LongType),
-      StructField("max_data_length", LongType), StructField("index_length", LongType),
-      StructField("max_index_length", LongType), StructField("avg_row_length", LongType),
-      StructField("engine", StringType), StructField("version", LongType),
-      StructField("row_format", StringType), StructField("table_rows", LongType),
-      StructField("data_free", LongType), StructField("auto_increment", LongType),
-      StructField("create_time", StringType), StructField("update_time", StringType),
-      StructField("check_time", StringType), StructField("table_collation", StringType),
-      StructField("checksum", LongType), StructField("create_options", StringType),
-      StructField("table_comment", StringType), StructField("temporary", StringType)))
-    val tblRows = (infoT ++ userT ++ viewT ++ numT).map(t =>
-      org.apache.spark.sql.Row("greptime", t.schema, t.name, t.ttype, t.id,
-        0L, 0L, 0L, 0L, 0L, t.engine, 11L, "Fixed", 0L, 0L, 0L,
-        fixedTime, fixedTime, "", "utf8_bin", 0L, "", t.cmt, t.temporary))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(tblRows, 1).toJavaRDD, tblSchema)
-      .createOrReplaceTempView("__info_tables")
+    infoRows("tables", Seq(str, str, str, str, long, long, long, long, long, long, str,
+        long, str, long, long, long, str, str, str, str, long, str, str, str),
+      (infoT ++ userT ++ viewT ++ numT).map(t =>
+        Row("greptime", t.schema, t.name, t.ttype, t.id,
+          0L, 0L, 0L, 0L, 0L, t.engine, 11L, "Fixed", 0L, 0L, 0L,
+          fixedTime, fixedTime, "", "utf8_bin", 0L, "", t.cmt, t.temporary)))
     // TIME INDEX / PRIMARY constraints per table (table_constraints.result)
     val constraintRows = (currentRows ++ savedRows ++ numbersRow).flatMap {
       case (_, db, t, _, _, timeIndex, primaryKeys) =>
@@ -613,9 +502,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
           Seq(("def", db, "TIME INDEX", db, t, "TIME INDEX", "YES")) else Nil
         pk ++ ti
     }
-    constraintRows.toDF("constraint_catalog", "constraint_schema", "constraint_name",
-      "table_schema", "table_name", "constraint_type", "enforced")
-      .createOrReplaceTempView("__info_constraints")
+    infoView("table_constraints", constraintRows.toDF())
     // reference columns shape: data_type is the SQL spelling, the
     // ConcreteDataType name rides in greptime_data_type
     // (system/information_schema.result's my_db.foo row)
@@ -623,24 +510,9 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
     // metadata cells (system/information_schema.result's complete
     // self-listing; derivation rules datatypes/src/data_type.rs:309-338,
     // columns.rs:88-90,313-316)
-    val colSchema = StructType(Seq(
-      StructField("table_catalog", StringType), StructField("table_schema", StringType),
-      StructField("table_name", StringType), StructField("column_name", StringType),
-      StructField("ordinal_position", LongType),
-      StructField("character_maximum_length", LongType),
-      StructField("character_octet_length", LongType),
-      StructField("numeric_precision", LongType), StructField("numeric_scale", LongType),
-      StructField("datetime_precision", LongType),
-      StructField("character_set_name", StringType), StructField("collation_name", StringType),
-      StructField("column_key", StringType), StructField("extra", StringType),
-      StructField("privileges", StringType), StructField("generation_expression", StringType),
-      StructField("greptime_data_type", StringType), StructField("data_type", StringType),
-      StructField("semantic_type", StringType), StructField("column_default", StringType),
-      StructField("is_nullable", StringType), StructField("column_type", StringType),
-      StructField("column_comment", StringType), StructField("srs_id", LongType)))
     def colRow(db: String, t: String, c: String, ordinal: Int, gtype: String,
         nullable: Boolean, sem: String, default: String, cmt: String):
-        org.apache.spark.sql.Row = {
+        Row = {
       val L = null.asInstanceOf[java.lang.Long]
       def l(x: Long): java.lang.Long = java.lang.Long.valueOf(x)
       // (maxLen, octLen, numPrec, numScale, dtPrec, charset, collation, sql)
@@ -675,7 +547,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
         case "TIMESTAMP" => "TIME INDEX"
         case _ => ""
       }
-      org.apache.spark.sql.Row("greptime", db, t, c, ordinal.toLong,
+      Row("greptime", db, t, c, ordinal.toLong,
         maxLen, octLen, prec, scale, dtp, cs, coll, key, "",
         "select,insert", "", gtype, sqlName, sem,
         Option(default).filter(_.nonEmpty).orNull,
@@ -685,14 +557,11 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
     // static inventory: the information_schema virtual tables' own
     // columns (InfoColumnsData, extracted from the reference's pinned
     // self-listing)
-    val infoColRows = InfoColumnsData.rows
-      .groupBy(_.split("\\|")(0)).toSeq.flatMap { case (_, rs) =>
-        rs.zipWithIndex.map { case (line, i) =>
-          val p = line.split("\\|")
-          colRow("information_schema", p(0), p(1), i + 1, p(2),
-            p(3) == "Y", "FIELD", null, null)
-        }
-      }
+    val infoColRows = InfoSchema.tables.flatMap(t =>
+      t.cols.zipWithIndex.map { case (c, i) =>
+        colRow("information_schema", t.name, c.name, i + 1, c.gtype,
+          c.nullable, "FIELD", null, null)
+      })
     val userColRows = catalog.tables.toSeq.sorted.flatMap { t =>
       describeTable(t).collect().zipWithIndex.map { case (r, i) =>
         colRow(currentDb, t, r.getString(0), i + 1, r.getString(1),
@@ -712,10 +581,9 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
     }
     val numbersColRow =
       colRow("public", "numbers", "number", 1, "UInt32", false, "TAG", null, null)
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          infoColRows ++ userColRows :+ numbersColRow, 1).toJavaRDD, colSchema)
-      .createOrReplaceTempView("__info_columns")
+    infoRows("columns", Seq(str, str, str, str, long, long, long, long, long, long,
+        str, str, str, str, str, str, str, str, str, str, str, str, str, long),
+      infoColRows ++ userColRows :+ numbersColRow)
     // key_column_usage: a row per PRIMARY-key column (system/
     // information_schema.result pins numbers.number with 'dense')
     val kcuRows = ((currentRows ++ savedRows).map(r => (r._2, r._3, r._7)) :+
@@ -725,47 +593,20 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
           null: String, null: String, null: String, null: String, "dense")
       }
     }
-    kcuRows.toDF("constraint_catalog", "constraint_schema", "constraint_name",
-      "table_catalog", "real_table_catalog", "table_schema", "table_name",
-      "column_name", "ordinal_position", "position_in_unique_constraint",
-      "referenced_table_schema", "referenced_table_name",
-      "referenced_column_name", "greptime_index_type")
-      .createOrReplaceTempView("__info_key_column_usage")
-    // engines / build_info / charsets / collations and the always-empty
-    // privilege tables (system/information_schema.result)
-    Seq(("mito", "DEFAULT", "Storage engine for time-series data", "NO", "NO", "NO"),
+    infoView("key_column_usage", kcuRows.toDF())
+    // engines / build_info / charsets / collations
+    // (system/information_schema.result)
+    infoView("engines", Seq(
+      ("mito", "DEFAULT", "Storage engine for time-series data", "NO", "NO", "NO"),
       ("metric", "YES",
         "Storage engine for observability scenarios, which is adept at " +
           "handling a large number of small tables, making it particularly " +
-          "suitable for cloud-native monitoring", "NO", "NO", "NO"))
-      .toDF("engine", "support", "comment", "transactions", "xa", "savepoints")
-      .createOrReplaceTempView("__info_engines")
-    Seq(("main", "0" * 40, "0000000", "true", "0.14.0"))
-      .toDF("git_branch", "git_commit", "git_commit_short", "git_clean",
-        "pkg_version")
-      .createOrReplaceTempView("__info_build_info")
-    Seq(("utf8", "utf8_bin", "UTF-8 Unicode", 4))
-      .toDF("character_set_name", "default_collate_name", "description", "maxlen")
-      .createOrReplaceTempView("__info_character_sets")
-    Seq(("utf8_bin", "utf8", 1, "Yes", "Yes", 1))
-      .toDF("collation_name", "character_set_name", "id", "is_default",
-        "is_compiled", "sortlen")
-      .createOrReplaceTempView("__info_collations")
-    Seq(("utf8_bin", "utf8"))
-      .toDF("collation_name", "character_set_name")
-      .createOrReplaceTempView("__info_collation_character_set_applicability")
-    Seq.empty[(String, String, String, String, String, String, String)]
-      .toDF("grantee", "table_catalog", "table_schema", "table_name",
-        "column_name", "privilege_type", "is_grantable")
-      .createOrReplaceTempView("__info_column_privileges")
-    Seq.empty[(String, String, String, String)]
-      .toDF("schema_name", "table_name", "column_name", "histogram")
-      .createOrReplaceTempView("__info_column_statistics")
-    Seq.empty[(String, String, String, String)]
-      .toDF("constraint_catalog", "constraint_schema", "constraint_name",
-        "check_clause")
-      .createOrReplaceTempView("__info_check_constraints")
-    flows.toSeq.map { case (f, (_, q)) =>
+          "suitable for cloud-native monitoring", "NO", "NO", "NO")).toDF())
+    infoView("build_info", Seq(("main", "0" * 40, "0000000", "true", "0.14.0")).toDF())
+    infoView("character_sets", Seq(("utf8", "utf8_bin", "UTF-8 Unicode", 4)).toDF())
+    infoView("collations", Seq(("utf8_bin", "utf8", 1, "Yes", "Yes", 1)).toDF())
+    infoView("collation_character_set_applicability", Seq(("utf8_bin", "utf8")).toDF())
+    infoView("flows", flows.toSeq.map { case (f, (_, q)) =>
       val meta = flowMeta.get(f)
       val pending = meta.exists(_.pending)
       // ALL catalog tables the query references (a join flow lists every
@@ -823,35 +664,24 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
         // cluster's single flownode address
         (if (distributedCluster) "127.0.0.1:4004"
          else null.asInstanceOf[String]))
-    }.toDF("flow_name", "flow_id", "state_size", "table_catalog",
-      "flow_definition", "comment", "expire_after", "source_table_ids",
-      "sink_table_name", "flownode_ids", "options", "created_time",
-      "updated_time", "last_execution_time",
-      "source_table_names", "flownode_addrs")
-      .createOrReplaceTempView("__info_flows")
+    }.toDF())
     // information_schema.statistics: per-table index inventory in the
     // MySQL shape + greptime_index_type (show/show_index.sql queries it
-    // alongside SHOW INDEX)
+    // alongside SHOW INDEX); index_schema stays NULL
     locally {
-      import spark.implicits._
       val db = if (infoDb) "public" else currentDb
       val gtype = Map("PRIMARY" -> "dense", "TIME" -> "",
         "FULLTEXT" -> "fulltext_bloom", "INVERTED" -> "inverted",
         "SKIPPING" -> "bloom_filter")
-      catalog.tables.toSeq.sorted.flatMap(t =>
+      infoView("statistics", catalog.tables.toSeq.sorted.flatMap(t =>
         scala.util.Try(indexRowsOf(t)).getOrElse(Nil)).map {
         case (t, nu, key, seq, c, nl, kind) =>
-          ("greptime", db, t, nu, key, seq, c, "A", "", "", "", nl,
+          ("greptime", db, t, nu, null: String, key, seq, c, "A", "", "", "", nl,
             kind, "", "", "YES", "", gtype.getOrElse(kind, ""))
-      }.toDF("table_catalog", "table_schema", "table_name", "non_unique",
-        "index_name", "seq_in_index", "column_name", "collation",
-        "cardinality", "sub_part", "packed", "nullable", "index_type",
-        "comment", "index_comment", "visible", "expression",
-        "greptime_index_type")
-        .createOrReplaceTempView("__info_statistics")
+      }.toDF())
     }
     // information_schema.flow_statistics (flow_statistics.rs:81-92)
-    flows.keys.toSeq.sorted.map { f =>
+    infoView("flow_statistics", flows.keys.toSeq.sorted.map { f =>
       val meta = flowMeta.get(f)
       val created = meta.map(_.createdMs).getOrElse(0L)
       (flowIdOf(f), f,
@@ -859,9 +689,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
         flowLastExecMs.get(f).map(t => new java.sql.Timestamp(t)).orNull,
         Long.box(math.max(0L, (System.currentTimeMillis() - created) / 1000L)),
         Long.box(1L))
-    }.toDF("flow_id", "flow_name", "start_time", "last_execution_time",
-      "uptime_seconds", "state_size")
-      .createOrReplaceTempView("__info_flow_statistics")
+    }.toDF())
     // information_schema.views (information_schema/views.result): the
     // stored definition re-rendered with uppercase keywords
     def upKw(s: String): String =
@@ -869,7 +697,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
         "join|on|and|group|by|order|limit|union|all|left|right|full|" +
         "distinct|having)\\b").r
         .replaceAllIn(s, m => m.group(1).toUpperCase(Locale.ROOT))
-    userViews.toSeq.sorted.map { v =>
+    infoView("views", userViews.toSeq.sorted.map { v =>
       val (db, name) = v.split("__schema__", 2) match {
         case Array(d, n) => (d, n)
         case _ => (if (infoDb) "public" else currentDb, v)
@@ -877,8 +705,7 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
       val defn = userViewDefs.get(v).map(d => upKw(d._1.stripSuffix(";")))
         .getOrElse("")
       ("greptime", db, name, defn)
-    }.toDF("table_catalog", "table_schema", "table_name", "view_definition")
-      .createOrReplaceTempView("__info_views")
+    }.toDF())
     // information_schema.table_semantics: tables carrying
     // 'greptime.semantic.*' WITH options, promoted columns + residual
     // JSON (information_schema/table_semantics.result)
@@ -902,18 +729,13 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
           if (residual.isEmpty) null else residual.mkString("{", ",", "}")))
       }
     }
-    semRows.toDF("table_catalog", "table_schema", "table_name", "table_id",
-      "signal_type", "source", "source_version", "pipeline",
-      "metadata_quality", "semantic_options")
-      .createOrReplaceTempView("__info_table_semantics")
+    infoView("table_semantics", semRows.toDF())
     // information_schema.procedure_info: the DDL procedure log
     // (information_schema/procedure_info.result)
     val procRows = procedureLog.toSeq.zipWithIndex.map { case ((pt, lk), i) =>
       (s"$i", pt, fixedTime, fixedTime, "Done", lk)
     }
-    procRows.toDF("procedure_id", "procedure_type", "start_time", "end_time",
-      "status", "lock_keys")
-      .createOrReplaceTempView("__info_procedure_info")
+    infoView("procedure_info", procRows.toDF())
     // information_schema.region_peers: one region per partition rule
     // (information_schema/region_peers.result: 4 tables → 6 regions)
     var regionIdx = 0L
@@ -925,18 +747,13 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
           "127.0.0.1:4001", "Yes", "ALIVE", 0L)
       }
     }
-    peerRows.toDF("table_catalog", "table_schema", "table_name",
-      "region_id", "peer_id", "peer_addr", "is_leader",
-      "status", "down_seconds")
-      .createOrReplaceTempView("__info_region_peers")
+    infoView("region_peers", peerRows.toDF())
     // information_schema.schemata + .partitions (StarRocks client probes;
     // system/starrocks_compatibility.sql)
     val allDbs = (Seq("greptime_private", "information_schema", "public") ++
       (dbOpts.keySet ++ dbSaved.keySet - "public").toSeq.sorted).distinct
-    allDbs.map(d => ("greptime", d, "utf8", "utf8_bin", null: String, null: String))
-      .toDF("catalog_name", "schema_name", "default_character_set_name",
-        "default_collation_name", "sql_path", "options")
-      .createOrReplaceTempView("__info_schemata")
+    infoView("schemata",
+      allDbs.map(d => ("greptime", d, "utf8", "utf8_bin", null: String, null: String)).toDF())
     val partRows = (currentRows ++ savedRows).flatMap { case (_, db, t, _, _, _, _) =>
       metaIn(db, t).partitionClause match {
         case Some((cols, rules)) =>
@@ -951,10 +768,9 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
           null: String, 4398046511104L, fixedTime.take(19), null: String))
       }
     }
-    partRows.toDF("table_catalog", "table_schema", "table_name", "partition_name",
-      "partition_method", "partition_expression", "partition_description",
-      "greptime_partition_id", "create_time", "update_time")
-      .createOrReplaceTempView("__info_partitions")
+    infoView("partitions", partRows.toDF("table_catalog", "table_schema", "table_name",
+      "partition_name", "partition_method", "partition_expression", "partition_description",
+      "greptime_partition_id", "create_time", "update_time"))
     // information_schema.region_info / .region_statistics: one row per
     // region, ids consistent with region_peers and tables.table_id
     // (information_schema/region_info.sql, region_statistics.sql)
@@ -970,14 +786,10 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
         (4398046511104L + ri, tableIds.getOrElse(t, 0L), k, t, sstFormat)
       }
     }
-    regionRows.map { case (rid, tid, k, _, sstFormat) =>
+    infoView("region_info", regionRows.map { case (rid, tid, k, _, sstFormat) =>
       (rid, tid, k, 0, k, "Leader(Writable)", "Leader", true, 1L, 1L, 1L,
         null: String, s"""{"compaction":{}}""", sstFormat, 0L)
-    }.toDF("region_id", "table_id", "region_number", "region_group",
-      "region_sequence", "state", "role", "writable", "committed_sequence",
-      "flushed_sequence", "manifest_version", "compaction_time_window",
-      "region_options", "sst_format", "node_id")
-      .createOrReplaceTempView("__info_region_info")
+    }.toDF())
     // index_size = total puffin file bytes for the region's SSTs: a
     // puffin with blobs is 254 bytes of framing + the blob bytes, and
     // an SST without any index entry has no puffin at all
@@ -988,34 +800,13 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
       sstFiles.toSeq.groupBy(e => (e.table, e.regionNo))
         .map { case (key, es) =>
           key -> es.map(e => puffinBySst.getOrElse(e.fileNo, 0L)).sum }
-    regionRows.map { case (rid, tid, k, t, _) =>
-      (rid, tid, k, 3L, 100L, 1L, 1L, 100L, 1L,
-        idxSizeByRegion.getOrElse((t, k), 0L), "mito", "Leader",
-        100L, 1L, 100L)
-    }.toDF("region_id", "table_id", "region_number", "region_rows",
-      "disk_size", "memtable_size", "manifest_size", "sst_size", "sst_num",
-      "index_size", "engine", "region_role", "written_bytes_since_open",
-      "query_cpu_time_millis", "query_scanned_bytes")
-      .createOrReplaceTempView("__info_region_statistics")
+    infoView("region_statistics", regionRows.map { case (rid, tid, k, t, _) =>
+      (rid, tid, k, 3L, 100L, 1L, 100L, 100L, 1L, 1L, 100L, 1L,
+        idxSizeByRegion.getOrElse((t, k), 0L), "mito", "Leader")
+    }.toDF())
     // information_schema.ssts_manifest / .ssts_storage from the flush
     // log (information_schema/ssts.sql)
     def uuidOf(n: Long): String = f"00000000-0000-4000-8000-$n%012d"
-    val sstSchema = StructType(Seq(
-      StructField("table_dir", StringType), StructField("region_id", LongType),
-      StructField("table_id", LongType), StructField("region_number", IntegerType),
-      StructField("region_group", IntegerType),
-      StructField("region_sequence", IntegerType),
-      StructField("file_id", StringType), StructField("index_version", LongType),
-      StructField("level", IntegerType), StructField("file_path", StringType),
-      StructField("file_size", LongType),
-      StructField("index_file_path", StringType),
-      StructField("index_file_size", LongType), StructField("num_rows", LongType),
-      StructField("num_row_groups", LongType), StructField("num_series", LongType),
-      StructField("min_ts", TimestampType), StructField("max_ts", TimestampType),
-      StructField("sequence", LongType), StructField("origin_region_id", LongType),
-      StructField("node_id", LongType), StructField("visible", BooleanType),
-      StructField("primary_key_min", StringType),
-      StructField("primary_key_max", StringType)))
     val sstRows = sstFiles.toSeq.map { e =>
       val rid = 4400000000000L + e.tableId * 100L + e.regionNo
       val dir = s"data/greptime/public/${e.tableId}/"
@@ -1025,19 +816,16 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
       // engine reports a distributed deployment (ssts_limit.result pins
       // COUNT(DISTINCT node_id) > 1 on a 3-partition table)
       val nodeId = if (distributedCluster) (e.regionNo % 3).toLong else 0L
-      org.apache.spark.sql.Row(dir, rid, e.tableId, e.regionNo, 0, e.regionNo,
+      Row(dir, rid, e.tableId, e.regionNo, 0, e.regionNo,
         uuidOf(e.fileNo), 0L, 0, fp, 4096L, ip, 1024L, e.numRows, 1L, 1L,
         new java.sql.Timestamp(e.minTsMs), new java.sql.Timestamp(e.maxTsMs),
         e.seq, rid, nodeId, true, e.pkMin, e.pkMax)
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(sstRows, 1).toJavaRDD, sstSchema)
-      .createOrReplaceTempView("__info_ssts_manifest")
-    sstRows.flatMap(r => Seq(
+    infoRows("ssts_manifest", Seq(str, long, long, int, int, int, str, long, int, str,
+      long, str, long, long, long, long, ts, ts, long, long, long, bool, str, str), sstRows)
+    infoView("ssts_storage", sstRows.flatMap(r => Seq(
         (r.getString(9), 4096L, r.getTimestamp(16), 0L),
-        (r.getString(11), 1024L, r.getTimestamp(16), 0L)))
-      .toDF("file_path", "file_size", "last_modified_ms", "node_id")
-      .createOrReplaceTempView("__info_ssts_storage")
+        (r.getString(11), 1024L, r.getTimestamp(16), 0L))).toDF())
     // information_schema.cluster_info (cluster membership + node
     // telemetry; servers expose it from the meta heartbeat channel):
     // one STANDALONE peer, or the reference test cluster's 3 datanodes +
@@ -1055,22 +843,9 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
       val hash = "c446b3f51"
       val dnStatus =
         """{"workloads":["HYBRID"],"leader_regions":1,"follower_regions":0}"""
-      val ciSchema = StructType(Seq(
-        StructField("peer_id", LongType, nullable = false),
-        StructField("peer_type", StringType, nullable = false),
-        StructField("peer_addr", StringType), StructField("peer_hostname", StringType),
-        StructField("total_cpu_millicores", LongType, nullable = false),
-        StructField("total_memory_bytes", LongType, nullable = false),
-        StructField("cpu_usage_millicores", LongType, nullable = false),
-        StructField("memory_usage_bytes", LongType, nullable = false),
-        StructField("version", StringType, nullable = false),
-        StructField("git_commit", StringType, nullable = false),
-        StructField("start_time", TimestampType),
-        StructField("uptime", StringType), StructField("active_time", StringType),
-        StructField("node_status", StringType)))
       def peer(id: Long, tpe: String, addr: String, active: String,
-          status: String): org.apache.spark.sql.Row =
-        org.apache.spark.sql.Row(id, tpe, addr,
+          status: String): Row =
+        Row(id, tpe, addr,
           Option(addr).map(_ => "127.0.0.1").orNull,
           Runtime.getRuntime.availableProcessors().toLong * 1000L,
           137438953472L, 250L, 1073741824L, ver, hash, started, up,
@@ -1084,43 +859,28 @@ private[sql] trait GraftSystemCatalog { self: GraftSession =>
           peer(1, "FRONTEND", "127.0.0.1:4001", up, null),
           peer(1, "METASRV", "127.0.0.1:3002", null, null))
         else Seq(peer(0, "STANDALONE", null, null, null))
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(peers, 1).toJavaRDD, ciSchema)
-        .createOrReplaceTempView("__info_cluster_info")
+      infoRows("cluster_info", Seq(long, str, str, str, long, long, long, long, str, str,
+        ts, str, str, str), peers)
     }
     // information_schema.ssts_index_meta: one row per index blob in a
     // flushed SST's puffin file (information_schema/ssts.result,
     // function/admin/build_index_table_restart.sql)
     val sstByNo = sstFiles.map(e => e.fileNo -> e).toMap
-    val idxSchema = StructType(Seq(
-      StructField("table_dir", StringType),
-      StructField("index_file_path", StringType),
-      StructField("region_id", LongType), StructField("table_id", LongType),
-      StructField("region_number", IntegerType),
-      StructField("region_group", IntegerType),
-      StructField("region_sequence", IntegerType),
-      StructField("file_id", StringType),
-      StructField("index_file_size", LongType),
-      StructField("index_type", StringType),
-      StructField("target_type", StringType),
-      StructField("target_key", StringType),
-      StructField("target_json", StringType),
-      StructField("blob_size", LongType), StructField("meta_json", StringType),
-      StructField("node_id", LongType)))
     val idxRows = sstIndexEntries.toSeq.flatMap { en =>
       sstByNo.get(en.fileNo).map { e =>
         val rid = 4400000000000L + e.tableId * 100L + e.regionNo
         val dir = s"data/greptime/public/${e.tableId}/"
         val ip = s"data/greptime/public/${e.tableId}/${rid}_${e.regionNo}/index/${uuidOf(e.fileNo)}.puffin"
-        org.apache.spark.sql.Row(dir, ip, rid, e.tableId, e.regionNo, 0,
+        Row(dir, ip, rid, e.tableId, e.regionNo, 0,
           e.regionNo, uuidOf(e.fileNo), puffinBySst.getOrElse(e.fileNo, 0L),
           en.indexType, "column", en.colIdx.toString,
           s"""{"column":${en.colIdx}}""", en.blobSize, en.metaJson, 0L)
       }
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(idxRows, 1).toJavaRDD, idxSchema)
-      .createOrReplaceTempView("__info_ssts_index_meta")
+    infoRows("ssts_index_meta", Seq(str, str, long, long, int, int, int, str, long, str,
+      str, str, str, long, str, long), idxRows)
+    InfoSchema.tables.filterNot(t => built(t.name))
+      .foreach(registerInfoView(_, spark.emptyDataFrame))
   }
 
   /** ConcreteDataType display name → SHOW CREATE TABLE SQL type token

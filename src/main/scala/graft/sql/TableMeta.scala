@@ -87,8 +87,9 @@ private[sql] case class TableMeta(
     /** seq of the last ADMIN FLUSH_TABLE: the next flush's SST holds the
       * rows written after it */
     sstFlushSeq: Long = 0L,
-    /** CREATE EXTERNAL TABLE: a temp view over files, not in the catalog */
-    external: Boolean = false)
+    /** CREATE EXTERNAL TABLE: (format, location) of a temp view over
+      * files, not in the catalog; USE drops and re-creates the view */
+    external: Option[(String, String)] = None)
 
 private[sql] object TableMeta {
   val Empty: TableMeta = TableMeta()

@@ -411,4 +411,52 @@ class GraftSessionSpec extends AnyFunSuite {
         before.updated(0, before.head.replace(s""""$t"""", s""""${t}_new"""")))
     }
   }
+
+  test("RENAME carries the table's SST entries and DROP removes them") {
+    val s = new GraftSession(spark)
+    val ddl = "CREATE TABLE t1 (ts TIMESTAMP(3) TIME INDEX, h STRING PRIMARY KEY, v DOUBLE)"
+    val ssts = "SELECT count(*) FROM information_schema.ssts_manifest"
+    s.sql(ddl)
+    s.sql("INSERT INTO t1 VALUES (1000, 'a', 1.0)")
+    s.sql("ADMIN flush_table('t1')").collect()
+    assert(rowsOf(s, ssts) == Seq("1"))
+    s.sql("ALTER TABLE t1 RENAME t2")
+    assert(rowsOf(s, ssts) == Seq("1"))
+    s.sql("DROP TABLE t2")
+    assert(rowsOf(s, ssts) == Seq("0"))
+    s.sql(ddl)
+    assert(rowsOf(s, ssts) == Seq("0"))
+  }
+
+  test("SHOW FLOWS, SHOW FLOW STATUS and SHOW COLUMNS match LIKE patterns as LIKE") {
+    val s = new GraftSession(spark)
+    s.sql("CREATE TABLE src (ts TIMESTAMP(3) TIME INDEX, h STRING PRIMARY KEY, v DOUBLE)")
+    Seq("fx1", "f_1").foreach(f => s.sql(
+      s"CREATE FLOW $f SINK TO ${f}_sink AS SELECT h, count(*) AS n FROM src GROUP BY h"))
+    // '.' is a literal character and '_' any one character
+    assert(rowsOf(s, "SHOW FLOWS LIKE 'f.1'").isEmpty)
+    assert(rowsOf(s, "SHOW FLOWS LIKE 'f_1'") == Seq("f_1", "fx1"))
+    assert(rowsOf(s, "SHOW FLOW STATUS LIKE 'f.1'").isEmpty)
+    assert(s.sql("SHOW FLOW STATUS LIKE 'f_%'").count() == 2)
+    // '(' is a literal character, not a regex group
+    assert(rowsOf(s, "SHOW COLUMNS FROM src LIKE 'h(%'").isEmpty)
+    assert(s.sql("SHOW COLUMNS FROM src LIKE '%s'").collect().map(_.getString(0)).toSeq ==
+      Seq("ts"))
+  }
+
+  test("an external table belongs to the database that created it") {
+    val s = new GraftSession(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ext").resolve("ext").toString
+    spark.range(3).write.parquet(dir)
+    s.sql(s"CREATE EXTERNAL TABLE ext WITH (location = '$dir', format = 'parquet')")
+    assert(rowsOf(s, "SELECT count(*) FROM ext") == Seq("3"))
+    s.sql("CREATE DATABASE d2")
+    s.sql("USE d2")
+    val e = intercept[Exception](s.sql("SELECT count(*) FROM ext").collect())
+    assert(e.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"), e.getMessage)
+    s.sql("USE public")
+    assert(rowsOf(s, "SELECT count(*) FROM ext") == Seq("3"))
+    s.sql("DROP TABLE ext")
+    intercept[Exception](s.sql("SELECT count(*) FROM ext").collect())
+  }
 }
